@@ -53,13 +53,6 @@ object Graphs {
       .union(edges.select(col("dst").as("vertex")))
       .distinct()
 
-  /** Connected components by min-label propagation (HashMin): every vertex
-    * converges to the smallest id in its component. Edges are treated as
-    * undirected. Integer mins are order-independent, so results are exact
-    * and engine-reproducible. Converges in O(component diameter) rounds —
-    * the right algorithm when components are small (duplicate clusters);
-    * use pointer-doubling variants for giant-diameter graphs.
-    */
   /** default propagation rounds — bounds cluster diameter; oracle SQL
     * unrolls exactly this many, so engine and oracle agree even on inputs
     * that have not converged */
@@ -91,6 +84,13 @@ object Graphs {
     sized
   }
 
+  /** Connected components by min-label propagation (HashMin): every vertex
+    * converges to the smallest id in its component. Edges are treated as
+    * undirected. Integer mins are order-independent, so results are exact
+    * and engine-reproducible. Converges in O(component diameter) rounds —
+    * the right algorithm when components are small (duplicate clusters);
+    * use pointer-doubling variants for giant-diameter graphs.
+    */
   def connectedComponents(edges: DataFrame, maxIter: Int = DefaultCcRounds): DataFrame = {
     val undirected = undirectedSized(edges)
     val init = vertices(undirected).withColumn("label", col("vertex"))
@@ -157,15 +157,6 @@ object Graphs {
     * d_t >= 2*d_{t-1} + 2, so 8 rounds cover component diameters past 500 */
   val DefaultDoublingRounds = 8
 
-  /** Connected components by min-label propagation with pointer jumping:
-    * each round does the HashMin neighbor step, then shortcuts every label
-    * through the label table (label <- label(label)). Known-min distance
-    * at least doubles per round, so convergence is O(log diameter) instead
-    * of O(diameter) — the variant that stays correct on long duplicate
-    * chains at 100 TB, where a fixed linear round bound would split
-    * components. Same label monotonicity (integer min) as
-    * connectedComponents, so results are exact and engine-reproducible.
-    */
   /** default peeling rounds for kCore — the oracle unrolls exactly this
     * many, and extra rounds past the fixpoint are no-ops (deletion-only),
     * so engine early-convergence and the oracle's fixed unroll agree */
@@ -322,12 +313,11 @@ object Graphs {
   def densestSubgraph(edges: DataFrame,
       rounds: Int = DefaultDensestRounds): DataFrame = {
     val first = undirectedSized(edges)
-    // loop-private session (r17): the peel re-plans deg/stats/semi-join
-    // relations every round — without it they ran at the caller session's
-    // shuffle width with AQE's per-stage replanning, pure latency on a
-    // peel whose state the sizing already measured (the Fixpoint.iterate
-    // session discipline, applied to this hand-rolled loop). The one-time
-    // Row re-bind streams from the edge cache.
+    // the peel re-plans deg/stats/semi-join relations every round, so it
+    // runs under the shared loop session for the edge count's width (the
+    // Fixpoint.iterate session, applied to this hand-rolled loop): state-
+    // sized shuffles, no AQE stage replanning. The one-time Row re-bind
+    // streams from the edge cache.
     val loop = graft.iterate.Fixpoint.loopSession(
       edges.sparkSession, first.count())
     var state = loop.createDataFrame(first.rdd, first.schema)
@@ -882,10 +872,10 @@ object Graphs {
     // may overshoot the width — capped, and a phase that peels most of
     // the graph leaves tiny rounds where width barely matters.
     val nV = state.count()
-    // phase-level loop session (r17): the per-phase barriers (ae slice,
-    // decided-merge cutStats) are state-sized too — rooted at the caller's
-    // session they ran at configured width with AQE stage-jobs. The
-    // re-bind streams from the checkpoint blocks once.
+    // the shared loop session for the vertex count's width, which the
+    // per-phase fixpoints below also resolve to: the per-phase barriers (ae
+    // slice, decided-merge cutStats) are state-sized too. The re-bind
+    // streams from the checkpoint blocks once.
     val sess = graft.iterate.Fixpoint.loopSession(edges.sparkSession, nV)
     state = sess.createDataFrame(state.rdd, state.schema)
     for (_ <- 1 to phases) {
@@ -1286,6 +1276,15 @@ object Graphs {
     out
   }
 
+  /** Connected components by min-label propagation with pointer jumping:
+    * each round does the HashMin neighbor step, then shortcuts every label
+    * through the label table (label <- label(label)). Known-min distance
+    * at least doubles per round, so convergence is O(log diameter) instead
+    * of O(diameter) — the variant that stays correct on long duplicate
+    * chains at 100 TB, where a fixed linear round bound would split
+    * components. Same label monotonicity (integer min) as
+    * connectedComponents, so results are exact and engine-reproducible.
+    */
   def connectedComponentsDoubling(
       edges: DataFrame, maxIter: Int = DefaultDoublingRounds): DataFrame = {
     val undirected = undirectedSized(edges)

@@ -1,6 +1,7 @@
 package graft.iterate
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Driver-loop utilities for iterative (fixpoint) algorithms.
@@ -22,7 +23,7 @@ object Fixpoint {
   /** partition count proportional to a measured cardinality, capped at the
     * session's configured shuffle width — poor-man's CBO stats for the
     * iterative operators */
-  def sizedPartitions(spark: org.apache.spark.sql.SparkSession, rows: Long): Int = {
+  def sizedPartitions(spark: SparkSession, rows: Long): Int = {
     val configured = spark.conf.get("spark.sql.shuffle.partitions").toLong
     math.max(1L, math.min(configured, rows / RowsPerPartition + 1)).toInt
   }
@@ -70,18 +71,13 @@ object Fixpoint {
 
   /** Iterate `step` from `init` until `maxIter` or `converged(prev, next)`.
     *
-    * Each iteration's state is persisted and materialized (checkpoint
-    * eagerly), and the previous state is unpersisted — so executor memory
+    * Every iteration's state is localCheckpoint'ed (lineage cut each
+    * round) and the previous state is unpersisted — so executor memory
     * holds at most two state generations regardless of iteration count.
-    *
-    * @param checkpointEvery cut lineage with localCheckpoint every N
-    *   iterations (persist-only in between). 1 = every iteration, which is
-    *   right for anything beyond a handful of iterations.
     */
   def iterate(
       init: DataFrame,
       maxIter: Int,
-      checkpointEvery: Int = 1,
       converged: (DataFrame, DataFrame) => Boolean = (_, _) => false)(
       step: (DataFrame, Int) => DataFrame): DataFrame = {
     val seeded = init.persist(StorageLevel.MEMORY_AND_DISK)
@@ -95,7 +91,7 @@ object Fixpoint {
     // the seed cache is released once the first round has materialized.
     val state0 = loop.createDataFrame(seeded.rdd, seeded.schema)
       .localCheckpoint(eager = false)
-    runLoop(state0, Some(seeded), maxIter, checkpointEvery, converged, step)
+    runLoop(state0, Some(seeded), maxIter, converged, step)
   }
 
   /** [[iterate]] minus the entry sizing-count job, for callers that already
@@ -115,32 +111,47 @@ object Fixpoint {
       init: DataFrame,
       knownRows: Long,
       maxIter: Int,
-      checkpointEvery: Int = 1,
       converged: (DataFrame, DataFrame) => Boolean = (_, _) => false)(
       step: (DataFrame, Int) => DataFrame): DataFrame = {
     val loop = loopSession(init.sparkSession, knownRows)
     val state0 = loop.createDataFrame(init.rdd, init.schema)
       .localCheckpoint(eager = false)
-    runLoop(state0, None, maxIter, checkpointEvery, converged, step)
+    runLoop(state0, None, maxIter, converged, step)
   }
 
-  /** The loop-private session: shuffle width sized to the state, planner
-    * latency knobs set for re-planned-every-round step DAGs.
+  /** The loop session for a state of `rows` rows: one shared session per
+    * shuffle width, whose conf is set when it is created and never mutated
+    * afterwards.
     *
-    * Size the loop's shuffle width to the state, not the session default:
-    * a fixpoint over a bounded vertex set should not pay hundreds of
-    * near-empty tasks per iteration (the dominant cost of small iterative
-    * jobs), while a billion-row state keeps the configured width.
-    *
-    * The width (and the AQE toggle below) is set on a LOOP-PRIVATE session
-    * cloned from the caller's: newSession() shares the SparkContext, cache
-    * manager, and catalog but owns its SQLConf, so concurrent queries on
-    * the caller's session never inherit the loop's sizing. Every step
-    * function returns a plan rooted at the loop-bound state, so each
-    * iteration plans and executes under the private conf. */
-  private[graft] def loopSession(orig: org.apache.spark.sql.SparkSession,
-      rows: Long): org.apache.spark.sql.SparkSession = {
+    * The width is sized to the state, not the caller's default: a fixpoint
+    * over a bounded vertex set should not pay hundreds of near-empty tasks
+    * per round (the dominant cost of small iterative jobs), while a
+    * billion-row state keeps the configured width. The session comes from
+    * newSession(): it shares the SparkContext, cache manager and catalog
+    * but owns its SQLConf, so the caller's session never inherits the
+    * loop's knobs. newSession() starts from the context's conf, not the
+    * caller's runtime conf, so the width alone determines the loop conf and
+    * every caller of that width can share the session — which is what lets
+    * warm loops hit Spark's codegen cache, keyed by the class loader a
+    * session's tasks run under. Every step function returns a plan rooted at the loop-bound
+    * state, so each round plans and executes under the loop conf. */
+  private[graft] def loopSession(orig: SparkSession, rows: Long): SparkSession = synchronized {
     val width = sizedPartitions(orig, rows)
+    val sc = orig.sparkContext
+    // one live SparkContext per JVM: a single slot, rebuilt when the
+    // context changes, so a replaced context's sessions are dropped
+    val byWidth = if (loopSessions._1 eq sc) loopSessions._2 else Map.empty[Int, SparkSession]
+    byWidth.getOrElse(width, {
+      val loop = newLoopSession(orig, width)
+      loopSessions = (sc, byWidth + (width -> loop))
+      loop
+    })
+  }
+
+  /** the loop sessions by width, for the SparkContext they were cloned on */
+  private var loopSessions: (SparkContext, Map[Int, SparkSession]) = (null, Map.empty)
+
+  private def newLoopSession(orig: SparkSession, width: Int): SparkSession = {
     val loop = orig.newSession()
     loop.conf.set("spark.sql.shuffle.partitions", width.toString)
     // AQE's per-stage replanning is pure driver latency once the state is
@@ -174,7 +185,6 @@ object Fixpoint {
       state0: DataFrame,
       seeded: Option[DataFrame],
       maxIter: Int,
-      checkpointEvery: Int,
       converged: (DataFrame, DataFrame) => Boolean,
       step: (DataFrame, Int) => DataFrame): DataFrame = {
     var state = state0
@@ -183,40 +193,30 @@ object Fixpoint {
     var i = 0
     var done = false
     while (i < maxIter && !done) {
-      val stepped = step(state, i)
-      if ((i + 1) % checkpointEvery == 0) {
-        // Lazy checkpoint, materialized BY the convergence test (r16
-        // optimization, guide §2.4 "remove passes outright"): the
-        // convergence aggregates (monotoneSumUnchanged, countUnchanged,
-        // noneMatch) are full scans, so their one job computes the round
-        // AND caches the checkpoint blocks — fusing the former
-        // eager-checkpoint job and the convergence job into ONE barrier
-        // per round (measured: the per-round job latency floor is the
-        // dominant cost of every sf0.1 graph fixpoint). A test that scans
-        // nothing (the fixed-round default) or stops early (isEmpty-style
-        // probes) leaves partitions unmaterialized; Spark's
-        // LocalRDDCheckpointData then fills missing partitions after the
-        // probe job, and the isCheckpointed guard below runs the one
-        // materialization job the eager form would have run anyway — the
-        // fusion never ADDS a job, it only removes one where the test
-        // already scans everything.
-        val next = stepped.localCheckpoint(eager = false)
-        val cpRdd = next.queryExecution.analyzed.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }
-        done = converged(state, next)
-        cpRdd match {
-          case Some(r) => if (!r.isCheckpointed) r.count()
-          case None => next.count() // defensive: unexpected checkpoint plan shape
-        }
-        state.unpersist(blocking = false)
-        state = next
-      } else {
-        val p = stepped.persist(StorageLevel.MEMORY_AND_DISK); p.count()
-        done = converged(state, p)
-        state.unpersist(blocking = false)
-        state = p
+      // Lazy checkpoint, materialized BY the convergence test: the
+      // convergence aggregates (monotoneSumUnchanged, countUnchanged,
+      // noneMatch) are full scans, so their one job computes the round AND
+      // caches the checkpoint blocks — ONE barrier per round instead of an
+      // eager-checkpoint job plus a convergence job (the per-round job
+      // latency floor is the dominant cost of every sf0.1 graph fixpoint).
+      // A test that scans nothing (the fixed-round default) or stops early
+      // (isEmpty-style probes) leaves partitions unmaterialized; Spark's
+      // LocalRDDCheckpointData then fills missing partitions after the
+      // probe job, and the isCheckpointed guard below runs the one
+      // materialization job the eager form would have run anyway — the
+      // fusion never ADDS a job, it only removes one where the test already
+      // scans everything.
+      val next = step(state, i).localCheckpoint(eager = false)
+      val cpRdd = next.queryExecution.analyzed.collectFirst {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
       }
+      done = converged(state, next)
+      cpRdd match {
+        case Some(r) => if (!r.isCheckpointed) r.count()
+        case None => next.count() // defensive: unexpected checkpoint plan shape
+      }
+      state.unpersist(blocking = false)
+      state = next
       // round 1 has materialized (through the lazy seed checkpoint) — the
       // seed cache is no longer the only copy and can go
       if (seedHeld) { seeded.foreach(_.unpersist(blocking = false)); seedHeld = false }
@@ -238,11 +238,6 @@ object Fixpoint {
       next.agg(count(when(flag, lit(1)))).first().getLong(0) == 0L
     }
 
-  /** Convergence test used by the reference's SSSP variants
-    * (SingleSourceShortestPathRDD/src/main/scala/wc/FollowerCount.scala:42-44):
-    * no row changed its value between iterations. `keyCol` must be unique.
-    * Implemented as a co-partitioned self-join + count of differing rows.
-    */
   /** Convergence for monotonically non-increasing integer state (min-label
     * propagation): per-row values only ever decrease over a constant key
     * set, so equality of consecutive exact column sums implies no row
@@ -278,6 +273,11 @@ object Fixpoint {
     }
   }
 
+  /** Convergence test used by the reference's SSSP variants
+    * (SingleSourceShortestPathRDD/src/main/scala/wc/FollowerCount.scala:42-44):
+    * no row changed its value between iterations. `keyCol` must be unique.
+    * Implemented as a key join of the two states + an emptiness probe of
+    * the differing rows. */
   def unchanged(keyCol: String, valCol: String)(prev: DataFrame, next: DataFrame): Boolean = {
     val p = prev.select(keyCol, valCol).withColumnRenamed(valCol, "__prev")
     next.select(keyCol, valCol).join(p, keyCol)

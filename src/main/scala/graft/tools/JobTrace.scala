@@ -17,6 +17,11 @@ object JobTrace {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (args.nonEmpty) args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else Seq("q_graph_coloring")
+    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[jobtrace] unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val spark = graft.core.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val starts = TrieMap[Int, Long]()
     val spans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
@@ -28,21 +33,16 @@ object JobTrace {
     })
     try spark.range(1).count() catch { case _: Throwable => () } // listener warm
     try graft.SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
-    if (unknown.nonEmpty) {
-      System.err.println(s"[jobtrace] unknown queries: ${unknown.mkString(", ")}")
-      spark.stop(); sys.exit(2)
-    }
     names.foreach { n =>
-      // drain in-flight events from the PREVIOUS query before clearing,
-      // so late job-end deliveries can't leak spans into this timeline
-      Thread.sleep(500)
+      // deliver every event of the warm-up or PREVIOUS query before
+      // clearing, so late job-end events can't leak spans into this timeline
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       spans.clear()
       val t0 = System.currentTimeMillis()
       graft.SparkEntry.queries(n)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val wall = System.currentTimeMillis() - t0
-      Thread.sleep(500) // listener bus drain
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       val sorted = {
         val it = spans.iterator(); val b = Seq.newBuilder[(Long, Long)]
         while (it.hasNext) b += it.next()

@@ -2,11 +2,15 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge to the private[sql] Column <-> Expression converters (Spark 4
-  * moved them behind `classic.ExpressionUtils`). Standard extension-library
-  * pattern: a single object in the org.apache.spark.sql package scope.
+/** Bridge to Spark internals: the private[sql] Column <-> Expression
+  * converters (Spark 4 moved them behind `classic.ExpressionUtils`) and the
+  * private[spark] listener bus. Standard extension-library pattern: a single
+  * object in the org.apache.spark.sql package scope.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Block until every event posted so far has reached the listeners. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -200,6 +200,43 @@ class GraphSpec extends SparkSpec {
       7L -> 7L, 8L -> 7L, 10L -> 10L))
   }
 
+  test("fixpoint loops share one loop session per width: a warm rerun compiles no class") {
+    import graft.iterate.Fixpoint
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val e = edges(1L -> 2L, 2L -> 3L, 5L -> 4L, 7L -> 8L, 8L -> 7L, 10L -> 10L)
+    def labels() = Graphs.connectedComponentsDoubling(e).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSet
+    val cold = labels()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(labels() == cold)
+    // generated classes are cached per session class loader: a fresh loop
+    // session per call would recompile every step class here
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
+
+    def conf(s: org.apache.spark.sql.SparkSession, k: String) = s.conf.get(k)
+    val one = Fixpoint.loopSession(spark, 10L)
+    val two = Fixpoint.loopSession(spark, 600000L) // 2 x RowsPerPartition
+    assert(Fixpoint.loopSession(spark, 0L) eq one)
+    assert(Fixpoint.loopSession(spark, 999999L) eq two)
+    assert(one ne two)
+    for ((s, width) <- Seq(one -> "1", two -> "2")) {
+      assert(conf(s, "spark.sql.shuffle.partitions") == width)
+      assert(conf(s, "spark.sql.adaptive.enabled") == "false")
+      assert(conf(s, "spark.sql.autoBroadcastJoinThreshold") == "-1")
+      assert(conf(s, "spark.sql.constraintPropagation.enabled") == "false")
+    }
+    // a wide state keeps AQE and auto-broadcast; the caller's width caps it
+    val configured = conf(spark, "spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    val wide = try Fixpoint.loopSession(spark, 3000000L)
+      finally spark.conf.set("spark.sql.shuffle.partitions", configured)
+    assert(Set(one, two).forall(_ ne wide))
+    assert(conf(wide, "spark.sql.shuffle.partitions") == "7")
+    assert(conf(wide, "spark.sql.adaptive.enabled") == "true")
+    assert(conf(wide, "spark.sql.autoBroadcastJoinThreshold") != "-1")
+    assert(conf(wide, "spark.sql.constraintPropagation.enabled") == "false")
+  }
+
   test("cc doubling: linear HashMin at the same round count splits the long chain") {
     // negative control — shows why doubling matters: 15 linear rounds
     // cannot label a diameter-99 chain

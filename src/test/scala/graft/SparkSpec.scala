@@ -14,6 +14,9 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    // the engine's codegen cache size: at Spark's default, one fixpoint run's
+    // classes can overflow an LRU segment and recompile on every rerun
+    .config("spark.sql.codegen.cache.maxEntries", graft.core.Sessions.CodegenCacheEntries.toString)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()
