@@ -12,8 +12,15 @@ object Bench {
 
     // JVM/codegen warmup on the smallest sf so measured times reflect the
     // engine, not JIT + first-touch class loading.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    def describe(t: Throwable): String = s"${t.getClass.getName}: ${t.getMessage}"
+    try SparkEntry.entry(spark).count() catch {
+      case t: Throwable => System.err.println(s"[bench] warmup failed: ${describe(t)}")
+    }
 
+    // Failures are loud: each one is printed to stderr and its error lands in
+    // the "failed" field of both JSON lines (last failure per query), so a
+    // query that starts throwing can not pass as a smaller total.
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     // noop sink executes the FULL plan — top-level ORDER BY and output
     // projection included — unlike count(), which lets Catalyst prune both.
     def run(name: String): Boolean =
@@ -21,7 +28,12 @@ object Bench {
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         true
-      } catch { case _: Throwable => false }
+      } catch {
+        case t: Throwable =>
+          System.err.println(s"[bench] $name failed: ${describe(t)}")
+          failures(name) = describe(t)
+          false
+      }
 
     // Per-query repeat-min, with the repeats INTERLEAVED as full passes over
     // the whole query list rather than back-to-back: a transient box-load
@@ -280,8 +292,20 @@ object Bench {
     // always be compared raw-vs-raw — r15 vs r16 was incomparable because
     // one artifact was a 5-donor fused floor and the other a raw cold run.
     val rawTotal = resampled.map(_._2).filter(_ >= 0).sum
+    // {query: "Class: message"}, the message cut to its first line and
+    // `width` chars (Spark errors can carry whole plans)
+    def failedJson(width: Int): String = failures.map { case (q, err) =>
+      val msg = err.linesIterator.nextOption().getOrElse("").take(width)
+        .flatMap {
+          case '"' => "\\\""
+          case '\\' => "\\\\"
+          case c if c < ' ' => f"\\u${c.toInt}%04x"
+          case c => c.toString
+        }
+      "\"" + q + "\":\"" + msg + "\""
+    }.mkString("{", ",", "}")
     val json =
-      f"""{"metric":"total","value":$total%.3f,"raw_value":$rawTotal%.3f,"unit":"sec","context_index":$contextIndex$fusedField$pinField,"queries":$qs,"samples":$ss,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"raw_value":$rawTotal%.3f,"unit":"sec","context_index":$contextIndex$fusedField$pinField,"failed":${failedJson(500)},"queries":$qs,"samples":$ss,"sf":"$sfDir"}"""
     println(json)
     // The driver keeps only the LAST ~2000 chars of stdout and JSON-parses
     // what it finds there; the full line above (~5 KB with samples) overflows
@@ -294,7 +318,7 @@ object Bench {
       val m = entries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
         .mkString("{", ",", "}")
       val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
-      f"""{"metric":"total","value":$total%.3f,"raw_value":$rawTotal%.3f,"unit":"sec","context_index":$contextIndex,"queries":$m$om,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"raw_value":$rawTotal%.3f,"unit":"sec","context_index":$contextIndex,"failed_count":${failures.size},"failed":${failedJson(100)},"queries":$m$om,"sf":"$sfDir"}"""
     }
     val bySlowest = finalResults.sortBy { case (_, v) => -v }
     var keep = bySlowest.length

@@ -309,7 +309,13 @@ object Graphs {
     * the driver argmax multiplies with Math.multiplyExact and the keep
     * filter's 2·n·deg / 3·2m headroom is require-checked each round
     * (raw Long products would wrap silently where the DuckDB oracle
-    * errors — a divergence, round-11 advice item). */
+    * errors — a divergence, round-11 advice item).
+    *
+    * The peel stays a hand-rolled loop rather than a `Fixpoint.iterate`
+    * step: its one per-round barrier is the stats `head()`, which runs
+    * over `deg`, not over the state, so it does not mark the state's lazy
+    * checkpoint as checkpointed, and `runLoop`'s per-round guard
+    * (`if (!r.isCheckpointed) r.count()`) would add one job every round. */
   def densestSubgraph(edges: DataFrame,
       rounds: Int = DefaultDensestRounds): DataFrame = {
     val first = undirectedSized(edges)
@@ -320,7 +326,7 @@ object Graphs {
     // streams from the edge cache.
     val loop = graft.iterate.Fixpoint.loopSession(
       edges.sparkSession, first.count())
-    var state = loop.createDataFrame(first.rdd, first.schema)
+    var state = graft.iterate.Fixpoint.rebindStats(first, loop)
     val degs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var i = 0
@@ -468,20 +474,14 @@ object Graphs {
     require(k >= 3, "k-truss needs k >= 3")
     // INIT-ONLY consumer: the peel loop's per-round plans reference only
     // the loop state, so the symmetric closure is materialized as a
-    // LogicalRDD leaf (r17) — the orientation/support/wedge-guard plans
-    // reference it 3x, and the leaf spares them the union+distinct
-    // subtree re-optimization (ktruss 10.6 -> 7.7 s A/B); no sizing
-    // repartition either, since nothing per-round scans it.
-    val undirected = {
-      val u = edges.select(col("src"), col("dst"))
+    // src-partitioned LogicalRDD leaf, not undirectedSized's columnar
+    // persist — the orientation/support/wedge-guard plans reference it 3x,
+    // and the leaf spares them the union+distinct subtree re-optimization
+    // (ktruss 10.6 -> 7.7 s A/B).
+    val undirected = graft.iterate.Fixpoint.srcPartitionedLeaf(
+      edges.select(col("src"), col("dst"))
         .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val width = graft.iterate.Fixpoint.sizedPartitions(edges.sparkSession, u.count())
-      val l = graft.iterate.Fixpoint.materializedLeaf(u.repartition(width, col("src")))
-      u.unpersist(blocking = false)
-      l
-    }
+        .distinct())
     // degree-ordered orientation, computed once (checkpointed: the guard's
     // wedge count and the init support pass both read it)
     val g = orientByDegree(undirected).localCheckpoint(eager = true)
@@ -573,30 +573,6 @@ object Graphs {
   val DefaultMisRounds = 15
   val DefaultMatchingRounds = 15
 
-  /** Materialize AND re-bind a mid-round relation of a fixpoint step:
-    * `localCheckpoint` cuts the lineage but carries the producing plan's
-    * size ESTIMATE into the checkpointed relation, so a step that
-    * references the state several times (self-joins, union fan-out)
-    * snowballs the estimate multiplicatively across checkpointed rounds
-    * until size-only stats planning grinds on astronomic BigIntegers.
-    * Re-binding the checkpointed RDD under a fresh LogicalRDD (the
-    * Fixpoint seed re-bind trick) resets the estimate to the session
-    * default, keeping per-round planning O(plan size). */
-  private def cutStats(df: DataFrame): DataFrame = {
-    val cut = df.localCheckpoint(eager = true)
-    df.sparkSession.createDataFrame(cut.rdd, cut.schema)
-  }
-
-  /** Zero-job stats re-bind for an ALREADY-materialized relation (the
-    * Fixpoint loop state, checkpointed every round): the same
-    * fresh-LogicalRDD estimate reset as [[cutStats]], minus the extra
-    * localCheckpoint barrier — rows stream from the existing checkpoint
-    * blocks. Use at the top of a step that references the state several
-    * times, so the carried size estimate can't snowball across rounds
-    * while the round pays zero additional jobs. */
-  private def rebindStats(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.rdd, df.schema)
-
   /** Deterministic per-vertex priority for symmetry breaking, packed with
     * the vertex id into ONE comparable int64: the high 31 bits are a
     * multiplicative hash of the id (Knuth constant, Mersenne-31 modulus),
@@ -636,13 +612,14 @@ object Graphs {
       val active = state.filter(col("status") === 0).select("vertex", "pkey")
       val nbrMin = active.join(undirected, active("vertex") === undirected("src"))
         .groupBy(col("dst").as("nv")).agg(min("pkey").as("nbr_min"))
-      // materialized + stats-cut: consumed on both sides (domination scan
-      // + status merge) — the connectedComponentsDoubling barrier pattern
-      // plus the estimate reset that keeps rounds planning-stable
-      val winners = cutStats(active
+      // materialized + stats re-bind: consumed on both sides (domination
+      // scan + status merge) — the connectedComponentsDoubling barrier
+      // pattern plus the estimate reset that keeps rounds planning-stable
+      val winners = graft.iterate.Fixpoint.rebindStats(active
         .join(nbrMin, active("vertex") === nbrMin("nv"), "left")
         .filter(col("nbr_min").isNull || col("pkey") < col("nbr_min"))
-        .select(col("vertex"), lit(1).as("newstat")))
+        .select(col("vertex"), lit(1).as("newstat"))
+        .localCheckpoint(eager = true))
       val dominated = winners.join(undirected, winners("vertex") === undirected("src"))
         .select(col("dst").as("vertex")).distinct()
         .withColumn("newstat", lit(2))
@@ -696,12 +673,12 @@ object Graphs {
       // (distinct colors over COLORED neighbors) are both per-vertex
       // aggregates over the same edge relation, so ONE uncolored-source ⨝
       // edges ⨝ state pass computes both — the winners relation is then
-      // consumed exactly once (the state merge) and needs no cutStats
-      // materialization. 3 jobs/round → 2 (state checkpoint + convergence
-      // aggregate); the stats re-bind below replaces cutStats' estimate
-      // reset at zero jobs. Isolated A/B and the unchanged oracle hash are
-      // recorded in BASELINE.md.
-      val state = rebindStats(state0)
+      // consumed exactly once (the state merge) and needs no mid-round
+      // checkpoint. 3 jobs/round → 2 (state checkpoint + convergence
+      // aggregate); the zero-job stats re-bind of the already-checkpointed
+      // state below keeps the estimate reset. Isolated A/B and the
+      // unchanged oracle hash are recorded in BASELINE.md.
+      val state = graft.iterate.Fixpoint.rebindStats(state0)
       val nbrAttrs = state.select(col("vertex").as("nbr"),
         col("pkey").as("npkey"), col("color").as("ncolor"))
       val perVertex = state.filter(col("color") < 0).select(col("vertex"), col("pkey"))
@@ -774,10 +751,10 @@ object Graphs {
       val active = state.filter(col("status") === 0).select("vertex")
       // rooted at the LOOP-bound active set, not the edge cache (r17): a
       // Dataset executes under its ROOT's session, and this relation is
-      // eager-materialized every round through cutStats below — rooted at
-      // `undirected` it ran on the CALLER's session (configured width,
-      // AQE stage-jobs: JobTrace showed ~8 jobs/round, 125 total), while
-      // the loop session runs it as one narrow-width job.
+      // eager-materialized every round by the `updates` checkpoint —
+      // rooted at `undirected` it ran on the CALLER's session (configured
+      // width, AQE stage-jobs: JobTrace showed ~8 jobs/round, 125 total),
+      // while the loop session runs it as one narrow-width job.
       val ae = active.select(col("vertex").as("src"))
         .join(undirected, "src")
         .join(active.select(col("vertex").as("dst")), "dst")
@@ -810,7 +787,8 @@ object Graphs {
         .select(col("vertex"), lit(-1L).as("newmate"), lit(2).as("newstat"))
       // lonely still references the state-derived active-edge relation, so
       // the merged update set gets the stats cut before it meets the state
-      val updates = cutStats(matched.unionByName(lonely))
+      val updates = graft.iterate.Fixpoint.rebindStats(
+        matched.unionByName(lonely).localCheckpoint(eager = true))
       state.join(updates, Seq("vertex"), "left")
         .select(col("vertex"),
           when(col("status") === 0 && col("newstat").isNotNull, col("newstat"))
@@ -874,10 +852,10 @@ object Graphs {
     val nV = state.count()
     // the shared loop session for the vertex count's width, which the
     // per-phase fixpoints below also resolve to: the per-phase barriers (ae
-    // slice, decided-merge cutStats) are state-sized too. The re-bind
+    // slice, decided-merge checkpoint) are state-sized too. The re-bind
     // streams from the checkpoint blocks once.
     val sess = graft.iterate.Fixpoint.loopSession(edges.sparkSession, nV)
-    state = sess.createDataFrame(state.rdd, state.schema)
+    state = graft.iterate.Fixpoint.rebindStats(state, sess)
     for (_ <- 1 to phases) {
       val active = state.filter(col("scc") < 0).select("vertex")
       // the phase's active edge slice, materialized once: both fixpoints
@@ -913,10 +891,12 @@ object Graphs {
       }
       val decided = flags.filter(col("flag") === 1)
         .select(col("vertex").as("dv"), col("color").as("dscc"))
-      state = cutStats(state.join(decided, state("vertex") === col("dv"), "left")
-        .select(state("vertex"),
-          when(col("scc") < 0 && col("dv").isNotNull, col("dscc"))
-            .otherwise(col("scc")).as("scc")))
+      state = graft.iterate.Fixpoint.rebindStats(
+        state.join(decided, state("vertex") === col("dv"), "left")
+          .select(state("vertex"),
+            when(col("scc") < 0 && col("dv").isNotNull, col("dscc"))
+              .otherwise(col("scc")).as("scc"))
+          .localCheckpoint(eager = true))
     }
     graft.iterate.Fixpoint.unpersistMaterialized(e)
     state

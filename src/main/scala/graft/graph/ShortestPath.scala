@@ -1,8 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.iterate.Fixpoint
 
 /** Single-source shortest path, unit edge weights (BFS relaxation to a
@@ -26,46 +25,8 @@ object ShortestPath {
   /** @param edges (src LONG, dst LONG)
     * @return (vertex LONG, dist DOUBLE), Infinity for unreached
     */
-  def run(edges: DataFrame, source: Long, maxIter: Int = 50): DataFrame = {
-    // persist the derivation for the sizing count, then materialize the
-    // src-partitioned edge cache as a LogicalRDD leaf (r17): the loop
-    // re-scans e every round, and a leaf keeps each round's Catalyst walk
-    // off the derivation subtree; the old form also re-ran the derivation
-    // a second time to fill the cache
-    val u = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val width = Fixpoint.sizedPartitions(edges.sparkSession, u.count())
-    val e = Fixpoint.materializedLeaf(u.repartition(width, col("src")))
-    u.unpersist(blocking = false)
-
-    // state carries (vertex, dist, changed): `changed` marks the frontier.
-    // The source is unioned in explicitly — it must appear with dist 0 even
-    // when it has no incident edges (the oracle seeds it unconditionally).
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val init = Graphs.vertices(e)
-      .union(Seq(source).toDF("vertex")).distinct()
-      .select(col("vertex"), lit(source).as("s"))
-      .select(col("vertex"),
-        when(col("vertex") === col("s"), lit(0.0)).otherwise(lit(Double.PositiveInfinity)).as("dist"),
-        (col("vertex") === col("s")).as("changed"))
-
-    val result = Fixpoint.iterate(init, maxIter,
-      converged = Fixpoint.noneMatch(col("changed"))) { (state, _) =>
-      val frontier = state.filter(col("changed"))
-      val candidates = frontier
-        .join(e, frontier("vertex") === e("src"))
-        .select(col("dst").as("vertex"), (col("dist") + 1.0).as("cand"))
-        .groupBy("vertex").agg(min("cand").as("cand"))
-      state.select(col("vertex"), col("dist"))
-        .join(candidates, Seq("vertex"), "left_outer")
-        .select(
-          col("vertex"),
-          least(col("dist"), coalesce(col("cand"), lit(Double.PositiveInfinity))).as("dist"),
-          (coalesce(col("cand"), lit(Double.PositiveInfinity)) < col("dist")).as("changed"))
-    }
-    Fixpoint.unpersistMaterialized(e)
-    result.select("vertex", "dist")
-  }
+  def run(edges: DataFrame, source: Long, maxIter: Int = 50): DataFrame =
+    relaxFromSource(edges, source, lit(1.0), maxIter)
 
   /** Weighted SSSP — Bellman-Ford relaxation to a fixpoint: identical
     * frontier/merge shape to run(), with candidates adding the edge weight
@@ -77,39 +38,44 @@ object ShortestPath {
     * here — the case the unit-weight variant cannot express.
     * @param edges (src LONG, dst LONG, w DOUBLE — integral values)
     * @return (vertex LONG, dist DOUBLE), Infinity for unreached */
-  def runWeighted(edges: DataFrame, source: Long, maxIter: Int = 50): DataFrame = {
-    // persist the derivation for the sizing count, then materialize the
-    // src-partitioned edge cache as a LogicalRDD leaf (r17): the loop
-    // re-scans e every round, and a leaf keeps each round's Catalyst walk
-    // off the derivation subtree; the old form also re-ran the derivation
-    // a second time to fill the cache
-    val u = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val width = Fixpoint.sizedPartitions(edges.sparkSession, u.count())
-    val e = Fixpoint.materializedLeaf(u.repartition(width, col("src")))
-    u.unpersist(blocking = false)
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val init = Graphs.vertices(e.select("src", "dst"))
-      .union(Seq(source).toDF("vertex")).distinct()
-      .select(col("vertex"),
-        when(col("vertex") === source, lit(0.0)).otherwise(lit(Double.PositiveInfinity)).as("dist"),
-        (col("vertex") === source).as("changed"))
-    val result = weightedRelaxLoop(init, e, maxIter)
+  def runWeighted(edges: DataFrame, source: Long, maxIter: Int = 50): DataFrame =
+    relaxFromSource(edges, source, col("w"), maxIter)
+
+  /** run/runWeighted: the relax loop from `source` over the src-partitioned
+    * edge leaf, each edge costing `cost` (evaluated against the edge row). */
+  private def relaxFromSource(edges: DataFrame, source: Long, cost: Column,
+      maxIter: Int): DataFrame = {
+    val e = Fixpoint.srcPartitionedLeaf(edges)
+    val result = relaxLoop(sourceSeeded(e, source), e, cost, maxIter)
     Fixpoint.unpersistMaterialized(e)
     result.select("vertex", "dist")
   }
 
-  /** The Bellman-Ford frontier loop shared by runWeighted and
-    * incrementalWeighted: relax out-edges of changed vertices, merge by
+  /** The initial (vertex, dist, changed) state: every vertex of `e` plus
+    * the source, which must appear with dist 0 even when it has no incident
+    * edges (the oracle seeds it unconditionally); the source alone is the
+    * frontier. */
+  private def sourceSeeded(e: DataFrame, source: Long): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    Graphs.vertices(e)
+      .union(Seq(source).toDF("vertex")).distinct()
+      .select(col("vertex"),
+        when(col("vertex") === source, lit(0.0)).otherwise(lit(Double.PositiveInfinity)).as("dist"),
+        (col("vertex") === source).as("changed"))
+  }
+
+  /** The frontier loop shared by run, runWeighted and incrementalWeighted:
+    * relax out-edges of changed vertices at `cost` per edge, merge by
     * per-vertex min, converge when no distance improves. `e` must be
-    * src-partitioned and persisted by the caller. */
-  private def weightedRelaxLoop(init: DataFrame, e: DataFrame, maxIter: Int): DataFrame =
+    * src-partitioned and materialized by the caller. */
+  private def relaxLoop(init: DataFrame, e: DataFrame, cost: Column, maxIter: Int): DataFrame =
     Fixpoint.iterate(init, maxIter,
       converged = Fixpoint.noneMatch(col("changed"))) { (state, _) =>
       val frontier = state.filter(col("changed"))
       val candidates = frontier
         .join(e, frontier("vertex") === e("src"))
-        .select(col("dst").as("vertex"), (col("dist") + col("w")).as("cand"))
+        .select(col("dst").as("vertex"), (col("dist") + cost).as("cand"))
         .groupBy("vertex").agg(min("cand").as("cand"))
       state.select(col("vertex"), col("dist"))
         .join(candidates, Seq("vertex"), "left_outer")
@@ -145,10 +111,7 @@ object ShortestPath {
     * @return (vertex LONG, dist DOUBLE), Infinity for unreached */
   def incrementalWeighted(dists: DataFrame, newEdges: DataFrame,
       allEdges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val u = allEdges.persist(StorageLevel.MEMORY_AND_DISK)
-    val width = Fixpoint.sizedPartitions(allEdges.sparkSession, u.count())
-    val e = Fixpoint.materializedLeaf(u.repartition(width, col("src")))
-    u.unpersist(blocking = false)
+    val e = Fixpoint.srcPartitionedLeaf(allEdges)
     val inf = lit(Double.PositiveInfinity)
     val stored = dists.select(col("vertex"), col("dist"))
     // merged vertex set; vertices the batch introduces start unreached
@@ -165,7 +128,7 @@ object ShortestPath {
         col("vertex"),
         least(col("dist"), coalesce(col("cand"), inf)).as("dist"),
         (coalesce(col("cand"), inf) < col("dist")).as("changed"))
-    val result = weightedRelaxLoop(init, e, maxIter)
+    val result = relaxLoop(init, e, col("w"), maxIter)
     Fixpoint.unpersistMaterialized(e)
     result.select("vertex", "dist")
   }
@@ -186,10 +149,7 @@ object ShortestPath {
   def multiSourceBfs(edges: DataFrame, seeds: Seq[Long], maxIter: Int = 50): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val u = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val width = Fixpoint.sizedPartitions(spark, u.count())
-    val e = Fixpoint.materializedLeaf(u.repartition(width, col("src")))
-    u.unpersist(blocking = false)
+    val e = Fixpoint.srcPartitionedLeaf(edges)
     val unreached = lit(Long.MaxValue)
     val init = seeds.toDF("seed").select(col("seed"), col("seed").as("vertex"),
       lit(0L).as("dist"), lit(true).as("changed"))
@@ -219,23 +179,9 @@ object ShortestPath {
     * partition-order-dependent; ours is stable).
     */
   def runWithPath(edges: DataFrame, source: Long, maxIter: Int = 50): DataFrame = {
-    // persist the derivation for the sizing count, then materialize the
-    // src-partitioned edge cache as a LogicalRDD leaf (r17): the loop
-    // re-scans e every round, and a leaf keeps each round's Catalyst walk
-    // off the derivation subtree; the old form also re-ran the derivation
-    // a second time to fill the cache
-    val u = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val width = Fixpoint.sizedPartitions(edges.sparkSession, u.count())
-    val e = Fixpoint.materializedLeaf(u.repartition(width, col("src")))
-    u.unpersist(blocking = false)
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val init = Graphs.vertices(e)
-      .union(Seq(source).toDF("vertex")).distinct()
-      .select(col("vertex"),
-        when(col("vertex") === source, lit(0.0)).otherwise(lit(Double.PositiveInfinity)).as("dist"),
-        when(col("vertex") === source, array(lit(source))).otherwise(lit(null).cast("array<bigint>")).as("path"),
-        (col("vertex") === source).as("changed"))
+    val e = Fixpoint.srcPartitionedLeaf(edges)
+    val init = sourceSeeded(e, source).withColumn("path",
+      when(col("vertex") === source, array(lit(source))).otherwise(lit(null).cast("array<bigint>")))
 
     val result = Fixpoint.iterate(init, maxIter,
       converged = Fixpoint.noneMatch(col("changed"))) { (state, _) =>

@@ -2,6 +2,7 @@ package graft.iterate
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 /** Driver-loop utilities for iterative (fixpoint) algorithms.
@@ -10,10 +11,19 @@ import org.apache.spark.storage.StorageLevel
   * (PageRankDataSet/src/main/scala/wc/FollowerCount.scala:63-73 rebinds
   * `ranks` to an ever-deeper plan) or sidestep it by round-tripping state
   * through HDFS between MR jobs (ShortestPathMR/src/main/java/wc/
-  * CountFollowers.java:202-207). Here state stays in memory and lineage is
-  * cut with `localCheckpoint` on a fixed cadence — the single biggest
-  * perf trap of driver-loop algorithms at scale (plan analysis time and
-  * task serialization grow superlinearly otherwise).
+  * CountFollowers.java:202-207). Here state stays in memory and its lineage
+  * is cut with `localCheckpoint` every round — the single biggest perf trap
+  * of driver-loop algorithms at scale (plan analysis time and task
+  * serialization grow superlinearly otherwise).
+  *
+  * A loop materializes relations in three ways, each with one release path:
+  *  - leaf ([[materializedLeaf]], [[srcPartitionedLeaf]]): an eager
+  *    checkpoint of a loop-invariant relation with many consumers —
+  *    released by [[unpersistMaterialized]];
+  *  - columnar persist: a loop-invariant relation scanned every round
+  *    (`Graphs.undirectedSized`) — released by [[unpersistMaterialized]];
+  *  - lazy loop state: each round's lazy checkpoint, materialized by the
+  *    round's barrier — released by `runLoop` when the next round lands.
   */
 object Fixpoint {
 
@@ -39,8 +49,13 @@ object Fixpoint {
     * Wrapping the checkpointed RDD in a fresh DataFrame resets the
     * estimate to the scan default while rows keep streaming from the
     * existing checkpoint blocks — no job, no recompute. */
-  def rebindStats(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(df.rdd, df.schema)
+  def rebindStats(df: DataFrame): DataFrame = rebindStats(df, df.sparkSession)
+
+  /** [[rebindStats]] under session `to`: the same zero-job re-bind, and the
+    * one way a relation moves into a loop session — a Dataset executes under
+    * its root's session, so the rebound relation plans with `to`'s conf. */
+  def rebindStats(df: DataFrame, to: SparkSession): DataFrame =
+    to.createDataFrame(df.rdd, df.schema)
 
   /** Materialize a loop-invariant relation ONCE and return it as a single
     * LogicalRDD leaf (r17, guide §1.2 "shrink the step DAG"): a persisted
@@ -55,6 +70,22 @@ object Fixpoint {
     * manager and would leak the checkpoint blocks. */
   def materializedLeaf(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true)
+
+  /** The src-partitioned edge cache of a driver loop, as one
+    * [[materializedLeaf]]: persists the `edges` derivation for the sizing
+    * count (so the repartition reads the cache instead of re-running the
+    * derivation), hash-partitions it by `src` to the width the count
+    * warrants, materializes that as a leaf and releases the derivation. The
+    * loop re-scans the leaf every round, and each round's Catalyst walk sees
+    * one node instead of the derivation subtree. Release with
+    * [[unpersistMaterialized]]. */
+  def srcPartitionedLeaf(edges: DataFrame): DataFrame = {
+    val u = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val width = sizedPartitions(edges.sparkSession, u.count())
+    val leaf = materializedLeaf(u.repartition(width, col("src")))
+    u.unpersist(blocking = false)
+    leaf
+  }
 
   /** Unpersist a relation materialized by [[materializedLeaf]] (checkpoint
     * blocks) OR by persist() (cache manager) — resolves whichever backs it.
@@ -89,8 +120,7 @@ object Fixpoint {
     // round 1's materialization computes the copy off the seed cache in the
     // same job, so the entry pays ONE job (the sizing count) instead of two;
     // the seed cache is released once the first round has materialized.
-    val state0 = loop.createDataFrame(seeded.rdd, seeded.schema)
-      .localCheckpoint(eager = false)
+    val state0 = rebindStats(seeded, loop).localCheckpoint(eager = false)
     runLoop(state0, Some(seeded), maxIter, converged, step)
   }
 
@@ -114,8 +144,7 @@ object Fixpoint {
       converged: (DataFrame, DataFrame) => Boolean = (_, _) => false)(
       step: (DataFrame, Int) => DataFrame): DataFrame = {
     val loop = loopSession(init.sparkSession, knownRows)
-    val state0 = loop.createDataFrame(init.rdd, init.schema)
-      .localCheckpoint(eager = false)
+    val state0 = rebindStats(init, loop).localCheckpoint(eager = false)
     runLoop(state0, None, maxIter, converged, step)
   }
 
@@ -242,10 +271,10 @@ object Fixpoint {
     * propagation): per-row values only ever decrease over a constant key
     * set, so equality of consecutive exact column sums implies no row
     * changed. One single-stage aggregation per round on the cached state —
-    * replaces `unchanged`'s diff join (a shuffle join per round).
+    * no diff join of consecutive states (a shuffle join per round).
     * DECIMAL(38,0) keeps the sum exact at any vertex count. */
   def monotoneSumUnchanged(valCol: String): (DataFrame, DataFrame) => Boolean = {
-    import org.apache.spark.sql.functions.{col, sum}
+    import org.apache.spark.sql.functions.sum
     var prev: Option[java.math.BigDecimal] = None
     (_: DataFrame, next: DataFrame) => {
       // empty state sums to NULL — normalize to 0 so an empty fixpoint
@@ -271,17 +300,5 @@ object Fixpoint {
       prev = n
       same
     }
-  }
-
-  /** Convergence test used by the reference's SSSP variants
-    * (SingleSourceShortestPathRDD/src/main/scala/wc/FollowerCount.scala:42-44):
-    * no row changed its value between iterations. `keyCol` must be unique.
-    * Implemented as a key join of the two states + an emptiness probe of
-    * the differing rows. */
-  def unchanged(keyCol: String, valCol: String)(prev: DataFrame, next: DataFrame): Boolean = {
-    val p = prev.select(keyCol, valCol).withColumnRenamed(valCol, "__prev")
-    next.select(keyCol, valCol).join(p, keyCol)
-      .filter(org.apache.spark.sql.functions.col(valCol) =!= org.apache.spark.sql.functions.col("__prev"))
-      .isEmpty
   }
 }

@@ -38,7 +38,7 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   *
   * Codegen boundary: the exec runs between two whole-stage-codegen spans
   * (scan-project below, the exchange/sort machinery around it). Measured
-  * (Profile --topkboundary, stacked identity InternalRow layers on the
+  * (BASELINE.md round 7, stacked identity InternalRow layers on the
   * bench input): one extra iterator boundary costs under timer noise at
   * the 150k-row bench shape and ~0.3 ms at 15 million rows — two
   * boundaries are ~0.2% of the operator's 0.28 s bench time, so a

@@ -1545,7 +1545,7 @@ object AnalyticsQueries {
     "q_assoc_rules" -> ((s, d) => {
       // the distinct basket relation feeds four consumers (total, support,
       // both self-join legs). r16 materialized it once (localCheckpoint);
-      // the r17 decade sweep (tools/AssocAb, Inflate 10x/100x) REVERTED
+      // the r17 decade sweep (BASELINE.md r17, Inflate 10x/100x) REVERTED
       // that: the relation is near-corpus-sized at TPC-H shape (distinct
       // pairs ≈ lineitem rows), and at 100x the checkpointed form ran
       // 42.2 s vs 28.7 s re-scan — row-block re-iteration for 4 consumers

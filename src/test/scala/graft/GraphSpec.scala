@@ -48,6 +48,10 @@ class GraphSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(d(1L) == 0.0 && d(2L) == 1.0 && d(3L) == 1.0 && d(4L) == 2.0)
     assert(d(5L).isPosInfinity && d(6L).isPosInfinity)
+    // unit weights through the weighted entry: the same relax loop, cost 1
+    val w = ShortestPath.runWeighted(e.withColumn("w", lit(1.0)), source = 1L).collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(w == d)
   }
 
   test("sssp with path: tracks one shortest path, lexicographic tie-break") {
@@ -163,14 +167,6 @@ class GraphSpec extends SparkSpec {
     assert(sizes == Map(0 -> 5L, 1 -> 5L))
   }
 
-  test("fixpoint unchanged-predicate detects stability (reference diff-join semantics)") {
-    import graft.iterate.Fixpoint
-    val a = Seq((1L, 1.0), (2L, 5.0)).toDF("vertex", "dist")
-    val b = Seq((1L, 1.0), (2L, 4.0)).toDF("vertex", "dist")
-    assert(Fixpoint.unchanged("vertex", "dist")(a, a))
-    assert(!Fixpoint.unchanged("vertex", "dist")(a, b))
-  }
-
   test("kmeans: empty cluster keeps its centroid") {
     val pts = Seq(1.0, 1.5, 2.0).toDF("x")
     val res = KMeans.run(pts, "x", init = Seq(1.0, 500.0), maxIter = 3, fixedIter = true)
@@ -235,6 +231,56 @@ class GraphSpec extends SparkSpec {
     assert(conf(wide, "spark.sql.adaptive.enabled") == "true")
     assert(conf(wide, "spark.sql.autoBroadcastJoinThreshold") != "-1")
     assert(conf(wide, "spark.sql.constraintPropagation.enabled") == "false")
+  }
+
+  test("fixpoint primitives: stats re-bind runs no job; edge leaf releases every block") {
+    import graft.iterate.Fixpoint
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.execution.LogicalRDD
+    val e = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 5L -> 6L)
+    val sc = spark.sparkContext
+
+    // (a) a checkpoint keeps its producing plan's size estimate; the
+    // re-bind resets it to the default, under the session it is given
+    val joined = (1 to 3).foldLeft(e.toDF("v0", "v1")) { (acc, i) =>
+      acc.join(e.toDF(s"v$i", s"v${i + 1}"), s"v$i")
+    }.localCheckpoint(eager = true)
+    val default = spark.sessionState.conf.defaultSizeInBytes
+    def size(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size(joined) != default)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    val loop = Fixpoint.loopSession(spark, 10L)
+    val (rebound, moved) = try {
+      val r = Fixpoint.rebindStats(joined)
+      val m = Fixpoint.rebindStats(joined, loop)
+      assert(size(r) == default && size(m) == default)
+      GraftBridge.drainListenerBus(sc)
+      (r, m)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0)
+    assert((rebound.sparkSession eq spark) && (moved.sparkSession eq loop))
+    assert(moved.count() == joined.count())
+    Fixpoint.unpersistMaterialized(joined)
+
+    // (b) the edge leaf is one LogicalRDD at the sized width, and releasing
+    // it leaves neither the derivation cache nor a checkpoint block behind
+    val before = sc.getPersistentRDDs.keySet
+    val leaf = Fixpoint.srcPartitionedLeaf(e.filter(col("src") =!= col("dst")))
+    leaf.queryExecution.analyzed match {
+      case lr: LogicalRDD =>
+        assert(lr.rdd.getNumPartitions == Fixpoint.sizedPartitions(spark, 4L))
+      case other => fail(s"edge leaf root is not a LogicalRDD: ${other.nodeName}")
+    }
+    assert(leaf.count() == 4L)
+    Fixpoint.unpersistMaterialized(leaf)
+    assert(sc.getPersistentRDDs.keySet.subsetOf(before))
   }
 
   test("cc doubling: linear HashMin at the same round count splits the long chain") {
