@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** Dev-only steady-state A/B for the round-14 incremental blocking twins
@@ -55,11 +55,12 @@ object IncAb {
     def fsRead(): Long = org.apache.hadoop.fs.FileSystem
       .getAllStatistics.asScala.map(_.getBytesRead).sum
     def t(name: String)(f: => Long): Double = {
-      Thread.sleep(500); val s0 = shuffled.get(); val b0 = fsRead()
+      GraftBridge.drainListenerBus(spark.sparkContext)
+      val s0 = shuffled.get(); val b0 = fsRead()
       val t0 = System.nanoTime()
       val n = f
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let straggler listener events drain
+      GraftBridge.drainListenerBus(spark.sparkContext)
       println(f"[incab] $name%-30s $dt%8.3f s  rows=$n  " +
         f"shuffled=${shuffled.get() - s0}  fs_read=${fsRead() - b0}")
       dt

@@ -16,6 +16,11 @@ object JobCount {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (args.nonEmpty) args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else Seq("q_graph_cc")
+    val unknown = names.filterNot(graft.SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[jobcount] unknown queries: ${unknown.mkString(", ")}")
+      sys.exit(2)
+    }
     val spark = graft.core.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val jobs = new AtomicLong; val stages = new AtomicLong; val tasks = new AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -26,13 +31,15 @@ object JobCount {
     // warmup (JIT + codegen), not counted in the report
     try SparkEntryWarm.warm(spark) catch { case _: Throwable => () }
     names.foreach { n =>
+      // deliver every event of the warm-up or previous query before the
+      // reset, so late events are not counted against this query
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       jobs.set(0); stages.set(0); tasks.set(0)
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(n)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      // listener events are async — give the bus a beat to drain
-      Thread.sleep(500)
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
       println(f"[jobcount] $n jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} wall=$dt%.2f")
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       spark.catalog.clearCache()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 
 /** Dev-only single-sample 100× sweep rows (r14 verdict item 6) for the
@@ -36,14 +36,15 @@ object Sweep100 {
       })
     def t1(name: String)(f: => DataFrame): Unit = {
       val keep = spark.sparkContext.getPersistentRDDs.keySet
-      Thread.sleep(500); val s0 = shuffled.get()
+      GraftBridge.drainListenerBus(spark.sparkContext)
+      val s0 = shuffled.get()
       val t0 = System.nanoTime()
       f.write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
         if (!keep.contains(id)) r.unpersist(blocking = false)
       }
-      Thread.sleep(500) // straggler listener events
+      GraftBridge.drainListenerBus(spark.sparkContext)
       println(f"[sweep100] $name%-22s ${k}x $dt%8.2f s  " +
         f"shuffled=${shuffled.get() - s0} (single sample)")
     }

@@ -764,6 +764,166 @@ class StreamingSpec extends SparkSpec {
       "replaying the compaction batch changed the store")
   }
 
+  /** Every row of a batch-partitioned dir, batch_id included, as a sorted
+    * multiset: a duplicated partition shows here, unlike in a row set. */
+  private def dirRows(dir: String): Seq[String] =
+    spark.read.parquet(dir).collect().map(_.mkString("|")).toSeq.sorted
+
+  /** Drives a stored-index trigger directly over three batches with
+    * compactEvery = 2, and re-runs batch 1 and the compaction batch 2
+    * right after each lands — a crash after the writes, before the
+    * stream commits the batch. Batch 1's replay must overwrite its own
+    * partitions; batch 2's must find its marker and do nothing. Either
+    * way the index and output dirs stay content-identical. */
+  private def assertTriggerReplays(family: String, batches: Seq[org.apache.spark.sql.DataFrame])(
+      trigger: (org.apache.spark.sql.DataFrame, Long, String, String) => Unit): Unit = {
+    val dir = Files.createTempDirectory(s"graft-$family-replay")
+    val (index, out) = (dir.resolve("index").toString, dir.resolve("out").toString)
+    def snapshot() = (dirRows(index), dirRows(out))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      trigger(b, i.toLong, index, out)
+      val before = snapshot()
+      if (i > 0) {
+        trigger(b, i.toLong, index, out)
+        val after = snapshot()
+        // row counts gained/lost per dir, (index, output)
+        val changed = Seq(after._1 diff before._1, before._1 diff after._1,
+          after._2 diff before._2, before._2 diff after._2).map(_.size)
+        assert(changed.forall(_ == 0),
+          s"$family: replaying batch $i changed the store (index +/-, output +/-): $changed")
+      }
+    }
+    val pids = spark.read.parquet(index).select(col("batch_id").cast("long"))
+      .distinct().collect().map(_.getLong(0)).toSet
+    assert(pids == Set(2L), s"$family: batch 2 did not compact the index: $pids")
+    assert(dirRows(out).nonEmpty, s"$family: no batch emitted anything")
+  }
+
+  /** the sf0.001 documents in three doc_id-ordered micro-batches */
+  private lazy val docBatches: Seq[org.apache.spark.sql.DataFrame] = {
+    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+      .select("doc_id", "text")
+    Seq(0L -> 170L, 170L -> 340L, 340L -> Long.MaxValue).map { case (lo, hi) =>
+      docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
+    }
+  }
+
+  test("substring trigger replay: batch 1 overwrites its partition, the compaction batch is a marker no-op") {
+    assertTriggerReplays("substring", docBatches) { (b, id, index, out) =>
+      graft.streaming.CorpusStreams.substringBatch(b, id, index, out,
+        k = 8, minLen = 16, maxOcc = 1000L, compactEvery = 2)
+    }
+  }
+
+  test("winnow trigger replay: batch 1 overwrites its partition, the compaction batch is a marker no-op") {
+    assertTriggerReplays("winnow", docBatches) { (b, id, index, out) =>
+      graft.streaming.CorpusStreams.winnowBatch(b, id, index, out,
+        k = 3, w = 4, minShared = 4L, compactEvery = 2)
+    }
+  }
+
+  test("novelty trigger replay: batch 1 overwrites its partition, the compaction batch is a marker no-op") {
+    assertTriggerReplays("novelty", docBatches) { (b, id, index, out) =>
+      graft.streaming.CorpusStreams.noveltyBatch(b, id, index, out,
+        k = 4, compactEvery = 2)
+    }
+  }
+
+  test("importance trigger replay: batch 1 overwrites its partition, the compaction batch is a marker no-op") {
+    val target = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+      .select("doc_id", "text").filter(col("doc_id") % 10 === 7)
+      .localCheckpoint(true)
+    assertTriggerReplays("importance",
+        docBatches.map(_.filter(col("doc_id") % 10 =!= 7))) { (b, id, index, out) =>
+      graft.streaming.CorpusStreams.importanceBatch(b, id, target, index, out,
+        k = 2, compactEvery = 2)
+    }
+  }
+
+  test("editjoin trigger replay: batch 1 overwrites its partition, the compaction batch is a marker no-op") {
+    val cust = spark.read.parquet(sf("sf0.001") + "/customer.parquet")
+      .select("c_custkey", "c_name")
+    assertTriggerReplays("editjoin",
+        (0 until 3).map(i => cust.filter(col("c_custkey") % 3 === i))) { (b, id, index, out) =>
+      graft.streaming.CorpusStreams.editJoinBatch(b, id, "c_custkey", "c_name",
+        index, out, compactEvery = 2)
+    }
+  }
+
+  test("novelty ingest compaction: partitions bounded, min-folded index and scores unchanged") {
+    import graft.streaming.CorpusStreams
+    import graft.pipeline.TextAnalysis
+    val all = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+      .select("doc_id", "text")
+    val dir = Files.createTempDirectory("graft-novelty-compact")
+    // four doc_id-ordered micro-batches (the novelty arrival contract);
+    // compactEvery=2 folds at batch 2
+    Seq(0L -> 125L, 125L -> 250L, 250L -> 375L, 375L -> Long.MaxValue)
+      .zipWithIndex.foreach { case ((lo, hi), i) =>
+        all.filter(col("doc_id") >= lo && col("doc_id") < hi).coalesce(1)
+          .write.parquet(dir.resolve(s"in/b$i").toString)
+      }
+    val stream = spark.readStream.schema(all.schema)
+      .option("maxFilesPerTrigger", 1).parquet(dir.toString + "/in/*")
+    val q = CorpusStreams.noveltyIngest(stream, dir.resolve("index").toString,
+      dir.resolve("scores").toString, dir.resolve("ck").toString,
+      compactEvery = 2)
+    q.processAllAvailable(); q.stop()
+    val index = spark.read.parquet(dir.resolve("index").toString)
+    val pids = index.select(col("batch_id").cast("long")).distinct().collect()
+      .map(_.getLong(0)).toSet
+    assert(pids == Set(2L, 3L), pids)
+    // the min-fold lost nothing: the surviving partitions min-fold to the
+    // full corpus's first-carrier relation
+    val grown = index.groupBy("h").agg(min("first_doc").as("first_doc"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(grown == TextAnalysis.noveltyIndex(all).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet)
+    def scores(df: org.apache.spark.sql.DataFrame) = df
+      .select("doc_id", "n_grams", "n_novel", "novelty_frac").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    val streamed = scores(spark.read.parquet(dir.resolve("scores").toString))
+    val batch = scores(TextAnalysis.noveltyScores(all))
+    assert(streamed.nonEmpty && streamed == batch,
+      s"extra=${(streamed -- batch).take(3)} missing=${(batch -- streamed).take(3)}")
+  }
+
+  test("stored-index trigger: an index dir without batch_id fails loudly, naming the dir") {
+    import graft.streaming.CorpusStreams
+    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+      .select("doc_id", "text")
+    val dir = Files.createTempDirectory("graft-old-layout")
+    val index = dir.resolve("index").toString
+    // the old append layout: index rows with no batch_id partition column
+    graft.pipeline.Dedup.winnowIndex(docs.filter(col("doc_id") < 250))
+      .write.parquet(index)
+    val e = intercept[IllegalArgumentException] {
+      CorpusStreams.winnowBatch(docs.filter(col("doc_id") >= 250), 1L, index,
+        dir.resolve("pairs").toString, k = 3, w = 4, minShared = 4L,
+        compactEvery = 16)
+    }
+    assert(e.getMessage.contains(index), e.getMessage)
+  }
+
+  test("stored-index trigger releases every checkpoint it takes") {
+    val cust = spark.read.parquet(sf("sf0.001") + "/customer.parquet")
+      .select("c_custkey", "c_name")
+    val dir = Files.createTempDirectory("graft-trigger-release")
+    // batches 0 and 1 append, batch 2 compacts; the edit-join algebra holds
+    // no checkpoint of its own, so every persisted RDD a trigger leaves
+    // behind is one the protocol leaked. Asserted as "no new key": the
+    // registry holds RDDs weakly, so an older entry may vanish meanwhile.
+    (0 until 3).foreach { i =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      graft.streaming.CorpusStreams.editJoinBatch(
+        cust.filter(col("c_custkey") % 3 === i), i.toLong, "c_custkey", "c_name",
+        dir.resolve("index").toString, dir.resolve("pairs").toString,
+        compactEvery = 2)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"batch $i left persisted RDDs $leaked")
+    }
+  }
+
   test("sn ingest: running pair store equals the one-shot blocking; writes are batch-proportional") {
     import graft.streaming.CorpusStreams
     import graft.ops.SortedNeighborhood
