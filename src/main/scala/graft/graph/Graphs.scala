@@ -62,27 +62,20 @@ object Graphs {
     * width the measured edge count warrants (SSSP's edge treatment —
     * ShortestPath.run): every per-round scan then reads as many partitions
     * as the data needs, not the derivation's shuffle width. */
-  private[graft] def undirectedSized(edges: DataFrame): DataFrame = {
-    // persist BEFORE the sizing count: the count's materialization then
-    // feeds the repartition below from cache, instead of re-running the
-    // union+distinct derivation (its shuffle included) a second time
-    val u = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val width = graft.iterate.Fixpoint.sizedPartitions(edges.sparkSession, u.count())
-    // COLUMNAR persist, deliberately NOT a LogicalRDD leaf (r17 A/B): the
-    // fixpoint loops scan this relation EVERY round, and the in-memory
-    // columnar cache's vectorized scan beats row-block iteration by
-    // ~180 ms/round on the 160k-row coloring graph (coloring 9.9 s persist
-    // vs 14.1 s leaf, coreness 5.4 vs 6.6). Init-only consumers (kTruss)
-    // take the leaf instead — the opposite side of the same tradeoff.
-    val sized = u.repartition(width, col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sized.count()
-    u.unpersist(blocking = false)
-    sized
-  }
+  private[graft] def undirectedSized(edges: DataFrame): DataFrame =
+    // COLUMNAR, deliberately NOT a LogicalRDD leaf (r17 A/B): the fixpoint
+    // loops scan this relation EVERY round, and the in-memory columnar
+    // cache's vectorized scan beats row-block iteration by ~180 ms/round on
+    // the 160k-row coloring graph (coloring 9.9 s persist vs 14.1 s leaf,
+    // coreness 5.4 vs 6.6). Init-only consumers (kTruss) take the leaf
+    // instead — the opposite side of the same tradeoff.
+    graft.iterate.Fixpoint.pinned(
+      edges.select(col("src"), col("dst"))
+        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct(),
+      graft.iterate.Fixpoint.columnar) { (u, n) =>
+      u.repartition(graft.iterate.Fixpoint.sizedPartitions(edges.sparkSession, n), col("src"))
+    }
 
   /** Connected components by min-label propagation (HashMin): every vertex
     * converges to the smallest id in its component. Edges are treated as
@@ -327,6 +320,7 @@ object Graphs {
     val loop = graft.iterate.Fixpoint.loopSession(
       edges.sparkSession, first.count())
     var state = graft.iterate.Fixpoint.rebindStats(first, loop)
+    var prev: Option[DataFrame] = None // state g−1, released once g materializes
     val degs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     var i = 0
@@ -349,6 +343,8 @@ object Graphs {
         count(lit(1)).as("n")).head()
       val twoM = srow.getLong(0)
       val n = srow.getLong(1)
+      prev.foreach(graft.iterate.Fixpoint.unpersistMaterialized)
+      prev = None
       // keep-filter headroom: 2·n·deg ≤ 2·n·(n−1) and 3·2m must both fit
       // in int64 — fail fast instead of wrapping where the oracle errors
       require(twoM <= Long.MaxValue / 3 &&
@@ -360,6 +356,7 @@ object Graphs {
       else {
         val keep = deg.filter(lit(2L) * lit(n) * col("deg") > lit(3L) * lit(twoM))
           .select(col("vertex"))
+        prev = Some(state)
         state = state
           .join(keep.withColumnRenamed("vertex", "src"), Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("vertex", "dst"), Seq("dst"), "left_semi")
@@ -367,7 +364,7 @@ object Graphs {
       }
       i += 1
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(first)
+    (prev.toSeq :+ state :+ first).foreach(graft.iterate.Fixpoint.unpersistMaterialized)
     // argmax density m/n by exact cross-multiplication, earliest round
     // wins ties (the larger candidate); empty candidates never win
     var best = 0
@@ -375,6 +372,9 @@ object Graphs {
       val (mB, nB) = stats(best); val (mJ, nJ) = stats(j)
       if (Math.multiplyExact(mJ, nB) > Math.multiplyExact(mB, nJ)) best = j
     }
+    // the winner is materialized (its round's stats job); the losers go
+    for (j <- degs.indices if j != best)
+      graft.iterate.Fixpoint.unpersistMaterialized(degs(j))
     degs(best).orderBy("vertex")
   }
 
@@ -612,14 +612,13 @@ object Graphs {
       val active = state.filter(col("status") === 0).select("vertex", "pkey")
       val nbrMin = active.join(undirected, active("vertex") === undirected("src"))
         .groupBy(col("dst").as("nv")).agg(min("pkey").as("nbr_min"))
-      // materialized + stats re-bind: consumed on both sides (domination
+      // round leaf + stats re-bind: consumed on both sides (domination
       // scan + status merge) — the connectedComponentsDoubling barrier
       // pattern plus the estimate reset that keeps rounds planning-stable
-      val winners = graft.iterate.Fixpoint.rebindStats(active
-        .join(nbrMin, active("vertex") === nbrMin("nv"), "left")
-        .filter(col("nbr_min").isNull || col("pkey") < col("nbr_min"))
-        .select(col("vertex"), lit(1).as("newstat"))
-        .localCheckpoint(eager = true))
+      val winners = graft.iterate.Fixpoint.rebindStats(graft.iterate.Fixpoint.roundLeaf(
+        active.join(nbrMin, active("vertex") === nbrMin("nv"), "left")
+          .filter(col("nbr_min").isNull || col("pkey") < col("nbr_min"))
+          .select(col("vertex"), lit(1).as("newstat"))))
       val dominated = winners.join(undirected, winners("vertex") === undirected("src"))
         .select(col("dst").as("vertex")).distinct()
         .withColumn("newstat", lit(2))
@@ -788,7 +787,7 @@ object Graphs {
       // lonely still references the state-derived active-edge relation, so
       // the merged update set gets the stats cut before it meets the state
       val updates = graft.iterate.Fixpoint.rebindStats(
-        matched.unionByName(lonely).localCheckpoint(eager = true))
+        graft.iterate.Fixpoint.roundLeaf(matched.unionByName(lonely)))
       state.join(updates, Seq("vertex"), "left")
         .select(col("vertex"),
           when(col("status") === 0 && col("newstat").isNotNull, col("newstat"))
@@ -842,8 +841,10 @@ object Graphs {
     // eager checkpoint doubles as the old count()'s materialization job
     val e = graft.iterate.Fixpoint.materializedLeaf(
       edges.select(col("src"), col("dst")).distinct())
-    var state = vertices(e).withColumn("scc", lit(-1L))
+    // the checkpoint behind `state`, which the re-binds below wrap
+    var held = vertices(e).withColumn("scc", lit(-1L))
       .localCheckpoint(eager = true)
+    var state = held
     // one cached-scan count: upper-bounds every phase's active set, so the
     // six per-phase fixpoint-entry sizing jobs collapse to this one
     // (iterateSized, r16 verdict item 7). Later phases' shrunken actives
@@ -891,12 +892,16 @@ object Graphs {
       }
       val decided = flags.filter(col("flag") === 1)
         .select(col("vertex").as("dv"), col("color").as("dscc"))
-      state = graft.iterate.Fixpoint.rebindStats(
+      val merged = graft.iterate.Fixpoint.materializedLeaf(
         state.join(decided, state("vertex") === col("dv"), "left")
           .select(state("vertex"),
             when(col("scc") < 0 && col("dv").isNotNull, col("dscc"))
-              .otherwise(col("scc")).as("scc"))
-          .localCheckpoint(eager = true))
+              .otherwise(col("scc")).as("scc")))
+      // the merged state has materialized: the phase's slice and fixpoint
+      // results and the state it supersedes have no reader left
+      Seq(ae, colors, flags, held).foreach(graft.iterate.Fixpoint.unpersistMaterialized)
+      held = merged
+      state = graft.iterate.Fixpoint.rebindStats(merged)
     }
     graft.iterate.Fixpoint.unpersistMaterialized(e)
     state
@@ -1271,16 +1276,15 @@ object Graphs {
     val init = vertices(undirected).withColumn("label", col("vertex"))
     val result = graft.iterate.Fixpoint.iterate(init, maxIter,
       converged = graft.iterate.Fixpoint.monotoneSumUnchanged("label")) { (state, _) =>
-      // HashMin step: min label over self + in-neighbors. Materialized
-      // eagerly because the pointer jump consumes it on BOTH sides of a
+      // HashMin step: min label over self + in-neighbors. A round leaf
+      // because the pointer jump consumes it on BOTH sides of a
       // self-join — without the barrier the agg subtree (and its edge-scan
       // feed) plans and executes twice per round.
       val nbr = state.join(undirected, state("vertex") === undirected("src"))
         .select(col("dst").as("vertex"), col("label"))
-      val m = state.select(col("vertex"), col("label"))
+      val m = graft.iterate.Fixpoint.roundLeaf(state.select(col("vertex"), col("label"))
         .unionByName(nbr)
-        .groupBy("vertex").agg(min("label").as("label"))
-        .localCheckpoint(eager = true)
+        .groupBy("vertex").agg(min("label").as("label")))
       // pointer jump: label <- label(label). Labels are always existing
       // vertex ids (mins of the initial id assignment), so the inner join
       // never drops a vertex; least() keeps monotonicity explicit.

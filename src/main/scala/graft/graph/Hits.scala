@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.iterate.Fixpoint
 
 /** HITS (hubs & authorities) — Kleinberg's link-analysis pair to PageRank.
@@ -28,12 +27,8 @@ object Hits {
 
   /** @param edges (src LONG, dst LONG)
     * @return (vertex LONG, hub DOUBLE, auth DOUBLE), L1-normalized */
-  def run(edges: DataFrame, iterations: Int): DataFrame = {
-    // persist-before-count (the undirectedSized rule, r17): one derivation
-    val u0 = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val width = Fixpoint.sizedPartitions(edges.sparkSession, u0.count())
-    val e = u0.repartition(width, col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-
+  def run(edges: DataFrame, iterations: Int): DataFrame = PageRank.withEdgeCache(edges) { c =>
+    val e = c.e
     val verts = Graphs.vertices(e)
     val init = verts.select(col("vertex"), lit(1.0).as("hub"), lit(1.0).as("auth"))
 
@@ -60,7 +55,6 @@ object Hits {
         .select(col("vertex"), (col("hraw") / col("hs")).as("hub"))
         .join(auth, Seq("vertex"))
     }
-    e.unpersist(false); u0.unpersist(false)
     result.select("vertex", "hub", "auth")
   }
 }

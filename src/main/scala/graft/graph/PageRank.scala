@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.iterate.Fixpoint
@@ -41,27 +41,13 @@ object PageRank {
     * @param realVertexCount number of real (non-dummy) vertices; delta is
     *   divided by this (reference: k*k)
     */
-  def run(edges: DataFrame, iterations: Int, dummy: Long, realVertexCount: Long): DataFrame = {
-    val spark = edges.sparkSession
-    // persist the derivation BEFORE the sizing count (the undirectedSized
-    // rule, r17): the count's materialization then feeds the repartition
-    // below from cache instead of re-running the edge derivation twice
-    val u0 = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = u0.count()
-    val width = Fixpoint.sizedPartitions(spark, nEdges)
-
-    // edges pre-joined with their out-degrees ONCE — the e ⋈ outDeg join is
-    // loop-invariant, so hoisting it saves a join (and its broadcast/
-    // exchange jobs) from every iteration's plan
-    val e = u0.repartition(width, col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    val eWithDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .repartition(width, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  def run(edges: DataFrame, iterations: Int, dummy: Long,
+      realVertexCount: Long): DataFrame = withEdgeCache(edges) { c =>
+    val eWithDeg = outDegreeEdges(c)
 
     // base state: every real vertex 1/N, dummy 0 (PageRankRDD/...:49-51).
     // base(dummy) always equals the previous iteration's delta (0 initially).
-    val init = Graphs.vertices(e)
+    val init = Graphs.vertices(c.e)
       .withColumn("rank",
         when(col("vertex") === dummy, lit(0.0))
           .otherwise(lit(1.0 / realVertexCount)))
@@ -92,9 +78,7 @@ object PageRank {
         .unionByName(contrib)
         .groupBy("vertex").agg(sum("c").as("rank"))
     }
-    val finalRanks = applyDelta(result)
-    e.unpersist(false); eWithDeg.unpersist(false); u0.unpersist(false)
-    finalRanks
+    applyDelta(result)
   }
 
   /** teleport probability constants for the damped variant — literal 2-dp
@@ -149,29 +133,21 @@ object PageRank {
         .select(col("vertex"), coalesce(col("rank"), lit(1.0 / n)).as("rank"))
     }
 
-  private def dampedCore(edges: DataFrame, iterations: Int)(
-      initOf: (DataFrame, Long) => DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    // persist-before-count (the undirectedSized rule, r17): one derivation
-    val u0 = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = u0.count()
-    val width = Fixpoint.sizedPartitions(spark, nEdges)
-
-    val e = u0.repartition(width, col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    val eWithDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .repartition(width, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = Graphs.vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
+  private def dampedCore(edges: DataFrame, iterations: Int,
+      terms: Long => (Column, Column) = n => (lit(DampTeleport) / n, col("dm") / n))(
+      initOf: (DataFrame, Long) => DataFrame): DataFrame = withEdgeCache(edges) { c =>
+    val eWithDeg = outDegreeEdges(c)
+    val verts = c.persist(Graphs.vertices(c.e))
     val n = verts.count()
     // dangling set = vertices that never appear as src (loop-invariant)
-    val dang = verts
-      .join(e.select(col("src").as("vertex")).distinct(), Seq("vertex"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val dang = c.persist(verts
+      .join(c.e.select(col("src").as("vertex")).distinct(), Seq("vertex"), "left_anti"))
     dang.count() // materialize while verts/e are hot
+    // r' = teleport + α·(Σ in-contribs + dangling), each term per vertex
+    val (teleport, dangling) = terms(n)
 
     val init = initOf(verts, n)
-    val result = Fixpoint.iterate(init, iterations) { (state, _) =>
+    Fixpoint.iterate(init, iterations) { (state, _) =>
       val dm = state.join(dang, Seq("vertex"), "left_semi")
         .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
       val contrib = eWithDeg
@@ -182,13 +158,8 @@ object PageRank {
         .unionByName(contrib)
         .groupBy("vertex").agg(sum("c").as("c"))
         .crossJoin(broadcast(dm))
-        .select(col("vertex"),
-          (lit(DampTeleport) / n + lit(DampAlpha) * (col("c") + col("dm") / n))
-            .as("rank"))
+        .select(col("vertex"), (teleport + lit(DampAlpha) * (col("c") + dangling)).as("rank"))
     }
-    e.unpersist(false); eWithDeg.unpersist(false)
-    verts.unpersist(false); dang.unpersist(false); u0.unpersist(false)
-    result
   }
 
   /** Personalized PageRank: teleport (and dangling mass) return to a SEED
@@ -200,47 +171,48 @@ object PageRank {
     * (seed sets are small), never a join. */
   def runPersonalized(edges: DataFrame, seeds: Seq[Long], iterations: Int): DataFrame = {
     require(seeds.nonEmpty, "personalized PageRank needs at least one seed")
-    val spark = edges.sparkSession
-    // persist-before-count (the undirectedSized rule, r17): one derivation
-    val u0 = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val nEdges = u0.count()
-    val width = Fixpoint.sizedPartitions(spark, nEdges)
-
-    val e = u0.repartition(width, col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    val eWithDeg = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-      .select(col("src"), col("dst"), col("outdeg"))
-      .repartition(width, col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = Graphs.vertices(e).persist(StorageLevel.MEMORY_AND_DISK)
-    verts.count()
-    val dang = verts
-      .join(e.select(col("src").as("vertex")).distinct(), Seq("vertex"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    dang.count()
-
     def pExpr = when(col("vertex").isInCollection(seeds), lit(1.0 / seeds.size))
       .otherwise(lit(0.0))
-
-    val init = verts.withColumn("rank", pExpr)
-    val result = Fixpoint.iterate(init, iterations) { (state, _) =>
-      val dm = state.join(dang, Seq("vertex"), "left_semi")
-        .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
-      val contrib = eWithDeg
-        .join(state, eWithDeg("src") === state("vertex"))
-        .select(col("dst").as("vertex"), (col("rank") / col("outdeg")).as("c"))
-        .groupBy("vertex").agg(sum("c").as("c"))
-      state.select(col("vertex"), lit(0.0).as("c"))
-        .unionByName(contrib)
-        .groupBy("vertex").agg(sum("c").as("c"))
-        .crossJoin(broadcast(dm))
-        .select(col("vertex"),
-          (lit(DampTeleport) * pExpr + lit(DampAlpha) * (col("c") + col("dm") * pExpr))
-            .as("rank"))
+    dampedCore(edges, iterations, _ => (lit(DampTeleport) * pExpr, col("dm") * pExpr)) {
+      (verts, _) => verts.withColumn("rank", pExpr)
     }
-    e.unpersist(false); eWithDeg.unpersist(false)
-    verts.unpersist(false); dang.unpersist(false); u0.unpersist(false)
-    result
   }
+
+  /** The edge caches every link-analysis loop here shares, released in
+    * persist order, the edge derivation last, once `body` has built its
+    * result or failed (the loop's final state is the caller's). */
+  private[graph] def withEdgeCache(edges: DataFrame)(body: EdgeCache => DataFrame): DataFrame = {
+    val c = new EdgeCache(edges)
+    try body(c) finally c.release()
+  }
+
+  /** The edge relation persisted BEFORE its sizing count (the
+    * undirectedSized rule, r17: the count's materialization then feeds the
+    * repartition from cache instead of re-running the derivation), and `e`,
+    * the edges hash-partitioned by src at the width the count warrants.
+    * `e`, like every [[persist]], is lazy: its first consumer fills it. */
+  private[graph] final class EdgeCache(edges: DataFrame) {
+    private val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    private val u0 = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    val width: Int = Fixpoint.sizedPartitions(edges.sparkSession, u0.count())
+    val e: DataFrame = persist(u0.repartition(width, col("src")))
+
+    /** persist `df` until [[release]] */
+    def persist(df: DataFrame): DataFrame = {
+      held += df.persist(StorageLevel.MEMORY_AND_DISK)
+      held.last
+    }
+
+    def release(): Unit = (held :+ u0).foreach(_.unpersist(false))
+  }
+
+  /** edges pre-joined with their out-degrees ONCE — the e ⋈ outDeg join is
+    * loop-invariant, so hoisting it saves a join (and its broadcast/
+    * exchange jobs) from every iteration's plan */
+  private def outDegreeEdges(c: EdgeCache): DataFrame =
+    c.persist(c.e.join(c.e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+      .select(col("src"), col("dst"), col("outdeg"))
+      .repartition(c.width, col("src")))
 
   /** Top-k by rank, deterministic tie-break on vertex id
     * (PageRankDataSet/.../FollowerCount.scala:76). Catalyst plans this as

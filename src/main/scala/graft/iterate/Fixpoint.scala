@@ -16,14 +16,24 @@ import org.apache.spark.storage.StorageLevel
   * of driver-loop algorithms at scale (plan analysis time and task
   * serialization grow superlinearly otherwise).
   *
-  * A loop materializes relations in three ways, each with one release path:
+  * The materializations, each with one release path:
   *  - leaf ([[materializedLeaf]], [[srcPartitionedLeaf]]): an eager
-  *    checkpoint of a loop-invariant relation with many consumers —
-  *    released by [[unpersistMaterialized]];
-  *  - columnar persist: a loop-invariant relation scanned every round
-  *    (`Graphs.undirectedSized`) — released by [[unpersistMaterialized]];
+  *    checkpoint of a relation with many consumers — released by
+  *    [[unpersistMaterialized]];
+  *  - [[pinned]]: a cache held only while one eager result is built from
+  *    it — released by `pinned` itself;
+  *  - [[columnar]]: an eager columnar cache of a relation scanned every
+  *    round (`Graphs.undirectedSized`) — released by
+  *    [[unpersistMaterialized]];
+  *  - [[roundLeaf]]: a leaf taken inside one `iterate` step — released by
+  *    the loop once that round's state has materialized;
   *  - lazy loop state: each round's lazy checkpoint, materialized by the
-  *    round's barrier — released by `runLoop` when the next round lands.
+  *    round's barrier — released by the loop once the next round's state
+  *    has materialized; the final state is the caller's.
+  *
+  * `Dataset.unpersist` only knows the cache manager: on a checkpoint it is
+  * a no-op that leaves every block cached. Checkpoints go through
+  * [[unpersistMaterialized]].
   */
 object Fixpoint {
 
@@ -66,29 +76,66 @@ object Fixpoint {
     * Catalyst walk sees one node. The physical partitioning/ordering of
     * the materialized plan is preserved on the LogicalRDD, so co-partition
     * contracts (src-hash edge caches) survive. Release with
-    * [[unpersistMaterialized]] — Dataset.unpersist only knows the cache
-    * manager and would leak the checkpoint blocks. */
+    * [[unpersistMaterialized]]. */
   def materializedLeaf(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = true)
 
-  /** The src-partitioned edge cache of a driver loop, as one
-    * [[materializedLeaf]]: persists the `edges` derivation for the sizing
-    * count (so the repartition reads the cache instead of re-running the
-    * derivation), hash-partitions it by `src` to the width the count
-    * warrants, materializes that as a leaf and releases the derivation. The
-    * loop re-scans the leaf every round, and each round's Catalyst walk sees
-    * one node instead of the derivation subtree. Release with
+  /** The eager columnar cache: persist plus a count. Chosen over a leaf for
+    * a relation a loop scans every round, where the in-memory columnar
+    * cache's vectorized scan beats row-block iteration. Release with
     * [[unpersistMaterialized]]. */
-  def srcPartitionedLeaf(edges: DataFrame): DataFrame = {
-    val u = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val width = sizedPartitions(edges.sparkSession, u.count())
-    val leaf = materializedLeaf(u.repartition(width, col("src")))
-    u.unpersist(blocking = false)
+  def columnar(df: DataFrame): DataFrame = {
+    val c = df.persist(StorageLevel.MEMORY_AND_DISK)
+    c.count()
+    c
+  }
+
+  /** Build one eager result from a pinned cache of `input`: persists
+    * `input`, counts it (so the consumers read the cache instead of racing
+    * to compute it), returns `keep(f(cache, count))` and then releases the
+    * cache. `keep` must materialize — a leaf by default, [[columnar]] for a
+    * relation scanned every round — since the cache is gone once `pinned`
+    * returns. */
+  def pinned(input: DataFrame, keep: DataFrame => DataFrame = materializedLeaf)(
+      f: (DataFrame, Long) => DataFrame): DataFrame = {
+    val cache = input.persist(StorageLevel.MEMORY_AND_DISK)
+    val out = keep(f(cache, cache.count()))
+    cache.unpersist(blocking = false)
+    out
+  }
+
+  /** The src-partitioned edge cache of a driver loop, as one
+    * [[materializedLeaf]]: the `edges` derivation is [[pinned]] for the
+    * sizing count (so the repartition reads the cache instead of re-running
+    * the derivation), hash-partitioned by `src` to the width the count
+    * warrants and materialized as a leaf. The loop re-scans the leaf every
+    * round, and each round's Catalyst walk sees one node instead of the
+    * derivation subtree. Release with [[unpersistMaterialized]]. */
+  def srcPartitionedLeaf(edges: DataFrame): DataFrame =
+    pinned(edges) { (u, n) =>
+      u.repartition(sizedPartitions(edges.sparkSession, n), col("src"))
+    }
+
+  /** An eager leaf owned by the enclosing [[iterate]] round: a step's
+    * barrier for a relation the round consumes more than once. The loop
+    * releases it once the round's state has materialized, since that
+    * state's checkpoint no longer reads it. Fails outside a step. */
+  def roundLeaf(df: DataFrame): DataFrame = {
+    val held = roundLeaves.value
+    if (held == null)
+      throw new IllegalStateException("Fixpoint.roundLeaf called outside an iterate step")
+    val leaf = materializedLeaf(df)
+    held += leaf
     leaf
   }
 
-  /** Unpersist a relation materialized by [[materializedLeaf]] (checkpoint
-    * blocks) OR by persist() (cache manager) — resolves whichever backs it.
+  /** the current step's round leaves; bound by `runLoop` around each step */
+  private val roundLeaves =
+    new scala.util.DynamicVariable[scala.collection.mutable.ListBuffer[DataFrame]](null)
+
+  /** Unpersist a relation materialized by a checkpoint (leaf, round leaf,
+    * loop state: checkpoint blocks) OR by persist() (cache manager) —
+    * resolves whichever backs it.
     * The LogicalRDD match is ROOT-ONLY deliberately: a persisted relation's
     * lineage may CONTAIN someone else's still-live checkpoint leaf (cc_inc's
     * `touched` feeds the quotient edges), and a tree-wide collectFirst would
@@ -103,8 +150,10 @@ object Fixpoint {
   /** Iterate `step` from `init` until `maxIter` or `converged(prev, next)`.
     *
     * Every iteration's state is localCheckpoint'ed (lineage cut each
-    * round) and the previous state is unpersisted — so executor memory
-    * holds at most two state generations regardless of iteration count.
+    * round), and once it has materialized the loop releases the state it
+    * supersedes (the seed included) and the round's [[roundLeaf]]s — so
+    * executor memory holds at most two state generations regardless of
+    * iteration count, and only the returned state outlives the call.
     */
   def iterate(
       init: DataFrame,
@@ -112,16 +161,10 @@ object Fixpoint {
       converged: (DataFrame, DataFrame) => Boolean = (_, _) => false)(
       step: (DataFrame, Int) => DataFrame): DataFrame = {
     val seeded = init.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = seeded.count() // materialize so unpersist of inputs is safe
-    val loop = loopSession(init.sparkSession, n)
-    // Re-bind the materialized seed to the loop session. Rows stream out of
-    // the cached partitions, and the checkpoint makes the switch permanent,
-    // so this is a one-time state-sized copy, not a recompute. Lazy (r16):
-    // round 1's materialization computes the copy off the seed cache in the
-    // same job, so the entry pays ONE job (the sizing count) instead of two;
-    // the seed cache is released once the first round has materialized.
-    val state0 = rebindStats(seeded, loop).localCheckpoint(eager = false)
-    runLoop(state0, Some(seeded), maxIter, converged, step)
+    // the sizing count materializes the seed, so unpersist of inputs is
+    // safe; the seed cache is released once the first round has
+    // materialized
+    runLoop(seeded, seeded.count(), Some(seeded), maxIter, converged, step)
   }
 
   /** [[iterate]] minus the entry sizing-count job, for callers that already
@@ -143,9 +186,7 @@ object Fixpoint {
       maxIter: Int,
       converged: (DataFrame, DataFrame) => Boolean = (_, _) => false)(
       step: (DataFrame, Int) => DataFrame): DataFrame = {
-    val loop = loopSession(init.sparkSession, knownRows)
-    val state0 = rebindStats(init, loop).localCheckpoint(eager = false)
-    runLoop(state0, None, maxIter, converged, step)
+    runLoop(init, knownRows, None, maxIter, converged, step)
   }
 
   /** The loop session for a state of `rows` rows: one shared session per
@@ -211,13 +252,19 @@ object Fixpoint {
   }
 
   private def runLoop(
-      state0: DataFrame,
+      seed: DataFrame,
+      rows: Long,
       seeded: Option[DataFrame],
       maxIter: Int,
       converged: (DataFrame, DataFrame) => Boolean,
       step: (DataFrame, Int) => DataFrame): DataFrame = {
-    var state = state0
-    var seedHeld = seeded.isDefined
+    // Re-bind the seed to the loop session for `rows`. Rows stream out of
+    // the seed's materialized inputs, and the checkpoint makes the switch
+    // permanent, so this is a one-time state-sized copy, not a recompute.
+    // Lazy (r16): round 1's materialization computes the copy in the same
+    // job, so `iterate`'s entry pays ONE job (the sizing count), not two.
+    var state = rebindStats(seed, loopSession(seed.sparkSession, rows))
+      .localCheckpoint(eager = false)
 
     var i = 0
     var done = false
@@ -235,7 +282,8 @@ object Fixpoint {
       // materialization job the eager form would have run anyway — the
       // fusion never ADDS a job, it only removes one where the test already
       // scans everything.
-      val next = step(state, i).localCheckpoint(eager = false)
+      val leaves = scala.collection.mutable.ListBuffer.empty[DataFrame]
+      val next = roundLeaves.withValue(leaves)(step(state, i)).localCheckpoint(eager = false)
       val cpRdd = next.queryExecution.analyzed.collectFirst {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
       }
@@ -244,14 +292,16 @@ object Fixpoint {
         case Some(r) => if (!r.isCheckpointed) r.count()
         case None => next.count() // defensive: unexpected checkpoint plan shape
       }
-      state.unpersist(blocking = false)
+      // next's checkpoint has cut its lineage: the state it supersedes and
+      // the round's leaves have no reader left
+      (state +: leaves).foreach(unpersistMaterialized)
       state = next
       // round 1 has materialized (through the lazy seed checkpoint) — the
       // seed cache is no longer the only copy and can go
-      if (seedHeld) { seeded.foreach(_.unpersist(blocking = false)); seedHeld = false }
+      if (i == 0) seeded.foreach(_.unpersist(blocking = false))
       i += 1
     }
-    if (seedHeld) seeded.foreach(_.unpersist(blocking = false)) // maxIter == 0
+    if (i == 0) seeded.foreach(_.unpersist(blocking = false)) // maxIter == 0
     state
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import TextHash.wordsSpark
+import graft.iterate.Fixpoint
 
 /** Byte-pair-encoding merge training (Sennrich et al. 2016, "Neural
   * Machine Translation of Rare Words with Subword Units") — the tokenizer-
@@ -91,6 +92,15 @@ object Bpe {
       .select(out.map(col): _*)
   }
 
+  /** One row per character position of each word, carrying `words`'
+    * columns: (…, pos, tok) — the seed state of every trainer and encoder,
+    * as an eager leaf. */
+  private def charPositions(words: DataFrame, maxWordLen: Int): DataFrame =
+    words.join(words.sparkSession.range(maxWordLen).toDF("pos"), expr("pos < length(word)"))
+      .select(words.columns.map(col) :+ col("pos") :+
+        expr("substring(word, CAST(pos AS INT) + 1, 1)").as("tok"): _*)
+      .localCheckpoint(eager = true)
+
   /** (merges, finalState): merges as (rank, lhs, rhs, pair_count) rows in
     * merge order; finalState as the trained tokenization (word, freq,
     * pos, tok). */
@@ -98,13 +108,12 @@ object Bpe {
       maxWordLen: Int = MaxWordLen): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val vocab = wordFreqs(docs, maxWordLen)
-    // initial state: one row per character position of each word
-    var state = vocab
-      .join(spark.range(maxWordLen).toDF("pos"), expr("pos < length(word)"))
-      .select(col("word"), col("freq"), col("pos"),
-        expr("substring(word, CAST(pos AS INT) + 1, 1)").as("tok"))
-      .localCheckpoint(eager = true)
+    var state = charPositions(wordFreqs(docs, maxWordLen), maxWordLen)
+    // the checkpoint behind `state` (whose re-bind wraps a derived RDD) and
+    // the one it superseded, released once the argmax collect has
+    // materialized its successor
+    var cp = state
+    var superseded: Option[DataFrame] = None
     val byWord = Window.partitionBy("word").orderBy("pos")
     val learned = scala.collection.mutable.ListBuffer.empty[(Long, String, String, Long)]
     var r = 1
@@ -116,6 +125,7 @@ object Bpe {
         .agg(sum("freq").as("c"))
         .orderBy(col("c").desc, col("a").asc, col("b").asc)
         .take(1).headOption // 1-row argmax collect per round (k-row contract)
+      superseded.foreach(Fixpoint.unpersistMaterialized)
       topOpt match {
         case None =>
           // no adjacent pairs left (every word fully merged to one token):
@@ -134,9 +144,9 @@ object Bpe {
           // checkpoint job was pure overhead (r16 fusion)
           val flagged = withNext.withColumn("mb",
             when(col("tok") === lit(a) && col("ntok") === lit(b), lit(b)))
-          state = graft.iterate.Fixpoint.rebindStats(
-            rewriteRound(flagged, Seq("word", "freq", "pos", "tok"))
-              .localCheckpoint(eager = false))
+          superseded = Some(cp)
+          cp = rewriteRound(flagged, Seq("word", "freq", "pos", "tok")).localCheckpoint(eager = false)
+          state = Fixpoint.rebindStats(cp)
       }
       r += 1
     }
@@ -195,12 +205,9 @@ object Bpe {
       maxWordLen: Int = MaxWordLen): (Seq[Seq[(String, String, Long)]], DataFrame) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val vocab = wordFreqs(docs, maxWordLen)
-    var state = vocab
-      .join(spark.range(maxWordLen).toDF("pos"), expr("pos < length(word)"))
-      .select(col("word"), col("freq"), col("pos"),
-        expr("substring(word, CAST(pos AS INT) + 1, 1)").as("tok"))
-      .localCheckpoint(eager = true)
+    var state = charPositions(wordFreqs(docs, maxWordLen), maxWordLen)
+    var cp = state // released as in train
+    var superseded: Option[DataFrame] = None
     val byWord = Window.partitionBy("word").orderBy("pos")
     val groups = scala.collection.mutable.ListBuffer.empty[Seq[(String, String, Long)]]
     var r = 1
@@ -215,6 +222,7 @@ object Bpe {
         .orderBy(col("c").desc, col("a").asc, col("b").asc)
         .limit(batch).collect()
         .map(t => (t.getString(0), t.getString(1), t.getLong(2)))
+      superseded.foreach(Fixpoint.unpersistMaterialized)
       // greedy accept-vs-ACCEPTED (the standard parallel-BPE batching
       // rule, r13): candidate i joins the batch iff it shares no symbol
       // with a previously ACCEPTED candidate. The earlier stricter rule
@@ -243,9 +251,9 @@ object Bpe {
           .join(mdf, col("tok") === col("ma") && col("ntok") === col("mb"), "left")
         // lazy: the next round's B-row collect materializes it (train's
         // single-merge path documents the fusion)
-        state = graft.iterate.Fixpoint.rebindStats(
-          rewriteRound(flagged, Seq("word", "freq", "pos", "tok"))
-            .localCheckpoint(eager = false))
+        superseded = Some(cp)
+        cp = rewriteRound(flagged, Seq("word", "freq", "pos", "tok")).localCheckpoint(eager = false)
+        state = Fixpoint.rebindStats(cp)
       }
       r += 1
     }
@@ -272,18 +280,18 @@ object Bpe {
     * round accepting (a,b) and (ab,c) together applies (ab,c) only to
     * PRE-existing "ab" tokens — which is precisely why it matches the
     * trainer (also round-simultaneous), and why the oracle replays the
-    * identical per-round rewrite. */
+    * identical per-round rewrite.
+    *
+    * The chain is lazy: the consumer's one job materializes every group's
+    * checkpoint, so no generation can be released before the consumer has
+    * run, and all of them stay cached with the result (as in [[encode]]). */
   def encodeBatched(words: DataFrame, groups: Seq[Seq[(String, String)]],
       maxWordLen: Int = MaxWordLen): DataFrame = {
     val spark = words.sparkSession
     import spark.implicits._
-    var state = words.select(col("word"))
+    var state = charPositions(words.select(col("word"))
       .filter(col("word").rlike("^[a-z]+$") && length(col("word")) <= maxWordLen)
-      .distinct()
-      .join(spark.range(maxWordLen).toDF("pos"), expr("pos < length(word)"))
-      .select(col("word"), col("pos"),
-        expr("substring(word, CAST(pos AS INT) + 1, 1)").as("tok"))
-      .localCheckpoint(eager = true)
+      .distinct(), maxWordLen)
     val byWord = Window.partitionBy("word").orderBy("pos")
     for (group <- groups; if group.nonEmpty) {
       val mdf = broadcast(group.toDF("ma", "mb"))
@@ -297,9 +305,8 @@ object Bpe {
       // checkpoint jobs (~BatchRounds per query) were pure barriers.
       // rebindStats per group caps the broadcast-join size-estimate
       // compounding exactly as in the batched trainer.
-      state = graft.iterate.Fixpoint.rebindStats(
-        rewriteRound(flagged, Seq("word", "pos", "tok"))
-          .localCheckpoint(eager = false))
+      state = Fixpoint.rebindStats(
+        rewriteRound(flagged, Seq("word", "pos", "tok")).localCheckpoint(eager = false))
     }
     state
   }
@@ -308,17 +315,14 @@ object Bpe {
     * order over the given words — the ENCODE path, shaped exactly like
     * one training round minus the argmax (the merge table is the input,
     * typically broadcast; rows here are (rank, lhs, rhs) collected at
-    * k-row scale). */
+    * k-row scale). Like [[encodeBatched]], the chain is lazy and its
+    * consumer materializes it in one job, so every merge's checkpoint stays
+    * cached with the result. */
   def encode(words: DataFrame, merges: Seq[(String, String)],
       maxWordLen: Int = MaxWordLen): DataFrame = {
-    val spark = words.sparkSession
-    var state = words.select(col("word"))
+    var state = charPositions(words.select(col("word"))
       .filter(col("word").rlike("^[a-z]+$") && length(col("word")) <= maxWordLen)
-      .distinct()
-      .join(spark.range(maxWordLen).toDF("pos"), expr("pos < length(word)"))
-      .select(col("word"), col("pos"),
-        expr("substring(word, CAST(pos AS INT) + 1, 1)").as("tok"))
-      .localCheckpoint(eager = true)
+      .distinct(), maxWordLen)
     val byWord = Window.partitionBy("word").orderBy("pos")
     for ((a, b) <- merges) {
       val withNext = state.withColumn("ntok", lead("tok", 1).over(byWord))

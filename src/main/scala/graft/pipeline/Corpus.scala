@@ -305,22 +305,18 @@ object Corpus {
     * aggregation value here — production indexes shard them by doc range;
     * the operator keeps that extension obvious (group by (word, doc_id
     * bucket) first). */
-  def invertedIndex(docs: DataFrame, topN: Int): DataFrame = {
+  def invertedIndex(docs: DataFrame, topN: Int): DataFrame =
     // consumed by the df ranking AND the postings join — one
     // tokenize+distinct shuffle, pinned before both race it
-    val pairs = docs
-      .select(col("doc_id"), explode(expr(wordsSpark("text"))).as("word"))
-      .distinct().persist()
-    pairs.count()
-    val top = pairs.groupBy("word").agg(count(lit(1)).as("df"))
-      .orderBy(desc("df"), asc("word")).limit(topN)
-    val out = pairs.join(broadcast(top), "word")
-      .groupBy("word", "df")
-      .agg(array_join(sort_array(collect_list(col("doc_id"))), ",").as("postings"))
-      .localCheckpoint(eager = true)
-    pairs.unpersist(blocking = false)
-    out
-  }
+    graft.iterate.Fixpoint.pinned(docs
+        .select(col("doc_id"), explode(expr(wordsSpark("text"))).as("word"))
+        .distinct()) { (pairs, _) =>
+      val top = pairs.groupBy("word").agg(count(lit(1)).as("df"))
+        .orderBy(desc("df"), asc("word")).limit(topN)
+      pairs.join(broadcast(top), "word")
+        .groupBy("word", "df")
+        .agg(array_join(sort_array(collect_list(col("doc_id"))), ",").as("postings"))
+    }
 
   /** (word, df, postings) over the FULL vocabulary — the stored relation
     * an incremental index pipeline keeps on disk. [[invertedIndex]]'s

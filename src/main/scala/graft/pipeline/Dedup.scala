@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import TextHash._
 import graft.functions.GraftFunctions
+import graft.iterate.Fixpoint
 
 /** Document deduplication for training-data pipelines, at four fidelity
   * levels. All hashing is the deterministic integer arithmetic of TextHash
@@ -193,18 +194,12 @@ object Dedup {
     * boilerplate-regime defense, see [[lshCandidates]]; the skew sweep
     * prices it. */
   def minhashDedup(docs: DataFrame, threshold: Double,
-      maxBandOcc: Long = Long.MaxValue): DataFrame = {
-    val sigs = minhashSignatures(docs).persist()
-    val nDocs = sigs.count() // pin the cache before the band and verify stages race it
-    val pairs = verifiedJaccardPairs(
-      lshCandidates(sigs, maxBandOcc), sigs, threshold, nDocs)
-    // the result (near-dup pairs) is tiny; materialize it eagerly so the
-    // heavyweight signature cache can be released instead of leaking into
-    // the session for the caller's lifetime
-    val out = pairs.localCheckpoint(eager = true)
-    sigs.unpersist(blocking = false)
-    out
-  }
+      maxBandOcc: Long = Long.MaxValue): DataFrame =
+    // the result (near-dup pairs) is tiny; the leaf lets the heavyweight
+    // signature cache release instead of leaking into the caller's session
+    Fixpoint.pinned(minhashSignatures(docs)) { (sigs, nDocs) =>
+      verifiedJaccardPairs(lshCandidates(sigs, maxBandOcc), sigs, threshold, nDocs)
+    }
 
   /** Containment near-duplicates: pairs where the smaller shingle set sits
     * mostly inside the larger — |A∩B| / min(|A|,|B|) >= threshold. Catches
@@ -225,16 +220,8 @@ object Dedup {
     * boilerplate shingles go hot is prefix filtering (PPJoin-style: only
     * each doc's (1-τ)·|A|+1 rarest shingles need to emit candidates),
     * with a lossy df cap as the blunter fallback. */
-  /** pin a shingle cache around `f` and eagerly materialize its (small,
-    * pair-shaped) result so the cache can release immediately — the
-    * lifecycle every containment path shares */
-  private def withShingles(docs: DataFrame)(f: DataFrame => DataFrame): DataFrame = {
-    val sh = shingleHashes(docs).persist()
-    sh.count() // pin the cache before the consumers race it
-    val out = f(sh).localCheckpoint(eager = true)
-    sh.unpersist(blocking = false)
-    out
-  }
+  def containmentDedup(docs: DataFrame, threshold: Double): DataFrame =
+    Fixpoint.pinned(shingleHashes(docs))((sh, _) => containmentAllPairs(sh, threshold))
 
   private def containmentAllPairs(sh: DataFrame, threshold: Double): DataFrame = {
     val sizes = sh.select(col("doc_id"), size(col("hs")).cast("long").as("n"))
@@ -250,9 +237,6 @@ object Dedup {
       .filter(col("containment") >= threshold)
       .select("doc_a", "doc_b", "containment")
   }
-
-  def containmentDedup(docs: DataFrame, threshold: Double): DataFrame =
-    withShingles(docs)(containmentAllPairs(_, threshold))
 
   /** Each doc's L rarest shingles in the canonical global rarity order
     * (df, h), with L = n - floor(threshold·n) + 1. The +1 keeps the
@@ -320,7 +304,7 @@ object Dedup {
   }
 
   def containmentDedupPrefix(docs: DataFrame, threshold: Double): DataFrame =
-    withShingles(docs)(containmentPrefix(_, threshold))
+    Fixpoint.pinned(shingleHashes(docs))((sh, _) => containmentPrefix(sh, threshold))
 
   /** Occupancy-weighted mean document frequency of the shingle postings,
     * Σdf² / Σdf — the expected number of other postings a random posting
@@ -361,7 +345,7 @@ object Dedup {
     * changes. The decision costs one postings aggregate on the pinned
     * shingle cache, ~the prefix path's own df pass. */
   def containmentDedupAuto(docs: DataFrame, threshold: Double): DataFrame =
-    withShingles(docs) { sh =>
+    Fixpoint.pinned(shingleHashes(docs)) { (sh, _) =>
       if (containmentFanoutRatio(sh) > ContainmentAutoRatio)
         containmentPrefix(sh, threshold)
       else containmentAllPairs(sh, threshold)
@@ -389,27 +373,23 @@ object Dedup {
     * whose verify needs the full shingle sets) shuffles every raw pair
     * and measures 4-5x slower. */
   def simhashDedup(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
-    // eager count pins the cache before both join sides race it — one
-    // simhash kernel pass over the corpus
-    val sigs = simhashSignatures(docs).persist()
-    sigs.count()
     val nBands = simBandsFor(maxHamming)
     val bandStructs = (0 until nBands).map(b =>
       struct(lit(b).as("band"), expr(simBandSpark("sim", b, nBands)).as("key")))
-    val bands = sigs
-      .select(col("doc_id"), col("sim"), explode(array(bandStructs: _*)).as("bk"))
-      .select(col("doc_id"), col("sim"), col("bk.band").as("band"), col("bk.key").as("key"))
-    val a = bands.toDF("doc_a", "sim_a", "band", "key")
-    val b = bands.toDF("doc_b", "sim_b", "band", "key")
-    val pairs = a.join(b, Seq("band", "key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming", expr("CAST(bit_count(sim_a ^ sim_b) AS BIGINT)"))
-      .filter(col("hamming") <= maxHamming) // verify BEFORE the dedup shuffle
-      .select("doc_a", "doc_b", "hamming").distinct()
-    // near-dup pairs are tiny; materialize so the signature cache releases
-    val out = pairs.localCheckpoint(eager = true)
-    sigs.unpersist(blocking = false)
-    out
+    // the pinned signatures feed both join sides from one simhash kernel
+    // pass; the near-dup pairs are tiny, so the cache releases behind them
+    Fixpoint.pinned(simhashSignatures(docs)) { (sigs, _) =>
+      val bands = sigs
+        .select(col("doc_id"), col("sim"), explode(array(bandStructs: _*)).as("bk"))
+        .select(col("doc_id"), col("sim"), col("bk.band").as("band"), col("bk.key").as("key"))
+      val a = bands.toDF("doc_a", "sim_a", "band", "key")
+      val b = bands.toDF("doc_b", "sim_b", "band", "key")
+      a.join(b, Seq("band", "key"))
+        .filter(col("doc_a") < col("doc_b"))
+        .withColumn("hamming", expr("CAST(bit_count(sim_a ^ sim_b) AS BIGINT)"))
+        .filter(col("hamming") <= maxHamming) // verify BEFORE the dedup shuffle
+        .select("doc_a", "doc_b", "hamming").distinct()
+    }
   }
 
   /** Group near-duplicate *pairs* into duplicate *clusters* via connected
@@ -486,25 +466,21 @@ object Dedup {
     * appear. Output is eagerly materialized (tiny), so the transient
     * signature cache never leaks into the caller's session. */
   def incrementalNearDupPairs(existingIndex: DataFrame, incomingSigs: DataFrame,
-      threshold: Double): DataFrame = {
-    val sigs = existingIndex.select("doc_id", "hs", "mh")
-      .unionByName(incomingSigs.select("doc_id", "hs", "mh")).persist()
-    val nDocs = sigs.count() // pin before the band and verify stages race it
-    val allBands = bandKeys(sigs)
-    // the incoming side of the band join = stored index rows for new ids
-    val newBands = allBands.join(
-      incomingSigs.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    val cand = newBands.toDF("na", "band", "key")
-      .join(allBands.toDF("nb", "band", "key"), Seq("band", "key"))
-      .filter(col("na") =!= col("nb"))
-      .select(least(col("na"), col("nb")).as("doc_a"),
-        greatest(col("na"), col("nb")).as("doc_b"))
-      .distinct()
-    val pairs = verifiedJaccardPairs(cand, sigs, threshold, nDocs)
-      .localCheckpoint(eager = true)
-    sigs.unpersist(blocking = false)
-    pairs
-  }
+      threshold: Double): DataFrame =
+    Fixpoint.pinned(existingIndex.select("doc_id", "hs", "mh")
+        .unionByName(incomingSigs.select("doc_id", "hs", "mh"))) { (sigs, nDocs) =>
+      val allBands = bandKeys(sigs)
+      // the incoming side of the band join = stored index rows for new ids
+      val newBands = allBands.join(
+        incomingSigs.select(col("doc_id")), Seq("doc_id"), "left_semi")
+      val cand = newBands.toDF("na", "band", "key")
+        .join(allBands.toDF("nb", "band", "key"), Seq("band", "key"))
+        .filter(col("na") =!= col("nb"))
+        .select(least(col("na"), col("nb")).as("doc_a"),
+          greatest(col("na"), col("nb")).as("doc_b"))
+        .distinct()
+      verifiedJaccardPairs(cand, sigs, threshold, nDocs)
+    }
 
   /** Priority-aware canonical selection: given duplicate clusters (from
     * dedupClusters) and a per-document priority (lower = more trusted

@@ -9,7 +9,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   *
   * Usage: runMain graft.tools.JobCount q1,q2,... — runs each query once
   * against SPARK_GRAFT_SF_DIR with the noop sink (the Bench action) and
-  * prints one line per query: jobs, stages, tasks.
+  * prints one line per query: jobs, stages, tasks, and what the query left
+  * cached (RDDs, blocks, bytes).
   */
 object JobCount {
   def main(args: Array[String]): Unit = {
@@ -40,7 +41,13 @@ object JobCount {
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
       org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
-      println(f"[jobcount] $n jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} wall=$dt%.2f")
+      // the leak meter, read before the sweep: cached blocks and their
+      // memory + disk bytes (perfbench's iterate.live_blocks / live_bytes)
+      val live = spark.sparkContext.getRDDStorageInfo.toSeq
+      val liveBlocks = live.map(_.numCachedPartitions.toLong).sum
+      val liveBytes = live.map(r => r.memSize + r.diskSize).sum
+      println(f"[jobcount] $n jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} wall=$dt%.2f" +
+        s" live_rdds=${live.count(_.numCachedPartitions > 0)} live_blocks=$liveBlocks live_bytes=$liveBytes")
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       spark.catalog.clearCache()
     }

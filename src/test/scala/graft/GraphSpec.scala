@@ -281,6 +281,41 @@ class GraphSpec extends SparkSpec {
     assert(leaf.count() == 4L)
     Fixpoint.unpersistMaterialized(leaf)
     assert(sc.getPersistentRDDs.keySet.subsetOf(before))
+
+    // (c) the same for a pinned build kept columnar: the pinned input is
+    // gone on return, the kept relation sits in the cache manager until
+    // released
+    val kept = Fixpoint.pinned(e, Fixpoint.columnar)((u, n) => u.filter(col("src") < n))
+    assert(kept.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1)
+    assert(kept.count() == 3L)
+    Fixpoint.unpersistMaterialized(kept)
+    assert(sc.getPersistentRDDs.keySet.subsetOf(before))
+  }
+
+  test("driver loops release what they supersede: each call leaves only its result cached") {
+    import graft.iterate.Fixpoint
+    // a step's round leaf belongs to a loop round; outside one it fails
+    intercept[IllegalStateException](Fixpoint.roundLeaf(edges(1L -> 2L)))
+    val chain = edges(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L, 7L -> 8L)
+    val cyclic = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 4L -> 5L, 5L -> 6L, 6L -> 4L,
+      3L -> 4L, 6L -> 7L)
+    // a planted K6 on a path: three peel rounds, the K6 round wins
+    val k6 = for (a <- 1L to 6L; b <- 1L to 6L if a < b) yield a -> b
+    val dense = edges((k6 ++ (10L until 20L).map(i => i -> (i + 1))): _*)
+    val sssp = leavesOnlyResult("sssp")(ShortestPath.run(chain, 1L))
+    val cc = leavesOnlyResult("cc")(Graphs.connectedComponents(chain))
+    val ccd = leavesOnlyResult("cc doubling")(Graphs.connectedComponentsDoubling(chain))
+    val densest = leavesOnlyResult("densest")(Graphs.densestSubgraph(dense))
+    val matching = leavesOnlyResult("matching")(Graphs.maximalMatching(cyclic))
+    val scc = leavesOnlyResult("scc")(Graphs.stronglyConnectedComponents(cyclic))
+    // the results still read from their blocks after the releases
+    assert(sssp.filter(col("dist") === 4.0).count() == 1L)
+    assert(cc.select("label").distinct().count() == 2L)
+    assert(ccd.select("label").distinct().count() == 2L)
+    assert(densest.count() == 6L)
+    assert(matching.count() >= 1L)
+    assert(scc.filter(col("scc") < 0).count() == 0L)
   }
 
   test("cc doubling: linear HashMin at the same round count splits the long chain") {

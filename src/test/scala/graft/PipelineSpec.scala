@@ -8,6 +8,14 @@ class PipelineSpec extends SparkSpec {
 
   private def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
 
+  test("bpe train releases superseded generations: only the result's parent stays cached") {
+    // 3 merges that leave pairs to merge: the final state is lazy, so the
+    // one cached generation is the one it is computed from
+    val d = docs(1L -> "low low low lower lowest")
+    val st = leavesOnlyResult("bpe train")(Bpe.train(d, merges = 3)._2)
+    assert(st.count() == 6L) // low | lowe r | lowe s t
+  }
+
   test("exact dedup keeps lowest doc_id and counts copies") {
     val d = docs(1L -> "a b c", 5L -> "a b c", 3L -> "x y z")
     val m = Dedup.exact(d).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

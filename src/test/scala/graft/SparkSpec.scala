@@ -22,4 +22,32 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  /** ids of the RDDs holding cached blocks, read once the listener bus has
+    * delivered every block update (the storage info reads the status store
+    * it feeds) */
+  private def cachedRdds(): Set[Int] = {
+    org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+  }
+
+  /** Run `call` and require that it leaves exactly one more RDD with cached
+    * blocks than before, and that this RDD is in its result's lineage — a
+    * materialization the call superseded but never released fails this. */
+  def leavesOnlyResult(name: String)(call: => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val before = cachedRdds()
+    val out = call
+    val added = cachedRdds() -- before
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def walk(r: org.apache.spark.rdd.RDD[_]): Unit =
+      if (seen.add(r.id)) r.dependencies.foreach(d => walk(d.rdd))
+    out.queryExecution.analyzed.foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => walk(lr.rdd)
+      case _ =>
+    }
+    assert(added.size == 1, s"$name left ${added.size} RDDs with cached blocks: $added")
+    assert(added.subsetOf(seen), s"$name's cached RDD $added is not behind its result")
+    out
+  }
 }
