@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.iterate.Fixpoint
 
 /** Graph construction. The reference treats every graph relationally — a
   * table of (src, dst) pairs (SURVEY §1.1) — and so do we.
@@ -69,12 +70,12 @@ object Graphs {
     // the 160k-row coloring graph (coloring 9.9 s persist vs 14.1 s leaf,
     // coreness 5.4 vs 6.6). Init-only consumers (kTruss) take the leaf
     // instead — the opposite side of the same tradeoff.
-    graft.iterate.Fixpoint.pinned(
+    Fixpoint.pinned(
       edges.select(col("src"), col("dst"))
         .union(edges.select(col("dst").as("src"), col("src").as("dst")))
         .distinct(),
-      graft.iterate.Fixpoint.columnar) { (u, n) =>
-      u.repartition(graft.iterate.Fixpoint.sizedPartitions(edges.sparkSession, n), col("src"))
+      Fixpoint.columnar) { (u, n) =>
+      u.repartition(Fixpoint.sizedPartitions(edges.sparkSession, n), col("src"))
     }
 
   /** Connected components by min-label propagation (HashMin): every vertex
@@ -84,18 +85,17 @@ object Graphs {
     * the right algorithm when components are small (duplicate clusters);
     * use pointer-doubling variants for giant-diameter graphs.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = DefaultCcRounds): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIter: Int = DefaultCcRounds): DataFrame = Fixpoint.scope {
     val undirected = undirectedSized(edges)
     val init = vertices(undirected).withColumn("label", col("vertex"))
-    val result = graft.iterate.Fixpoint.iterate(init, maxIter,
-      converged = graft.iterate.Fixpoint.monotoneSumUnchanged("label")) { (state, _) =>
+    val result = Fixpoint.iterate(init, maxIter,
+      converged = Fixpoint.monotoneSumUnchanged("label")) { (state, _) =>
       val nbr = state.join(undirected, state("vertex") === undirected("src"))
         .select(col("dst").as("vertex"), col("label"))
       state.select(col("vertex"), col("label"))
         .unionByName(nbr)
         .groupBy("vertex").agg(min("label").as("label"))
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(undirected)
     result.select("vertex", "label")
   }
 
@@ -123,10 +123,9 @@ object Graphs {
     val l = labels.select(col("vertex"), col("label"))
     // touched vertices with their effective label (self for new vertices);
     // checkpointed: both quotient-edge sides and the new-vertex union read it
-    val touched = vertices(newEdges)
+    val touched = Fixpoint.materializedLeaf(vertices(newEdges)
       .join(l, Seq("vertex"), "left")
-      .select(col("vertex"), coalesce(col("label"), col("vertex")).as("lb"))
-      .localCheckpoint(eager = true)
+      .select(col("vertex"), coalesce(col("label"), col("vertex")).as("lb")))
     val qEdges = newEdges
       .join(touched.toDF("src", "ls"), "src")
       .join(touched.toDF("dst", "ld"), "dst")
@@ -162,10 +161,10 @@ object Graphs {
     * interaction graph). State = surviving undirected edge set; each round
     * is one degree aggregation + two semi-joins, all state-sized.
     * Returns (vertex, degree) of the surviving subgraph. */
-  def kCore(edges: DataFrame, k: Int, maxIter: Int = DefaultKCoreRounds): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxIter: Int = DefaultKCoreRounds): DataFrame = Fixpoint.scope {
     val undirected = undirectedSized(edges)
-    val result = graft.iterate.Fixpoint.iterate(undirected, maxIter,
-      converged = graft.iterate.Fixpoint.countUnchanged()) { (state, _) =>
+    val result = Fixpoint.iterate(undirected, maxIter,
+      converged = Fixpoint.countUnchanged()) { (state, _) =>
       // undirected state holds both directions, so per-src row count IS
       // the undirected degree
       val keep = state.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -175,7 +174,6 @@ object Graphs {
         .join(keep.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
         .select("src", "dst")
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(undirected)
     result.groupBy(col("src").as("vertex")).agg(count(lit(1)).as("degree"))
   }
 
@@ -223,13 +221,13 @@ object Graphs {
     * the shuffle is the partial-aggregated histogram. State is
     * vertex-sized; values only fall, and the convergence test stops
     * early. */
-  def coreness(edges: DataFrame, rounds: Int = DefaultCorenessRounds): DataFrame = {
+  def coreness(edges: DataFrame, rounds: Int = DefaultCorenessRounds): DataFrame = Fixpoint.scope {
     import org.apache.spark.sql.expressions.Window
     val und = undirectedSized(edges)
     // symmetric closure => per-src row count IS the undirected degree
     val init = und.groupBy(col("src").as("vertex")).agg(count(lit(1)).as("val"))
-    val result = graft.iterate.Fixpoint.iterate(init, rounds,
-        converged = graft.iterate.Fixpoint.monotoneSumUnchanged("val")) { (state, _) =>
+    val result = Fixpoint.iterate(init, rounds,
+        converged = Fixpoint.monotoneSumUnchanged("val")) { (state, _) =>
       val hist = state.join(und, state("vertex") === und("src"))
         .groupBy(col("dst").as("vertex"), col("val"))
         .agg(count(lit(1)).as("cnt"))
@@ -239,7 +237,6 @@ object Graphs {
         .groupBy("vertex")
         .agg(max(least(col("val"), col("cum"))).as("val"))
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(und)
     result.select(col("vertex"), col("val").as("coreness"))
   }
 
@@ -251,12 +248,12 @@ object Graphs {
     * form is the default — this twin exists to certify it (GraphSpec
     * equality fixture; same oracle SQL verbatim — one SQL, two plans,
     * the chunked-sessionize proof shape). */
-  def corenessWindow(edges: DataFrame, rounds: Int = DefaultCorenessRounds): DataFrame = {
+  def corenessWindow(edges: DataFrame, rounds: Int = DefaultCorenessRounds): DataFrame = Fixpoint.scope {
     import org.apache.spark.sql.expressions.Window
     val und = undirectedSized(edges)
     val init = und.groupBy(col("src").as("vertex")).agg(count(lit(1)).as("val"))
-    val result = graft.iterate.Fixpoint.iterate(init, rounds,
-        converged = graft.iterate.Fixpoint.monotoneSumUnchanged("val")) { (state, _) =>
+    val result = Fixpoint.iterate(init, rounds,
+        converged = Fixpoint.monotoneSumUnchanged("val")) { (state, _) =>
       val msgs = state.join(und, state("vertex") === und("src"))
         .select(col("dst").as("vertex"), col("val"))
       val w = Window.partitionBy("vertex").orderBy(desc("val"))
@@ -264,7 +261,6 @@ object Graphs {
         .groupBy("vertex")
         .agg(max(least(col("val"), col("r"))).as("val"))
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(und)
     result.select(col("vertex"), col("val").as("coreness"))
   }
 
@@ -310,16 +306,16 @@ object Graphs {
     * checkpoint as checkpointed, and `runLoop`'s per-round guard
     * (`if (!r.isCheckpointed) r.count()`) would add one job every round. */
   def densestSubgraph(edges: DataFrame,
-      rounds: Int = DefaultDensestRounds): DataFrame = {
+      rounds: Int = DefaultDensestRounds): DataFrame = Fixpoint.scope {
     val first = undirectedSized(edges)
     // the peel re-plans deg/stats/semi-join relations every round, so it
     // runs under the shared loop session for the edge count's width (the
     // Fixpoint.iterate session, applied to this hand-rolled loop): state-
     // sized shuffles, no AQE stage replanning. The one-time Row re-bind
     // streams from the edge cache.
-    val loop = graft.iterate.Fixpoint.loopSession(
+    val loop = Fixpoint.loopSession(
       edges.sparkSession, first.count())
-    var state = graft.iterate.Fixpoint.rebindStats(first, loop)
+    var state = Fixpoint.rebindStats(first, loop)
     var prev: Option[DataFrame] = None // state g−1, released once g materializes
     val degs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
@@ -343,7 +339,7 @@ object Graphs {
         count(lit(1)).as("n")).head()
       val twoM = srow.getLong(0)
       val n = srow.getLong(1)
-      prev.foreach(graft.iterate.Fixpoint.unpersistMaterialized)
+      prev.foreach(Fixpoint.unpersistMaterialized) // g−1: deg's checkpoint cut its read
       prev = None
       // keep-filter headroom: 2·n·deg ≤ 2·n·(n−1) and 3·2m must both fit
       // in int64 — fail fast instead of wrapping where the oracle errors
@@ -364,7 +360,8 @@ object Graphs {
       }
       i += 1
     }
-    (prev.toSeq :+ state :+ first).foreach(graft.iterate.Fixpoint.unpersistMaterialized)
+    // the peel's lazy generations are its own, not the scope's
+    (prev.toSeq :+ state).foreach(Fixpoint.unpersistMaterialized)
     // argmax density m/n by exact cross-multiplication, earliest round
     // wins ties (the larger candidate); empty candidates never win
     var best = 0
@@ -374,7 +371,7 @@ object Graphs {
     }
     // the winner is materialized (its round's stats job); the losers go
     for (j <- degs.indices if j != best)
-      graft.iterate.Fixpoint.unpersistMaterialized(degs(j))
+      Fixpoint.unpersistMaterialized(degs(j))
     degs(best).orderBy("vertex")
   }
 
@@ -470,7 +467,7 @@ object Graphs {
   val DefaultKTrussWedgeBudget = 100000000L
 
   def kTruss(edges: DataFrame, k: Int, maxIter: Int = DefaultKTrussRounds,
-      maxWedges: Long = DefaultKTrussWedgeBudget): DataFrame = {
+      maxWedges: Long = DefaultKTrussWedgeBudget): DataFrame = Fixpoint.scope {
     require(k >= 3, "k-truss needs k >= 3")
     // INIT-ONLY consumer: the peel loop's per-round plans reference only
     // the loop state, so the symmetric closure is materialized as a
@@ -478,26 +475,23 @@ object Graphs {
     // persist — the orientation/support/wedge-guard plans reference it 3x,
     // and the leaf spares them the union+distinct subtree re-optimization
     // (ktruss 10.6 -> 7.7 s A/B).
-    val undirected = graft.iterate.Fixpoint.srcPartitionedLeaf(
+    val undirected = Fixpoint.srcPartitionedLeaf(
       edges.select(col("src"), col("dst"))
         .union(edges.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())
     // degree-ordered orientation, computed once (checkpointed: the guard's
     // wedge count and the init support pass both read it)
-    val g = orientByDegree(undirected).localCheckpoint(eager = true)
+    val g = Fixpoint.materializedLeaf(orientByDegree(undirected))
     // density guard: measure the init join's exact fan-out before paying
     // for it — one degree aggregate + one k-row-ish join, negligible next
     // to a single support pass
     val wedges = wedgeCount(g)
-    if (wedges > maxWedges) {
-      graft.iterate.Fixpoint.unpersistMaterialized(g)
-      graft.iterate.Fixpoint.unpersistMaterialized(undirected)
+    if (wedges > maxWedges)
       throw new IllegalArgumentException(
         s"kTruss: input has $wedges oriented wedges (> budget $maxWedges); " +
           "this graph is in the dense regime where triangle peeling is " +
           "quadratic-ish per round — use kCore for a cohesion screen, " +
           "pre-filter hubs, or pass an explicit maxWedges to proceed anyway")
-    }
     // Delta peeling. State = (src, dst, sup) over the ordered half, with
     // sup exact for the CURRENT edge set. Init pays one full triangle-once
     // support pass; after that no round recomputes support — it enumerates
@@ -513,8 +507,8 @@ object Graphs {
     // of the final state IS its triangle support, so the output needs no
     // final recompute either.
     val init = orientedEdgeSupport(g)
-    val result = graft.iterate.Fixpoint.iterate(init, maxIter,
-      converged = graft.iterate.Fixpoint.countUnchanged()) { (state, _) =>
+    val result = Fixpoint.iterate(init, maxIter,
+      converged = Fixpoint.countUnchanged()) { (state, _) =>
       val dead = state.filter(col("sup") < k - 2).select("src", "dst")
       val alive = state.filter(col("sup") >= k - 2)
       val all = state.select("src", "dst")
@@ -546,10 +540,7 @@ object Graphs {
     // survivors whose support went to zero but were not yet peeled when the
     // round bound hit: the full-recompute formulation's output support pass
     // drops them (no triangle -> absent from the support relation)
-    val out = result.filter(col("sup") >= 1).select("src", "dst", "sup")
-    graft.iterate.Fixpoint.unpersistMaterialized(g)
-    graft.iterate.Fixpoint.unpersistMaterialized(undirected)
-    out
+    result.filter(col("sup") >= 1).select("src", "dst", "sup")
   }
 
   /** Local bridges: undirected edges whose endpoints share NO neighbor
@@ -559,10 +550,10 @@ object Graphs {
     * support pass + one anti-join, both equi-keyed — no all-pairs.
     * Returns the ordered edge list (src < dst). */
   def localBridges(edges: DataFrame): DataFrame = {
-    val und = edges.select(col("src"), col("dst"))
+    // ordered half (x2) + anti-join all read it
+    val und = Fixpoint.materializedLeaf(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(eager = true) // ordered half (x2) + anti-join all read it
+      .distinct())
     und.filter(col("src") < col("dst"))
       .join(orderedEdgeSupport(und).select("src", "dst"), Seq("src", "dst"), "left_anti")
   }
@@ -601,21 +592,21 @@ object Graphs {
     * plus the monotone-status convergence test stops early once decided.
     * Returns (vertex, round) for set members, round = the 1-based round
     * that admitted the vertex. */
-  def maximalIndependentSet(edges: DataFrame, rounds: Int = DefaultMisRounds): DataFrame = {
+  def maximalIndependentSet(edges: DataFrame, rounds: Int = DefaultMisRounds): DataFrame = Fixpoint.scope {
     val undirected = undirectedSized(edges)
     val init = vertices(undirected)
       .withColumn("pkey", priorityKey(col("vertex")))
       .withColumn("status", lit(0)) // 0 active, 1 in set, 2 dominated
       .withColumn("round", lit(-1L))
-    val result = graft.iterate.Fixpoint.iterate(init, rounds,
-      converged = graft.iterate.Fixpoint.monotoneSumUnchanged("status")) { (state, i) =>
+    val result = Fixpoint.iterate(init, rounds,
+      converged = Fixpoint.monotoneSumUnchanged("status")) { (state, i) =>
       val active = state.filter(col("status") === 0).select("vertex", "pkey")
       val nbrMin = active.join(undirected, active("vertex") === undirected("src"))
         .groupBy(col("dst").as("nv")).agg(min("pkey").as("nbr_min"))
-      // round leaf + stats re-bind: consumed on both sides (domination
+      // leaf + stats re-bind: consumed on both sides (domination
       // scan + status merge) — the connectedComponentsDoubling barrier
       // pattern plus the estimate reset that keeps rounds planning-stable
-      val winners = graft.iterate.Fixpoint.rebindStats(graft.iterate.Fixpoint.roundLeaf(
+      val winners = Fixpoint.rebindStats(Fixpoint.materializedLeaf(
         active.join(nbrMin, active("vertex") === nbrMin("nv"), "left")
           .filter(col("nbr_min").isNull || col("pkey") < col("nbr_min"))
           .select(col("vertex"), lit(1).as("newstat"))))
@@ -632,7 +623,6 @@ object Graphs {
           when(col("status") === 0 && col("newstat").isNotNull, lit((i + 1).toLong))
             .otherwise(col("round")).as("round"))
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(undirected)
     result.filter(col("status") === 1).select("vertex", "round")
   }
 
@@ -660,13 +650,13 @@ object Graphs {
     * fold over its SORTED distinct neighbor colors (bounded by degree) —
     * deterministic in both engines. Returns (vertex, color), color = -1
     * for vertices undecided within the round budget. */
-  def greedyColoring(edges: DataFrame, rounds: Int = DefaultColoringRounds): DataFrame = {
+  def greedyColoring(edges: DataFrame, rounds: Int = DefaultColoringRounds): DataFrame = Fixpoint.scope {
     val undirected = undirectedSized(edges)
     val init = vertices(undirected)
       .withColumn("pkey", priorityKey(col("vertex")))
       .withColumn("color", lit(-1L))
-    val result = graft.iterate.Fixpoint.iterate(init, rounds,
-      converged = graft.iterate.Fixpoint.monotoneSumUnchanged("color")) { (state0, _) =>
+    val result = Fixpoint.iterate(init, rounds,
+      converged = Fixpoint.monotoneSumUnchanged("color")) { (state0, _) =>
       // BARRIER-FUSED round (the maximalMatching treatment, round 11): the
       // winner test (min pkey over UNCOLORED neighbors) and the mex input
       // (distinct colors over COLORED neighbors) are both per-vertex
@@ -677,7 +667,7 @@ object Graphs {
       // aggregate); the zero-job stats re-bind of the already-checkpointed
       // state below keeps the estimate reset. Isolated A/B and the
       // unchanged oracle hash are recorded in BASELINE.md.
-      val state = graft.iterate.Fixpoint.rebindStats(state0)
+      val state = Fixpoint.rebindStats(state0)
       val nbrAttrs = state.select(col("vertex").as("nbr"),
         col("pkey").as("npkey"), col("color").as("ncolor"))
       val perVertex = state.filter(col("color") < 0).select(col("vertex"), col("pkey"))
@@ -703,7 +693,6 @@ object Graphs {
           when(col("color") < 0 && col("wv").isNotNull, col("newcolor"))
             .otherwise(col("color")).as("color"))
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(undirected)
     result.select("vertex", "color")
   }
 
@@ -725,7 +714,7 @@ object Graphs {
     *
     * Same state/round discipline as [[maximalIndependentSet]]. Returns
     * matched pairs (a, b, round) with a < b, round 1-based. */
-  def maximalMatching(edges: DataFrame, rounds: Int = DefaultMatchingRounds): DataFrame = {
+  def maximalMatching(edges: DataFrame, rounds: Int = DefaultMatchingRounds): DataFrame = Fixpoint.scope {
     val undirected = undirectedSized(edges)
     val init = vertices(undirected)
       .withColumn("status", lit(0)) // 0 active, 1 matched, 2 unmatched
@@ -736,8 +725,8 @@ object Graphs {
     // monotone-sum test would mistake that idle round for completion.
     // noneMatch (full scan) rather than limit(1): the full scan fuses
     // with the round's lazy-checkpoint materialization into one job
-    val result = graft.iterate.Fixpoint.iterate(init, rounds,
-      converged = graft.iterate.Fixpoint.noneMatch(col("status") === 0)) { (state, i) =>
+    val result = Fixpoint.iterate(init, rounds,
+      converged = Fixpoint.noneMatch(col("status") === 0)) { (state, i) =>
       import org.apache.spark.sql.Column
       // round-salted hashes: same Mersenne-31 multiplicative mix as
       // priorityKey, salted by the round so every round re-draws roles
@@ -786,8 +775,8 @@ object Graphs {
         .select(col("vertex"), lit(-1L).as("newmate"), lit(2).as("newstat"))
       // lonely still references the state-derived active-edge relation, so
       // the merged update set gets the stats cut before it meets the state
-      val updates = graft.iterate.Fixpoint.rebindStats(
-        graft.iterate.Fixpoint.roundLeaf(matched.unionByName(lonely)))
+      val updates = Fixpoint.rebindStats(
+        Fixpoint.materializedLeaf(matched.unionByName(lonely)))
       state.join(updates, Seq("vertex"), "left")
         .select(col("vertex"),
           when(col("status") === 0 && col("newstat").isNotNull, col("newstat"))
@@ -797,7 +786,6 @@ object Graphs {
           when(col("status") === 0 && col("newstat").isNotNull, lit((i + 1).toLong))
             .otherwise(col("round")).as("round"))
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(undirected)
     result.filter(col("status") === 1 && col("vertex") < col("mate"))
       .select(col("vertex").as("a"), col("mate").as("b"), col("round"))
   }
@@ -836,14 +824,13 @@ object Graphs {
     * Returns (vertex, scc); scc = -1 marks a vertex left undecided by an
     * insufficient phase/round budget. */
   def stronglyConnectedComponents(edges: DataFrame,
-      phases: Int = DefaultSccPhases, rounds: Int = DefaultSccRounds): DataFrame = {
+      phases: Int = DefaultSccPhases, rounds: Int = DefaultSccRounds): DataFrame = Fixpoint.scope {
     // leaf (r17): both per-phase fixpoints re-scan e every round — the
     // eager checkpoint doubles as the old count()'s materialization job
-    val e = graft.iterate.Fixpoint.materializedLeaf(
+    val e = Fixpoint.materializedLeaf(
       edges.select(col("src"), col("dst")).distinct())
     // the checkpoint behind `state`, which the re-binds below wrap
-    var held = vertices(e).withColumn("scc", lit(-1L))
-      .localCheckpoint(eager = true)
+    var held = Fixpoint.materializedLeaf(vertices(e).withColumn("scc", lit(-1L)))
     var state = held
     // one cached-scan count: upper-bounds every phase's active set, so the
     // six per-phase fixpoint-entry sizing jobs collapse to this one
@@ -855,55 +842,57 @@ object Graphs {
     // per-phase fixpoints below also resolve to: the per-phase barriers (ae
     // slice, decided-merge checkpoint) are state-sized too. The re-bind
     // streams from the checkpoint blocks once.
-    val sess = graft.iterate.Fixpoint.loopSession(edges.sparkSession, nV)
-    state = graft.iterate.Fixpoint.rebindStats(state, sess)
+    val sess = Fixpoint.loopSession(edges.sparkSession, nV)
+    state = Fixpoint.rebindStats(state, sess)
     for (_ <- 1 to phases) {
-      val active = state.filter(col("scc") < 0).select("vertex")
-      // the phase's active edge slice, materialized once: both fixpoints
-      // scan it every round; rooted at `active` so it executes under the
-      // phase session (a Dataset executes under its ROOT's session)
-      val ae = active.select(col("vertex").as("src"))
-        .join(e, "src")
-        .join(active.select(col("vertex").as("dst")), "dst")
-        .select("src", "dst").localCheckpoint(eager = true)
-      // forward color propagation: max undecided id reaching each vertex.
-      // iterateSized: the seeds are narrow maps over checkpointed state
-      // (the iterateSized caller contract), width from the entry count
-      val colors = graft.iterate.Fixpoint.iterateSized(
-        active.withColumn("color", col("vertex")), nV, rounds,
-        converged = graft.iterate.Fixpoint.monotoneSumUnchanged("color")) { (st, _) =>
-        val msgs = st.join(ae, st("vertex") === ae("src"))
-          .select(col("dst").as("vertex"), col("color"))
-        st.select("vertex", "color").unionByName(msgs)
-          .groupBy("vertex").agg(max("color").as("color"))
+      // the phase's scope keeps only the merged state: the slice and both
+      // fixpoint results go once it has materialized
+      val merged = Fixpoint.scope {
+        val active = state.filter(col("scc") < 0).select("vertex")
+        // the phase's active edge slice, materialized once: both fixpoints
+        // scan it every round; rooted at `active` so it executes under the
+        // phase session (a Dataset executes under its ROOT's session)
+        val ae = Fixpoint.materializedLeaf(active.select(col("vertex").as("src"))
+          .join(e, "src")
+          .join(active.select(col("vertex").as("dst")), "dst")
+          .select("src", "dst"))
+        // forward color propagation: max undecided id reaching each vertex.
+        // iterateSized: the seeds are narrow maps over checkpointed state
+        // (the iterateSized caller contract), width from the entry count
+        val colors = Fixpoint.iterateSized(
+          active.withColumn("color", col("vertex")), nV, rounds,
+          converged = Fixpoint.monotoneSumUnchanged("color")) { (st, _) =>
+          val msgs = st.join(ae, st("vertex") === ae("src"))
+            .select(col("dst").as("vertex"), col("color"))
+          st.select("vertex", "color").unionByName(msgs)
+            .groupBy("vertex").agg(max("color").as("color"))
+        }
+        // backward root-reachability within the color class
+        val flags = Fixpoint.iterateSized(
+          colors.withColumn("flag", (col("color") === col("vertex")).cast("int")),
+          nV, rounds,
+          converged = Fixpoint.monotoneSumUnchanged("flag")) { (st, _) =>
+          val msgs = st.filter(col("flag") === 1)
+            .join(ae, st("vertex") === ae("dst"))
+            .select(col("src"), col("color")).distinct()
+            .toDF("mv", "mc")
+          st.join(msgs, st("vertex") === col("mv") && st("color") === col("mc"), "left")
+            .select(st("vertex"), st("color"),
+              greatest(st("flag"), when(col("mv").isNotNull, 1).otherwise(0)).as("flag"))
+        }
+        val decided = flags.filter(col("flag") === 1)
+          .select(col("vertex").as("dv"), col("color").as("dscc"))
+        Fixpoint.materializedLeaf(
+          state.join(decided, state("vertex") === col("dv"), "left")
+            .select(state("vertex"),
+              when(col("scc") < 0 && col("dv").isNotNull, col("dscc"))
+                .otherwise(col("scc")).as("scc")))
       }
-      // backward root-reachability within the color class
-      val flags = graft.iterate.Fixpoint.iterateSized(
-        colors.withColumn("flag", (col("color") === col("vertex")).cast("int")),
-        nV, rounds,
-        converged = graft.iterate.Fixpoint.monotoneSumUnchanged("flag")) { (st, _) =>
-        val msgs = st.filter(col("flag") === 1)
-          .join(ae, st("vertex") === ae("dst"))
-          .select(col("src"), col("color")).distinct()
-          .toDF("mv", "mc")
-        st.join(msgs, st("vertex") === col("mv") && st("color") === col("mc"), "left")
-          .select(st("vertex"), st("color"),
-            greatest(st("flag"), when(col("mv").isNotNull, 1).otherwise(0)).as("flag"))
-      }
-      val decided = flags.filter(col("flag") === 1)
-        .select(col("vertex").as("dv"), col("color").as("dscc"))
-      val merged = graft.iterate.Fixpoint.materializedLeaf(
-        state.join(decided, state("vertex") === col("dv"), "left")
-          .select(state("vertex"),
-            when(col("scc") < 0 && col("dv").isNotNull, col("dscc"))
-              .otherwise(col("scc")).as("scc")))
-      // the merged state has materialized: the phase's slice and fixpoint
-      // results and the state it supersedes have no reader left
-      Seq(ae, colors, flags, held).foreach(graft.iterate.Fixpoint.unpersistMaterialized)
+      // superseded generation: the merged state no longer reads it
+      Fixpoint.unpersistMaterialized(held)
       held = merged
-      state = graft.iterate.Fixpoint.rebindStats(merged)
+      state = Fixpoint.rebindStats(merged)
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(e)
     state
   }
 
@@ -948,23 +937,22 @@ object Graphs {
   def sccCondensationLevels(edges: DataFrame,
       phases: Int = DefaultSccPhases, rounds: Int = DefaultSccRounds,
       levelRounds: Int = DefaultSccLevelRounds,
-      strict: Boolean = false): DataFrame = {
+      strict: Boolean = false): DataFrame = Fixpoint.scope {
     // strict: an undecided scc = -1 residue would lump every undecided
     // vertex into ONE pseudo-component and corrupt the layering — the
     // guard costs one count over the checkpointed vertex relation
-    val scc = (if (strict) stronglyConnectedComponentsStrict(edges, phases, rounds)
-               else stronglyConnectedComponents(edges, phases, rounds))
-      .localCheckpoint(eager = true)
+    val scc = Fixpoint.materializedLeaf(
+      if (strict) stronglyConnectedComponentsStrict(edges, phases, rounds)
+      else stronglyConnectedComponents(edges, phases, rounds))
     val bySrc = scc.select(col("vertex").as("src"), col("scc").as("csrc"))
     val byDst = scc.select(col("vertex").as("dst"), col("scc").as("cdst"))
-    val ce = edges.select("src", "dst").distinct()
+    val ce = Fixpoint.materializedLeaf(edges.select("src", "dst").distinct()
       .join(bySrc, "src").join(byDst, "dst")
-      .select("csrc", "cdst").filter(col("csrc") =!= col("cdst")).distinct()
-      .localCheckpoint(eager = true)
+      .select("csrc", "cdst").filter(col("csrc") =!= col("cdst")).distinct())
     val init = scc.select(col("scc").as("comp")).distinct()
       .withColumn("level", lit(0L))
-    val levels = graft.iterate.Fixpoint.iterate(init, levelRounds,
-      converged = graft.iterate.Fixpoint.monotoneSumUnchanged("level")) { (st, _) =>
+    val levels = Fixpoint.iterate(init, levelRounds,
+      converged = Fixpoint.monotoneSumUnchanged("level")) { (st, _) =>
       val msgs = st.join(ce, st("comp") === ce("csrc"))
         .select(col("cdst").as("comp"), (col("level") + 1L).as("level"))
       st.select("comp", "level").unionByName(msgs)
@@ -1003,10 +991,10 @@ object Graphs {
     * the sized undirected edge cache; rounds are fixed (no convergence
     * scan), so the cost is exactly `rounds` checkpoint jobs.
     */
-  def labelPropagation(edges: DataFrame, rounds: Int = DefaultLpaRounds): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int = DefaultLpaRounds): DataFrame = Fixpoint.scope {
     val undirected = undirectedSized(edges)
     val init = vertices(undirected).withColumn("label", col("vertex"))
-    val result = graft.iterate.Fixpoint.iterate(init, rounds) { (state, _) =>
+    val result = Fixpoint.iterate(init, rounds) { (state, _) =>
       val msgs = state.join(undirected, state("vertex") === undirected("src"))
         .select(col("dst").as("vertex"), col("label"))
         .unionByName(state.select("vertex", "label"))
@@ -1017,7 +1005,6 @@ object Graphs {
         .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("m"))
         .select(col("vertex"), col("m.l").as("label"))
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(undirected)
     result.select("vertex", "label")
   }
 
@@ -1057,18 +1044,17 @@ object Graphs {
     * constant (the DeepWalk regime), so lineage stays shallow; the
     * frontier is checkpointed per step because the union output and the
     * next join both consume it. */
-  def deterministicWalks(edges: DataFrame, seeds: DataFrame, length: Int): DataFrame = {
+  def deterministicWalks(edges: DataFrame, seeds: DataFrame, length: Int): DataFrame = Fixpoint.scope {
     // leaf (r17): every step's frontier join (and biasedWalks' second
     // (prev, dst) probe) re-scans e — one materialization job, flat plans
-    val e = graft.iterate.Fixpoint.materializedLeaf(
+    val e = Fixpoint.materializedLeaf(
       edges.select(col("src"), col("dst")).distinct())
-    var frontier = seeds
+    var frontier = Fixpoint.materializedLeaf(seeds
       .select(col("vertex").cast("long").as("walk_id"),
-        lit(0L).as("step"), col("vertex").cast("long").as("vertex"))
-      .localCheckpoint(eager = true)
+        lit(0L).as("step"), col("vertex").cast("long").as("vertex")))
     var out = frontier
     for (i <- 1 to length) {
-      frontier = frontier.join(e, frontier("vertex") === e("src"))
+      frontier = Fixpoint.materializedLeaf(frontier.join(e, frontier("vertex") === e("src"))
         .select(col("walk_id"),
           walkHash(col("walk_id"), i, col("dst")).as("hstep"), col("dst"))
         .groupBy("walk_id")
@@ -1077,11 +1063,9 @@ object Graphs {
         // the oracle's row_number() ORDER BY h, dst makes
         .agg(min(struct(col("hstep"), col("dst"))).as("m"))
         .select(col("walk_id"), lit(i.toLong).as("step"),
-          col("m.dst").as("vertex"))
-        .localCheckpoint(eager = true)
+          col("m.dst").as("vertex")))
       out = out.unionByName(frontier)
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(e)
     out
   }
 
@@ -1112,22 +1096,21 @@ object Graphs {
     * equi-joins against the same cached relation and the min-struct
     * aggregation still absorbs hub fan-out map-side. */
   def biasedWalks(edges: DataFrame, seeds: DataFrame, length: Int,
-      wReturn: Long, wCommon: Long, wExplore: Long): DataFrame = {
+      wReturn: Long, wCommon: Long, wExplore: Long): DataFrame = Fixpoint.scope {
     require(wReturn > 0 && wCommon > 0 && wExplore > 0,
       "weights must be positive (a zero weight zeroes every priority tie)")
-    val e = graft.iterate.Fixpoint.materializedLeaf(
+    val e = Fixpoint.materializedLeaf(
       edges.select(col("src"), col("dst")).distinct())
     val pe = e.select(col("src").as("ps"), col("dst").as("pd"))
-    var frontier = seeds
+    var frontier = Fixpoint.materializedLeaf(seeds
       .select(col("vertex").cast("long").as("walk_id"),
         lit(0L).as("step"), col("vertex").cast("long").as("vertex"),
-        lit(-1L).as("prev"))
-      .localCheckpoint(eager = true)
+        lit(-1L).as("prev")))
     var out = frontier.select("walk_id", "step", "vertex")
     for (i <- 1 to length) {
       val cand = frontier.join(e, frontier("vertex") === e("src"))
         .select(col("walk_id"), col("vertex").as("cur"), col("prev"), col("dst"))
-      frontier = cand
+      frontier = Fixpoint.materializedLeaf(cand
         .join(pe, cand("prev") === pe("ps") && cand("dst") === pe("pd"), "left")
         .select(col("walk_id"), col("cur"), col("dst"),
           when(col("dst") === col("prev"), lit(wReturn))
@@ -1143,11 +1126,9 @@ object Graphs {
         .agg(min(struct((-col("prio")).as("np"), col("dst"),
           col("cur"))).as("m"))
         .select(col("walk_id"), lit(i.toLong).as("step"),
-          col("m.dst").as("vertex"), col("m.cur").as("prev"))
-        .localCheckpoint(eager = true)
+          col("m.dst").as("vertex"), col("m.cur").as("prev")))
       out = out.unionByName(frontier.select("walk_id", "step", "vertex"))
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(e)
     out
   }
 
@@ -1231,7 +1212,7 @@ object Graphs {
     * otherwise) + two partial-aggregated groupBys — no per-pair work, no
     * iteration; the natural "score this LPA/CC clustering" follow-up.
     */
-  def modularityByCommunity(edges: DataFrame, labels: DataFrame): DataFrame = {
+  def modularityByCommunity(edges: DataFrame, labels: DataFrame): DataFrame = Fixpoint.scope {
     val und = undirectedSized(edges)
     val twoM = und.count() // und holds both directions: |und| = 2m
     val lab = labels.select(col("vertex"), col("label"))
@@ -1247,18 +1228,15 @@ object Graphs {
       .filter(col("sl") === col("dl"))
       .groupBy(col("sl").as("label"))
       .agg((count(lit(1)) / 2).cast("long").as("intra_edges"))
-    val out = degSum.join(intra, Seq("label"), "left")
+    // community-sized: materialized while the edge cache is still held, or
+    // the returned lazy plan re-derives union+distinct+repartition once per
+    // consuming branch at evaluation time (the Fixpoint checkpoint rule)
+    Fixpoint.materializedLeaf(degSum.join(intra, Seq("label"), "left")
       .select(col("label"),
         coalesce(col("intra_edges"), lit(0L)).as("intra_edges"),
         col("degree_sum"),
         (lit(2L * twoM) * coalesce(col("intra_edges"), lit(0L)) -
-          col("degree_sum") * col("degree_sum")).as("q_num"))
-      // community-sized: materialize BEFORE dropping the edge cache, or the
-      // returned lazy plan re-derives union+distinct+repartition once per
-      // consuming branch at evaluation time (the Fixpoint checkpoint rule)
-      .localCheckpoint(eager = true)
-    graft.iterate.Fixpoint.unpersistMaterialized(und)
-    out
+          col("degree_sum") * col("degree_sum")).as("q_num")))
   }
 
   /** Connected components by min-label propagation with pointer jumping:
@@ -1271,18 +1249,18 @@ object Graphs {
     * connectedComponents, so results are exact and engine-reproducible.
     */
   def connectedComponentsDoubling(
-      edges: DataFrame, maxIter: Int = DefaultDoublingRounds): DataFrame = {
+      edges: DataFrame, maxIter: Int = DefaultDoublingRounds): DataFrame = Fixpoint.scope {
     val undirected = undirectedSized(edges)
     val init = vertices(undirected).withColumn("label", col("vertex"))
-    val result = graft.iterate.Fixpoint.iterate(init, maxIter,
-      converged = graft.iterate.Fixpoint.monotoneSumUnchanged("label")) { (state, _) =>
-      // HashMin step: min label over self + in-neighbors. A round leaf
+    val result = Fixpoint.iterate(init, maxIter,
+      converged = Fixpoint.monotoneSumUnchanged("label")) { (state, _) =>
+      // HashMin step: min label over self + in-neighbors. A leaf
       // because the pointer jump consumes it on BOTH sides of a
       // self-join — without the barrier the agg subtree (and its edge-scan
       // feed) plans and executes twice per round.
       val nbr = state.join(undirected, state("vertex") === undirected("src"))
         .select(col("dst").as("vertex"), col("label"))
-      val m = graft.iterate.Fixpoint.roundLeaf(state.select(col("vertex"), col("label"))
+      val m = Fixpoint.materializedLeaf(state.select(col("vertex"), col("label"))
         .unionByName(nbr)
         .groupBy("vertex").agg(min("label").as("label")))
       // pointer jump: label <- label(label). Labels are always existing
@@ -1292,7 +1270,6 @@ object Graphs {
       m.join(jump, m("label") === jump("jv"))
         .select(m("vertex"), least(m("label"), col("jl")).as("label"))
     }
-    graft.iterate.Fixpoint.unpersistMaterialized(undirected)
     result.select("vertex", "label")
   }
 }

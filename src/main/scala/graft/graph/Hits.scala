@@ -27,12 +27,16 @@ object Hits {
 
   /** @param edges (src LONG, dst LONG)
     * @return (vertex LONG, hub DOUBLE, auth DOUBLE), L1-normalized */
-  def run(edges: DataFrame, iterations: Int): DataFrame = PageRank.withEdgeCache(edges) { c =>
-    val e = c.e
-    val verts = Graphs.vertices(e)
-    val init = verts.select(col("vertex"), lit(1.0).as("hub"), lit(1.0).as("auth"))
+  def run(edges: DataFrame, iterations: Int): DataFrame = Fixpoint.scope {
+    val (e, _) = PageRank.srcPartitioned(edges)
+    val init = Graphs.vertices(e)
+      .select(col("vertex"), lit(1.0).as("hub"), lit(1.0).as("auth"))
 
     val result = Fixpoint.iterate(init, iterations) { (state, _) =>
+      // every round's state holds every vertex: rooted at it, the round
+      // plans and runs under the loop session (a Dataset executes under
+      // its root's session), never the caller's
+      val verts = state.select("vertex")
       // auth pull: every edge ships hub(src) to dst
       val authRaw = e.join(state.select(col("vertex"), col("hub")),
           e("src") === col("vertex"))

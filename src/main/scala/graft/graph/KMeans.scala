@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.iterate.Fixpoint
 
 /** 1-D k-means (Lloyd's) over a numeric column, matching the reference MR
   * implementation's semantics (K-means/src/main/java/wc/CountFollowers.java):
@@ -37,30 +38,31 @@ object KMeans {
     * fixed iteration count). */
   def run(points: DataFrame, valueCol: String, init: Seq[Double], maxIter: Int = 10,
           fixedIter: Boolean = false): Result = {
-    val pts = points.select(col(valueCol).cast("double").as("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pts.count()
-    var centroids = init
-    var sse = Vector.empty[Double]
-    var iter = 0
-    var convergedAt = -1
-    while (iter < maxIter && convergedAt < 0) {
-      val assigned = assign(pts, "x", centroids)
-      // mean via exact integral-friendly sum/count; empty cluster keeps its centroid
-      val stats = assigned.groupBy("cluster")
-        .agg(sum("x").as("s"), count(lit(1)).as("n"), sum(col("x") * col("x")).as("ss"))
-        .collect().map(r => r.getInt(0) -> ((r.getDouble(1), r.getLong(2), r.getDouble(3)))).toMap
-      val next = centroids.indices.map { i =>
-        stats.get(i).map { case (s, n, _) => s / n }.getOrElse(centroids(i))
+    val x = points.select(col(valueCol).cast("double").as("x"))
+    // the cache serves the loop only: the returned assignment re-derives x
+    val (centroids, sse) = Fixpoint.scope {
+      val pts = Fixpoint.columnar(x)
+      var centroids = init
+      var sse = Vector.empty[Double]
+      var iter = 0
+      var convergedAt = -1
+      while (iter < maxIter && convergedAt < 0) {
+        val assigned = assign(pts, "x", centroids)
+        // mean via exact integral-friendly sum/count; empty cluster keeps its centroid
+        val stats = assigned.groupBy("cluster")
+          .agg(sum("x").as("s"), count(lit(1)).as("n"), sum(col("x") * col("x")).as("ss"))
+          .collect().map(r => r.getInt(0) -> ((r.getDouble(1), r.getLong(2), r.getDouble(3)))).toMap
+        val next = centroids.indices.map { i =>
+          stats.get(i).map { case (s, n, _) => s / n }.getOrElse(centroids(i))
+        }
+        val iterSse = stats.map { case (i, (s, n, ss)) => ss - 2 * next(i) * s + n * next(i) * next(i) }.sum
+        sse :+= iterSse
+        if (next == centroids && !fixedIter) convergedAt = iter
+        centroids = next
+        iter += 1
       }
-      val iterSse = stats.map { case (i, (s, n, ss)) => ss - 2 * next(i) * s + n * next(i) * next(i) }.sum
-      sse :+= iterSse
-      if (next == centroids && !fixedIter) convergedAt = iter
-      centroids = next
-      iter += 1
+      (centroids, sse)
     }
-    val out = Result(centroids, sse, assign(pts, "x", centroids))
-    pts.unpersist(false)
-    out
+    Result(centroids, sse, assign(x, "x", centroids))
   }
 }

@@ -2,7 +2,6 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.iterate.Fixpoint
 
 /** Mass-push PageRank with dangling-mass redistribution via a dummy vertex,
@@ -42,12 +41,13 @@ object PageRank {
     *   divided by this (reference: k*k)
     */
   def run(edges: DataFrame, iterations: Int, dummy: Long,
-      realVertexCount: Long): DataFrame = withEdgeCache(edges) { c =>
-    val eWithDeg = outDegreeEdges(c)
+      realVertexCount: Long): DataFrame = Fixpoint.scope {
+    val (e, width) = srcPartitioned(edges)
+    val eWithDeg = outDegreeEdges(e, width)
 
     // base state: every real vertex 1/N, dummy 0 (PageRankRDD/...:49-51).
     // base(dummy) always equals the previous iteration's delta (0 initially).
-    val init = Graphs.vertices(c.e)
+    val init = Graphs.vertices(e)
       .withColumn("rank",
         when(col("vertex") === dummy, lit(0.0))
           .otherwise(lit(1.0 / realVertexCount)))
@@ -135,13 +135,14 @@ object PageRank {
 
   private def dampedCore(edges: DataFrame, iterations: Int,
       terms: Long => (Column, Column) = n => (lit(DampTeleport) / n, col("dm") / n))(
-      initOf: (DataFrame, Long) => DataFrame): DataFrame = withEdgeCache(edges) { c =>
-    val eWithDeg = outDegreeEdges(c)
-    val verts = c.persist(Graphs.vertices(c.e))
+      initOf: (DataFrame, Long) => DataFrame): DataFrame = Fixpoint.scope {
+    val (e, width) = srcPartitioned(edges)
+    val eWithDeg = outDegreeEdges(e, width)
+    val verts = Fixpoint.persisted(Graphs.vertices(e))
     val n = verts.count()
     // dangling set = vertices that never appear as src (loop-invariant)
-    val dang = c.persist(verts
-      .join(c.e.select(col("src").as("vertex")).distinct(), Seq("vertex"), "left_anti"))
+    val dang = Fixpoint.persisted(verts
+      .join(e.select(col("src").as("vertex")).distinct(), Seq("vertex"), "left_anti"))
     dang.count() // materialize while verts/e are hot
     // r' = teleport + α·(Σ in-contribs + dangling), each term per vertex
     val (teleport, dangling) = terms(n)
@@ -178,41 +179,26 @@ object PageRank {
     }
   }
 
-  /** The edge caches every link-analysis loop here shares, released in
-    * persist order, the edge derivation last, once `body` has built its
-    * result or failed (the loop's final state is the caller's). */
-  private[graph] def withEdgeCache(edges: DataFrame)(body: EdgeCache => DataFrame): DataFrame = {
-    val c = new EdgeCache(edges)
-    try body(c) finally c.release()
-  }
-
-  /** The edge relation persisted BEFORE its sizing count (the
-    * undirectedSized rule, r17: the count's materialization then feeds the
-    * repartition from cache instead of re-running the derivation), and `e`,
-    * the edges hash-partitioned by src at the width the count warrants.
-    * `e`, like every [[persist]], is lazy: its first consumer fills it. */
-  private[graph] final class EdgeCache(edges: DataFrame) {
-    private val held = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    private val u0 = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val width: Int = Fixpoint.sizedPartitions(edges.sparkSession, u0.count())
-    val e: DataFrame = persist(u0.repartition(width, col("src")))
-
-    /** persist `df` until [[release]] */
-    def persist(df: DataFrame): DataFrame = {
-      held += df.persist(StorageLevel.MEMORY_AND_DISK)
-      held.last
-    }
-
-    def release(): Unit = (held :+ u0).foreach(_.unpersist(false))
+  /** The edge cache every link-analysis loop here shares: the edge relation
+    * persisted BEFORE its sizing count (the undirectedSized rule, r17: the
+    * count's materialization then feeds the repartition from cache instead
+    * of re-running the derivation), and the edges hash-partitioned by src
+    * at the width the count warrants, with that width. The partitioned
+    * edges are [[Fixpoint.persisted]] — lazy, their first consumer fills
+    * them. */
+  private[graph] def srcPartitioned(edges: DataFrame): (DataFrame, Int) = {
+    val u0 = Fixpoint.persisted(edges)
+    val width = Fixpoint.sizedPartitions(edges.sparkSession, u0.count())
+    (Fixpoint.persisted(u0.repartition(width, col("src"))), width)
   }
 
   /** edges pre-joined with their out-degrees ONCE — the e ⋈ outDeg join is
     * loop-invariant, so hoisting it saves a join (and its broadcast/
     * exchange jobs) from every iteration's plan */
-  private def outDegreeEdges(c: EdgeCache): DataFrame =
-    c.persist(c.e.join(c.e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
+  private def outDegreeEdges(e: DataFrame, width: Int): DataFrame =
+    Fixpoint.persisted(e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
       .select(col("src"), col("dst"), col("outdeg"))
-      .repartition(c.width, col("src")))
+      .repartition(width, col("src")))
 
   /** Top-k by rank, deterministic tie-break on vertex id
     * (PageRankDataSet/.../FollowerCount.scala:76). Catalyst plans this as

@@ -44,11 +44,9 @@ object ShortestPath {
   /** run/runWeighted: the relax loop from `source` over the src-partitioned
     * edge leaf, each edge costing `cost` (evaluated against the edge row). */
   private def relaxFromSource(edges: DataFrame, source: Long, cost: Column,
-      maxIter: Int): DataFrame = {
+      maxIter: Int): DataFrame = Fixpoint.scope {
     val e = Fixpoint.srcPartitionedLeaf(edges)
-    val result = relaxLoop(sourceSeeded(e, source), e, cost, maxIter)
-    Fixpoint.unpersistMaterialized(e)
-    result.select("vertex", "dist")
+    relaxLoop(sourceSeeded(e, source), e, cost, maxIter).select("vertex", "dist")
   }
 
   /** The initial (vertex, dist, changed) state: every vertex of `e` plus
@@ -110,7 +108,7 @@ object ShortestPath {
     * @param allEdges old ∪ new (src LONG, dst LONG, w DOUBLE)
     * @return (vertex LONG, dist DOUBLE), Infinity for unreached */
   def incrementalWeighted(dists: DataFrame, newEdges: DataFrame,
-      allEdges: DataFrame, maxIter: Int = 50): DataFrame = {
+      allEdges: DataFrame, maxIter: Int = 50): DataFrame = Fixpoint.scope {
     val e = Fixpoint.srcPartitionedLeaf(allEdges)
     val inf = lit(Double.PositiveInfinity)
     val stored = dists.select(col("vertex"), col("dist"))
@@ -128,9 +126,7 @@ object ShortestPath {
         col("vertex"),
         least(col("dist"), coalesce(col("cand"), inf)).as("dist"),
         (coalesce(col("cand"), inf) < col("dist")).as("changed"))
-    val result = relaxLoop(init, e, col("w"), maxIter)
-    Fixpoint.unpersistMaterialized(e)
-    result.select("vertex", "dist")
+    relaxLoop(init, e, col("w"), maxIter).select("vertex", "dist")
   }
 
   /** Multi-source BFS (landmark distances): unit-hop shortest distance
@@ -146,7 +142,7 @@ object ShortestPath {
     * never improves a settled distance, so the frontier is exactly the
     * newly discovered pairs and convergence = empty frontier.
     * Returns (seed, vertex, dist) for reachable pairs only. */
-  def multiSourceBfs(edges: DataFrame, seeds: Seq[Long], maxIter: Int = 50): DataFrame = {
+  def multiSourceBfs(edges: DataFrame, seeds: Seq[Long], maxIter: Int = 50): DataFrame = Fixpoint.scope {
     val spark = edges.sparkSession
     import spark.implicits._
     val e = Fixpoint.srcPartitionedLeaf(edges)
@@ -167,7 +163,6 @@ object ShortestPath {
           (coalesce(col("cand"), unreached) < coalesce(col("dist"), unreached))
             .as("changed"))
     }
-    Fixpoint.unpersistMaterialized(e)
     result.select("seed", "vertex", "dist")
   }
 
@@ -178,7 +173,7 @@ object ShortestPath {
     * tie-break (the reference keeps "first min encountered", which is
     * partition-order-dependent; ours is stable).
     */
-  def runWithPath(edges: DataFrame, source: Long, maxIter: Int = 50): DataFrame = {
+  def runWithPath(edges: DataFrame, source: Long, maxIter: Int = 50): DataFrame = Fixpoint.scope {
     val e = Fixpoint.srcPartitionedLeaf(edges)
     val init = sourceSeeded(e, source).withColumn("path",
       when(col("vertex") === source, array(lit(source))).otherwise(lit(null).cast("array<bigint>")))
@@ -200,7 +195,6 @@ object ShortestPath {
           (col("cand").isNotNull && col("cand")("dist") < col("cur")("dist")).as("changed"))
         .select(col("vertex"), col("best")("dist").as("dist"), col("best")("path").as("path"), col("changed"))
     }
-    Fixpoint.unpersistMaterialized(e)
     result.select("vertex", "dist", "path")
   }
 }

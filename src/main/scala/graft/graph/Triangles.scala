@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.iterate.Fixpoint
 
 /** Directed-triangle (3-cycle) counting, the reference's two join
   * strategies re-expressed declaratively:
@@ -47,10 +48,9 @@ object Triangles {
     val b = bounded(edges, maxId)
     // consumed by deg, wedges (twice), and the closing semi-join — one
     // materialization instead of four derivations
-    val und = b.select(col("src"), col("dst"))
+    val und = Fixpoint.materializedLeaf(b.select(col("src"), col("dst"))
       .union(b.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(eager = true)
+      .distinct())
     val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
     val wedges = und.as("a").join(und.as("b"),
         col("a.src") === col("b.src") && col("a.dst") < col("b.dst"))
@@ -106,10 +106,10 @@ object Triangles {
   private def nonAdjacentCommonNeighbors(edges: DataFrame, maxId: Long):
       (DataFrame, DataFrame) = {
     val b = bounded(edges, maxId)
-    val und = b.select(col("src"), col("dst"))
+    // consumed by the wedge join (twice) + anti-join (+ degrees)
+    val und = Fixpoint.materializedLeaf(b.select(col("src"), col("dst"))
       .union(b.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(eager = true) // consumed by the wedge join (twice) + anti-join (+ degrees)
+      .distinct())
     val wedges = und.as("a").join(und.as("b"),
         col("a.src") === col("b.src") && col("a.dst") < col("b.dst"))
       .select(col("a.dst").as("u"), col("b.dst").as("v"))
@@ -122,7 +122,7 @@ object Triangles {
     // materialize the (filtered, deduped) edge set once — the three-way
     // self-join would otherwise re-derive it per join input (the planner
     // does not reuse the scan+distinct subtree across self-join aliases)
-    val e = edges.localCheckpoint(eager = true)
+    val e = Fixpoint.materializedLeaf(edges)
     val e1 = e.as("e1")
     val e2 = hint(e.as("e2"))
     val e3 = hint(e.as("e3"))

@@ -1,9 +1,14 @@
 package graft.iterate
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 
 /** Driver-loop utilities for iterative (fixpoint) algorithms.
   *
@@ -16,20 +21,15 @@ import org.apache.spark.storage.StorageLevel
   * of driver-loop algorithms at scale (plan analysis time and task
   * serialization grow superlinearly otherwise).
   *
-  * The materializations, each with one release path:
-  *  - leaf ([[materializedLeaf]], [[srcPartitionedLeaf]]): an eager
-  *    checkpoint of a relation with many consumers — released by
-  *    [[unpersistMaterialized]];
-  *  - [[pinned]]: a cache held only while one eager result is built from
-  *    it — released by `pinned` itself;
-  *  - [[columnar]]: an eager columnar cache of a relation scanned every
-  *    round (`Graphs.undirectedSized`) — released by
-  *    [[unpersistMaterialized]];
-  *  - [[roundLeaf]]: a leaf taken inside one `iterate` step — released by
-  *    the loop once that round's state has materialized;
-  *  - lazy loop state: each round's lazy checkpoint, materialized by the
-  *    round's barrier — released by the loop once the next round's state
-  *    has materialized; the final state is the caller's.
+  * Ownership: while a [[scope]] is open, every materialization Fixpoint
+  * hands out — [[materializedLeaf]], [[columnar]], [[persisted]] and the
+  * final state of [[iterate]] — belongs to the innermost scope. When the
+  * scope's body returns, what its result reads (plan, subqueries, RDD
+  * lineage) passes to the enclosing scope and everything else is released;
+  * a `Unit` body or a throw releases everything. Each loop round is a
+  * scope that closes once the round's state has materialized, and the
+  * loop releases each state it supersedes. Outside any scope a
+  * materialization is the caller's.
   *
   * `Dataset.unpersist` only knows the cache manager: on a checkpoint it is
   * a no-op that leaves every block cached. Checkpoints go through
@@ -75,20 +75,24 @@ object Fixpoint {
     * leaf: rows stream from the checkpoint blocks and the per-round
     * Catalyst walk sees one node. The physical partitioning/ordering of
     * the materialized plan is preserved on the LogicalRDD, so co-partition
-    * contracts (src-hash edge caches) survive. Release with
-    * [[unpersistMaterialized]]. */
+    * contracts (src-hash edge caches) survive. */
   def materializedLeaf(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = true)
+    own(df.localCheckpoint(eager = true), cache = false)
 
-  /** The eager columnar cache: persist plus a count. Chosen over a leaf for
-    * a relation a loop scans every round, where the in-memory columnar
-    * cache's vectorized scan beats row-block iteration. Release with
-    * [[unpersistMaterialized]]. */
+  /** The eager columnar cache: [[persisted]] plus a count. Chosen over a
+    * leaf for a relation a loop scans every round, where the in-memory
+    * columnar cache's vectorized scan beats row-block iteration. */
   def columnar(df: DataFrame): DataFrame = {
-    val c = df.persist(StorageLevel.MEMORY_AND_DISK)
+    val c = persisted(df)
     c.count()
     c
   }
+
+  /** A lazy MEMORY_AND_DISK persist: its first consumer fills it, so a
+    * relation whose first use is already a full scan pays no job of its
+    * own. */
+  def persisted(df: DataFrame): DataFrame =
+    own(df.persist(StorageLevel.MEMORY_AND_DISK), cache = true)
 
   /** Build one eager result from a pinned cache of `input`: persists
     * `input`, counts it (so the consumers read the cache instead of racing
@@ -110,31 +114,92 @@ object Fixpoint {
     * the derivation), hash-partitioned by `src` to the width the count
     * warrants and materialized as a leaf. The loop re-scans the leaf every
     * round, and each round's Catalyst walk sees one node instead of the
-    * derivation subtree. Release with [[unpersistMaterialized]]. */
+    * derivation subtree. */
   def srcPartitionedLeaf(edges: DataFrame): DataFrame =
     pinned(edges) { (u, n) =>
       u.repartition(sizedPartitions(edges.sparkSession, n), col("src"))
     }
 
-  /** An eager leaf owned by the enclosing [[iterate]] round: a step's
-    * barrier for a relation the round consumes more than once. The loop
-    * releases it once the round's state has materialized, since that
-    * state's checkpoint no longer reads it. Fails outside a step. */
-  def roundLeaf(df: DataFrame): DataFrame = {
-    val held = roundLeaves.value
-    if (held == null)
-      throw new IllegalStateException("Fixpoint.roundLeaf called outside an iterate step")
-    val leaf = materializedLeaf(df)
-    held += leaf
-    leaf
+  /** Runs `body` as an ownership scope (see the object doc): returns its
+    * result, hands what the result reads to the enclosing scope and
+    * releases every other materialization taken while `body` ran, the
+    * latest first. */
+  def scope[T](body: => T): T = {
+    val outer = scopes.get
+    val owned = mutable.ListBuffer.empty[Owned]
+    scopes.set(owned)
+    val result =
+      try body
+      catch { case t: Throwable => owned.reverseIterator.foreach(_.release()); throw t }
+      finally scopes.set(outer)
+    val read = reads(result)
+    val (kept, dropped) = owned.partition(_.keys.exists(read))
+    dropped.reverseIterator.foreach(_.release()) // dependents first
+    Option(outer).foreach(_ ++= kept)
+    result
   }
 
-  /** the current step's round leaves; bound by `runLoop` around each step */
-  private val roundLeaves =
-    new scala.util.DynamicVariable[scala.collection.mutable.ListBuffer[DataFrame]](null)
+  /** the innermost open scope's materializations on this thread; null
+    * outside any scope. Not inherited: a thread Spark starts inside a scope
+    * must not pin that scope's relations for its lifetime. */
+  private val scopes = new ThreadLocal[mutable.ListBuffer[Owned]]
 
-  /** Unpersist a relation materialized by a checkpoint (leaf, round leaf,
-    * loop state: checkpoint blocks) OR by persist() (cache manager) —
+  private def own(df: DataFrame, cache: Boolean): DataFrame = {
+    Option(scopes.get).foreach(_ += Owned(df, cache))
+    df
+  }
+
+  /** A scope's materialization: a cache-manager entry or a checkpoint. The
+    * kind is recorded, not read off the plan: a persisted leaf's plan root
+    * is the leaf's LogicalRDD. */
+  private final case class Owned(df: DataFrame, cache: Boolean) {
+    def release(): Unit =
+      if (cache) df.unpersist(false) else unpersistMaterialized(df)
+
+    /** what a reader reaches it by: a cache's builder and, once built, its
+      * RDD id; a checkpoint's RDD id */
+    def keys: Seq[Any] =
+      if (cache) df.sparkSession.sharedState.cacheManager
+        .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).toSeq
+        .flatMap { c => val b = c.cachedRepresentation.cacheBuilder
+          b +: (if (b.isCachedColumnBuffersLoaded) Seq(b.cachedColumnBuffers.id) else Nil) }
+      else df.queryExecution.analyzed match {
+        case lr: LogicalRDD => Seq(lr.rdd.id)
+        case _ => Nil
+      }
+  }
+
+  /** every key `result` reads: the cache builders and RDD ids reached from
+    * its DataFrames' plans and subqueries, through RDD lineage (a re-bind,
+    * a lazy checkpoint) and through the plans of caches not yet built */
+  private def reads(result: Any): Set[Any] = {
+    val seen = mutable.Set.empty[Any]
+    val rdds = mutable.Stack.empty[RDD[_]]
+    def cached(m: InMemoryRelation): Unit = if (seen.add(m.cacheBuilder)) {
+      val b = m.cacheBuilder
+      if (b.isCachedColumnBuffersLoaded) rdds.push(b.cachedColumnBuffers) else plan(b.logicalPlan)
+    }
+    def plan(p: QueryPlan[_]): Unit = p.foreachWithSubqueries {
+      case lr: LogicalRDD => rdds.push(lr.rdd)
+      case m: InMemoryRelation => cached(m)
+      case _ =>
+    }
+    def visit(x: Any): Unit = x match {
+      case df: Dataset[_] => plan(df.queryExecution.withCachedData)
+      case xs: Iterable[_] => xs.foreach(visit)
+      case p: Product => p.productIterator.foreach(visit)
+      case _ =>
+    }
+    visit(result)
+    while (rdds.nonEmpty) {
+      val r = rdds.pop()
+      if (seen.add(r.id)) r.dependencies.foreach(d => rdds.push(d.rdd))
+    }
+    seen.toSet
+  }
+
+  /** Unpersist a relation materialized by a checkpoint (leaf, loop state:
+    * checkpoint blocks) OR by persist() (cache manager) —
     * resolves whichever backs it.
     * The LogicalRDD match is ROOT-ONLY deliberately: a persisted relation's
     * lineage may CONTAIN someone else's still-live checkpoint leaf (cc_inc's
@@ -143,17 +208,18 @@ object Fixpoint {
     * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in the r17 session. */
   def unpersistMaterialized(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case lr: LogicalRDD => lr.rdd.unpersist(false)
       case _ => df.unpersist(false)
     }
 
   /** Iterate `step` from `init` until `maxIter` or `converged(prev, next)`.
     *
     * Every iteration's state is localCheckpoint'ed (lineage cut each
-    * round), and once it has materialized the loop releases the state it
-    * supersedes (the seed included) and the round's [[roundLeaf]]s — so
-    * executor memory holds at most two state generations regardless of
-    * iteration count, and only the returned state outlives the call.
+    * round). Each round is a [[scope]] that closes once the round's state
+    * has materialized, and the loop then releases the state it supersedes
+    * (the seed included) — so executor memory holds at most two state
+    * generations regardless of iteration count, and only the returned
+    * state, owned by the enclosing scope, outlives the call.
     */
   def iterate(
       init: DataFrame,
@@ -282,19 +348,16 @@ object Fixpoint {
       // materialization job the eager form would have run anyway — the
       // fusion never ADDS a job, it only removes one where the test already
       // scans everything.
-      val leaves = scala.collection.mutable.ListBuffer.empty[DataFrame]
-      val next = roundLeaves.withValue(leaves)(step(state, i)).localCheckpoint(eager = false)
-      val cpRdd = next.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      val next = scope {
+        val n = step(state, i).localCheckpoint(eager = false)
+        done = converged(state, n)
+        n.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd } match {
+          case Some(r) => if (!r.isCheckpointed) r.count()
+          case None => n.count() // defensive: unexpected checkpoint plan shape
+        }
+        n // materialized: its lineage is cut, so the round's leaves go
       }
-      done = converged(state, next)
-      cpRdd match {
-        case Some(r) => if (!r.isCheckpointed) r.count()
-        case None => next.count() // defensive: unexpected checkpoint plan shape
-      }
-      // next's checkpoint has cut its lineage: the state it supersedes and
-      // the round's leaves have no reader left
-      (state +: leaves).foreach(unpersistMaterialized)
+      unpersistMaterialized(state) // superseded: next no longer reads it
       state = next
       // round 1 has materialized (through the lazy seed checkpoint) — the
       // seed cache is no longer the only copy and can go
@@ -302,7 +365,7 @@ object Fixpoint {
       i += 1
     }
     if (i == 0) seeded.foreach(_.unpersist(blocking = false)) // maxIter == 0
-    state
+    own(state, cache = false)
   }
 
   /** Convergence for frontier-flag loops (`changed`/`status` columns):

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.iterate.Fixpoint
 
 /** Edit-distance similarity JOIN via deletion-neighborhood blocking
   * (FastSS — Bocek et al., U. Zurich TR 2007): all unordered pairs of
@@ -78,12 +79,12 @@ object EditJoin {
     * sweep prices at 4.6x, closed the way corenessAgg closed the hub
     * (restate the result, don't cap it). */
   def pairsWithin1Grouped(df: DataFrame, idCol: String, strCol: String): DataFrame = {
-    val g = df.select(col(idCol).as("id"), col(strCol).as("s"))
+    // one pass feeds blocking + sizes (AQE coalesces this tiny agg output
+    // to one partition; the fan-out defense lives in pairsWithin1, which
+    // re-spreads by id)
+    val g = Fixpoint.materializedLeaf(df.select(col(idCol).as("id"), col(strCol).as("s"))
       .filter(length(col("s")) > 0)
-      .groupBy("s").agg(min("id").as("rep"), count(lit(1)).as("n"))
-      // (AQE coalesces this tiny agg output to one partition; the
-      // fan-out defense lives in pairsWithin1, which re-spreads by id)
-      .localCheckpoint(eager = true) // one pass feeds blocking + sizes
+      .groupBy("s").agg(min("id").as("rep"), count(lit(1)).as("n")))
     val intra = g.filter(col("n") > 1)
       .select(col("rep").as("rep1"), col("rep").as("rep2"),
         lit(0L).as("dist"), expr("n * (n - 1) div 2").as("n_pairs"))
@@ -314,10 +315,10 @@ object EditJoin {
     * output bounded in DISTINCT strings) at distance 2. */
   def pairsWithin2Grouped(df: DataFrame, idCol: String, strCol: String,
       maxCandidates: Long = DefaultPairs2CandidateBudget): DataFrame = {
-    val g = df.select(col(idCol).as("id"), col(strCol).as("s"))
+    // one pass feeds blocking + sizes
+    val g = Fixpoint.materializedLeaf(df.select(col(idCol).as("id"), col(strCol).as("s"))
       .filter(length(col("s")) > 0)
-      .groupBy("s").agg(min("id").as("rep"), count(lit(1)).as("n"))
-      .localCheckpoint(eager = true) // one pass feeds blocking + sizes
+      .groupBy("s").agg(min("id").as("rep"), count(lit(1)).as("n")))
     val intra = g.filter(col("n") > 1)
       .select(col("rep").as("rep1"), col("rep").as("rep2"),
         lit(0L).as("dist"), expr("n * (n - 1) div 2").as("n_pairs"))

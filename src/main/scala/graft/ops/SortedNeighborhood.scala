@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.iterate.Fixpoint
 
 /** Sorted-neighborhood blocking (Hernández & Stolfo, SIGMOD 1995) — the
   * classic record-linkage candidate generator: sort all records by a
@@ -50,9 +51,8 @@ object SortedNeighborhood {
     val base = df.select(col(keyCol).as("sk"), col(idCol).as("id"))
     val parts = spark.sparkContext.defaultParallelism.max(1).min(32)
     // pin partition ids before the double consumption (counts + window)
-    val ranged = base.repartitionByRange(parts, col("sk"), col("id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(eager = true)
+    val ranged = Fixpoint.materializedLeaf(base.repartitionByRange(parts, col("sk"), col("id"))
+      .withColumn("pid", spark_partition_id()))
     val counts = ranged.groupBy("pid").agg(count(lit(1)).as("c"))
       .orderBy("pid").collect() // ≤ parts rows by contract
     val offsets = counts.map(_.getLong(1)).scanLeft(0L)(_ + _).init
@@ -152,35 +152,19 @@ object SortedNeighborhood {
     // and rank (long, rankedState's contract) are typed reads (round-14
     // ADVICE: the old getString/getLong pair made the generic-looking
     // API string/long-only at runtime).
-    val bounds = state.groupBy("pid").agg(
-        F.min(struct(col("sk"), col("id"))).as("lo"),
-        F.min("rank").as("r0"))
+    val bounds = pidBounds(state)
       .collect() // ≤ #partitions rows by the rankedState contract
-      .map(r => (r.getInt(0), r.getStruct(1).get(0), r.getStruct(1).get(1),
-        r.getLong(2)))
-      .sortBy(_._1)
-    incrementalImpl(state, bounds, storedPairs, incoming, idCol, keyCol, w)._1
-  }
-
-  /** [[incrementalPairs]] that ALSO returns the post-merge ranked state
-    * (id, sk, rank, pid) — the streaming fold's shape
-    * ([[graft.streaming.CorpusStreams]] snIngest): one fold yields the
-    * updated pair set AND the snapshot the next batch folds into, so the
-    * global sort never re-runs across the stream's lifetime. The
-    * non-relevant pids join the state output by a broadcast rank shift
-    * only (their rows never enter a window or a join). */
-  def incrementalPairsWithState(state: DataFrame, storedPairs: DataFrame,
-      incoming: DataFrame, idCol: String, keyCol: String,
-      w: Int): (DataFrame, DataFrame) = {
-    val bounds = state.groupBy("pid").agg(
-        F.min(struct(col("sk"), col("id"))).as("lo"),
-        F.min("rank").as("r0"))
-      .collect()
       .map(r => (r.getInt(0), r.getStruct(1).get(0), r.getStruct(1).get(1),
         r.getLong(2)))
       .sortBy(_._1)
     incrementalImpl(state, bounds, storedPairs, incoming, idCol, keyCol, w)
   }
+
+  /** Per pid of a ranked state: its range boundary `lo` = min (sk, id) and
+    * its min rank `r0`, then `extra` — ≤ #partitions rows. */
+  private def pidBounds(st: DataFrame, extra: org.apache.spark.sql.Column*): DataFrame =
+    st.groupBy("pid").agg(F.min(struct(col("sk"), col("id"))).as("lo"),
+      F.min("rank").as("r0") +: extra: _*)
 
   /** Directory suffix of the boundary relation a [[writeRankedState]]
     * layout stores next to the pid-partitioned state. */
@@ -194,12 +178,10 @@ object SortedNeighborhood {
     * [[BoundsSuffix]], written once here so no later ingest ever scans
     * the full state just to recover ≤ #partitions boundary rows. */
   def writeRankedState(df: DataFrame, idCol: String, keyCol: String,
-      path: String): Unit = {
-    val st = rankedState(df, idCol, keyCol).localCheckpoint(eager = true)
+      path: String): Unit = Fixpoint.scope {
+    val st = Fixpoint.materializedLeaf(rankedState(df, idCol, keyCol))
     st.write.mode("overwrite").partitionBy("pid").parquet(path)
-    st.groupBy("pid").agg(
-        F.min(struct(col("sk"), col("id"))).as("lo"),
-        F.min("rank").as("r0"))
+    pidBounds(st)
       .select(col("pid"), col("lo").getField("sk").as("losk"),
         col("lo").getField("id").as("loid"), col("r0"))
       .write.mode("overwrite").parquet(path + BoundsSuffix)
@@ -218,29 +200,26 @@ object SortedNeighborhood {
       .collect() // ≤ #partitions rows by the writeRankedState contract
       .map(r => (r.getInt(0), r.get(1), r.get(2), r.getLong(3)))
       .sortBy(_._1)
-    incrementalImpl(state, bounds, storedPairs, incoming, idCol, keyCol, w)._1
+    incrementalImpl(state, bounds, storedPairs, incoming, idCol, keyCol, w)
   }
 
   /** Shared core of the incremental faces: `bounds` is the collected
     * boundary directory (pid, lo key, lo id, min rank), sorted by pid.
-    * Returns (merged pair set, merged ranked state). */
+    * Returns the merged pair set. */
   private def incrementalImpl(state: DataFrame,
       bounds: Array[(Int, Any, Any, Long)], storedPairs: DataFrame,
       incoming: DataFrame, idCol: String, keyCol: String,
-      w: Int): (DataFrame, DataFrame) = {
+      w: Int): DataFrame = {
     require(w >= 2, "window must cover at least two records")
     val spark = state.sparkSession
     val delta = (w - 1).toLong
     // cold start (round-14 ADVICE): no stored rows means no boundaries to
     // route by — the merged corpus IS the batch, and the batch pairs are
     // the whole answer (storedPairs is empty by the same contract)
-    if (bounds.isEmpty)
-      return (pairs(incoming, idCol, keyCol, w),
-        rankedState(incoming, idCol, keyCol))
+    if (bounds.isEmpty) return pairs(incoming, idCol, keyCol, w)
     val routing = routeBatch(spark, bounds, state.schema("sk").dataType,
       state.schema("id").dataType, incoming, idCol, keyCol, delta)
-    val (pairsWithApid, newState) = mergeCore(state, routing, storedPairs, w)
-    (pairsWithApid.select("id1", "id2", "gap"), newState)
+    mergeCore(state, routing, storedPairs, w)._1.select("id1", "id2", "gap")
   }
 
   /** Driver-side batch routing shared by the in-memory and stored-layout
@@ -272,13 +251,13 @@ object SortedNeighborhood {
         org.apache.spark.sql.Row(p, losk, loid) }: _*)
     val boundsDf = F.broadcast(spark.createDataFrame(boundRows, bschema))
     val inc = incoming.select(col(keyCol).as("sk"), col(idCol).as("id"))
-    val routed = inc
+    // consumed by counts + window + join
+    val routed = Fixpoint.materializedLeaf(inc
       .join(boundsDf,
         struct(col("sk"), col("id")) >= struct(col("losk"), col("loid")),
         "left")
       .groupBy("sk", "id")
-      .agg(coalesce(F.max("bpid"), lit(minPid)).as("pid"))
-      .localCheckpoint(eager = true) // consumed by counts + window + join
+      .agg(coalesce(F.max("bpid"), lit(minPid)).as("pid")))
     // incoming-count prefix per pid (rows in EARLIER pids), broadcast back
     val incCounts = routed.groupBy("pid").agg(count(lit(1)).as("c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1) // ≤ parts
@@ -356,8 +335,8 @@ object SortedNeighborhood {
       .select(col("id"), col("sk"), (col("rank") + col("ip")).as("rank"),
         lit(0).as("is_new"), lit(null).cast("long").as("insp"), col("pid"),
         col("rank").as("oldrank"))
-    val merged = mergedTouched.unionByName(untouched)
-      .localCheckpoint(eager = true) // probe + target + affected share it
+    // probe + target + affected share it
+    val merged = Fixpoint.materializedLeaf(mergedTouched.unionByName(untouched))
     // 3. new pairs: banded rank join, the batch side broadcast so the
     // merged relation is scanned, never shuffled
     val probe = merged.filter(col("is_new") === 1)
@@ -385,20 +364,20 @@ object SortedNeighborhood {
         explode(array(expr(s"(insp - 1) div $delta"),
           expr(s"(insp - $delta) div $delta"))).as("b"))
       .distinct()
-    val affectedA = merged.filter(col("is_new") === 0)
+    // bounded: |batch| · (w−1)
+    val affectedA = Fixpoint.materializedLeaf(merged.filter(col("is_new") === 0)
       .withColumn("b", expr(s"oldrank div $delta"))
       .join(F.broadcast(ips), Seq("b"))
       .filter(col("oldrank") >= col("p") - delta && col("oldrank") < col("p"))
-      .select(col("id").as("id1")).distinct()
-      .localCheckpoint(eager = true) // bounded: |batch| · (w−1)
+      .select(col("id").as("id1")).distinct())
     val storedA =
       if (storedPairs.columns.contains("apid")) storedPairs
       else storedPairs.withColumn("apid", lit(null).cast("int"))
     val unaffected = storedA
       .join(F.broadcast(affectedA), Seq("id1"), "left_anti")
-    val affected = storedA
-      .join(F.broadcast(affectedA), Seq("id1"), "left_semi")
-      .localCheckpoint(eager = true) // bounded, feeds the endpoint probe
+    // bounded, feeds the endpoint probe
+    val affected = Fixpoint.materializedLeaf(storedA
+      .join(F.broadcast(affectedA), Seq("id1"), "left_semi"))
     // re-gap the (small) affected set against merged ranks — endpoint
     // ids broadcast so merged is scanned once more, never shuffled
     val endIds = affected.select(col("id1").as("id"))
@@ -469,8 +448,14 @@ object SortedNeighborhood {
     * StreamingSpec meters filesystem WRITES per trigger against the
     * state size. The scattered floor mirrors the read side: a batch that
     * touches every pid rewrites every pid (rank-shift semantics, not a
-    * layout defect). */
+    * layout defect). Runs as one [[Fixpoint.scope]]: every checkpoint the
+    * fold takes is released once its writes are done. */
   def ingestLocalStore(spark: org.apache.spark.sql.SparkSession,
+      statePath: String, pairsPath: String, incoming: DataFrame,
+      idCol: String, keyCol: String, w: Int, batchId: Long): Unit =
+    Fixpoint.scope(foldLocalStore(spark, statePath, pairsPath, incoming, idCol, keyCol, w, batchId))
+
+  private def foldLocalStore(spark: org.apache.spark.sql.SparkSession,
       statePath: String, pairsPath: String, incoming: DataFrame,
       idCol: String, keyCol: String, w: Int, batchId: Long): Unit = {
     require(w >= 2, "window must cover at least two records")
@@ -497,15 +482,12 @@ object SortedNeighborhood {
     }
     if (boundsRows.isEmpty) { // cold start — the one whole-corpus sort
       if (incoming.isEmpty) return
-      val st = rankedState(incoming, idCol, keyCol)
-        .localCheckpoint(eager = true) // counts + lrank + pairs share it
-      val agg = st.groupBy("pid").agg(
-          F.min("rank").as("r0"),
-          F.min(struct(col("sk"), col("id"))).as("lo"),
-          count(lit(1)).as("c"))
+      // counts + lrank + pairs share it
+      val st = Fixpoint.materializedLeaf(rankedState(incoming, idCol, keyCol))
+      val agg = pidBounds(st, count(lit(1)).as("c"))
         .collect() // ≤ #partitions rows by the rankedState contract
-        .map(r => (r.getInt(0), r.getLong(1), r.getStruct(2).get(0),
-          r.getStruct(2).get(1), r.getLong(3)))
+        .map(r => (r.getInt(0), r.getLong(2), r.getStruct(1).get(0),
+          r.getStruct(1).get(1), r.getLong(3)))
         .sortBy(_._1)
       val r0Df = F.broadcast(agg.map(a => (a._1, a._2)).toSeq.toDF("pid", "r0"))
       st.join(r0Df, "pid")
@@ -533,8 +515,7 @@ object SortedNeighborhood {
     val routing = routeBatch(spark, bounds, stateRaw.schema("sk").dataType,
       stateRaw.schema("id").dataType, incoming, idCol, keyCol, delta)
     if (routing.touched.isEmpty) return // empty trigger: nothing to fold
-    val incIds = F.broadcast(routing.routed.select("id")
-      .localCheckpoint(eager = true))
+    val incIds = F.broadcast(Fixpoint.materializedLeaf(routing.routed.select("id")))
     val r0Df = F.broadcast(bounds.map(b => (b._1, b._4)).toSeq.toDF("pid", "r0"))
     // relevant-pid state, directory-pruned, replay-healed, global ranks
     // rebuilt from the driver prefix sums
@@ -550,13 +531,12 @@ object SortedNeighborhood {
       .join(incIds.select(col("id").as("id2")), Seq("id2"), "left_anti")
     val (pairsOut, newState) = mergeCore(relevantState, routing, storedPairs, w)
     // sever every read of the two directories before overwriting them
-    val pr = pairsOut.localCheckpoint(eager = true)
-    val touchedState = newState
+    val pr = Fixpoint.materializedLeaf(pairsOut)
+    val touchedState = Fixpoint.materializedLeaf(newState
       .filter(col("pid").isin(routing.touched.map(Int.box): _*))
       .join(routing.metaDf, "pid")
       .select(col("id"), col("sk"),
-        (col("rank") - col("r0") - col("ip")).as("lrank"), col("pid"))
-      .localCheckpoint(eager = true)
+        (col("rank") - col("r0") - col("ip")).as("lrank"), col("pid")))
     // post-fold bounds: touched pids recomputed from the rows actually
     // being written (never old-cnt + batch-count arithmetic — robust to
     // healing); untouched pids carry over verbatim

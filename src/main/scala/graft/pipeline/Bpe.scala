@@ -96,10 +96,10 @@ object Bpe {
     * columns: (…, pos, tok) — the seed state of every trainer and encoder,
     * as an eager leaf. */
   private def charPositions(words: DataFrame, maxWordLen: Int): DataFrame =
-    words.join(words.sparkSession.range(maxWordLen).toDF("pos"), expr("pos < length(word)"))
-      .select(words.columns.map(col) :+ col("pos") :+
-        expr("substring(word, CAST(pos AS INT) + 1, 1)").as("tok"): _*)
-      .localCheckpoint(eager = true)
+    Fixpoint.materializedLeaf(
+      words.join(words.sparkSession.range(maxWordLen).toDF("pos"), expr("pos < length(word)"))
+        .select(words.columns.map(col) :+ col("pos") :+
+          expr("substring(word, CAST(pos AS INT) + 1, 1)").as("tok"): _*))
 
   /** (merges, finalState): merges as (rank, lhs, rhs, pair_count) rows in
     * merge order; finalState as the trained tokenization (word, freq,

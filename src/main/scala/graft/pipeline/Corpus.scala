@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import TextHash._
 import graft.functions.GraftFunctions
+import graft.iterate.Fixpoint
 
 /** Corpus-level statistics and curation operators for training-data
   * pipelines: vocabulary building, TF-IDF term ranking, deterministic
@@ -100,9 +101,9 @@ object Corpus {
     * an exact round-trip. */
   def pmiCollocations(docs: DataFrame, minCount: Long, topN: Int): DataFrame = {
     val toks = docs.select(expr(wordsSpark("text")).as("ws"))
-    val uni = toks.select(explode(col("ws")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = true) // vocab-sized; consumed by T and both joins
+    // vocab-sized; consumed by T and both joins
+    val uni = Fixpoint.materializedLeaf(toks.select(explode(col("ws")).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("c")))
     val t = uni.agg(sum("c").as("t"))
     val bi = toks.filter(size(col("ws")) >= 2)
       .select(explode(expr(
@@ -140,8 +141,7 @@ object Corpus {
     val words = docs.select(col("doc_id"), explode(expr(wordsSpark("text"))).as("word"))
     // tf is consumed three ways (df, dl, the scored join) — materialize the
     // one tokenization+shuffle instead of re-deriving it from the scan
-    val tf = words.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = true)
+    val tf = Fixpoint.materializedLeaf(words.groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
     // document length = Σ tf — no second tokenization pass
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
     val avgdl = dl.agg((sum("dl").cast("double") / count(lit(1))).as("avgdl"))
@@ -231,10 +231,9 @@ object Corpus {
   def mixtureWeights(docs: DataFrame): DataFrame = {
     // ~sources rows; materialized so the normalizer agg and the output
     // projection don't each re-run the corpus scan+groupBy
-    val counts = docs.groupBy("source")
+    val counts = Fixpoint.materializedLeaf(docs.groupBy("source")
       .agg(count(lit(1)).as("n_docs"))
-      .withColumn("w", sqrt(col("n_docs").cast("double")))
-      .localCheckpoint(eager = true)
+      .withColumn("w", sqrt(col("n_docs").cast("double"))))
     val z = counts
       .agg(sort_array(collect_list(struct(col("source"), col("w")))).as("arr"),
         sum("n_docs").as("total"))
@@ -308,7 +307,7 @@ object Corpus {
   def invertedIndex(docs: DataFrame, topN: Int): DataFrame =
     // consumed by the df ranking AND the postings join — one
     // tokenize+distinct shuffle, pinned before both race it
-    graft.iterate.Fixpoint.pinned(docs
+    Fixpoint.pinned(docs
         .select(col("doc_id"), explode(expr(wordsSpark("text"))).as("word"))
         .distinct()) { (pairs, _) =>
       val top = pairs.groupBy("word").agg(count(lit(1)).as("df"))
@@ -396,9 +395,8 @@ object Corpus {
     val w = docs.select(col(idCol).as("doc_id"), col(weightCol).cast("long").as("wt"))
     val parts = spark.sparkContext.defaultParallelism.max(1).min(32)
     // pin partition ids before the double consumption (subtotals + window)
-    val ranged = w.repartitionByRange(parts, col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(eager = true)
+    val ranged = Fixpoint.materializedLeaf(w.repartitionByRange(parts, col("doc_id"))
+      .withColumn("pid", spark_partition_id()))
     val subtotals = ranged.groupBy("pid").agg(sum("wt").as("s"))
       .orderBy("pid").collect() // ≤ parts rows by contract
     val offsets = subtotals.map(_.getLong(1)).scanLeft(0L)(_ + _).init

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.iterate.Fixpoint
 
 /** Benchmark decontamination: find training documents that share word
   * n-grams with an evaluation/benchmark set, so eval data can be scrubbed
@@ -78,9 +79,9 @@ object Decontam {
     * train gram. */
   def decontaminateBloom(trainDocs: DataFrame, evalDocs: DataFrame,
       fpp: Double = 0.01): DataFrame = {
-    val evalGrams = Dedup.shingleHashes(evalDocs)
-      .select(explode(col("hs")).as("g")).distinct()
-      .localCheckpoint(eager = true) // bloom build + confirm join reuse it
+    // bloom build + confirm join reuse it
+    val evalGrams = Fixpoint.materializedLeaf(Dedup.shingleHashes(evalDocs)
+      .select(explode(col("hs")).as("g")).distinct())
     val nGrams = evalGrams.count()
     val contaminated =
       if (nGrams == 0L) evalGrams.select(col("g").as("doc_id")) // empty ids

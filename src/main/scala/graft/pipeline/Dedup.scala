@@ -169,7 +169,7 @@ object Dedup {
       if (nDocs < BloomVerifyCutoffDocs) (candRaw, sigs)
       else {
         // materialize: the bloom build is an extra action over candidates
-        val c = candRaw.localCheckpoint(eager = true)
+        val c = Fixpoint.materializedLeaf(candRaw)
         val nCand = c.count()
         // stat.bloomFilter NPEs on an empty frame (null aggregate buffer)
         if (nCand == 0L) (c, sigs)
@@ -407,7 +407,7 @@ object Dedup {
     * non-keeper member of a near-duplicate cluster. Keeps cluster keepers
     * and all documents with no near-duplicate. The anti-join ships only
     * loser ids — the document payloads never shuffle. */
-  def deduplicate(docs: DataFrame, threshold: Double): DataFrame = {
+  def deduplicate(docs: DataFrame, threshold: Double): DataFrame = Fixpoint.scope {
     val losers = dedupClusters(minhashDedup(docs, threshold))
       .filter(col("doc_id") =!= col("keeper"))
       .select("doc_id")
@@ -449,7 +449,7 @@ object Dedup {
     * signature — no text involved); a pipeline that also stores the band
     * relation can skip even that by keeping [[bandKeys]] output alongside. */
   def incrementalDeduplicate(existing: DataFrame, incoming: DataFrame,
-      threshold: Double, existingIndex: DataFrame): DataFrame = {
+      threshold: Double, existingIndex: DataFrame): DataFrame = Fixpoint.scope {
     val pairs = incrementalNearDupPairs(existingIndex,
       minhashSignatures(incoming), threshold)
     val losers = dedupClusters(pairs)
@@ -541,7 +541,7 @@ object Dedup {
     // otherwise each re-run the scan + gram kernel + hot-count aggregation
     // (the minhash pipeline's sigs-checkpoint precedent) — at corpus scale
     // text is the dominant read and must be touched once
-    val kept = anchorGrams(docs, k, maxOcc).localCheckpoint(eager = true)
+    val kept = Fixpoint.materializedLeaf(anchorGrams(docs, k, maxOcc))
     val matches = kept.toDF("h", "doc_a", "pa")
       .join(kept.toDF("h", "doc_b", "pb"), "h")
       .filter(col("doc_a") < col("doc_b"))
@@ -588,7 +588,7 @@ object Dedup {
       k: Int = 8, minLen: Int = 16, maxOcc: Long = 1000L): DataFrame = {
     require(minLen >= k, s"minLen ($minLen) must be >= k ($k)")
     // batch text gram-keyed ONCE (counts + kept + two join sides reuse it)
-    val inc = substringIndex(incoming, k).localCheckpoint(eager = true)
+    val inc = Fixpoint.materializedLeaf(substringIndex(incoming, k))
     val unionCounts = index.groupBy("h").agg(count(lit(1)).as("c1"))
       .join(inc.groupBy("h").agg(count(lit(1)).as("c2")), Seq("h"), "full_outer")
       .select(col("h"),
@@ -729,7 +729,7 @@ object Dedup {
     require(minDf >= 2, s"minDf ($minDf) must be >= 2")
     // gram relation materialized once: the df aggregation and the
     // coverage semi-join below both consume it (anchorGrams precedent)
-    val grams = substringIndex(docs, k).localCheckpoint(eager = true)
+    val grams = Fixpoint.materializedLeaf(substringIndex(docs, k))
     val boiler = grams.select("h", "doc_id").distinct()
       .groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
@@ -765,7 +765,7 @@ object Dedup {
   def incrementalBoilerplateScrub(index: DataFrame, incoming: DataFrame,
       k: Int = 8, minDf: Long = 5L): DataFrame = {
     require(minDf >= 2, s"minDf ($minDf) must be >= 2")
-    val grams = substringIndex(incoming, k).localCheckpoint(eager = true)
+    val grams = Fixpoint.materializedLeaf(substringIndex(incoming, k))
     val bDf = grams.select("h", "doc_id").distinct()
       .groupBy("h").agg(count(lit(1)).as("b_df"))
     val boiler = bDf
@@ -841,7 +841,7 @@ object Dedup {
     * spans of >= w + k - 1 words. Output (doc_a, doc_b, shared). */
   def winnowPairs(docs: DataFrame, k: Int = 3, w: Int = 4,
       minShared: Long = 4L): DataFrame =
-    winnowPairsFrom(winnowIndex(docs, k, w).localCheckpoint(eager = true), minShared)
+    winnowPairsFrom(Fixpoint.materializedLeaf(winnowIndex(docs, k, w)), minShared)
 
   /** [[winnowPairs]] with a fingerprint-df cap — the boilerplate-regime
     * defense (the minhash band-occupancy-cap pattern applied to winnow
@@ -852,7 +852,7 @@ object Dedup {
     * Engine cap and oracle HAVING must agree. */
   def winnowPairs(docs: DataFrame, k: Int, w: Int, minShared: Long,
       maxDf: Long): DataFrame = {
-    val fps = winnowIndex(docs, k, w).localCheckpoint(eager = true)
+    val fps = Fixpoint.materializedLeaf(winnowIndex(docs, k, w))
     val hot = fps.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf).select("fp")
     winnowPairsFrom(fps.join(broadcast(hot), Seq("fp"), "left_anti"), minShared)
@@ -930,7 +930,7 @@ object Dedup {
     * print once (the incrementalNearDupPairs convention). */
   def incrementalWinnowPairs(storedIndex: DataFrame, incoming: DataFrame,
       k: Int = 3, w: Int = 4, minShared: Long = 4L): DataFrame = {
-    val fpsB = winnowIndex(incoming, k, w).localCheckpoint(eager = true)
+    val fpsB = Fixpoint.materializedLeaf(winnowIndex(incoming, k, w))
     val all = storedIndex.select("doc_id", "fp").unionByName(fpsB)
     fpsB.select(col("doc_id").as("na"), col("fp"))
       .join(all.select(col("doc_id").as("nb"), col("fp")), "fp")

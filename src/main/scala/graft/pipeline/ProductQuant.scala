@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.iterate.Fixpoint
 
 /** Product quantization (PQ) for approximate nearest-neighbor search: the
   * embedding space is split into [[M]] subspaces, each quantized by its own
@@ -56,10 +57,10 @@ object ProductQuant {
   /** Lloyd's iterations over all M subspaces fused into one scan per
     * iteration: each vector emits M (subspace, code) partial sums, merged
     * by one shuffle of at most M x KSub aggregate rows. */
-  def train(emb: DataFrame, iterations: Int): Codebooks = {
+  def train(emb: DataFrame, iterations: Int): Codebooks = Fixpoint.scope {
     val spark = emb.sparkSession
     import spark.implicits._
-    val data = emb.select(col("vec_id"), col("embedding")).persist()
+    val data = Fixpoint.persisted(emb.select(col("vec_id"), col("embedding")))
     val dim = data.select(size(col("embedding"))).first().getInt(0)
     require(dim % M == 0, s"dim $dim not divisible by $M subspaces")
     val dsub = dim / M
@@ -93,7 +94,6 @@ object ProductQuant {
       }
       cents = next
     }
-    data.unpersist(false)
     Codebooks(dsub, cents)
   }
 

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
+import graft.iterate.Fixpoint
 
 /** Embedding similarity search over an Array[Float] column.
   *
@@ -355,9 +356,8 @@ object Similarity {
   def incrementalNearDup(existing: DataFrame, incoming: DataFrame,
       threshold: Double, existingIndex: DataFrame): DataFrame = {
     val all = existing.unionByName(incoming)
-    val buckets = maskedBands(
-        existingIndex.select("vec_id", "keys").unionByName(ndIndex(incoming)))
-      .localCheckpoint(eager = true)
+    val buckets = Fixpoint.materializedLeaf(maskedBands(
+        existingIndex.select("vec_id", "keys").unionByName(ndIndex(incoming))))
     val newBuckets = buckets.join(
       incoming.select(col("vec_id")), Seq("vec_id"), "left_semi")
     val cand = newBuckets.toDF("na", "band", "key")
@@ -403,8 +403,7 @@ object Similarity {
       threshold: Double): DataFrame = {
     val cents = VecKMeans.train(emb, k, iterations)
     val assigned = VecKMeans.assign(emb, cents)
-    val buckets = ndBuckets(emb).join(assigned, "vec_id")
-      .localCheckpoint(eager = true)
+    val buckets = Fixpoint.materializedLeaf(ndBuckets(emb).join(assigned, "vec_id"))
     val cand = buckets.toDF("id_a", "band", "key", "cluster")
       .join(buckets.toDF("id_b", "band", "key", "cluster"),
         Seq("band", "key", "cluster"))
@@ -432,8 +431,7 @@ object Similarity {
       threshold: Double): DataFrame = {
     val cents = VecKMeans.train(emb, k, iterations)
     val assigned = VecKMeans.assign(emb, cents)
-    val buckets = ndBuckets(emb).join(assigned, "vec_id")
-      .localCheckpoint(eager = true)
+    val buckets = Fixpoint.materializedLeaf(ndBuckets(emb).join(assigned, "vec_id"))
     val cand = buckets.toDF("id_a", "band", "key", "cluster")
       .join(buckets.toDF("id_b", "band", "key", "cluster"),
         Seq("band", "key", "cluster"))
@@ -489,7 +487,7 @@ object Similarity {
   def lshNearDup(emb: DataFrame, threshold: Double): DataFrame = {
     // eager: both sides of the band self-join consume the buckets; the
     // barrier guarantees one nearDupKeys pass over the corpus
-    val buckets = ndBuckets(emb).localCheckpoint(eager = true)
+    val buckets = Fixpoint.materializedLeaf(ndBuckets(emb))
     val cand = buckets.toDF("id_a", "band", "key")
       .join(buckets.toDF("id_b", "band", "key"), Seq("band", "key"))
       .filter(col("id_a") < col("id_b"))

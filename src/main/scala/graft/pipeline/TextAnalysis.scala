@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import TextHash._
 import graft.functions.GraftFunctions
+import graft.iterate.Fixpoint
 
 /** Text-quality operators for training-data curation: language ID, quality
   * scoring, token counting, document fingerprinting. Pure per-row codegen'd
@@ -229,8 +230,8 @@ object TextAnalysis {
     * (doc_id, n_grams, n_novel, novelty_frac) for EVERY doc (docs shorter
     * than k words carry zeros). */
   def noveltyScores(docs: DataFrame, k: Int = 4): DataFrame = {
-    val grams = Dedup.substringIndex(docs, k).select("doc_id", "h").distinct()
-      .localCheckpoint(eager = true) // min-agg and join-back both consume it
+    // min-agg and join-back both consume it
+    val grams = Fixpoint.materializedLeaf(Dedup.substringIndex(docs, k).select("doc_id", "h").distinct())
     val first = grams.groupBy("h").agg(min("doc_id").as("first_doc"))
     noveltyTail(docs, grams, first)
   }
@@ -273,8 +274,7 @@ object TextAnalysis {
     * stored rows only for gram keys the batch actually carries. */
   def incrementalNoveltyScores(index: DataFrame, incoming: DataFrame,
       k: Int = 4): DataFrame = {
-    val inc = Dedup.substringIndex(incoming, k).select("doc_id", "h").distinct()
-      .localCheckpoint(eager = true)
+    val inc = Fixpoint.materializedLeaf(Dedup.substringIndex(incoming, k).select("doc_id", "h").distinct())
     val bFirst = inc.groupBy("h").agg(min("doc_id").as("b_first"))
     val first = bFirst
       .join(index.withColumnRenamed("first_doc", "i_first"), Seq("h"), "left")
@@ -305,8 +305,8 @@ object TextAnalysis {
     * is curated-slice-sized and broadcast (the Decontam eval-side
     * precedent). Docs shorter than k words carry zeros. */
   def importanceScores(raw: DataFrame, target: DataFrame, k: Int = 2): DataFrame = {
-    val rg = Dedup.substringIndex(raw, k).select("doc_id", "h").distinct()
-      .localCheckpoint(eager = true) // r_df agg and join-back both consume it
+    // r_df agg and join-back both consume it
+    val rg = Fixpoint.materializedLeaf(Dedup.substringIndex(raw, k).select("doc_id", "h").distinct())
     val rdf = rg.groupBy("h").agg(count(lit(1)).as("r_df"))
     importanceTail(raw, rg, rdf, targetDf(target, k))
   }
@@ -358,8 +358,7 @@ object TextAnalysis {
     * the batch carries. */
   def incrementalImportanceScores(index: DataFrame, target: DataFrame,
       incoming: DataFrame, k: Int = 2): DataFrame = {
-    val inc = Dedup.substringIndex(incoming, k).select("doc_id", "h").distinct()
-      .localCheckpoint(eager = true)
+    val inc = Fixpoint.materializedLeaf(Dedup.substringIndex(incoming, k).select("doc_id", "h").distinct())
     val rdf = inc.groupBy("h").agg(count(lit(1)).as("b_df"))
       .join(index.withColumnRenamed("r_df", "i_df"), Seq("h"), "left")
       .select(col("h"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.functions.{GraftFunctions, VecImpl}
+import graft.iterate.Fixpoint
 
 /** k-means over an Array[Float] embedding column, and IVF (inverted-file)
   * approximate nearest-neighbor search built on it — the coarse-quantizer
@@ -102,10 +103,10 @@ object VecKMeans {
   }
 
   /** Lloyd's iterations; returns the final centroid matrix. */
-  def train(emb: DataFrame, k: Int, iterations: Int): Array[Array[Double]] = {
+  def train(emb: DataFrame, k: Int, iterations: Int): Array[Array[Double]] = Fixpoint.scope {
     val spark = emb.sparkSession
     import spark.implicits._
-    val data = emb.select(col("vec_id"), col("embedding")).persist()
+    val data = Fixpoint.persisted(emb.select(col("vec_id"), col("embedding")))
     val dim = data.select(size(col("embedding"))).first().getInt(0)
 
     // deterministic seeds: the k lowest vec_ids
@@ -127,7 +128,6 @@ object VecKMeans {
       }
       cents = next
     }
-    data.unpersist(false)
     cents
   }
 

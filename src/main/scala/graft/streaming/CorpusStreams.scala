@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import graft.iterate.Fixpoint
 
 /** Streaming corpus-ingest operators — the incremental faces of the batch
   * Corpus allocation passes, for the pipeline shape where documents arrive
@@ -141,9 +142,8 @@ object CorpusStreams {
     storedIndexTrigger(batch, batchId, indexDir, spansDir, compactEvery)(
       read = _.select("doc_id", "pos", "h"),
       batchIndex = graft.pipeline.Dedup.substringIndex(_, k),
-      output = t => graft.pipeline.Dedup
-        .incrementalSubstringSpans(t.index, t.batch, k, minLen, maxOcc)
-        .localCheckpoint(eager = true),
+      output = t => Fixpoint.materializedLeaf(graft.pipeline.Dedup
+        .incrementalSubstringSpans(t.index, t.batch, k, minLen, maxOcc)),
       fold = identity)
 
   /** Streaming winnow-fingerprint ingest: each micro-batch is screened
@@ -169,9 +169,8 @@ object CorpusStreams {
     storedIndexTrigger(batch, batchId, indexDir, pairsDir, compactEvery)(
       read = _.select("doc_id", "fp"),
       batchIndex = graft.pipeline.Dedup.winnowIndex(_, k, w),
-      output = t => graft.pipeline.Dedup
-        .incrementalWinnowPairs(t.index, t.batch, k, w, minShared)
-        .localCheckpoint(eager = true),
+      output = t => Fixpoint.materializedLeaf(graft.pipeline.Dedup
+        .incrementalWinnowPairs(t.index, t.batch, k, w, minShared)),
       fold = identity)
 
   /** Streaming novelty ingest: each micro-batch of documents is scored
@@ -205,9 +204,8 @@ object CorpusStreams {
     storedIndexTrigger(batch, batchId, indexDir, scoresDir, compactEvery)(
       read = minFold,
       batchIndex = graft.pipeline.TextAnalysis.noveltyIndex(_, k),
-      output = t => graft.pipeline.TextAnalysis
-        .incrementalNoveltyScores(t.index, t.batch, k)
-        .localCheckpoint(eager = true),
+      output = t => Fixpoint.materializedLeaf(graft.pipeline.TextAnalysis
+        .incrementalNoveltyScores(t.index, t.batch, k)),
       fold = minFold)
   }
 
@@ -239,9 +237,8 @@ object CorpusStreams {
     storedIndexTrigger(batch, batchId, indexDir, scoresDir, compactEvery)(
       read = sumFold,
       batchIndex = graft.pipeline.TextAnalysis.importanceIndex(_, k),
-      output = t => graft.pipeline.TextAnalysis
-        .incrementalImportanceScores(t.index, target, t.batch, k)
-        .localCheckpoint(eager = true),
+      output = t => Fixpoint.materializedLeaf(graft.pipeline.TextAnalysis
+        .incrementalImportanceScores(t.index, target, t.batch, k)),
       fold = sumFold)
   }
 
@@ -286,7 +283,7 @@ object CorpusStreams {
     startIngest(rows, checkpointDir)(
       storedIndexTrigger(_, _, indexDir, outDir, compactEvery)(
         read = _.select(storedCols.map(col): _*),
-        batchIndex = build(_).localCheckpoint(eager = true),
+        batchIndex = b => Fixpoint.materializedLeaf(build(b)),
         output = t => output(t.folded),
         fold = mergeAll))
 
@@ -416,11 +413,10 @@ object CorpusStreams {
     storedIndexTrigger(batch, batchId, indexDir, pairsDir, compactEvery)(
       read = _.select("id", "s", "v"),
       // one expansion feeds the join and the index write
-      batchIndex = graft.ops.EditJoin.variantIndex(_, idCol, strCol)
-        .localCheckpoint(eager = true),
-      output = t => graft.ops.EditJoin
-        .newPairsAgainstIndex(t.index, t.batchIndex, maxDist = 1)
-        .localCheckpoint(eager = true),
+      batchIndex = b => Fixpoint.materializedLeaf(
+        graft.ops.EditJoin.variantIndex(b, idCol, strCol)),
+      output = t => Fixpoint.materializedLeaf(graft.ops.EditJoin
+        .newPairsAgainstIndex(t.index, t.batchIndex, maxDist = 1)),
       fold = identity)
 
   /** Streaming sorted-neighborhood ingest (r14 verdict item 3b; bounded
@@ -459,9 +455,11 @@ object CorpusStreams {
       stateDir: String, pairsDir: String, checkpointDir: String,
       w: Int = 5): StreamingQuery =
     startIngest(rows, checkpointDir) { (batch, batchId) =>
-      val b = batch.localCheckpoint(eager = true)
-      graft.ops.SortedNeighborhood.ingestLocalStore(
-        b.sparkSession, stateDir, pairsDir, b, idCol, keyCol, w, batchId)
+      Fixpoint.scope {
+        val b = Fixpoint.materializedLeaf(batch)
+        graft.ops.SortedNeighborhood.ingestLocalStore(
+          b.sparkSession, stateDir, pairsDir, b, idCol, keyCol, w, batchId)
+      }
     }
 
   /** Starts `rows` as a stream that runs `trigger` on every micro-batch,
@@ -498,8 +496,9 @@ object CorpusStreams {
     *    then older partitions are deleted; a replay that finds its marker
     *    only finishes the deletes. When `output` uses the fold, the
     *    compaction writes that same checkpoint: one fold per trigger;
-    *  - every checkpoint the trigger holds — batch, batch index, output
-    *    and fold — is released after its last write. */
+    *  - the trigger is a [[Fixpoint.scope]]: every
+    *    checkpoint it takes — batch, batch index, output, fold and the
+    *    family kernel's own — is released after its last write. */
   private def storedIndexTrigger(batch: DataFrame, batchId: Long,
       indexDir: String, outDir: String, compactEvery: Int)(
       read: DataFrame => DataFrame,
@@ -511,20 +510,18 @@ object CorpusStreams {
     val fs = idxPath.getFileSystem(sp.sparkContext.hadoopConfiguration)
     if (replayAfterCompaction(fs, idxPath, batchId))
       compactOlderPartitions(fs, idxPath, batchId)
-    else {
-      val b = batch.localCheckpoint(eager = true)
+    else Fixpoint.scope {
+      val b = Fixpoint.materializedLeaf(batch)
       val batchIdx = batchIndex(b)
       val index = storedBefore(sp, indexDir, batchId).map(read)
         .getOrElse(batchIdx.limit(0))
       val t = new TriggerFrames(b, index, batchIdx, fold)
-      val out = output(t)
-      writePartition(out, outDir, batchId)
+      writePartition(output(t), outDir, batchId)
       if (compacts(batchId, compactEvery)) {
         writePartition(t.folded, indexDir, batchId)
         markCompacted(fs, idxPath, batchId) // all writes done; deletes follow
         compactOlderPartitions(fs, idxPath, batchId)
       } else writePartition(batchIdx, indexDir, batchId)
-      (out +: t.held).foreach(graft.iterate.Fixpoint.unpersistMaterialized)
     }
   }
 
@@ -536,12 +533,10 @@ object CorpusStreams {
       val batchIndex: DataFrame, fold: DataFrame => DataFrame) {
     private var foldedOnce = Option.empty[DataFrame]
     def folded: DataFrame = foldedOnce.getOrElse {
-      val f = fold(index.unionByName(batchIndex)).localCheckpoint(eager = true)
+      val f = Fixpoint.materializedLeaf(fold(index.unionByName(batchIndex)))
       foldedOnce = Some(f)
       f
     }
-    /** every frame the trigger may have materialized */
-    def held: Seq[DataFrame] = Seq(batch, batchIndex) ++ foldedOnce
   }
 
   /** The rows of the stored state `dir` written by batches before
@@ -690,8 +685,8 @@ object CorpusStreams {
       .join(gated.select("doc_id"), Seq("doc_id"), "left_semi")
     val exactKeep = fps(gatedDocs).groupBy("fp_hi", "fp_lo", "len")
       .agg(min("doc_id").as("doc_id")).select("doc_id")
-    val exactDocs = gatedDocs.join(exactKeep, Seq("doc_id"), "left_semi")
-      .localCheckpoint(eager = true) // pair stage scans it repeatedly
+    // pair stage scans it repeatedly
+    val exactDocs = Fixpoint.materializedLeaf(gatedDocs.join(exactKeep, Seq("doc_id"), "left_semi"))
     val losers = graft.pipeline.Dedup.minhashDedup(exactDocs, threshold)
       .select(col("doc_b").as("doc_id")).distinct()
     val survivors = gated
@@ -732,92 +727,90 @@ object CorpusStreams {
         .foreach(p => if (fs.exists(p)) compactOlderPartitions(fs, p, batchId))
       return
     }
-    val b = batch.localCheckpoint(eager = true)
-    // totals: every batch writes a COMPLETE per-source snapshot, so only
-    // the newest partition strictly below the current batch matters. Read
-    // exactly that one via an FS partition listing — scanning the whole
-    // dir and collecting every historical row is O(batches × sources)
-    // driver rows, growing without bound over a long-running stream; the
-    // listing is one namenode call and the chosen partition holds exactly
-    // |sources| rows (the partition files carry only source/used — the
-    // batch_id lives in the dir name, so no discovery-typing cast needed).
-    val used0: Map[String, Long] =
-      if (!fs.exists(totalsPath)) Map.empty
-      else {
-        val prior = fs.listStatus(totalsPath).toSeq
-          .filter(_.isDirectory).map(_.getPath)
-          .flatMap(p => idAfter("batch_id=", p.getName).filter(_ < batchId)
-            .map(_ -> p))
-        if (prior.isEmpty) Map.empty
-        else sp.read.parquet(prior.maxBy(_._1)._2.toString)
-          .select("source", "used").collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
+    Fixpoint.scope {
+      val b = Fixpoint.materializedLeaf(batch)
+      // totals: every batch writes a COMPLETE per-source snapshot, so only
+      // the newest partition strictly below the current batch matters. Read
+      // exactly that one via an FS partition listing — scanning the whole
+      // dir and collecting every historical row is O(batches × sources)
+      // driver rows, growing without bound over a long-running stream; the
+      // listing is one namenode call and the chosen partition holds exactly
+      // |sources| rows (the partition files carry only source/used — the
+      // batch_id lives in the dir name, so no discovery-typing cast needed).
+      val used0: Map[String, Long] =
+        if (!fs.exists(totalsPath)) Map.empty
+        else {
+          val prior = fs.listStatus(totalsPath).toSeq
+            .filter(_.isDirectory).map(_.getPath)
+            .flatMap(p => idAfter("batch_id=", p.getName).filter(_ < batchId)
+              .map(_ -> p))
+          if (prior.isEmpty) Map.empty
+          else sp.read.parquet(prior.maxBy(_._1)._2.toString)
+            .select("source", "used").collect()
+            .map(r => r.getString(0) -> r.getLong(1)).toMap
+        }
+      // 1-2. gate, then the exact screen: index hit -> drop; within the
+      // batch the lowest doc_id per fingerprint survives
+      val gated = Fixpoint.materializedLeaf(gateWithTokens(b, minWords, minUniqRatio))
+      val gatedDocs = b.select("doc_id", "text")
+        .join(gated.select("doc_id"), Seq("doc_id"), "left_semi")
+      val bFps = Fixpoint.materializedLeaf(fps(gatedDocs))
+      val fpIndex = storedBefore(sp, fpPath.toString, batchId)
+        .getOrElse(bFps.limit(0))
+      val exactIds = bFps
+        .join(fpIndex.select("fp_hi", "fp_lo", "len"),
+          Seq("fp_hi", "fp_lo", "len"), "left_anti")
+        .groupBy("fp_hi", "fp_lo", "len").agg(min("doc_id").as("doc_id"))
+        .select("doc_id")
+      val exactDocs = Fixpoint.materializedLeaf(gatedDocs.join(exactIds, Seq("doc_id"), "left_semi"))
+      // 3. near-dup screen: batch-vs-(index ∪ batch) verified pairs; the
+      // larger end of any pair is dropped (ids ascend across batches, so
+      // the cross-index end is always the batch doc)
+      val sigsB = Fixpoint.materializedLeaf(graft.pipeline.Dedup.minhashSignatures(exactDocs))
+      val sigIndex = storedBefore(sp, sigPath.toString, batchId)
+        .getOrElse(sigsB.limit(0))
+      val losers = graft.pipeline.Dedup
+        .incrementalNearDupPairs(sigIndex.select("doc_id", "hs", "mh"),
+          sigsB, threshold)
+        .select(col("doc_b").as("doc_id")).distinct()
+        .join(b.select("doc_id"), Seq("doc_id"), "left_semi")
+      val survivors = gated
+        .join(exactDocs.select("doc_id"), Seq("doc_id"), "left_semi")
+        .join(losers, Seq("doc_id"), "left_anti")
+      // 4. admission seeded with the carried totals
+      val admitted = Fixpoint.materializedLeaf(admitFold(survivors, quotas, used0).toDF())
+      writePartition(admitted.toDF(), admittedDir, batchId)
+      // state updates AFTER the decisions (a batch never sees itself
+      // through the indexes; its internal duplicates were handled by the
+      // within-batch rules above)
+      val newFp = bFps.join(exactIds, Seq("doc_id"), "left_semi")
+        .select("fp_hi", "fp_lo", "len")
+      val compacting = compacts(batchId, compactEvery)
+      if (compacting) {
+        // fold = priors ∪ own batch (disjoint concatenation — exact), under
+        // the current batch_id; the reads were severed by localCheckpoint
+        // before the overwrite
+        writePartition(Fixpoint.materializedLeaf(fpIndex.select("fp_hi", "fp_lo", "len")
+          .unionByName(newFp)), fpPath.toString, batchId)
+        writePartition(Fixpoint.materializedLeaf(sigIndex.select("doc_id", "hs", "mh")
+          .unionByName(sigsB)), sigPath.toString, batchId)
+      } else {
+        writePartition(newFp, fpPath.toString, batchId)
+        writePartition(sigsB, sigPath.toString, batchId)
       }
-    // 1-2. gate, then the exact screen: index hit -> drop; within the
-    // batch the lowest doc_id per fingerprint survives
-    val gated = gateWithTokens(b, minWords, minUniqRatio)
-      .localCheckpoint(eager = true)
-    val gatedDocs = b.select("doc_id", "text")
-      .join(gated.select("doc_id"), Seq("doc_id"), "left_semi")
-    val bFps = fps(gatedDocs).localCheckpoint(eager = true)
-    val fpIndex = storedBefore(sp, fpPath.toString, batchId)
-      .getOrElse(bFps.limit(0))
-    val exactIds = bFps
-      .join(fpIndex.select("fp_hi", "fp_lo", "len"),
-        Seq("fp_hi", "fp_lo", "len"), "left_anti")
-      .groupBy("fp_hi", "fp_lo", "len").agg(min("doc_id").as("doc_id"))
-      .select("doc_id")
-    val exactDocs = gatedDocs.join(exactIds, Seq("doc_id"), "left_semi")
-      .localCheckpoint(eager = true)
-    // 3. near-dup screen: batch-vs-(index ∪ batch) verified pairs; the
-    // larger end of any pair is dropped (ids ascend across batches, so
-    // the cross-index end is always the batch doc)
-    val sigsB = graft.pipeline.Dedup.minhashSignatures(exactDocs)
-      .localCheckpoint(eager = true)
-    val sigIndex = storedBefore(sp, sigPath.toString, batchId)
-      .getOrElse(sigsB.limit(0))
-    val losers = graft.pipeline.Dedup
-      .incrementalNearDupPairs(sigIndex.select("doc_id", "hs", "mh"),
-        sigsB, threshold)
-      .select(col("doc_b").as("doc_id")).distinct()
-      .join(b.select("doc_id"), Seq("doc_id"), "left_semi")
-    val survivors = gated
-      .join(exactDocs.select("doc_id"), Seq("doc_id"), "left_semi")
-      .join(losers, Seq("doc_id"), "left_anti")
-    // 4. admission seeded with the carried totals
-    val admitted = admitFold(survivors, quotas, used0)
-      .localCheckpoint(eager = true)
-    writePartition(admitted.toDF(), admittedDir, batchId)
-    // state updates AFTER the decisions (a batch never sees itself
-    // through the indexes; its internal duplicates were handled by the
-    // within-batch rules above)
-    val newFp = bFps.join(exactIds, Seq("doc_id"), "left_semi")
-      .select("fp_hi", "fp_lo", "len")
-    val compacting = compacts(batchId, compactEvery)
-    if (compacting) {
-      // fold = priors ∪ own batch (disjoint concatenation — exact), under
-      // the current batch_id; the reads were severed by localCheckpoint
-      // before the overwrite
-      writePartition(fpIndex.select("fp_hi", "fp_lo", "len").unionByName(newFp)
-        .localCheckpoint(eager = true), fpPath.toString, batchId)
-      writePartition(sigIndex.select("doc_id", "hs", "mh").unionByName(sigsB)
-        .localCheckpoint(eager = true), sigPath.toString, batchId)
-    } else {
-      writePartition(newFp, fpPath.toString, batchId)
-      writePartition(sigsB, sigPath.toString, batchId)
-    }
-    val newTotals = used0 ++ admitted.groupBy("source")
-      .agg(max("cum_tokens").as("used"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    import sp.implicits._
-    writePartition(newTotals.toSeq.toDF("source", "used"), totalsPath.toString,
-      batchId)
-    if (compacting) {
-      compactOlderPartitions(fs, statePath, batchId) // retire old root markers
-      markCompacted(fs, statePath, batchId) // all writes done; deletes follow
-      compactOlderPartitions(fs, fpPath, batchId)
-      compactOlderPartitions(fs, sigPath, batchId)
-      compactOlderPartitions(fs, totalsPath, batchId)
+      val newTotals = used0 ++ admitted.groupBy("source")
+        .agg(max("cum_tokens").as("used"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      import sp.implicits._
+      writePartition(newTotals.toSeq.toDF("source", "used"), totalsPath.toString,
+        batchId)
+      if (compacting) {
+        compactOlderPartitions(fs, statePath, batchId) // retire old root markers
+        markCompacted(fs, statePath, batchId) // all writes done; deletes follow
+        compactOlderPartitions(fs, fpPath, batchId)
+        compactOlderPartitions(fs, sigPath, batchId)
+        compactOlderPartitions(fs, totalsPath, batchId)
+      }
     }
   }
 

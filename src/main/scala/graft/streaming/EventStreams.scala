@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 import org.apache.spark.sql.types._
+import graft.iterate.Fixpoint
 
 /** Structured Streaming surface over the events table. The reference is
   * batch-only (SURVEY §2.9) — its iterative driver loops are fixpoint
@@ -148,9 +149,9 @@ object EventStreams {
             fresh.join(sp.read.parquet(targetDir).select("event_id"),
               Seq("event_id"), "left_anti")
           else fresh
-        val snapshot = novel.localCheckpoint(eager = true)
-        snapshot.write.mode("append").parquet(targetDir)
-        ()
+        Fixpoint.scope {
+          Fixpoint.materializedLeaf(novel).write.mode("append").parquet(targetDir)
+        }
       }
       .start()
 

@@ -291,12 +291,55 @@ class GraphSpec extends SparkSpec {
     assert(kept.count() == 3L)
     Fixpoint.unpersistMaterialized(kept)
     assert(sc.getPersistentRDDs.keySet.subsetOf(before))
+
+    // (d) a scope keeps what its result reads — directly, through a stats
+    // re-bind, or only through a lazy checkpoint that has not materialized
+    // — and releases every other leaf and cache it took; a Unit scope, a
+    // throw and an enclosing Unit scope release everything
+    import org.apache.spark.storage.StorageLevel.NONE
+    def held(df: org.apache.spark.sql.DataFrame): Boolean = df.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd.getStorageLevel != NONE
+      case _ => df.storageLevel != NONE
+    }
+    var taken = Seq.empty[org.apache.spark.sql.DataFrame]
+    val (direct, viaRebind, viaLazy) = Fixpoint.scope {
+      taken = Seq(e, e.filter(col("src") < 3L), e.filter(col("src") > 1L),
+        e.filter(col("src") === 5L)).map(Fixpoint.materializedLeaf) :+
+        Fixpoint.columnar(e.select("dst"))
+      val Seq(a, b, c, _, _) = taken
+      (a.filter(col("src") > 0L), Fixpoint.rebindStats(b),
+        c.select("src").localCheckpoint(eager = false))
+    }
+    assert(taken.map(held) == Seq(true, true, true, false, false))
+    assert(direct.count() == 4L && viaRebind.count() == 2L && viaLazy.count() == 3L)
+    (viaLazy +: taken).foreach(Fixpoint.unpersistMaterialized)
+    Fixpoint.scope { taken = Seq(Fixpoint.materializedLeaf(e), Fixpoint.columnar(e)); () }
+    assert(!taken.exists(held))
+    intercept[IllegalStateException](Fixpoint.scope {
+      taken = Seq(Fixpoint.materializedLeaf(e), Fixpoint.persisted(e))
+      taken.last.count()
+      throw new IllegalStateException("body failed")
+    })
+    assert(!taken.exists(held))
+    Fixpoint.scope { taken = Seq(Fixpoint.scope(Fixpoint.materializedLeaf(e))); () }
+    assert(!taken.exists(held))
+    // a persisted leaf is a cache: its scope releases the cache, not the leaf
+    val base = Fixpoint.materializedLeaf(e)
+    Fixpoint.scope { taken = Seq(Fixpoint.persisted(base)); taken.head.count(); () }
+    assert(taken.head.storageLevel == NONE && held(base))
+    Fixpoint.unpersistMaterialized(base)
+    assert(sc.getPersistentRDDs.keySet.subsetOf(before))
+  }
+
+  test("hits rounds plan under the loop session, not the caller's") {
+    import graft.iterate.Fixpoint
+    val out = Hits.run(edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L), 2)
+    assert(out.sparkSession ne spark)
+    assert(out.sparkSession eq Fixpoint.loopSession(spark, 4L))
+    assert(out.count() == 4L)
   }
 
   test("driver loops release what they supersede: each call leaves only its result cached") {
-    import graft.iterate.Fixpoint
-    // a step's round leaf belongs to a loop round; outside one it fails
-    intercept[IllegalStateException](Fixpoint.roundLeaf(edges(1L -> 2L)))
     val chain = edges(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L, 7L -> 8L)
     val cyclic = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 4L -> 5L, 5L -> 6L, 6L -> 4L,
       3L -> 4L, 6L -> 7L)
@@ -316,6 +359,19 @@ class GraphSpec extends SparkSpec {
     assert(densest.count() == 6L)
     assert(matching.count() >= 1L)
     assert(scc.filter(col("scc") < 0).count() == 0L)
+    val truss = leavesOnlyResult("ktruss")(Graphs.kTruss(dense, 3))
+    val core = leavesOnlyResult("coreness")(Graphs.coreness(dense))
+    val mis = leavesOnlyResult("mis")(Graphs.maximalIndependentSet(cyclic))
+    val coloring = leavesOnlyResult("coloring")(Graphs.greedyColoring(cyclic))
+    val lpa = leavesOnlyResult("lpa")(Graphs.labelPropagation(chain))
+    val pr = leavesOnlyResult("pagerank")(PageRank.run(Graphs.kChain(spark, 3), 3, 0L, 9L))
+    val damped = leavesOnlyResult("pagerank damped")(PageRank.runDamped(cyclic, 3))
+    val hits = leavesOnlyResult("hits")(Hits.run(cyclic, 3))
+    assert(truss.count() == 15L)
+    assert(core.filter(col("coreness") === 5L).count() == 6L)
+    assert(mis.count() >= 1L && coloring.filter(col("color") < 0).count() == 0L)
+    assert(lpa.count() == 7L && pr.count() == 10L && damped.count() == 7L)
+    assert(hits.count() == 7L)
   }
 
   test("cc doubling: linear HashMin at the same round count splits the long chain") {

@@ -905,22 +905,55 @@ class StreamingSpec extends SparkSpec {
     assert(e.getMessage.contains(index), e.getMessage)
   }
 
+  /** Drives `trigger` over `batches` (ids 0, 1, 2: append, append,
+    * compact) and asserts each run leaves no new persisted RDD — the
+    * family kernel's own checkpoints included. Asserted as "no new key":
+    * the registry holds RDDs weakly, so an older entry may vanish meanwhile. */
+  private def assertTriggerReleases(name: String, batches: Seq[org.apache.spark.sql.DataFrame])(
+      trigger: (org.apache.spark.sql.DataFrame, Long, String, String) => Unit): Unit = {
+    val dir = Files.createTempDirectory(s"graft-$name-release")
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      trigger(b, i.toLong, dir.resolve("a").toString, dir.resolve("b").toString)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"$name batch $i left persisted RDDs $leaked")
+    }
+  }
+
   test("stored-index trigger releases every checkpoint it takes") {
+    import graft.streaming.CorpusStreams
     val cust = spark.read.parquet(sf("sf0.001") + "/customer.parquet")
       .select("c_custkey", "c_name")
-    val dir = Files.createTempDirectory("graft-trigger-release")
-    // batches 0 and 1 append, batch 2 compacts; the edit-join algebra holds
-    // no checkpoint of its own, so every persisted RDD a trigger leaves
-    // behind is one the protocol leaked. Asserted as "no new key": the
-    // registry holds RDDs weakly, so an older entry may vanish meanwhile.
-    (0 until 3).foreach { i =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      graft.streaming.CorpusStreams.editJoinBatch(
-        cust.filter(col("c_custkey") % 3 === i), i.toLong, "c_custkey", "c_name",
-        dir.resolve("index").toString, dir.resolve("pairs").toString,
-        compactEvery = 2)
-      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty, s"batch $i left persisted RDDs $leaked")
+    val custBatches = (0 until 3).map(i => cust.filter(col("c_custkey") % 3 === i))
+    assertTriggerReleases("editjoin", custBatches) { (b, id, index, out) =>
+      CorpusStreams.editJoinBatch(b, id, "c_custkey", "c_name", index, out, compactEvery = 2)
+    }
+    // the text families' kernels take batch-gram checkpoints of their own
+    assertTriggerReleases("substring", docBatches) { (b, id, index, out) =>
+      CorpusStreams.substringBatch(b, id, index, out,
+        k = 8, minLen = 16, maxOcc = 1000L, compactEvery = 2)
+    }
+    assertTriggerReleases("winnow", docBatches) { (b, id, index, out) =>
+      CorpusStreams.winnowBatch(b, id, index, out, k = 3, w = 4, minShared = 4L, compactEvery = 2)
+    }
+    assertTriggerReleases("novelty", docBatches) { (b, id, index, out) =>
+      CorpusStreams.noveltyBatch(b, id, index, out, k = 4, compactEvery = 2)
+    }
+    val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
+    val target = docs.select("doc_id", "text").filter(col("doc_id") % 10 === 7)
+    assertTriggerReleases("importance",
+        docBatches.map(_.filter(col("doc_id") % 10 =!= 7))) { (b, id, index, out) =>
+      CorpusStreams.importanceBatch(b, id, target, index, out, k = 2, compactEvery = 2)
+    }
+    val quotas = (0 to 19).map(i => s"src$i" -> 800L).toMap
+    assertTriggerReleases("curate", Seq(docs.filter(col("doc_id") < 150),
+        docs.filter(col("doc_id") >= 150 && col("doc_id") < 300),
+        docs.filter(col("doc_id") >= 300))) { (b, id, state, admitted) =>
+      CorpusStreams.curateBatch(b, id, state, admitted, quotas, compactEvery = 2)
+    }
+    assertTriggerReleases("sn", custBatches) { (b, id, st, pairs) =>
+      graft.ops.SortedNeighborhood.ingestLocalStore(spark, st, pairs, b,
+        "c_custkey", "c_name", 4, id)
     }
   }
 
