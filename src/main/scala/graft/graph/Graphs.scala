@@ -298,81 +298,54 @@ object Graphs {
     * the driver argmax multiplies with Math.multiplyExact and the keep
     * filter's 2·n·deg / 3·2m headroom is require-checked each round
     * (raw Long products would wrap silently where the DuckDB oracle
-    * errors — a divergence, round-11 advice item).
-    *
-    * The peel stays a hand-rolled loop rather than a `Fixpoint.iterate`
-    * step: its one per-round barrier is the stats `head()`, which runs
-    * over `deg`, not over the state, so it does not mark the state's lazy
-    * checkpoint as checkpointed, and `runLoop`'s per-round guard
-    * (`if (!r.isCheckpointed) r.count()`) would add one job every round. */
+    * errors — a divergence, round-11 advice item). */
   def densestSubgraph(edges: DataFrame,
       rounds: Int = DefaultDensestRounds): DataFrame = Fixpoint.scope {
     val first = undirectedSized(edges)
     // the peel re-plans deg/stats/semi-join relations every round, so it
-    // runs under the shared loop session for the edge count's width (the
-    // Fixpoint.iterate session, applied to this hand-rolled loop): state-
+    // runs under the shared loop session for the edge count's width: state-
     // sized shuffles, no AQE stage replanning. The one-time Row re-bind
     // streams from the edge cache.
-    val loop = Fixpoint.loopSession(
-      edges.sparkSession, first.count())
-    var state = Fixpoint.rebindStats(first, loop)
-    var prev: Option[DataFrame] = None // state g−1, released once g materializes
-    val degs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var i = 0
-    var live = true
-    while (i < rounds && live) {
-      // lazy checkpoints (r16 fusion): the stats head() below materializes
-      // deg — and, through deg's lineage, the previous round's lazy state
-      // checkpoint — so each round runs ONE job where the eager form ran
-      // three (deg checkpoint, stats, state checkpoint). All relations
-      // still persist via the checkpoint mark; the winning deg candidate
-      // is always materialized (its round's stats job), so the final
-      // orderBy reads cache.
-      val deg = state.groupBy(col("src").as("vertex"))
-        .agg(count(lit(1)).as("deg"))
-        .localCheckpoint(eager = false) // stats + keep filter + maybe output
-      // one fused barrier: sum of degrees over the symmetric closure IS
-      // the (directed-row) edge count 2m, so state never needs a second
-      // scan — (2m, n) come off one aggregate of the vertex-sized deg
+    val loop = Fixpoint.loopSession(edges.sparkSession, first.count())
+    // the candidates (deg, 2m, n), one per round; taken by the read, so they
+    // belong to this scope, which keeps the winner and releases the rest
+    val peel = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, Long, Long)]
+    Fixpoint.unfold(Fixpoint.rebindStats(first, loop), rounds) { (state, _) =>
+      // the round's one barrier: the stats head() materializes the lazy deg
+      // and, through its lineage, the state's lazy checkpoint (the eager
+      // form ran three jobs: deg checkpoint, stats, state checkpoint). The
+      // sum of degrees over the symmetric closure IS the (directed-row) edge
+      // count 2m, so (2m, n) come off one aggregate of the vertex-sized deg
+      val deg = Fixpoint.lazyLeaf(state.groupBy(col("src").as("vertex"))
+        .agg(count(lit(1)).as("deg")))
       val srow = deg.agg(coalesce(sum("deg"), lit(0L)).as("twom"),
         count(lit(1)).as("n")).head()
-      val twoM = srow.getLong(0)
-      val n = srow.getLong(1)
-      prev.foreach(Fixpoint.unpersistMaterialized) // g−1: deg's checkpoint cut its read
-      prev = None
+      val (twoM, n) = (srow.getLong(0), srow.getLong(1))
       // keep-filter headroom: 2·n·deg ≤ 2·n·(n−1) and 3·2m must both fit
       // in int64 — fail fast instead of wrapping where the oracle errors
       require(twoM <= Long.MaxValue / 3 &&
         (n == 0 || n <= Long.MaxValue / 2 / n),
         s"densestSubgraph int64 headroom exceeded: 2m=$twoM n=$n")
-      degs += deg
-      stats += ((twoM, n))
-      if (twoM == 0L) live = false
-      else {
+      peel += ((deg, twoM, n))
+      peel.last
+    } { case (state, (deg, twoM, n), _) =>
+      Option.when(twoM != 0L) {
         val keep = deg.filter(lit(2L) * lit(n) * col("deg") > lit(3L) * lit(twoM))
           .select(col("vertex"))
-        prev = Some(state)
-        state = state
+        state
           .join(keep.withColumnRenamed("vertex", "src"), Seq("src"), "left_semi")
           .join(keep.withColumnRenamed("vertex", "dst"), Seq("dst"), "left_semi")
-          .localCheckpoint(eager = false) // next round's stats job materializes it
       }
-      i += 1
     }
-    // the peel's lazy generations are its own, not the scope's
-    (prev.toSeq :+ state).foreach(Fixpoint.unpersistMaterialized)
     // argmax density m/n by exact cross-multiplication, earliest round
     // wins ties (the larger candidate); empty candidates never win
     var best = 0
-    for (j <- 1 until stats.length) {
-      val (mB, nB) = stats(best); val (mJ, nJ) = stats(j)
+    for (j <- 1 until peel.length) {
+      val (_, mB, nB) = peel(best); val (_, mJ, nJ) = peel(j)
       if (Math.multiplyExact(mJ, nB) > Math.multiplyExact(mB, nJ)) best = j
     }
-    // the winner is materialized (its round's stats job); the losers go
-    for (j <- degs.indices if j != best)
-      Fixpoint.unpersistMaterialized(degs(j))
-    degs(best).orderBy("vertex")
+    // the winner is materialized (its round's stats job)
+    peel(best)._1.orderBy("vertex")
   }
 
   /** default k-truss peeling rounds — deletion-only, so rounds past the
@@ -829,71 +802,57 @@ object Graphs {
     // eager checkpoint doubles as the old count()'s materialization job
     val e = Fixpoint.materializedLeaf(
       edges.select(col("src"), col("dst")).distinct())
-    // the checkpoint behind `state`, which the re-binds below wrap
-    var held = Fixpoint.materializedLeaf(vertices(e).withColumn("scc", lit(-1L)))
-    var state = held
+    val seed = Fixpoint.materializedLeaf(vertices(e).withColumn("scc", lit(-1L)))
     // one cached-scan count: upper-bounds every phase's active set, so the
-    // six per-phase fixpoint-entry sizing jobs collapse to this one
+    // per-phase fixpoint-entry sizing jobs collapse to this one
     // (iterateSized, r16 verdict item 7). Later phases' shrunken actives
     // may overshoot the width — capped, and a phase that peels most of
     // the graph leaves tiny rounds where width barely matters.
-    val nV = state.count()
-    // the shared loop session for the vertex count's width, which the
-    // per-phase fixpoints below also resolve to: the per-phase barriers (ae
-    // slice, decided-merge checkpoint) are state-sized too. The re-bind
-    // streams from the checkpoint blocks once.
-    val sess = Fixpoint.loopSession(edges.sparkSession, nV)
-    state = Fixpoint.rebindStats(state, sess)
-    for (_ <- 1 to phases) {
-      // the phase's scope keeps only the merged state: the slice and both
-      // fixpoint results go once it has materialized
-      val merged = Fixpoint.scope {
-        val active = state.filter(col("scc") < 0).select("vertex")
-        // the phase's active edge slice, materialized once: both fixpoints
-        // scan it every round; rooted at `active` so it executes under the
-        // phase session (a Dataset executes under its ROOT's session)
-        val ae = Fixpoint.materializedLeaf(active.select(col("vertex").as("src"))
-          .join(e, "src")
-          .join(active.select(col("vertex").as("dst")), "dst")
-          .select("src", "dst"))
-        // forward color propagation: max undecided id reaching each vertex.
-        // iterateSized: the seeds are narrow maps over checkpointed state
-        // (the iterateSized caller contract), width from the entry count
-        val colors = Fixpoint.iterateSized(
-          active.withColumn("color", col("vertex")), nV, rounds,
-          converged = Fixpoint.monotoneSumUnchanged("color")) { (st, _) =>
-          val msgs = st.join(ae, st("vertex") === ae("src"))
-            .select(col("dst").as("vertex"), col("color"))
-          st.select("vertex", "color").unionByName(msgs)
-            .groupBy("vertex").agg(max("color").as("color"))
-        }
-        // backward root-reachability within the color class
-        val flags = Fixpoint.iterateSized(
-          colors.withColumn("flag", (col("color") === col("vertex")).cast("int")),
-          nV, rounds,
-          converged = Fixpoint.monotoneSumUnchanged("flag")) { (st, _) =>
-          val msgs = st.filter(col("flag") === 1)
-            .join(ae, st("vertex") === ae("dst"))
-            .select(col("src"), col("color")).distinct()
-            .toDF("mv", "mc")
-          st.join(msgs, st("vertex") === col("mv") && st("color") === col("mc"), "left")
-            .select(st("vertex"), st("color"),
-              greatest(st("flag"), when(col("mv").isNotNull, 1).otherwise(0)).as("flag"))
-        }
-        val decided = flags.filter(col("flag") === 1)
-          .select(col("vertex").as("dv"), col("color").as("dscc"))
-        Fixpoint.materializedLeaf(
-          state.join(decided, state("vertex") === col("dv"), "left")
-            .select(state("vertex"),
-              when(col("scc") < 0 && col("dv").isNotNull, col("dscc"))
-                .otherwise(col("scc")).as("scc")))
+    val nV = seed.count()
+    // one phase per round, under the shared loop session for nV, which the
+    // inner fixpoints also resolve to; the phase's slice and both fixpoint
+    // results go once the merged state has materialized
+    Fixpoint.rebindStats(Fixpoint.iterateSized(seed, nV, phases) { (st, _) =>
+      val state = Fixpoint.rebindStats(st)
+      val active = state.filter(col("scc") < 0).select("vertex")
+      // the phase's active edge slice, materialized once: both fixpoints
+      // scan it every round; rooted at `active` so it executes under the
+      // loop session (a Dataset executes under its ROOT's session)
+      val ae = Fixpoint.materializedLeaf(active.select(col("vertex").as("src"))
+        .join(e, "src")
+        .join(active.select(col("vertex").as("dst")), "dst")
+        .select("src", "dst"))
+      // forward color propagation: max undecided id reaching each vertex.
+      // iterateSized: the seeds are narrow maps over checkpointed state
+      // (the iterateSized caller contract), width from the entry count
+      val colors = Fixpoint.iterateSized(
+        active.withColumn("color", col("vertex")), nV, rounds,
+        converged = Fixpoint.monotoneSumUnchanged("color")) { (st, _) =>
+        val msgs = st.join(ae, st("vertex") === ae("src"))
+          .select(col("dst").as("vertex"), col("color"))
+        st.select("vertex", "color").unionByName(msgs)
+          .groupBy("vertex").agg(max("color").as("color"))
       }
-      // superseded generation: the merged state no longer reads it
-      Fixpoint.unpersistMaterialized(held)
-      held = merged
-      state = Fixpoint.rebindStats(merged)
-    }
-    state
+      // backward root-reachability within the color class
+      val flags = Fixpoint.iterateSized(
+        colors.withColumn("flag", (col("color") === col("vertex")).cast("int")),
+        nV, rounds,
+        converged = Fixpoint.monotoneSumUnchanged("flag")) { (st, _) =>
+        val msgs = st.filter(col("flag") === 1)
+          .join(ae, st("vertex") === ae("dst"))
+          .select(col("src"), col("color")).distinct()
+          .toDF("mv", "mc")
+        st.join(msgs, st("vertex") === col("mv") && st("color") === col("mc"), "left")
+          .select(st("vertex"), st("color"),
+            greatest(st("flag"), when(col("mv").isNotNull, 1).otherwise(0)).as("flag"))
+      }
+      val decided = flags.filter(col("flag") === 1)
+        .select(col("vertex").as("dv"), col("color").as("dscc"))
+      state.join(decided, state("vertex") === col("dv"), "left")
+        .select(state("vertex"),
+          when(col("scc") < 0 && col("dv").isNotNull, col("dscc"))
+            .otherwise(col("scc")).as("scc"))
+    })
   }
 
   /** [[stronglyConnectedComponents]] with a residue guard: the base

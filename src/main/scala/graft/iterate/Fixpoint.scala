@@ -21,15 +21,19 @@ import scala.collection.mutable
   * of driver-loop algorithms at scale (plan analysis time and task
   * serialization grow superlinearly otherwise).
   *
+  * The loop contract, kept by [[unfold]] for every driver loop: a round's
+  * read is one barrier that scans every partition of the current state, and
+  * so materializes the state's lazy checkpoint; the loop then releases what
+  * that read superseded (the previous state and the leaves the step that
+  * built the current one took), and builds the next state lazily or stops.
+  *
   * Ownership: while a [[scope]] is open, every materialization Fixpoint
-  * hands out — [[materializedLeaf]], [[columnar]], [[persisted]] and the
-  * final state of [[iterate]] — belongs to the innermost scope. When the
-  * scope's body returns, what its result reads (plan, subqueries, RDD
-  * lineage) passes to the enclosing scope and everything else is released;
-  * a `Unit` body or a throw releases everything. Each loop round is a
-  * scope that closes once the round's state has materialized, and the
-  * loop releases each state it supersedes. Outside any scope a
-  * materialization is the caller's.
+  * hands out — [[materializedLeaf]], [[lazyLeaf]], [[columnar]],
+  * [[persisted]] and a loop's final state — belongs to the innermost scope.
+  * When the scope's body returns, what its result reads (plan, subqueries,
+  * RDD lineage) passes to the enclosing scope and everything else is
+  * released; a `Unit` body or a throw releases everything. Outside any
+  * scope a materialization is the caller's.
   *
   * `Dataset.unpersist` only knows the cache manager: on a checkpoint it is
   * a no-op that leaves every block cached. Checkpoints go through
@@ -79,6 +83,11 @@ object Fixpoint {
   def materializedLeaf(df: DataFrame): DataFrame =
     own(df.localCheckpoint(eager = true), cache = false)
 
+  /** A lazy checkpoint: the first job that scans every partition of it
+    * caches its blocks, so a relation whose first consumer is such a scan
+    * pays no job of its own. Released like a leaf; every loop state is one. */
+  def lazyLeaf(df: DataFrame): DataFrame = own(df.localCheckpoint(eager = false), cache = false)
+
   /** The eager columnar cache: [[persisted]] plus a count. Chosen over a
     * leaf for a relation a loop scans every round, where the in-memory
     * columnar cache's vectorized scan beats row-block iteration. */
@@ -125,18 +134,29 @@ object Fixpoint {
     * releases every other materialization taken while `body` ran, the
     * latest first. */
   def scope[T](body: => T): T = {
+    val (result, owned) = collecting(body)
+    settle(owned, result)
+    result
+  }
+
+  /** runs `body` as the innermost scope and returns what it took; a throw
+    * releases it all */
+  private def collecting[T](body: => T): (T, Seq[Owned]) = {
     val outer = scopes.get
     val owned = mutable.ListBuffer.empty[Owned]
     scopes.set(owned)
-    val result =
-      try body
-      catch { case t: Throwable => owned.reverseIterator.foreach(_.release()); throw t }
-      finally scopes.set(outer)
+    try (body, owned.toList)
+    catch { case t: Throwable => owned.reverseIterator.foreach(_.release()); throw t }
+    finally scopes.set(outer)
+  }
+
+  /** hands what `result` reads to the enclosing scope and releases the
+    * rest of `owned`, the latest first (dependents first) */
+  private def settle(owned: Seq[Owned], result: Any): Unit = if (owned.nonEmpty) {
     val read = reads(result)
     val (kept, dropped) = owned.partition(_.keys.exists(read))
-    dropped.reverseIterator.foreach(_.release()) // dependents first
-    Option(outer).foreach(_ ++= kept)
-    result
+    dropped.reverseIterator.foreach(_.release())
+    Option(scopes.get).foreach(_ ++= kept)
   }
 
   /** the innermost open scope's materializations on this thread; null
@@ -200,7 +220,7 @@ object Fixpoint {
 
   /** Unpersist a relation materialized by a checkpoint (leaf, loop state:
     * checkpoint blocks) OR by persist() (cache manager) —
-    * resolves whichever backs it.
+    * resolves whichever backs it; a released relation is left alone.
     * The LogicalRDD match is ROOT-ONLY deliberately: a persisted relation's
     * lineage may CONTAIN someone else's still-live checkpoint leaf (cc_inc's
     * `touched` feeds the quotient edges), and a tree-wide collectFirst would
@@ -208,34 +228,59 @@ object Fixpoint {
     * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in the r17 session. */
   def unpersistMaterialized(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
-      case lr: LogicalRDD => lr.rdd.unpersist(false)
+      case lr: LogicalRDD => if (lr.rdd.getStorageLevel != StorageLevel.NONE) lr.rdd.unpersist(false)
       case _ => df.unpersist(false)
     }
 
-  /** Iterate `step` from `init` until `maxIter` or `converged(prev, next)`.
-    *
-    * Every iteration's state is localCheckpoint'ed (lineage cut each
-    * round). Each round is a [[scope]] that closes once the round's state
-    * has materialized, and the loop then releases the state it supersedes
-    * (the seed included) — so executor memory holds at most two state
-    * generations regardless of iteration count, and only the returned
-    * state, owned by the enclosing scope, outlives the call.
-    */
+  /** The driver-loop core (the loop contract in the object doc). From
+    * `seed`, round i runs `read(state, i)`, one barrier that materializes
+    * `state`; then it releases the generation `state` superseded and the
+    * leaves taken by the step that built it, and runs `next(state, r, i)`,
+    * which builds the next state lazily or stops with `None`. Every built
+    * state is a [[lazyLeaf]] taken in the enclosing scope, which so owns the
+    * final one; what `read` takes belongs to that scope too, and what `next`
+    * takes is released with the generation it built. After `maxRounds`
+    * reads the loop stops; a last state built but not read keeps what it
+    * reads. The core never re-binds: each state plans under the session of
+    * the relation `next` returns. */
+  def unfold[R](seed: DataFrame, maxRounds: Int)(read: (DataFrame, Int) => R)(
+      next: (DataFrame, R, Int) => Option[DataFrame]): DataFrame = {
+    var state = seed
+    var held = Seq.empty[Owned] // what the read of `state` supersedes
+    var i = 0
+    var more = true
+    while (more && i < maxRounds) {
+      val r = read(state, i)
+      held.reverseIterator.foreach(_.release())
+      val (built, took) = collecting(next(state, r, i))
+      held = took
+      built.foreach { n =>
+        held = Owned(state, cache = false) +: took
+        state = lazyLeaf(n)
+      }
+      more = built.isDefined
+      i += 1
+    }
+    settle(held, state)
+    state
+  }
+
+  /** Iterate `step` from `init` until `maxIter` rounds or `converged(state)`.
+    * The seed is cached and counted (the count sizes the loop session, and
+    * the caller may release the seed's inputs once it returns); round 1's
+    * read copies it into the loop's first state, and the cache goes. */
   def iterate(
       init: DataFrame,
       maxIter: Int,
-      converged: (DataFrame, DataFrame) => Boolean = (_, _) => false)(
+      converged: DataFrame => Boolean = _ => false)(
       step: (DataFrame, Int) => DataFrame): DataFrame = {
-    val seeded = init.persist(StorageLevel.MEMORY_AND_DISK)
-    // the sizing count materializes the seed, so unpersist of inputs is
-    // safe; the seed cache is released once the first round has
-    // materialized
-    runLoop(seeded, seeded.count(), Some(seeded), maxIter, converged, step)
+    val seeded = persisted(init)
+    converge(seeded, seeded.count(), maxIter, converged, step, Some(seeded))
   }
 
   /** [[iterate]] minus the entry sizing-count job, for callers that already
-    * know (an upper bound on) the state cardinality — e.g. SCC's per-phase
-    * inner fixpoints, whose active sets are subsets of a once-counted
+    * know (an upper bound on) the state cardinality — e.g. SCC's phases and
+    * their inner fixpoints, whose states are subsets of a once-counted
     * vertex relation. `knownRows` only sizes the loop's shuffle width
     * (never correctness); an over-estimate costs width overshoot on a
     * shrunken state, capped at the session's configured width.
@@ -250,9 +295,34 @@ object Fixpoint {
       init: DataFrame,
       knownRows: Long,
       maxIter: Int,
-      converged: (DataFrame, DataFrame) => Boolean = (_, _) => false)(
-      step: (DataFrame, Int) => DataFrame): DataFrame = {
-    runLoop(init, knownRows, None, maxIter, converged, step)
+      converged: DataFrame => Boolean = _ => false)(
+      step: (DataFrame, Int) => DataFrame): DataFrame =
+    converge(init, knownRows, maxIter, converged, step, None)
+
+  /** [[iterate]]'s loop on [[unfold]]. The seed is re-bound to the loop
+    * session for `rows`: rows stream out of its materialized inputs, and the
+    * lazy checkpoint makes the switch a one-time state-sized copy that round
+    * 1's job computes. The read of every built state is `converged` plus a
+    * guard: the convergence aggregates (noneMatch, monotoneSumUnchanged,
+    * countUnchanged) scan every row, so their one job computes the round
+    * and marks its checkpoint, and the guard runs no job; a test that scans
+    * nothing (the fixed-round default) leaves the checkpoint unmarked, and
+    * the guard's count is the one job the round needs. */
+  private def converge(seed: DataFrame, rows: Long, maxIter: Int,
+      converged: DataFrame => Boolean, step: (DataFrame, Int) => DataFrame,
+      seeded: Option[DataFrame]): DataFrame = {
+    val bound = lazyLeaf(rebindStats(seed, loopSession(seed.sparkSession, rows)))
+    unfold(bound, maxIter + 1) { (state, i) =>
+      i > 0 && {
+        val done = converged(state)
+        state.queryExecution.analyzed match {
+          case lr: LogicalRDD => if (!lr.rdd.isCheckpointed) lr.rdd.count()
+          case _ => state.count()
+        }
+        if (i == 1) seeded.foreach(_.unpersist(false))
+        done
+      }
+    } { (state, done, i) => if (done || i == maxIter) None else Some(step(state, i)) }
   }
 
   /** The loop session for a state of `rows` rows: one shared session per
@@ -317,68 +387,16 @@ object Fixpoint {
     loop
   }
 
-  private def runLoop(
-      seed: DataFrame,
-      rows: Long,
-      seeded: Option[DataFrame],
-      maxIter: Int,
-      converged: (DataFrame, DataFrame) => Boolean,
-      step: (DataFrame, Int) => DataFrame): DataFrame = {
-    // Re-bind the seed to the loop session for `rows`. Rows stream out of
-    // the seed's materialized inputs, and the checkpoint makes the switch
-    // permanent, so this is a one-time state-sized copy, not a recompute.
-    // Lazy (r16): round 1's materialization computes the copy in the same
-    // job, so `iterate`'s entry pays ONE job (the sizing count), not two.
-    var state = rebindStats(seed, loopSession(seed.sparkSession, rows))
-      .localCheckpoint(eager = false)
-
-    var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      // Lazy checkpoint, materialized BY the convergence test: the
-      // convergence aggregates (monotoneSumUnchanged, countUnchanged,
-      // noneMatch) are full scans, so their one job computes the round AND
-      // caches the checkpoint blocks — ONE barrier per round instead of an
-      // eager-checkpoint job plus a convergence job (the per-round job
-      // latency floor is the dominant cost of every sf0.1 graph fixpoint).
-      // A test that scans nothing (the fixed-round default) or stops early
-      // (isEmpty-style probes) leaves partitions unmaterialized; Spark's
-      // LocalRDDCheckpointData then fills missing partitions after the
-      // probe job, and the isCheckpointed guard below runs the one
-      // materialization job the eager form would have run anyway — the
-      // fusion never ADDS a job, it only removes one where the test already
-      // scans everything.
-      val next = scope {
-        val n = step(state, i).localCheckpoint(eager = false)
-        done = converged(state, n)
-        n.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd } match {
-          case Some(r) => if (!r.isCheckpointed) r.count()
-          case None => n.count() // defensive: unexpected checkpoint plan shape
-        }
-        n // materialized: its lineage is cut, so the round's leaves go
-      }
-      unpersistMaterialized(state) // superseded: next no longer reads it
-      state = next
-      // round 1 has materialized (through the lazy seed checkpoint) — the
-      // seed cache is no longer the only copy and can go
-      if (i == 0) seeded.foreach(_.unpersist(blocking = false))
-      i += 1
-    }
-    if (i == 0) seeded.foreach(_.unpersist(blocking = false)) // maxIter == 0
-    own(state, cache = false)
-  }
-
   /** Convergence for frontier-flag loops (`changed`/`status` columns):
     * true when NO row satisfies `flag`. A full-scan aggregate rather than
     * `filter(flag).isEmpty` — take(1) short-circuits and leaves the lazy
     * checkpoint partially materialized (costing the fill-in job the
     * fusion exists to remove), while the count scans every row in the
     * SAME job that materializes the round's checkpoint. */
-  def noneMatch(flag: org.apache.spark.sql.Column): (DataFrame, DataFrame) => Boolean =
-    (_: DataFrame, next: DataFrame) => {
-      import org.apache.spark.sql.functions.{count, when, lit}
-      next.agg(count(when(flag, lit(1)))).first().getLong(0) == 0L
-    }
+  def noneMatch(flag: org.apache.spark.sql.Column): DataFrame => Boolean = { next =>
+    import org.apache.spark.sql.functions.{count, when, lit}
+    next.agg(count(when(flag, lit(1)))).first().getLong(0) == 0L
+  }
 
   /** Convergence for monotonically non-increasing integer state (min-label
     * propagation): per-row values only ever decrease over a constant key
@@ -386,10 +404,10 @@ object Fixpoint {
     * changed. One single-stage aggregation per round on the cached state —
     * no diff join of consecutive states (a shuffle join per round).
     * DECIMAL(38,0) keeps the sum exact at any vertex count. */
-  def monotoneSumUnchanged(valCol: String): (DataFrame, DataFrame) => Boolean = {
+  def monotoneSumUnchanged(valCol: String): DataFrame => Boolean = {
     import org.apache.spark.sql.functions.sum
     var prev: Option[java.math.BigDecimal] = None
-    (_: DataFrame, next: DataFrame) => {
+    next => {
       // empty state sums to NULL — normalize to 0 so an empty fixpoint
       // (e.g. CC over a pairless graph) converges instead of NPEing
       val s = Option(
@@ -405,9 +423,9 @@ object Fixpoint {
   /** Convergence for deletion-only processes (k-core peeling): the state
     * only ever loses rows, so equal consecutive counts imply a fixpoint.
     * One count job per round on the already-materialized state. */
-  def countUnchanged(): (DataFrame, DataFrame) => Boolean = {
+  def countUnchanged(): DataFrame => Boolean = {
     var prev = -1L
-    (_: DataFrame, next: DataFrame) => {
+    next => {
       val n = next.count()
       val same = n == prev
       prev = n

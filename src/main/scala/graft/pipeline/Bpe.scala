@@ -103,54 +103,43 @@ object Bpe {
 
   /** (merges, finalState): merges as (rank, lhs, rhs, pair_count) rows in
     * merge order; finalState as the trained tokenization (word, freq,
-    * pos, tok). */
+    * pos, tok). Runs on `Fixpoint.unfold` in the caller's session. */
   def train(docs: DataFrame, merges: Int = DefaultMerges,
       maxWordLen: Int = MaxWordLen): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    var state = charPositions(wordFreqs(docs, maxWordLen), maxWordLen)
-    // the checkpoint behind `state` (whose re-bind wraps a derived RDD) and
-    // the one it superseded, released once the argmax collect has
-    // materialized its successor
-    var cp = state
-    var superseded: Option[DataFrame] = None
+    val seed = charPositions(wordFreqs(docs, maxWordLen), maxWordLen)
+    // the seed leaf is partitioned by word, which the first window reuses;
+    // every later state is re-bound, and so is the returned one
+    def bound(state: DataFrame) = if (state eq seed) state else Fixpoint.rebindStats(state)
     val byWord = Window.partitionBy("word").orderBy("pos")
     val learned = scala.collection.mutable.ListBuffer.empty[(Long, String, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= merges && !exhausted) {
-      val withNext = state.withColumn("ntok", lead("tok", 1).over(byWord))
-      val topOpt = withNext.filter(col("ntok").isNotNull)
+    val last = Fixpoint.unfold(seed, merges) { (state, _) =>
+      // the read: a 1-row argmax collect per round (k-row contract); it
+      // materializes the state the previous round rewrote lazily (r16
+      // fusion), and the caller's first action materializes the last one
+      val withNext = bound(state).withColumn("ntok", lead("tok", 1).over(byWord))
+      (withNext, withNext.filter(col("ntok").isNotNull)
         .groupBy(col("tok").as("a"), col("ntok").as("b"))
         .agg(sum("freq").as("c"))
         .orderBy(col("c").desc, col("a").asc, col("b").asc)
-        .take(1).headOption // 1-row argmax collect per round (k-row contract)
-      superseded.foreach(Fixpoint.unpersistMaterialized)
-      topOpt match {
-        case None =>
-          // no adjacent pairs left (every word fully merged to one token):
-          // stop learning — the oracle unroll's `win$i ... LIMIT 1` CTEs go
-          // empty for the remaining rounds and its state CTEs pass through
-          // unchanged, so early exit here matches the oracle exactly
-          exhausted = true
-        case Some(top) =>
-          val (a, b, c) = (top.getString(0), top.getString(1), top.getLong(2))
-          learned += ((r.toLong, a, b, c))
-          // greedy left-to-right keep set via window math (rewriteRound):
-          // within a run of consecutive matches, keep even offsets.
-          // Lazy checkpoint: the next round's argmax collect (or the
-          // caller's first action) materializes it in the SAME job — the
-          // round's one unavoidable barrier is the collect, so the eager
-          // checkpoint job was pure overhead (r16 fusion)
-          val flagged = withNext.withColumn("mb",
-            when(col("tok") === lit(a) && col("ntok") === lit(b), lit(b)))
-          superseded = Some(cp)
-          cp = rewriteRound(flagged, Seq("word", "freq", "pos", "tok")).localCheckpoint(eager = false)
-          state = Fixpoint.rebindStats(cp)
+        .take(1).headOption)
+    } { case (_, (withNext, topOpt), i) =>
+      // None: no adjacent pairs left (every word fully merged to one
+      // token): stop learning — the oracle unroll's `win$i ... LIMIT 1`
+      // CTEs go empty for the remaining rounds and its state CTEs pass
+      // through unchanged, so early exit here matches the oracle exactly
+      topOpt.map { top =>
+        val (a, b, c) = (top.getString(0), top.getString(1), top.getLong(2))
+        learned += ((i + 1L, a, b, c))
+        // greedy left-to-right keep set via window math (rewriteRound):
+        // within a run of consecutive matches, keep even offsets
+        rewriteRound(withNext.withColumn("mb",
+          when(col("tok") === lit(a) && col("ntok") === lit(b), lit(b))),
+          Seq("word", "freq", "pos", "tok"))
       }
-      r += 1
     }
-    (learned.toSeq.toDF("rank", "lhs", "rhs", "pair_count"), state)
+    (learned.toSeq.toDF("rank", "lhs", "rhs", "pair_count"), bound(last))
   }
 
   /** Default rounds × batch for [[trainBatched]], shared with the oracle
@@ -205,24 +194,22 @@ object Bpe {
       maxWordLen: Int = MaxWordLen): (Seq[Seq[(String, String, Long)]], DataFrame) = {
     val spark = docs.sparkSession
     import spark.implicits._
-    var state = charPositions(wordFreqs(docs, maxWordLen), maxWordLen)
-    var cp = state // released as in train
-    var superseded: Option[DataFrame] = None
+    val seed = charPositions(wordFreqs(docs, maxWordLen), maxWordLen)
+    // the seed leaf's word partitioning and the re-binds, as in train
+    def bound(state: DataFrame) = if (state eq seed) state else Fixpoint.rebindStats(state)
     val byWord = Window.partitionBy("word").orderBy("pos")
     val groups = scala.collection.mutable.ListBuffer.empty[Seq[(String, String, Long)]]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val withNext = state.withColumn("ntok", lead("tok", 1).over(byWord))
-      // ONE B-row collect per round (k-row contract) instead of B 1-row
-      // argmax collects
-      val top = withNext.filter(col("ntok").isNotNull)
+    val last = Fixpoint.unfold(seed, rounds) { (state, _) =>
+      // the read: ONE B-row collect per round (k-row contract) instead of
+      // B 1-row argmax collects
+      val withNext = bound(state).withColumn("ntok", lead("tok", 1).over(byWord))
+      (withNext, withNext.filter(col("ntok").isNotNull)
         .groupBy(col("tok").as("a"), col("ntok").as("b"))
         .agg(sum("freq").as("c"))
         .orderBy(col("c").desc, col("a").asc, col("b").asc)
         .limit(batch).collect()
-        .map(t => (t.getString(0), t.getString(1), t.getLong(2)))
-      superseded.foreach(Fixpoint.unpersistMaterialized)
+        .map(t => (t.getString(0), t.getString(1), t.getLong(2))))
+    } { case (_, (withNext, top), _) =>
       // greedy accept-vs-ACCEPTED (the standard parallel-BPE batching
       // rule, r13): candidate i joins the batch iff it shares no symbol
       // with a previously ACCEPTED candidate. The earlier stricter rule
@@ -241,23 +228,17 @@ object Bpe {
       val acc = top.filter { case (a, b, _) =>
         if (used(a) || used(b)) false else { used += a; used += b; true }
       }
-      if (acc.isEmpty) exhausted = true
-      else {
+      Option.when(acc.nonEmpty) {
         groups += acc.toSeq
         val mdf = broadcast(acc.toSeq.toDF("ma", "mb", "mc").select("ma", "mb"))
         // disjoint symbols => each position matches at most one merge;
         // the matched rhs travels with the row for the rewrite
         val flagged = withNext
           .join(mdf, col("tok") === col("ma") && col("ntok") === col("mb"), "left")
-        // lazy: the next round's B-row collect materializes it (train's
-        // single-merge path documents the fusion)
-        superseded = Some(cp)
-        cp = rewriteRound(flagged, Seq("word", "freq", "pos", "tok")).localCheckpoint(eager = false)
-        state = Fixpoint.rebindStats(cp)
+        rewriteRound(flagged, Seq("word", "freq", "pos", "tok"))
       }
-      r += 1
     }
-    (groups.toSeq, state)
+    (groups.toSeq, bound(last))
   }
 
   /** Trained subword vocabulary: (tok, n_positions, n_occurrences) where
@@ -306,7 +287,7 @@ object Bpe {
       // rebindStats per group caps the broadcast-join size-estimate
       // compounding exactly as in the batched trainer.
       state = Fixpoint.rebindStats(
-        rewriteRound(flagged, Seq("word", "pos", "tok")).localCheckpoint(eager = false))
+        Fixpoint.lazyLeaf(rewriteRound(flagged, Seq("word", "pos", "tok"))))
     }
     state
   }
@@ -331,8 +312,7 @@ object Bpe {
       // lazy chain, single-reference per round (see encodeBatched); the
       // literal-test rounds have no join, so no rebind is needed — the
       // window/filter chain carries no multiplicative size estimate
-      state = rewriteRound(flagged, Seq("word", "pos", "tok"))
-        .localCheckpoint(eager = false)
+      state = Fixpoint.lazyLeaf(rewriteRound(flagged, Seq("word", "pos", "tok")))
     }
     state
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.core.Tables
 import graft.pipeline.TextHash._
+import graft.iterate.Fixpoint
 
 /** Multi-join analytics and training-data-pipeline queries beyond the
   * single-operator catalog: TPC-H-shaped star-schema joins (the workload a
@@ -1073,9 +1074,8 @@ object AnalyticsQueries {
       val dir = snIdxRwScratch + "/state"
       graft.ops.SortedNeighborhood.writeRankedState(existing,
         "c_custkey", "c_name", dir)
-      val stored = graft.ops.SortedNeighborhood.pairs(existing,
-          "c_custkey", "c_name", 5)
-        .localCheckpoint(eager = true) // persisted at prior-ingest time
+      val stored = Fixpoint.materializedLeaf(graft.ops.SortedNeighborhood.pairs(existing,
+          "c_custkey", "c_name", 5)) // persisted at prior-ingest time
       graft.ops.SortedNeighborhood.incrementalPairsFromStore(s, dir, stored,
           incoming, "c_custkey", "c_name", 5)
         .orderBy("id1", "id2")
@@ -1118,10 +1118,11 @@ object AnalyticsQueries {
       val c = Tables.customer(s, d)
       val existing = c.filter(col("c_custkey") % 10 =!= 0)
       val incoming = c.filter(col("c_custkey") % 10 === 0)
-      val idx = graft.ops.EditJoin.variantIndex(existing, "c_custkey", "c_name")
-        .localCheckpoint(eager = true) // persisted at prior-ingest time
-      val stored = graft.ops.EditJoin.pairsWithin1(existing, "c_custkey", "c_name")
-        .localCheckpoint(eager = true)
+      // persisted at prior-ingest time
+      val idx = Fixpoint.materializedLeaf(
+        graft.ops.EditJoin.variantIndex(existing, "c_custkey", "c_name"))
+      val stored = Fixpoint.materializedLeaf(
+        graft.ops.EditJoin.pairsWithin1(existing, "c_custkey", "c_name"))
       graft.ops.EditJoin.incrementalPairsWithin1(idx, stored, incoming,
           "c_custkey", "c_name")
         .orderBy("id1", "id2")
@@ -1178,13 +1179,11 @@ object AnalyticsQueries {
       // user-sized stage aggregates are checkpointed lazily (r16) so each
       // funnel stage scans the event log exactly once (was: the v/c legs
       // re-derived per consumer — 12 corpus scans in the plan, now 3)
-      val v = ev.filter(col("event_type") === "view")
-        .groupBy("user_id").agg(min("ts_us").as("t_v"))
-        .localCheckpoint(eager = false)
-      val c = ev.filter(col("event_type") === "click").join(v, "user_id")
+      val v = Fixpoint.lazyLeaf(ev.filter(col("event_type") === "view")
+        .groupBy("user_id").agg(min("ts_us").as("t_v")))
+      val c = Fixpoint.lazyLeaf(ev.filter(col("event_type") === "click").join(v, "user_id")
         .filter(col("ts_us") > col("t_v"))
-        .groupBy("user_id").agg(min("ts_us").as("t_c"))
-        .localCheckpoint(eager = false)
+        .groupBy("user_id").agg(min("ts_us").as("t_c")))
       val p = ev.filter(col("event_type") === "purchase").join(c, "user_id")
         .filter(col("ts_us") > col("t_c"))
         .groupBy("user_id").agg(min("ts_us").as("t_p"))
@@ -1453,9 +1452,8 @@ object AnalyticsQueries {
     "q_events_distinct_rollup" -> ((s, d) => {
       val ev = Tables.events(s, d).select(col("event_type"),
         expr("ts div 3600000000000").as("hr"), col("user_id"))
-      val hourly = graft.ops.Hll
-        .registers(ev, Seq("event_type", "hr"), "user_id")
-        .localCheckpoint(eager = true) // built once, rolled twice
+      val hourly = Fixpoint.materializedLeaf(graft.ops.Hll
+        .registers(ev, Seq("event_type", "hr"), "user_id")) // built once, rolled twice
       graft.ops.Hll.estimate(hourly, Seq("event_type", "hr"))
         .unionByName(graft.ops.Hll
           .estimate(graft.ops.Hll.merge(hourly, Seq("event_type")),

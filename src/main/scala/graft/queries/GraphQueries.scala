@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.graph.{Graphs, Hits, KMeans, PageRank, ShortestPath, Triangles}
+import graft.iterate.Fixpoint
 
 /** Graph-algorithm coverage (SURVEY §2 + §7.2 steps 3-6) as named queries.
   *
@@ -288,7 +289,7 @@ object GraphQueries {
       // cut inside runWeighted, the merged set inside incrementalWeighted,
       // and the batch read directly by the seed pass). Bounded at any
       // scale: ≤ Mod² (src,dst) pairs regardless of corpus size.
-      val we = graft.iterate.Fixpoint.materializedLeaf(Tables.lineitem(s, d)
+      val we = Fixpoint.materializedLeaf(Tables.lineitem(s, d)
         .select((col("l_orderkey") % Mod).as("src"), (col("l_partkey") % Mod).as("dst"),
           (lit(1.0) + col("l_quantity") % 5).as("w"))
         .filter(col("src") =!= col("dst"))
@@ -310,15 +311,15 @@ object GraphQueries {
     // is unique, so stored-seeded ≡ batch on the full edge set.
     "q_graph_sssp_weighted_inc_idx" -> ((s, d) => {
       // same one-leaf edge materialization as q_graph_sssp_weighted_inc
-      val we = graft.iterate.Fixpoint.materializedLeaf(Tables.lineitem(s, d)
+      val we = Fixpoint.materializedLeaf(Tables.lineitem(s, d)
         .select((col("l_orderkey") % Mod).as("src"), (col("l_partkey") % Mod).as("dst"),
           (lit(1.0) + col("l_quantity") % 5).as("w"))
         .filter(col("src") =!= col("dst"))
         .groupBy("src", "dst").agg(min("w").as("w")))
       val old = we.filter((col("src") + col("dst")) % 5 =!= 0)
       val batch = we.filter((col("src") + col("dst")) % 5 === 0)
-      val stored = ShortestPath.runWeighted(old, source = 1L, maxIter = SsspWeightedMaxIter)
-        .localCheckpoint(eager = true)
+      val stored = Fixpoint.materializedLeaf(
+        ShortestPath.runWeighted(old, source = 1L, maxIter = SsspWeightedMaxIter))
       ShortestPath.incrementalWeighted(stored, batch, we, maxIter = SsspWeightedMaxIter)
         .filter(col("dist") =!= Double.PositiveInfinity)
         .select(col("vertex"), col("dist").cast("long").as("dist"))
@@ -410,9 +411,9 @@ object GraphQueries {
       // both stages (runDamped, runDampedFrom) persist their own edge
       // cache from it — without the leaf each stage re-ran the lineitem
       // scan + distinct shuffle. Bounded: ≤ Mod² pairs at any corpus size.
-      val e = graft.iterate.Fixpoint.materializedLeaf(
+      val e = Fixpoint.materializedLeaf(
         Graphs.lineitemEdges(s, d, Mod))
-      val snapshot = PageRank.runDamped(e, 4).localCheckpoint(eager = true)
+      val snapshot = Fixpoint.materializedLeaf(PageRank.runDamped(e, 4))
       PageRank.runDampedFrom(snapshot, e, PrIters - 4)
         .select(col("vertex"), round(col("rank"), 9).as("pr"))
         .orderBy("vertex")
@@ -426,10 +427,10 @@ object GraphQueries {
     // different fixpoints), so the oracle is BOTH stages fully unrolled.
     "q_graph_pagerank_grown" -> ((s, d) => {
       // same one-leaf edge materialization as q_graph_pagerank_warm
-      val e = graft.iterate.Fixpoint.materializedLeaf(
+      val e = Fixpoint.materializedLeaf(
         Graphs.lineitemEdges(s, d, Mod))
       val old = e.filter((col("src") + col("dst")) % 5 =!= 0)
-      val snapshot = PageRank.runDamped(old, 4).localCheckpoint(eager = true)
+      val snapshot = Fixpoint.materializedLeaf(PageRank.runDamped(old, 4))
       PageRank.runDampedFrom(snapshot, e, PrIters - 4)
         .select(col("vertex"), round(col("rank"), 9).as("pr"))
         .orderBy("vertex")
@@ -464,7 +465,7 @@ object GraphQueries {
       // plan re-ran the lineitem scan + distinct shuffle per consumer
       // (~6 corpus passes per query). Bounded at any scale: the relation
       // holds ≤ BridgeMod² vertex pairs regardless of corpus size.
-      val e = graft.iterate.Fixpoint.materializedLeaf(
+      val e = Fixpoint.materializedLeaf(
         Graphs.lineitemEdges(s, d, BridgeMod))
       val labels = Graphs.connectedComponents(
         e.filter((col("src") + col("dst")) % 5 =!= 0))
@@ -479,11 +480,10 @@ object GraphQueries {
     // Identical oracle (quotient CC + remap ≡ the two-stage replay).
     "q_graph_cc_inc_idx" -> ((s, d) => {
       // same one-leaf edge materialization as q_graph_cc_inc (r17 §2.4)
-      val e = graft.iterate.Fixpoint.materializedLeaf(
+      val e = Fixpoint.materializedLeaf(
         Graphs.lineitemEdges(s, d, BridgeMod))
-      val labels = Graphs.connectedComponents(
-          e.filter((col("src") + col("dst")) % 5 =!= 0))
-        .localCheckpoint(eager = true)
+      val labels = Fixpoint.materializedLeaf(Graphs.connectedComponents(
+          e.filter((col("src") + col("dst")) % 5 =!= 0)))
       Graphs.incrementalComponents(labels,
           e.filter((col("src") + col("dst")) % 5 === 0))
         .orderBy("vertex")

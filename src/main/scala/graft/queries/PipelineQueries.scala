@@ -7,6 +7,7 @@ import graft.pipeline.{Bpe, Corpus, Decontam, Dedup, Multimodal, Similarity, Tex
 import graft.pipeline.TextHash._
 import graft.pipeline.Similarity._
 import graft.pipeline.TextAnalysis._
+import graft.iterate.Fixpoint
 
 /** Training-data-pipeline coverage: dedup at four fidelity levels,
   * embedding similarity search, text analysis, multimodal plumbing. Every
@@ -187,7 +188,7 @@ object PipelineQueries {
       val existing = Dedup.deduplicate(docs.filter(col("doc_id") % 2 === 0), MinhashThreshold)
       // the "stored" index: materialized once, as a real pipeline would
       // persist it at previous-ingest time
-      val index = Dedup.minhashSignatures(existing).localCheckpoint(eager = true)
+      val index = Fixpoint.materializedLeaf(Dedup.minhashSignatures(existing))
       Dedup.incrementalDeduplicate(existing, docs.filter(col("doc_id") % 2 === 1),
           MinhashThreshold, index)
         .select("doc_id", "lang", "source", "n_chars")
@@ -228,8 +229,8 @@ object PipelineQueries {
     // existing text; hash equality proves stored-index == recompute
     "q_dedup_substring_inc_idx" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val index = Dedup.substringIndex(docs.filter(col("doc_id") % 2 === 0), SubstrK)
-        .localCheckpoint(eager = true)
+      val index = Fixpoint.materializedLeaf(
+        Dedup.substringIndex(docs.filter(col("doc_id") % 2 === 0), SubstrK))
       Dedup.incrementalSubstringSpans(index, docs.filter(col("doc_id") % 2 === 1),
           SubstrK, SubstrMinLen, SubstrMaxOcc)
         .orderBy("doc_a", "doc_b", "a_start", "b_start")
@@ -282,8 +283,8 @@ object PipelineQueries {
     // doc sets) — only the batch is ever gram-keyed
     "q_dedup_boilerplate_inc" -> ((s, d) => {
       val face = boilerDocsSpark(Tables.documents(s, d))
-      val index = Dedup.boilerplateIndex(face.filter(col("doc_id") % 2 === 0), SubstrK)
-        .localCheckpoint(eager = true) // the "stored" counts relation
+      val index = Fixpoint.materializedLeaf( // the "stored" counts relation
+        Dedup.boilerplateIndex(face.filter(col("doc_id") % 2 === 0), SubstrK))
       Dedup.incrementalBoilerplateScrub(index,
           face.filter(col("doc_id") % 2 === 1), SubstrK, BoilerMinDf)
         .orderBy("doc_id")
@@ -362,8 +363,8 @@ object PipelineQueries {
       val grams = Dedup.shingleHashes(docs)
         .join(docs.select("doc_id", "source"), "doc_id")
         .select(col("source"), explode(col("hs")).as("g"))
-      val sk = graft.ops.KmvSketch.sketch(grams, Seq("source"), "g")
-        .localCheckpoint(eager = true) // built once, paired twice
+      val sk = Fixpoint.materializedLeaf( // built once, paired twice
+        graft.ops.KmvSketch.sketch(grams, Seq("source"), "g"))
       val srcs = sk.select("source").distinct()
       val prs = srcs.toDF("s1").crossJoin(srcs.toDF("s2"))
         .filter(col("s1") < col("s2"))
@@ -372,7 +373,7 @@ object PipelineQueries {
         prs.join(sk.toDF("s2", "h"), "s2"), Seq("s1", "s2"))
       // the exact twin (distinct gram sets; pairs with no shared gram
       // carry zeros through the left join)
-      val dg = grams.distinct().localCheckpoint(eager = true)
+      val dg = Fixpoint.materializedLeaf(grams.distinct())
       val nd = dg.groupBy("source").agg(count(lit(1)).as("nd"))
       val iex = dg.toDF("s1", "g")
         .join(dg.toDF("s2", "g2"),
@@ -453,8 +454,9 @@ object PipelineQueries {
     // incremental family's hash-equality proof shape)
     "q_text_novelty_inc" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val index = TextAnalysis.noveltyIndex(docs.filter(col("doc_id") % 2 === 0), NoveltyK)
-        .localCheckpoint(eager = true) // the "stored" relation, persisted at prior-ingest time
+      // the "stored" relation, persisted at prior-ingest time
+      val index = Fixpoint.materializedLeaf(
+        TextAnalysis.noveltyIndex(docs.filter(col("doc_id") % 2 === 0), NoveltyK))
       TextAnalysis.incrementalNoveltyScores(index,
           docs.filter(col("doc_id") % 2 === 1), NoveltyK)
         .orderBy("doc_id")
@@ -480,9 +482,8 @@ object PipelineQueries {
     "q_sample_importance_inc" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val raw = docs.filter(!col("source").isin(TargetSources: _*))
-      val index = TextAnalysis.importanceIndex(
-          raw.filter(col("doc_id") % 2 === 0), ImportanceK)
-        .localCheckpoint(eager = true) // the "stored" relation
+      val index = Fixpoint.materializedLeaf(TextAnalysis.importanceIndex(
+          raw.filter(col("doc_id") % 2 === 0), ImportanceK)) // the "stored" relation
       TextAnalysis.incrementalImportanceScores(index,
           docs.filter(col("source").isin(TargetSources: _*)),
           raw.filter(col("doc_id") % 2 === 1), ImportanceK)
@@ -642,7 +643,7 @@ object PipelineQueries {
     "q_dedup_embedding_idx" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val existing = emb.filter(col("vec_id") % 10 =!= 9)
-      val index = Similarity.ndIndex(existing).localCheckpoint(eager = true)
+      val index = Fixpoint.materializedLeaf(Similarity.ndIndex(existing))
       Similarity.incrementalNearDup(existing, emb.filter(col("vec_id") % 10 === 9),
           EmbThreshold, index)
         .orderBy("id_a", "id_b")
@@ -890,9 +891,9 @@ object PipelineQueries {
     "q_source_signature" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
-      val tf = docs.select(col("source"), explode(expr(wordsSpark("text"))).as("word"))
-        .groupBy("source", "word").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(eager = true) // consumed by sfq AND the scored join
+      val tf = Fixpoint.materializedLeaf( // consumed by sfq AND the scored join
+        docs.select(col("source"), explode(expr(wordsSpark("text"))).as("word"))
+          .groupBy("source", "word").agg(count(lit(1)).as("tf")))
       val sfq = tf.groupBy("word").agg(count(lit(1)).as("nsrc"))
       val nSources = docs.agg(countDistinct("source").cast("double").as("n_sources"))
       val w = Window.partitionBy("source").orderBy(desc("score"), asc("word"))
@@ -936,8 +937,8 @@ object PipelineQueries {
     // is vocabulary-keyed; must equal the batch build over the union
     "q_inverted_index_inc" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val stored = Corpus.fullPostings(docs.filter(col("doc_id") % 10 =!= 9))
-        .localCheckpoint(eager = true)
+      val stored = Fixpoint.materializedLeaf(
+        Corpus.fullPostings(docs.filter(col("doc_id") % 10 =!= 9)))
       Corpus.incrementalInvertedIndex(stored,
           docs.filter(col("doc_id") % 10 === 9), VocabTopN)
         .orderBy("word")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.core.Tables
 import graft.ops.{BloomSketch, CountMin, Hll, KmvSketch, MisraGries, QuantileSketch}
+import graft.iterate.Fixpoint
 
 /** Relational operator coverage (SURVEY §2.1–2.8) as named queries over the
   * driver testdata, each with a DuckDB oracle.
@@ -303,10 +304,9 @@ object RelQueries {
     // registers flat from the hashed relation, so the hash equality
     // proves register-max mergeability at both cube levels
     "q_agg_hll_cube" -> ((s, d) => {
-      val regs = Hll.registers(Tables.lineitem(s, d),
+      val regs = Fixpoint.materializedLeaf(Hll.registers(Tables.lineitem(s, d),
           Seq("l_returnflag", "l_linestatus"), "l_partkey")
-        .withColumnRenamed("l_returnflag", "grp")
-        .localCheckpoint(eager = true) // partials built once, rolled twice
+        .withColumnRenamed("l_returnflag", "grp")) // partials built once, rolled twice
       def level(partials: DataFrame): DataFrame =
         Hll.estimate(Hll.merge(partials, Seq("grp")), Seq("grp"))
       level(regs)
@@ -345,9 +345,8 @@ object RelQueries {
       val cents = Tables.lineitem(s, d).select(col("l_returnflag"),
         col("l_linestatus"),
         expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)").as("v"))
-      val parts = QuantileSketch.sketch(cents,
-          Seq("l_returnflag", "l_linestatus"), "v")
-        .localCheckpoint(eager = true) // built once, rolled twice
+      val parts = Fixpoint.materializedLeaf(QuantileSketch.sketch(cents,
+          Seq("l_returnflag", "l_linestatus"), "v")) // built once, rolled twice
       val perFlag = QuantileSketch.quantiles(
         QuantileSketch.merge(parts.withColumnRenamed("l_returnflag", "grp"),
           Seq("grp")), Seq("grp"), Seq(50, 90, 99))
@@ -402,8 +401,8 @@ object RelQueries {
     "q_agg_cms_cube" -> ((s, d) => {
       val keys = Tables.lineitem(s, d).select(col("l_returnflag").as("grp"),
         col("l_linestatus"), col("l_partkey").cast("long").as("k"))
-      val parts = CountMin.sketch(keys, Seq("grp", "l_linestatus"), "k")
-        .localCheckpoint(eager = true) // partials built once, rolled twice
+      val parts = Fixpoint.materializedLeaf( // partials built once, rolled twice
+        CountMin.sketch(keys, Seq("grp", "l_linestatus"), "k"))
       val cells = CountMin.merge(parts, Seq("grp")).unionByName(
         CountMin.merge(parts.withColumn("grp", lit("ALL")), Seq("grp")))
       val lvls = keys.select("grp", "k")
@@ -448,8 +447,8 @@ object RelQueries {
     "q_agg_bloom_cube" -> ((s, d) => {
       val keys = Tables.lineitem(s, d).select(col("l_returnflag").as("grp"),
         col("l_linestatus"), col("l_partkey").cast("long").as("k"))
-      val parts = BloomSketch.sketch(keys, Seq("grp", "l_linestatus"), "k")
-        .localCheckpoint(eager = true) // partials built once, rolled twice
+      val parts = Fixpoint.materializedLeaf( // partials built once, rolled twice
+        BloomSketch.sketch(keys, Seq("grp", "l_linestatus"), "k"))
       val cells = BloomSketch.merge(parts, Seq("grp")).unionByName(
         BloomSketch.merge(parts.withColumn("grp", lit("ALL")), Seq("grp")))
       val lvls = keys.select("grp", "k")
@@ -498,8 +497,8 @@ object RelQueries {
     "q_agg_mg_cube" -> ((s, d) => {
       val keys = Tables.lineitem(s, d).select(col("l_returnflag").as("grp"),
         col("l_linestatus"), expr(mgKey).as("k"))
-      val parts = MisraGries.summary(keys, Seq("grp", "l_linestatus"), "k")
-        .localCheckpoint(eager = true) // partials built once, rolled twice
+      val parts = Fixpoint.materializedLeaf( // partials built once, rolled twice
+        MisraGries.summary(keys, Seq("grp", "l_linestatus"), "k"))
       val mg = MisraGries.merge(parts, Seq("grp")).unionByName(
         MisraGries.merge(parts.withColumn("grp", lit("ALL")), Seq("grp")))
       val lvls = keys.select("grp", "k")
@@ -545,8 +544,8 @@ object RelQueries {
     "q_agg_kmv_cube" -> ((s, d) => {
       val keys = Tables.lineitem(s, d).select(col("l_returnflag").as("grp"),
         col("l_linestatus"), col("l_partkey").cast("long").as("k"))
-      val parts = KmvSketch.sketch(keys, Seq("grp", "l_linestatus"), "k")
-        .localCheckpoint(eager = true) // partials built once, rolled twice
+      val parts = Fixpoint.materializedLeaf( // partials built once, rolled twice
+        KmvSketch.sketch(keys, Seq("grp", "l_linestatus"), "k"))
       val sk = KmvSketch.merge(parts, Seq("grp")).unionByName(
         KmvSketch.merge(parts.withColumn("grp", lit("ALL")), Seq("grp")))
       val lvls = keys.select("grp", "k")
@@ -1011,11 +1010,11 @@ object RelQueries {
     "q_time_acf" -> ((s, d) => {
       val w = org.apache.spark.sql.expressions.Window.orderBy("day")
       val dec = DecimalType(38, 0)
-      val serie = Tables.events(s, d)
+      val serie = Fixpoint.materializedLeaf(Tables.events(s, d)
         .groupBy(expr("ts div 86400000000000").as("day"))
         .agg(count(lit(1)).cast(dec).as("x"))
-        .select(col("day"), col("x"), row_number().over(w).cast("long").as("rn"))
-        .localCheckpoint(eager = true) // consumed by stats + both join sides
+        // consumed by stats + both join sides
+        .select(col("day"), col("x"), row_number().over(w).cast("long").as("rn")))
       val stats = serie.agg(count(lit(1)).cast(dec).as("n"),
         sum("x").cast(dec).as("sx"),
         sum(col("x") * col("x")).cast(dec).as("sxx"))

@@ -329,6 +329,59 @@ class GraphSpec extends SparkSpec {
     assert(taken.head.storageLevel == NONE && held(base))
     Fixpoint.unpersistMaterialized(base)
     assert(sc.getPersistentRDDs.keySet.subsetOf(before))
+
+    def jobsOf(body: => Any): Int = {
+      GraftBridge.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      val start = jobs.get
+      try body finally { GraftBridge.drainListenerBus(sc); sc.removeSparkListener(listener) }
+      jobs.get - start
+    }
+    // (e) the loop core: each round's read is the round's one job, and once
+    // it has materialized a state, the generation that state superseded
+    // holds no cached block; the last state, built but not read, keeps its
+    // predecessor
+    def cached(df: org.apache.spark.sql.DataFrame): Boolean = {
+      GraftBridge.drainListenerBus(sc)
+      val id = df.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id
+      sc.getRDDStorageInfo.exists(_.id == id)
+    }
+    val gens = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    val perRead = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var last: org.apache.spark.sql.DataFrame = null
+    val seed = Fixpoint.materializedLeaf(e)
+    val loopJobs = jobsOf {
+      last = Fixpoint.unfold(seed, 3) { (state, _) =>
+        gens += state
+        val start = jobs.get
+        val n = state.rdd.count()
+        GraftBridge.drainListenerBus(sc)
+        perRead += jobs.get - start
+        n
+      } { (state, n, i) =>
+        assert(n == 4L)
+        if (i > 0) assert(!cached(gens(i - 1)), s"generation ${i - 1} still cached after read $i")
+        Some(state.withColumn("src", col("src") + 1L))
+      }
+    }
+    assert(perRead == Seq(1, 1, 1) && loopJobs == 3)
+    assert(cached(gens(2)) && last.agg(min("src")).first().getLong(0) == 4L)
+    Seq(last, gens(2)).foreach(Fixpoint.unpersistMaterialized)
+    assert(sc.getPersistentRDDs.keySet.subsetOf(before))
+
+    // (f) job-count pins of two loops on the core, unchanged from their
+    // hand-rolled loops: densest's peel of a K6 on a path, and 3 BPE merges
+    val k6 = for (a <- 1L to 6L; b <- 1L to 6L if a < b) yield a -> b
+    val dense = edges((k6 ++ (10L until 20L).map(i => i -> (i + 1))): _*)
+    assert(jobsOf(Fixpoint.scope { Graphs.densestSubgraph(dense); () }) == 11)
+    val docs = Seq(1L -> "low low low lower lowest").toDF("doc_id", "text")
+    assert(jobsOf(Fixpoint.scope { graft.pipeline.Bpe.train(docs, merges = 3); () }) == 15)
+  }
+
+  test("densest subgraph: an edgeless input yields no candidate rows") {
+    // the peel stops in its first round (2m = 0), whose empty candidate is
+    // the winner: it must still read after the loop has released its rounds
+    assert(Graphs.densestSubgraph(edges()).collect().isEmpty)
   }
 
   test("hits rounds plan under the loop session, not the caller's") {

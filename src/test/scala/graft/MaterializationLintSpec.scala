@@ -2,16 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every materialization in the engine's operator layers goes through
-  * `iterate.Fixpoint`, whose scopes own and release it: a direct eager
-  * checkpoint, persist or unpersist there would escape the scope. */
+/** Every materialization in the engine's operator and query layers goes
+  * through `iterate.Fixpoint`, whose scopes and loop core own and release
+  * it: a direct checkpoint (eager or lazy), persist or unpersist there
+  * would escape them, and a hand release of a checkpoint belongs to the
+  * loop core alone. */
 class MaterializationLintSpec extends AnyFunSuite {
 
-  test("graph, pipeline, ops and streaming materialize only through Fixpoint") {
+  test("graph, pipeline, ops, streaming and queries materialize only through Fixpoint") {
     val root = new java.io.File("src/main/scala/graft")
-    val raw = Seq(".localCheckpoint(eager = true)", ".persist(", ".unpersist(")
+    val raw = Seq(".localCheckpoint(", ".persist(", ".unpersist(", "unpersistMaterialized(")
     val found = for {
-      layer <- Seq("graph", "pipeline", "ops", "streaming")
+      layer <- Seq("graph", "pipeline", "ops", "streaming", "queries")
       dir = new java.io.File(root, layer)
       _ = assert(dir.isDirectory, s"missing source dir $dir")
       file <- dir.listFiles().toSeq.filter(_.getName.endsWith(".scala")).sortBy(_.getName)

@@ -16,6 +16,16 @@ class PipelineSpec extends SparkSpec {
     assert(st.count() == 6L) // low | lowe r | lowe s t
   }
 
+  test("batched bpe trainers release superseded generations: only the result's parent stays cached") {
+    // 2 rounds that leave pairs to merge, as in the sequential case above
+    val d = docs(1L -> "low low low lower lowest")
+    val st = leavesOnlyResult("bpe train batched")(Bpe.trainBatched(d, rounds = 2, batch = 2)._2)
+    val grouped = leavesOnlyResult("bpe train batched grouped")(
+      Bpe.trainBatchedGrouped(d, rounds = 2, batch = 2)._2)
+    assert(st.count() == grouped.count())
+    assert(st.count() < 17L) // fewer positions than the 17 characters
+  }
+
   test("exact dedup keeps lowest doc_id and counts copies") {
     val d = docs(1L -> "a b c", 5L -> "a b c", 3L -> "x y z")
     val m = Dedup.exact(d).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
