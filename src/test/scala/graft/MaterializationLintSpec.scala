@@ -9,17 +9,29 @@ import org.scalatest.funsuite.AnyFunSuite
   * loop core alone. */
 class MaterializationLintSpec extends AnyFunSuite {
 
-  test("graph, pipeline, ops, streaming and queries materialize only through Fixpoint") {
+  private val raw = Seq(".localCheckpoint(", ".persist(", ".unpersist(", "unpersistMaterialized(")
+
+  /** Every line under the given layers of `src/main/scala/graft` that
+    * calls one of the `raw` materialization names. */
+  private def directCalls(layers: String*): Seq[String] = {
     val root = new java.io.File("src/main/scala/graft")
-    val raw = Seq(".localCheckpoint(", ".persist(", ".unpersist(", "unpersistMaterialized(")
-    val found = for {
-      layer <- Seq("graph", "pipeline", "ops", "streaming", "queries")
+    for {
+      layer <- layers
       dir = new java.io.File(root, layer)
       _ = assert(dir.isDirectory, s"missing source dir $dir")
       file <- dir.listFiles().toSeq.filter(_.getName.endsWith(".scala")).sortBy(_.getName)
       (line, no) <- scala.io.Source.fromFile(file, "UTF-8").getLines().zipWithIndex.toSeq
       call <- raw if line.contains(call)
     } yield s"$layer/${file.getName}:${no + 1}: $call"
+  }
+
+  test("graph, pipeline, ops and streaming materialize only through Fixpoint") {
+    val found = directCalls("graph", "pipeline", "ops", "streaming")
+    assert(found.isEmpty, found.mkString("direct materialization outside Fixpoint:\n", "\n", ""))
+  }
+
+  test("queries materialize only through Fixpoint") {
+    val found = directCalls("queries")
     assert(found.isEmpty, found.mkString("direct materialization outside Fixpoint:\n", "\n", ""))
   }
 }
