@@ -215,7 +215,7 @@ object Bpe {
       // with a previously ACCEPTED candidate. The earlier stricter rule
       // (reject on any conflict with a higher-RANKED candidate, even a
       // rejected one — one NOT EXISTS in SQL) measured only ~2-3 accepted
-      // merges/round at vocabulary depth (BpeScale, BASELINE r13): hot
+      // merges/round at vocabulary depth (BASELINE r13): hot
       // symbols dominate the top ranks, so most of the batch was rejected
       // for touching candidates that were themselves rejected, and the
       // B-fold driver collapse evaporated. Accept-vs-accepted keeps the

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.iterate.Fixpoint
 
 /** Dev-only steady-state A/B for the round-14 incremental blocking twins
   * (not part of the driver contract): the catalog `_inc` faces price the
@@ -24,66 +25,48 @@ object IncAb {
     val spark = graft.core.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     val cust = graft.core.Tables.customer(spark, sfDir).select("c_custkey")
-    val cbase = cust.agg(max(col("c_custkey"))).first().getLong(0) + 1L
-    val rep = (0 until k).map(i =>
-        cust.withColumn("c_custkey", col("c_custkey") + lit(i * cbase)))
-      .reduce(_ unionByName _)
-      .withColumn("c_name", format_string("Customer#%09d", col("c_custkey")))
-      .localCheckpoint(eager = true)
-    val existing = rep.filter(col("c_custkey") % batchMod =!= 0L)
-      .localCheckpoint(eager = true)
-    val incoming = rep.filter(col("c_custkey") % batchMod === 0L)
-      .localCheckpoint(eager = true)
+    val cbase = Inflate.base(cust, "c_custkey")
+    val rep = Fixpoint.materializedLeaf(Inflate.replicate(cust, k, Map("c_custkey" -> cbase))
+      .withColumn("c_name", format_string("Customer#%09d", col("c_custkey"))))
+    val existing = Fixpoint.materializedLeaf(rep.filter(col("c_custkey") % batchMod =!= 0L))
+    val incoming = Fixpoint.materializedLeaf(rep.filter(col("c_custkey") % batchMod === 0L))
     val nAll = rep.count(); val nInc = incoming.count()
     println(s"[incab] corpus=$nAll batch=$nInc (1 in $batchMod)")
     // shuffle-volume meter: local wall time at this scale is job-latency-
     // floor dominated, but the 100 TB property under test is WHAT MOVES —
     // records written to shuffle per run (broadcast sides write nothing)
-    val shuffled = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) shuffled.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          ()
-        }
-      })
+    val meter = QueryMeter(spark)
     // file-bytes meter (r15): what a fold READS FROM DISK — the quantity
     // directory pruning saves; cached/checkpointed reads don't touch it
     import scala.jdk.CollectionConverters._
     def fsRead(): Long = org.apache.hadoop.fs.FileSystem
       .getAllStatistics.asScala.map(_.getBytesRead).sum
-    def t(name: String)(f: => Long): Double = {
-      GraftBridge.drainListenerBus(spark.sparkContext)
-      val s0 = shuffled.get(); val b0 = fsRead()
-      val t0 = System.nanoTime()
-      val n = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      GraftBridge.drainListenerBus(spark.sparkContext)
-      println(f"[incab] $name%-30s $dt%8.3f s  rows=$n  " +
-        f"shuffled=${shuffled.get() - s0}  fs_read=${fsRead() - b0}")
-      dt
+    def row(name: String)(f: => Long): Double = {
+      val b0 = fsRead()
+      val r = meter.run()(f)
+      println(f"[incab] $name%-30s ${r.seconds}%8.3f s  rows=${r.value}  " +
+        f"shuffled=${r.shuffled}  fs_read=${fsRead() - b0}")
+      r.seconds
     }
     // ---- edit join: stored state built outside the clock
-    val ejIdx = graft.ops.EditJoin.variantIndex(existing, "c_custkey", "c_name")
-      .localCheckpoint(eager = true)
-    val ejStored = graft.ops.EditJoin.pairsWithin1(existing, "c_custkey", "c_name")
-      .localCheckpoint(eager = true)
-    val fullEj = t("editjoin full recompute")(
+    val ejIdx = Fixpoint.materializedLeaf(
+      graft.ops.EditJoin.variantIndex(existing, "c_custkey", "c_name"))
+    val ejStored = Fixpoint.materializedLeaf(
+      graft.ops.EditJoin.pairsWithin1(existing, "c_custkey", "c_name"))
+    val fullEj = row("editjoin full recompute")(
       graft.ops.EditJoin.pairsWithin1(rep, "c_custkey", "c_name").count())
-    val incEj = t("editjoin steady-state inc")(
+    val incEj = row("editjoin steady-state inc")(
       graft.ops.EditJoin.incrementalPairsWithin1(ejIdx, ejStored, incoming,
         "c_custkey", "c_name").count())
     println(f"[incab] editjoin inc/full = ${incEj / fullEj}%.2fx")
     // ---- sorted neighborhood: ranked state + pairs outside the clock
-    val snState = graft.ops.SortedNeighborhood.rankedState(existing,
-      "c_custkey", "c_name").localCheckpoint(eager = true)
-    val snStored = graft.ops.SortedNeighborhood.pairs(existing,
-      "c_custkey", "c_name", 5).localCheckpoint(eager = true)
-    val fullSn = t("sorted full recompute")(
+    val snState = Fixpoint.materializedLeaf(graft.ops.SortedNeighborhood.rankedState(existing,
+      "c_custkey", "c_name"))
+    val snStored = Fixpoint.materializedLeaf(graft.ops.SortedNeighborhood.pairs(existing,
+      "c_custkey", "c_name", 5))
+    val fullSn = row("sorted full recompute")(
       graft.ops.SortedNeighborhood.pairs(rep, "c_custkey", "c_name", 5).count())
-    val incSn = t("sorted steady-state inc")(
+    val incSn = row("sorted steady-state inc")(
       graft.ops.SortedNeighborhood.incrementalPairs(snState, snStored, incoming,
         "c_custkey", "c_name", 5).count())
     println(f"[incab] sorted inc/full = ${incSn / fullSn}%.2fx (scattered batch)")
@@ -92,16 +75,16 @@ object IncAb {
     // so exactly ONE pid is touched and the incremental fold does work
     // proportional to that pid + the batch, not the corpus
     val cut = rep.agg(expr("percentile(c_custkey, 0.99)")).first().getDouble(0).toLong
-    val exA = rep.filter(col("c_custkey") <= cut).localCheckpoint(eager = true)
-    val incA = rep.filter(col("c_custkey") > cut).localCheckpoint(eager = true)
+    val exA = Fixpoint.materializedLeaf(rep.filter(col("c_custkey") <= cut))
+    val incA = Fixpoint.materializedLeaf(rep.filter(col("c_custkey") > cut))
     println(s"[incab] append regime: existing=${exA.count()} batch=${incA.count()}")
-    val stateA = graft.ops.SortedNeighborhood.rankedState(exA,
-      "c_custkey", "c_name").localCheckpoint(eager = true)
-    val storedA = graft.ops.SortedNeighborhood.pairs(exA,
-      "c_custkey", "c_name", 5).localCheckpoint(eager = true)
-    val fullA = t("sorted full (append)")(
+    val stateA = Fixpoint.materializedLeaf(graft.ops.SortedNeighborhood.rankedState(exA,
+      "c_custkey", "c_name"))
+    val storedA = Fixpoint.materializedLeaf(graft.ops.SortedNeighborhood.pairs(exA,
+      "c_custkey", "c_name", 5))
+    val fullA = row("sorted full (append)")(
       graft.ops.SortedNeighborhood.pairs(rep, "c_custkey", "c_name", 5).count())
-    val incAa = t("sorted inc (append)")(
+    val incAa = row("sorted inc (append)")(
       graft.ops.SortedNeighborhood.incrementalPairs(stateA, storedA, incA,
         "c_custkey", "c_name", 5).count())
     println(f"[incab] sorted append inc/full = ${incAa / fullA}%.2fx")
@@ -121,21 +104,21 @@ object IncAb {
       p
     }
     val storeS = storeOf(existing, "scat")
-    val _ = t("sorted inc (store, scattered)")(
+    val _ = row("sorted inc (store, scattered)")(
       graft.ops.SortedNeighborhood.incrementalPairsFromStore(spark, storeS,
         snStored, incoming, "c_custkey", "c_name", 5).count())
     val mid = cbase * (k / 2)
-    val exC = rep.filter(col("c_custkey") < mid ||
-        col("c_custkey") >= mid + nInc).localCheckpoint(eager = true)
-    val incC = rep.filter(col("c_custkey") >= mid &&
-        col("c_custkey") < mid + nInc).localCheckpoint(eager = true)
+    val exC = Fixpoint.materializedLeaf(rep.filter(col("c_custkey") < mid ||
+        col("c_custkey") >= mid + nInc))
+    val incC = Fixpoint.materializedLeaf(rep.filter(col("c_custkey") >= mid &&
+        col("c_custkey") < mid + nInc))
     println(s"[incab] clustered regime: existing=${exC.count()} batch=${incC.count()}")
     val storeC = storeOf(exC, "clus")
-    val storedC = graft.ops.SortedNeighborhood.pairs(exC,
-      "c_custkey", "c_name", 5).localCheckpoint(eager = true)
-    val fullC = t("sorted full (clustered)")(
+    val storedC = Fixpoint.materializedLeaf(graft.ops.SortedNeighborhood.pairs(exC,
+      "c_custkey", "c_name", 5))
+    val fullC = row("sorted full (clustered)")(
       graft.ops.SortedNeighborhood.pairs(rep, "c_custkey", "c_name", 5).count())
-    val incCc = t("sorted inc (store, clustered)")(
+    val incCc = row("sorted inc (store, clustered)")(
       graft.ops.SortedNeighborhood.incrementalPairsFromStore(spark, storeC,
         storedC, incC, "c_custkey", "c_name", 5).count())
     println(f"[incab] sorted clustered inc/full = ${incCc / fullC}%.2fx")

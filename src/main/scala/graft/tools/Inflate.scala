@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import graft.iterate.Fixpoint
 
 /** Dev-only scale-sweep data generator (not part of the driver contract):
   * writes a K-times inflated copy of a testdata directory so the bench can
@@ -43,6 +44,20 @@ import org.apache.spark.sql.functions._
   */
 object Inflate {
 
+  /** The shift base of key column `c`: one past its max, so copies shifted
+    * by multiples of it stay disjoint. */
+  def base(df: DataFrame, c: String): Long = df.agg(max(col(c))).first().getLong(0) + 1L
+
+  /** K copies of `df` unioned, copy i with every column in `bases` shifted
+    * by i times its base and then mapped by `each(copy, i)` (a per-replica
+    * transform; none by default). FK-linked tables must share one base per
+    * logical key, so the copies stay aligned across tables. */
+  def replicate(df: DataFrame, k: Int, bases: Map[String, Long],
+      each: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame =
+    (0 until k).map { i =>
+      each(bases.foldLeft(df) { case (d, (c, b)) => d.withColumn(c, col(c) + lit(i * b)) }, i)
+    }.reduce(_ unionByName _)
+
   /** K disjoint copies of an (src, dst) edge relation: every vertex id
     * shifts by replica*(maxId+1), so each copy carries the original's
     * exact degree distribution and component structure — "more graph",
@@ -52,11 +67,7 @@ object Inflate {
   def replicateGraph(edges: DataFrame, k: Int): (DataFrame, Long) = {
     val base = edges.agg(greatest(max(col("src")), max(col("dst"))))
       .first().getLong(0) + 1L
-    val rep = (0 until k).map { i =>
-      edges.select((col("src") + lit(i * base)).as("src"),
-        (col("dst") + lit(i * base)).as("dst"))
-    }.reduce(_ unionByName _)
-    (rep, base)
+    (replicate(edges.select("src", "dst"), k, Map("src" -> base, "dst" -> base)), base)
   }
 
   /** Skewed K-copy replication: [[replicateGraph]]'s disjoint copies with
@@ -78,6 +89,12 @@ object Inflate {
     (skewed, base)
   }
 
+  /** replica `i`'s text with every 3rd word replaced by a replica-tagged
+    * token (see the object doc) */
+  def tagWords(docs: DataFrame, i: Int): DataFrame = docs.withColumn("text",
+    expr(s"concat_ws(' ', transform(split(text, ' '), (w, j) -> " +
+      s"CASE WHEN j % 3 = 2 THEN concat('r$i', 'x', j) ELSE w END))"))
+
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--graphs")) { GraphScale.run(args.drop(1)); return }
     if (args.headOption.contains("--skew")) { SkewScale.run(args.drop(1)); return }
@@ -91,55 +108,37 @@ object Inflate {
     def write(df: DataFrame, t: String): Unit =
       df.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$t.parquet")
 
-    // explicit per-column shift bases; FK-linked fact tables must share
-    // one base per logical key (orderkey below), or replica alignment
-    // silently relies on max(l_orderkey) == max(o_orderkey) — true for
-    // TPC-H-shaped data (every order has lineitems) but a join-selectivity
-    // skew for any input where it is not
-    def replicate(df: DataFrame, bases: Map[String, Long]): DataFrame =
-      (0 until k).map { i =>
-        bases.foldLeft(df) { case (d, (c, b)) => d.withColumn(c, col(c) + lit(i * b)) }
-      }.reduce(_ unionByName _)
-    def maxOf(df: DataFrame, c: String): Long = df.agg(max(col(c))).first().getLong(0)
-
     Seq("region", "nation", "customer", "supplier", "part").foreach { t =>
       write(read(t), t)
     }
+    // one base for the order key both fact tables carry, or replica
+    // alignment silently relies on max(l_orderkey) == max(o_orderkey) —
+    // true for TPC-H-shaped data (every order has lineitems) but a
+    // join-selectivity skew for any input where it is not
     val (li, ord) = (read("lineitem"), read("orders"))
-    val orderBase = math.max(maxOf(li, "l_orderkey"), maxOf(ord, "o_orderkey")) + 1L
-    write(replicate(li, Map("l_orderkey" -> orderBase)), "lineitem")
-    write(replicate(ord, Map("o_orderkey" -> orderBase)), "orders")
+    val orderBase = math.max(base(li, "l_orderkey"), base(ord, "o_orderkey"))
+    write(replicate(li, k, Map("l_orderkey" -> orderBase)), "lineitem")
+    write(replicate(ord, k, Map("o_orderkey" -> orderBase)), "orders")
     val ev = read("events")
-    write(replicate(ev, Map("event_id" -> (maxOf(ev, "event_id") + 1L),
-      "user_id" -> (maxOf(ev, "user_id") + 1L))), "events")
+    write(replicate(ev, k, Map("event_id" -> base(ev, "event_id"),
+      "user_id" -> base(ev, "user_id"))), "events")
     // embeddings: shift ids + per-replica sign-flip isometry (see scaladoc)
     val emb = read("embeddings")
     val dim = emb.select(size(col("embedding"))).first().getInt(0)
-    val vecBase = emb.agg(max(col("vec_id"))).first().getLong(0) + 1L
-    val embReplicas = (0 until k).map { i =>
-      val d = emb.withColumn("vec_id", col("vec_id") + lit(i * vecBase))
+    write(replicate(emb, k, Map("vec_id" -> base(emb, "vec_id")), (d, i) =>
       if (i == 0) d
       else {
         val rng = new scala.util.Random(0xC0FFEE + i)
         val signs = Seq.fill(dim)(if (rng.nextBoolean()) 1.0f else -1.0f)
         d.withColumn("embedding",
           zip_with(col("embedding"), typedLit(signs), (v, s) => v * s))
-      }
-    }
-    write(embReplicas.reduce(_ unionByName _), "embeddings")
+      }), "embeddings")
 
     // documents: shift ids, then de-correlate replica text (see scaladoc)
     val docs = read("documents")
-    val base = docs.agg(max(col("doc_id"))).first().getLong(0) + 1L
-    val replicas = (0 until k).map { i =>
-      val d = docs.withColumn("doc_id", col("doc_id") + lit(i * base))
+    write(replicate(docs, k, Map("doc_id" -> base(docs, "doc_id")), (d, i) =>
       if (i == 0) d
-      else d.withColumn("text",
-          expr(s"concat_ws(' ', transform(split(text, ' '), (w, j) -> " +
-            s"CASE WHEN j % 3 = 2 THEN concat('r$i', 'x', j) ELSE w END))"))
-        .withColumn("n_chars", length(col("text")))
-    }
-    write(replicas.reduce(_ unionByName _), "documents")
+      else tagWords(d, i).withColumn("n_chars", length(col("text")))), "documents")
 
     println(s"[inflate] wrote ${k}x $inDir -> $outDir")
     spark.stop()
@@ -176,41 +175,29 @@ object GraphScale {
     // the same derived relations the bench queries use (GraphQueries.scala
     // constants: Mod=300 core graph, maxId-200 triangle cut, Mod-20000
     // sparse k-truss cut)
-    val core = Graphs.lineitemEdges(spark, sfDir, 300).localCheckpoint(eager = true)
-    val triCut = core.filter(col("src") <= 200 && col("dst") <= 200)
-      .localCheckpoint(eager = true)
-    val sparse = graft.core.Tables.lineitem(spark, sfDir).select(
+    val core = Fixpoint.materializedLeaf(Graphs.lineitemEdges(spark, sfDir, 300))
+    val triCut = Fixpoint.materializedLeaf(core.filter(col("src") <= 200 && col("dst") <= 200))
+    val sparse = Fixpoint.materializedLeaf(graft.core.Tables.lineitem(spark, sfDir).select(
         (col("l_orderkey") % 20000).cast("long").as("src"),
         (col("l_partkey") % 20000).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(eager = true)
+      .filter(col("src") =!= col("dst")).distinct())
 
-    def time2(label: String)(f: => DataFrame): Double = {
-      def once: Double = {
-        // release only state the run itself pinned: the shared edge
-        // relations are localCheckpoint'd (lineage truncated) and must
-        // survive across timings — a blanket unpersist kills them
-        val keep = spark.sparkContext.getPersistentRDDs.keySet
-        val t0 = System.nanoTime()
-        f.write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
-          if (!keep.contains(id)) r.unpersist(blocking = false)
-        }
-        dt
-      }
-      math.min(once, once) // repeat-min, same basis as Bench
-    }
-    def report(name: String, t1: Double, tk: Double): Unit =
+    // min of 2 measured runs each (repeat-min, same basis as Bench); each
+    // run releases only what it took, so the shared edge relations pinned
+    // before it survive across timings
+    val meter = QueryMeter(spark)
+    def report(name: String, f1: => DataFrame, fk: => DataFrame): Unit = {
+      val (t1, tk) = (meter.run(samples = 2)(f1).seconds, meter.run(samples = 2)(fk).seconds)
       println(f"[graphscale] $name%-18s 1x=$t1%.2fs ${k}x=$tk%.2fs ratio=${tk / t1}%.1fx")
+    }
 
-    // Materialized on first use, but ALWAYS dereferenced outside time2's
-    // timed closure (the `val _ = core10C` lines below): time2's cleanup
-    // unpersists every RDD not pinned before the timing, so a checkpoint
-    // first materialized INSIDE a sample loses its blocks before sample 2
+    // Materialized on first use, but ALWAYS dereferenced outside the
+    // measured runs (the `core10C.count()` pin below): a measured run
+    // releases every leaf first taken inside it, so a checkpoint first
+    // materialized INSIDE a sample loses its blocks before sample 2
     // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
     lazy val (core10, coreBase) = Inflate.replicateGraph(core, k)
-    lazy val core10C = core10.localCheckpoint(eager = true)
+    lazy val core10C = Fixpoint.materializedLeaf(core10)
     def needsCore10: Boolean = Seq("cc", "pagerank_damped", "pagerank_grown",
       "sssp_bfs", "cc_inc_fold", "sssp_w_inc_fold",
       "mis", "matching", "scc", "walks", "walks_biased",
@@ -218,23 +205,21 @@ object GraphScale {
     if (needsCore10) core10C.count() // pin the checkpoint before any timing
 
     if (want("cc")) report("cc",
-      time2("cc")(Graphs.connectedComponents(core)),
-      time2("cc10")(Graphs.connectedComponents(core10C)))
+      Graphs.connectedComponents(core),
+      Graphs.connectedComponents(core10C))
     if (want("pagerank_damped")) report("pagerank_damped",
-      time2("pr")(PageRank.runDamped(core, 10)),
-      time2("pr10")(PageRank.runDamped(core10C, 10)))
+      PageRank.runDamped(core, 10),
+      PageRank.runDamped(core10C, 10))
     // the grown-graph warm start, both stages priced (the bench contract):
     // 4 rounds on the (src+dst)%5<>0 cut, then 6 full-graph rounds from
     // those ranks
     if (want("pagerank_grown")) {
       def grown(e: DataFrame): DataFrame = {
-        val snap = PageRank.runDamped(
-          e.filter((col("src") + col("dst")) % 5 =!= 0), 4).localCheckpoint(eager = true)
+        val snap = Fixpoint.materializedLeaf(PageRank.runDamped(
+          e.filter((col("src") + col("dst")) % 5 =!= 0), 4))
         PageRank.runDampedFrom(snap, e, 6)
       }
-      report("pagerank_grown",
-        time2("prg")(grown(core)),
-        time2("prg10")(grown(core10C)))
+      report("pagerank_grown", grown(core), grown(core10C))
     }
     // symmetry-breaking primitives: disjoint copies keep each replica's
     // degree structure, and the id-dependent hash priorities give every
@@ -242,14 +227,14 @@ object GraphScale {
     // the ideal curve is near-flat (round count dominates, work per
     // round is K-parallel)
     if (want("mis")) report("mis",
-      time2("mis")(Graphs.maximalIndependentSet(core)),
-      time2("mis10")(Graphs.maximalIndependentSet(core10C)))
+      Graphs.maximalIndependentSet(core),
+      Graphs.maximalIndependentSet(core10C))
     if (want("matching")) report("matching",
-      time2("mm")(Graphs.maximalMatching(core)),
-      time2("mm10")(Graphs.maximalMatching(core10C)))
+      Graphs.maximalMatching(core),
+      Graphs.maximalMatching(core10C))
     if (want("scc")) report("scc",
-      time2("scc")(Graphs.stronglyConnectedComponents(core)),
-      time2("scc10")(Graphs.stronglyConnectedComponents(core10C)))
+      Graphs.stronglyConnectedComponents(core),
+      Graphs.stronglyConnectedComponents(core10C))
     // walk corpus generation: K disjoint copies seed K× walks over K×
     // vertices — per-step frontier joins are K-parallel, rounds fixed at
     // the walk length, so the ideal curve is near-flat like mis/matching
@@ -258,62 +243,60 @@ object GraphScale {
         val seeds = Graphs.vertices(e).filter(col("vertex") % 3 === 0)
         Graphs.walkCooccurrence(Graphs.deterministicWalks(e, seeds, 4), 2)
       }
-      report("walks", time2("walks")(wk(core)), time2("walks10")(wk(core10C)))
+      report("walks", wk(core), wk(core10C))
     }
     if (want("walks_biased")) {
       def wkb(e: DataFrame): DataFrame = {
         val seeds = Graphs.vertices(e).filter(col("vertex") % 3 === 0)
         Graphs.biasedWalks(e, seeds, 4, 1L, 4L, 2L)
       }
-      report("walks_biased",
-        time2("wb")(wkb(core)), time2("wb10")(wkb(core10C)))
+      report("walks_biased", wkb(core), wkb(core10C))
     }
     // coreness: disjoint copies each converge to their own onion — rounds
     // = max over copies (same as 1x), per-round work K-parallel
     if (want("coreness")) report("coreness",
-      time2("coreness")(Graphs.coreness(core)),
-      time2("coreness10")(Graphs.coreness(core10C)))
+      Graphs.coreness(core),
+      Graphs.coreness(core10C))
     if (want("coreness_window")) report("coreness_window",
-      time2("coreness_window")(Graphs.corenessWindow(core)),
-      time2("coreness_window10")(Graphs.corenessWindow(core10C)))
+      Graphs.corenessWindow(core),
+      Graphs.corenessWindow(core10C))
     // densest subgraph: each copy carries the same density profile, so
     // the peel thresholds are copy-invariant and rounds match 1x
     if (want("densest")) report("densest",
-      time2("densest")(Graphs.densestSubgraph(core)),
-      time2("densest10")(Graphs.densestSubgraph(core10C)))
+      Graphs.densestSubgraph(core),
+      Graphs.densestSubgraph(core10C))
     if (want("sssp_bfs")) report("sssp_bfs",
-      time2("sssp")(ShortestPath.multiSourceBfs(core, Seq(1L))),
-      time2("sssp10")(ShortestPath.multiSourceBfs(core10C,
-        (0 until k).map(i => 1L + i * coreBase))))
+      ShortestPath.multiSourceBfs(core, Seq(1L)),
+      ShortestPath.multiSourceBfs(core10C,
+        (0 until k).map(i => 1L + i * coreBase)))
     if (want("triangles")) {
       val (tri10, _) = Inflate.replicateGraph(triCut, k)
-      val tri10C = tri10.localCheckpoint(eager = true)
+      val tri10C = Fixpoint.materializedLeaf(tri10)
       report("triangles",
-        time2("tri")(Triangles.countShuffle(triCut, maxId = Long.MaxValue)),
-        time2("tri10")(Triangles.countShuffle(tri10C, maxId = Long.MaxValue)))
+        Triangles.countShuffle(triCut, maxId = Long.MaxValue),
+        Triangles.countShuffle(tri10C, maxId = Long.MaxValue))
     }
     // common-neighbor link prediction on the bench's sparse CnMod cut; the
     // id cap is applied BEFORE replication (replica ids exceed it by
     // construction), so each copy carries exactly the 1x workload
     if (want("commonneighbors")) {
-      val cnCut = Graphs.lineitemEdges(spark, sfDir, 50000)
-        .filter(col("src") <= 25000 && col("dst") <= 25000)
-        .localCheckpoint(eager = true)
+      val cnCut = Fixpoint.materializedLeaf(Graphs.lineitemEdges(spark, sfDir, 50000)
+        .filter(col("src") <= 25000 && col("dst") <= 25000))
       val (cnK, _) = Inflate.replicateGraph(cnCut, k)
-      val cnKC = cnK.localCheckpoint(eager = true)
+      val cnKC = Fixpoint.materializedLeaf(cnK)
       report("commonneighbors",
-        time2("cn")(Triangles.commonNeighbors(cnCut, maxId = Long.MaxValue, k = 100)),
-        time2("cn10")(Triangles.commonNeighbors(cnKC, maxId = Long.MaxValue, k = 100)))
+        Triangles.commonNeighbors(cnCut, maxId = Long.MaxValue, k = 100),
+        Triangles.commonNeighbors(cnKC, maxId = Long.MaxValue, k = 100))
     }
     // the sweep EXISTS to price the wedge growth, so it opts out of the
     // density guard (10 disjoint copies = 10x the 1x wedge count, which
     // crosses the fixed default budget by design, not by densification)
     if (want("ktruss_sparse")) {
       val (sparse10, _) = Inflate.replicateGraph(sparse, k)
-      val sparse10C = sparse10.localCheckpoint(eager = true)
+      val sparse10C = Fixpoint.materializedLeaf(sparse10)
       report("ktruss_sparse",
-        time2("kt")(Graphs.kTruss(sparse, 3, maxWedges = Long.MaxValue)),
-        time2("kt10")(Graphs.kTruss(sparse10C, 3, maxWedges = Long.MaxValue)))
+        Graphs.kTruss(sparse, 3, maxWedges = Long.MaxValue),
+        Graphs.kTruss(sparse10C, 3, maxWedges = Long.MaxValue))
     }
 
     // incremental algorithms, steady-state slice: the stored state (labels
@@ -324,33 +307,31 @@ object GraphScale {
     def cut(e: DataFrame, keep: Boolean): DataFrame =
       e.filter(((col("src") + col("dst")) % 5 =!= 0) === keep)
     if (want("cc_inc_fold")) {
-      val cc1Stored = Graphs.connectedComponents(cut(core, true))
-        .localCheckpoint(eager = true)
-      val cc10Stored = Graphs.connectedComponents(cut(core10C, true))
-        .localCheckpoint(eager = true)
+      val cc1Stored = Fixpoint.materializedLeaf(Graphs.connectedComponents(cut(core, true)))
+      val cc10Stored =
+        Fixpoint.materializedLeaf(Graphs.connectedComponents(cut(core10C, true)))
       report("cc_inc_fold",
-        time2("cci")(Graphs.incrementalComponents(cc1Stored, cut(core, false))),
-        time2("cci10")(Graphs.incrementalComponents(cc10Stored, cut(core10C, false))))
+        Graphs.incrementalComponents(cc1Stored, cut(core, false)),
+        Graphs.incrementalComponents(cc10Stored, cut(core10C, false)))
     }
     if (want("sssp_w_inc_fold")) {
       def weighted(e: DataFrame): DataFrame = e
         .withColumn("w", lit(1.0) + (col("src") + col("dst")) % 5)
-      val w1 = weighted(core).localCheckpoint(eager = true)
-      val w10 = weighted(core10C).localCheckpoint(eager = true)
-      val sw1Stored = ShortestPath.runWeighted(cut(w1, true), 1L, 50)
-        .localCheckpoint(eager = true)
+      val w1 = Fixpoint.materializedLeaf(weighted(core))
+      val w10 = Fixpoint.materializedLeaf(weighted(core10C))
+      val sw1Stored = Fixpoint.materializedLeaf(ShortestPath.runWeighted(cut(w1, true), 1L, 50))
       // multi-seed twin of the sssp_bfs sweep: one source per replica, else
       // the fold reaches only copy 0 and measures 1/K of the work — seeds
       // ride as zero-distance rows in the stored relation
       val sw10Seeds = (0 until k).map(i => 1L + i * coreBase)
-      val sw10Stored = sw10Seeds.map(s => ShortestPath.runWeighted(cut(w10, true), s, 50)
+      val sw10Stored = Fixpoint.materializedLeaf(sw10Seeds
+        .map(s => ShortestPath.runWeighted(cut(w10, true), s, 50)
           .filter(col("dist") =!= Double.PositiveInfinity))
         .reduce(_ unionByName _)
-        .groupBy("vertex").agg(min("dist").as("dist"))
-        .localCheckpoint(eager = true)
+        .groupBy("vertex").agg(min("dist").as("dist")))
       report("sssp_w_inc_fold",
-        time2("swi")(ShortestPath.incrementalWeighted(sw1Stored, cut(w1, false), w1, 50)),
-        time2("swi10")(ShortestPath.incrementalWeighted(sw10Stored, cut(w10, false), w10, 50)))
+        ShortestPath.incrementalWeighted(sw1Stored, cut(w1, false), w1, 50),
+        ShortestPath.incrementalWeighted(sw10Stored, cut(w10, false), w10, 50))
     }
     spark.stop()
   }
@@ -402,21 +383,12 @@ object SkewScale {
     spark.sparkContext.setLogLevel("WARN")
     import graft.graph._
 
-    def time2(f: => DataFrame): Double = {
-      def once: Double = {
-        val keep = spark.sparkContext.getPersistentRDDs.keySet
-        val t0 = System.nanoTime()
-        f.write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
-          if (!keep.contains(id)) r.unpersist(blocking = false)
-        }
-        dt
-      }
-      math.min(once, once)
-    }
-    def report(name: String, tu: Double, ts: Double): Unit =
+    // min of 2 measured runs each, as GraphScale
+    val meter = QueryMeter(spark)
+    def report(name: String, fu: => DataFrame, fs: => DataFrame): Unit = {
+      val (tu, ts) = (meter.run(samples = 2)(fu).seconds, meter.run(samples = 2)(fs).seconds)
       println(f"[skewscale] $name%-18s ${k}x-uniform=$tu%.2fs ${k}x-skew=$ts%.2fs penalty=${ts / tu}%.2fx")
+    }
     // honest denominators: hub rewiring collapses some edges under
     // distinct, so the skewed graph is slightly smaller — print both
     // sizes (and the hub's degree) next to every graph penalty
@@ -428,39 +400,35 @@ object SkewScale {
     }
 
     // ---- graph side: one global hub spanning the copies
-    val core = Graphs.lineitemEdges(spark, sfDir, 300).localCheckpoint(eager = true)
-    lazy val coreU = Inflate.replicateGraph(core, k)._1.localCheckpoint(eager = true)
-    lazy val coreS = Inflate.replicateGraphSkewed(core, k, hubEvery)._1
-      .localCheckpoint(eager = true)
+    val core = Fixpoint.materializedLeaf(Graphs.lineitemEdges(spark, sfDir, 300))
+    lazy val coreU = Fixpoint.materializedLeaf(Inflate.replicateGraph(core, k)._1)
+    lazy val coreS =
+      Fixpoint.materializedLeaf(Inflate.replicateGraphSkewed(core, k, hubEvery)._1)
     if (Seq("matching", "mis", "walks", "coreness",
         "coreness_window").exists(want)) {
       coreU.count(); coreS.count()
     }
 
     if (want("triangles")) {
-      val triCut = core.filter(col("src") <= 200 && col("dst") <= 200)
-        .localCheckpoint(eager = true)
-      val triU = Inflate.replicateGraph(triCut, k)._1.localCheckpoint(eager = true)
-      val triS = Inflate.replicateGraphSkewed(triCut, k, hubEvery)._1
-        .localCheckpoint(eager = true)
+      val triCut = Fixpoint.materializedLeaf(core.filter(col("src") <= 200 && col("dst") <= 200))
+      val triU = Fixpoint.materializedLeaf(Inflate.replicateGraph(triCut, k)._1)
+      val triS = Fixpoint.materializedLeaf(Inflate.replicateGraphSkewed(triCut, k, hubEvery)._1)
       reportEdges("triangles", triU, triS)
       report("triangles",
-        time2(Triangles.countShuffle(triU, maxId = Long.MaxValue)),
-        time2(Triangles.countShuffle(triS, maxId = Long.MaxValue)))
+        Triangles.countShuffle(triU, maxId = Long.MaxValue),
+        Triangles.countShuffle(triS, maxId = Long.MaxValue))
     }
     if (want("ktruss_sparse")) {
-      val sparse = graft.core.Tables.lineitem(spark, sfDir).select(
+      val sparse = Fixpoint.materializedLeaf(graft.core.Tables.lineitem(spark, sfDir).select(
           (col("l_orderkey") % 20000).cast("long").as("src"),
           (col("l_partkey") % 20000).cast("long").as("dst"))
-        .filter(col("src") =!= col("dst")).distinct()
-        .localCheckpoint(eager = true)
-      val ktU = Inflate.replicateGraph(sparse, k)._1.localCheckpoint(eager = true)
-      val ktS = Inflate.replicateGraphSkewed(sparse, k, hubEvery)._1
-        .localCheckpoint(eager = true)
+        .filter(col("src") =!= col("dst")).distinct())
+      val ktU = Fixpoint.materializedLeaf(Inflate.replicateGraph(sparse, k)._1)
+      val ktS = Fixpoint.materializedLeaf(Inflate.replicateGraphSkewed(sparse, k, hubEvery)._1)
       reportEdges("ktruss_sparse", ktU, ktS)
       report("ktruss_sparse",
-        time2(Graphs.kTruss(ktU, 3, maxWedges = Long.MaxValue)),
-        time2(Graphs.kTruss(ktS, 3, maxWedges = Long.MaxValue)))
+        Graphs.kTruss(ktU, 3, maxWedges = Long.MaxValue),
+        Graphs.kTruss(ktS, 3, maxWedges = Long.MaxValue))
     }
     if (Seq("matching", "mis", "walks", "coreness", "coreness_window").exists(want))
       reportEdges("core", coreU, coreS)
@@ -471,24 +439,24 @@ object SkewScale {
         val seeds = Graphs.vertices(e).filter(col("vertex") % 3 === 0)
         Graphs.walkCooccurrence(Graphs.deterministicWalks(e, seeds, 4), 2)
       }
-      report("walks", time2(wk(coreU)), time2(wk(coreS)))
+      report("walks", wk(coreU), wk(coreS))
     }
     // the rank-window twin under the hub: the per-round h-index window
     // sorts the hub's whole degree on one task — the documented hazard,
     // priced (round 13 demoted it to Graphs.corenessWindow)
     if (want("coreness_window")) report("coreness_window",
-      time2(Graphs.corenessWindow(coreU)), time2(Graphs.corenessWindow(coreS)))
+      Graphs.corenessWindow(coreU), Graphs.corenessWindow(coreS))
     // the bucketed DEFAULT under the SAME hub: the defense, priced — the
     // histogram shuffle + histogram-sized window must stay ~flat where
     // the rank window pays the hub's degree on one task
     if (want("coreness")) report("coreness",
-      time2(Graphs.coreness(coreU)), time2(Graphs.coreness(coreS)))
+      Graphs.coreness(coreU), Graphs.coreness(coreS))
     if (want("matching")) report("matching",
-      time2(Graphs.maximalMatching(coreU)),
-      time2(Graphs.maximalMatching(coreS)))
+      Graphs.maximalMatching(coreU),
+      Graphs.maximalMatching(coreS))
     if (want("mis")) report("mis",
-      time2(Graphs.maximalIndependentSet(coreU)),
-      time2(Graphs.maximalIndependentSet(coreS)))
+      Graphs.maximalIndependentSet(coreU),
+      Graphs.maximalIndependentSet(coreS))
 
     // ---- relational side: one hot join/group key whose row count grows
     // with K — the classic warehouse skew (a null-ish default key, a
@@ -499,10 +467,7 @@ object SkewScale {
       def liRep(skew: Boolean): DataFrame = {
         val li = graft.core.Tables.lineitem(spark, sfDir)
           .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
-        val base = li.agg(max(col("l_orderkey"))).first().getLong(0) + 1L
-        val rep = (0 until k).map(i =>
-          li.withColumn("l_orderkey", col("l_orderkey") + lit(i * base)))
-          .reduce(_ unionByName _)
+        val rep = Inflate.replicate(li, k, Map("l_orderkey" -> Inflate.base(li, "l_orderkey")))
         if (!skew) rep
         // 1-in-hubEvery lines (same slice per copy) collapse onto ONE
         // order key: its row count grows with K·|lineitem|/hubEvery
@@ -513,35 +478,32 @@ object SkewScale {
       def ordRep: DataFrame = {
         val ord = graft.core.Tables.orders(spark, sfDir)
           .select("o_orderkey", "o_custkey", "o_orderdate")
-        val base = ord.agg(max(col("o_orderkey"))).first().getLong(0) + 1L
-        (0 until k).map(i =>
-          ord.withColumn("o_orderkey", col("o_orderkey") + lit(i * base)))
-          .reduce(_ unionByName _)
+        Inflate.replicate(ord, k, Map("o_orderkey" -> Inflate.base(ord, "o_orderkey")))
           // the hot key needs a match or the skewed probe rows die at
           // the join instead of exercising the skewed build
           .unionByName(spark.range(1).select(lit(0L).as("o_orderkey"),
             lit(1L).as("o_custkey"), expr("DATE '1995-01-01'").as("o_orderdate")))
       }
       // strict vals: an eager checkpoint must materialize OUTSIDE the
-      // timed closure, or time2's cleanup unpersists it between samples
+      // measured runs, or the first run releases it before the second
       // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — the GraphScale dereference
       // rule)
-      val liU = liRep(skew = false).localCheckpoint(eager = true)
-      val liS = liRep(skew = true).localCheckpoint(eager = true)
+      val liU = Fixpoint.materializedLeaf(liRep(skew = false))
+      val liS = Fixpoint.materializedLeaf(liRep(skew = true))
       if (want("join")) {
-        val ords = ordRep.localCheckpoint(eager = true)
+        val ords = Fixpoint.materializedLeaf(ordRep)
         def q(li: DataFrame): DataFrame = li
           .join(ords, col("l_orderkey") === col("o_orderkey"))
           .groupBy("o_custkey")
           .agg(count(lit(1)).as("n"),
             sum(col("l_quantity").cast("decimal(18,2)")).as("qty"))
-        report("join", time2(q(liU)), time2(q(liS)))
+        report("join", q(liU), q(liS))
       }
       if (want("groupby")) {
         def q(li: DataFrame): DataFrame = li.groupBy("l_orderkey")
           .agg(count(lit(1)).as("n"),
             sum(col("l_extendedprice").cast("decimal(18,2)")).as("rev"))
-        report("groupby", time2(q(liU)), time2(q(liS)))
+        report("groupby", q(liU), q(liS))
       }
     }
 
@@ -556,11 +518,8 @@ object SkewScale {
         "editjoin2").exists(want)) {
       val cust = graft.core.Tables.customer(spark, sfDir)
         .select("c_custkey")
-      val cbase = cust.agg(max(col("c_custkey"))).first().getLong(0) + 1L
+      val rep = Inflate.replicate(cust, k, Map("c_custkey" -> Inflate.base(cust, "c_custkey")))
       def crep(hot: Boolean): DataFrame = {
-        val rep = (0 until k).map(i =>
-          cust.withColumn("c_custkey", col("c_custkey") + lit(i * cbase)))
-          .reduce(_ unionByName _)
         val named = rep.withColumn("c_name",
           format_string("Customer#%09d", col("c_custkey")))
         if (!hot) named
@@ -568,18 +527,18 @@ object SkewScale {
           when(col("c_custkey") % hotEvery === 0, lit("Customer#000000000"))
             .otherwise(col("c_name")))
       }
-      val cU = crep(hot = false).localCheckpoint(eager = true)
-      val cS = crep(hot = true).localCheckpoint(eager = true)
+      val cU = Fixpoint.materializedLeaf(crep(hot = false))
+      val cS = Fixpoint.materializedLeaf(crep(hot = true))
       def ej(df: DataFrame): DataFrame =
         graft.ops.EditJoin.pairsWithin1(df, "c_custkey", "c_name")
       if (want("editjoin"))
-        report("editjoin", time2(ej(cU)), time2(ej(cS)))
+        report("editjoin", ej(cU), ej(cS))
       // the grouped twin under the SAME duplicate identity: one group
       // row carries the C(n,2) mass the exploded form must write out
       if (want("editjoin_grouped")) {
         def ejg(df: DataFrame): DataFrame =
           graft.ops.EditJoin.pairsWithin1Grouped(df, "c_custkey", "c_name")
-        report("editjoin_grouped", time2(ejg(cU)), time2(ejg(cS)))
+        report("editjoin_grouped", ejg(cU), ejg(cS))
       }
       // sorted-neighborhood under the same duplicate identity: the tie
       // block lands in one range partition but the per-row work stays
@@ -588,7 +547,7 @@ object SkewScale {
       if (want("sorted_block")) {
         def snb(df: DataFrame): DataFrame =
           graft.ops.SortedNeighborhood.pairs(df, "c_custkey", "c_name", 5)
-        report("sorted_block", time2(snb(cU)), time2(snb(cS)))
+        report("sorted_block", snb(cU), snb(cS))
       }
       // k=2 blocking at scale: SPARSE serials (×37) keep true distance-2
       // pairs rare, so the row prices the blocking machinery (the L²/2
@@ -604,7 +563,7 @@ object SkewScale {
         def ej2(df: DataFrame): DataFrame =
           graft.ops.EditJoin.pairsWithin2(sparse(df), "c_custkey", "c_name",
             maxCandidates = Long.MaxValue) // the sweep prices, never refuses
-        report("editjoin2", time2(ej2(cU)), time2(ej2(cS)))
+        report("editjoin2", ej2(cU), ej2(cS))
       }
     }
 
@@ -612,15 +571,10 @@ object SkewScale {
     def docReplicas(hot: Boolean): DataFrame = {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
         .select("doc_id", "text")
-      val base = docs.agg(max(col("doc_id"))).first().getLong(0) + 1L
+      val base = Inflate.base(docs, "doc_id")
       val boiler = (0 until 60).map(i => s"bp$i").mkString(" ")
-      val rep = (0 until k).map { i =>
-        val d = docs.withColumn("doc_id", col("doc_id") + lit(i * base))
-        if (i == 0) d
-        else d.withColumn("text",
-          expr(s"concat_ws(' ', transform(split(text, ' '), (w, j) -> " +
-            s"CASE WHEN j % 3 = 2 THEN concat('r$i', 'x', j) ELSE w END))"))
-      }.reduce(_ unionByName _)
+      val rep = Inflate.replicate(docs, k, Map("doc_id" -> base),
+        (d, i) => if (i == 0) d else Inflate.tagWords(d, i))
       if (!hot) rep
       else rep.withColumn("text",
         // 1-in-hotEvery docs (same slice in every copy) become a shared
@@ -646,12 +600,8 @@ object SkewScale {
         "ewma", "holt", "cusum", "quantile", "cms", "bloom",
         "hll", "mg").exists(want)) {
       val ev = spark.read.parquet(s"$sfDir/events.parquet")
-      val eidBase = ev.agg(max(col("event_id"))).first().getLong(0) + 1L
-      val uidBase = ev.agg(max(col("user_id"))).first().getLong(0) + 1L
-      val rep = (0 until k).map(i =>
-        ev.withColumn("event_id", col("event_id") + lit(i * eidBase))
-          .withColumn("user_id", col("user_id") + lit(i * uidBase)))
-        .reduce(_ unionByName _)
+      val rep = Inflate.replicate(ev, k, Map("event_id" -> Inflate.base(ev, "event_id"),
+        "user_id" -> Inflate.base(ev, "user_id")))
       val uDir = "/tmp/graft_skew_events_u"
       val sDir = "/tmp/graft_skew_events_s"
       rep.write.mode(SaveMode.Overwrite).parquet(s"$uDir/events.parquet")
@@ -680,7 +630,7 @@ object SkewScale {
         // rows per input partition before it can pile onto one task
         "holt" -> "q_time_holt", "cusum" -> "q_time_cusum")
         .foreach { case (m, qn) =>
-          if (want(m)) report(m, time2(q(qn, uDir)), time2(q(qn, sDir)))
+          if (want(m)) report(m, q(qn, uDir), q(qn, sDir))
         }
       // per-USER quantile profile under the hot user: the sketch's
       // hot-key-safe-by-construction claim, priced — the shuffle carries
@@ -696,7 +646,7 @@ object SkewScale {
             graft.ops.QuantileSketch.sketch(e, Seq("user_id"), "v"),
             Seq("user_id"), Seq(50, 90, 99))
         }
-        report("quantile", time2(qsk(uDir)), time2(qsk(sDir)))
+        report("quantile", qsk(uDir), qsk(sDir))
       }
       // per-USER Count-Min frequency sketch under the hot user: the CMS
       // twin of the quantile claim — the shuffle carries ≤ Depth·Width
@@ -711,7 +661,7 @@ object SkewScale {
               expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("k"))
           graft.ops.CountMin.sketch(e, Seq("user_id"), "k")
         }
-        report("cms", time2(csk(uDir)), time2(csk(sDir)))
+        report("cms", csk(uDir), csk(sDir))
       }
       // per-USER Bloom filter under the hot user: same fixed-size-state
       // argument via map-side partial DISTINCT (bits fold before the
@@ -723,7 +673,7 @@ object SkewScale {
               expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("k"))
           graft.ops.BloomSketch.sketch(e, Seq("user_id"), "k")
         }
-        report("bloom", time2(bsk(uDir)), time2(bsk(sDir)))
+        report("bloom", bsk(uDir), bsk(sDir))
       }
       // per-USER HLL registers under the hot user — the fourth sketch
       // family's sweep row: ≤ 64 register ints per group via map-side
@@ -735,7 +685,7 @@ object SkewScale {
               expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("k"))
           graft.ops.Hll.registers(e, Seq("user_id"), "k")
         }
-        report("hll", time2(hsk(uDir)), time2(hsk(sDir)))
+        report("hll", hsk(uDir), hsk(sDir))
       }
       // per-USER Misra–Gries heavy-hitters summary under the hot user —
       // the FIFTH family member's sweep row: the build's exact batch
@@ -752,38 +702,38 @@ object SkewScale {
               expr("CAST(floor(sqrt(CAST(value AS DECIMAL(18,2)) * 100)) AS BIGINT)").as("k"))
           graft.ops.MisraGries.summary(e, Seq("user_id"), "k")
         }
-        report("mg", time2(msk(uDir)), time2(msk(sDir)))
+        report("mg", msk(uDir), msk(sDir))
       }
     }
 
     if (Seq("minhash", "minhash_capped", "substring", "boilerplate",
         "novelty", "importance", "winnow", "winnow_capped").exists(want)) {
-      val dU = docReplicas(hot = false).localCheckpoint(eager = true)
-      val dS = docReplicas(hot = true).localCheckpoint(eager = true)
+      val dU = Fixpoint.materializedLeaf(docReplicas(hot = false))
+      val dS = Fixpoint.materializedLeaf(docReplicas(hot = true))
       if (want("minhash")) report("minhash",
-        time2(graft.pipeline.Dedup.minhashDedup(dU, 0.8)),
-        time2(graft.pipeline.Dedup.minhashDedup(dS, 0.8)))
+        graft.pipeline.Dedup.minhashDedup(dU, 0.8),
+        graft.pipeline.Dedup.minhashDedup(dS, 0.8))
       // the band-key postings cap (the fix the uncapped row motivates):
       // 256 >> any true near-dup family, << the boilerplate key occupancy
       if (want("minhash_capped")) report("minhash_capped",
-        time2(graft.pipeline.Dedup.minhashDedup(dU, 0.8, maxBandOcc = 256L)),
-        time2(graft.pipeline.Dedup.minhashDedup(dS, 0.8, maxBandOcc = 256L)))
+        graft.pipeline.Dedup.minhashDedup(dU, 0.8, maxBandOcc = 256L),
+        graft.pipeline.Dedup.minhashDedup(dS, 0.8, maxBandOcc = 256L))
       if (want("substring")) report("substring",
-        time2(graft.pipeline.Dedup.substringSpans(dU, 8, 16, 64L)),
-        time2(graft.pipeline.Dedup.substringSpans(dS, 8, 16, 64L)))
+        graft.pipeline.Dedup.substringSpans(dU, 8, 16, 64L),
+        graft.pipeline.Dedup.substringSpans(dS, 8, 16, 64L))
       // frequency-based boilerplate scrub UNDER the boilerplate regime:
       // the operator's claim is that a hot template makes it cheaper, not
       // slower (df-count partials collapse the hot gram; no pairwise
       // join exists to blow up) — while the pairwise path's cap DROPS
       // the template (recall boundary), this one removes it, priced here
       if (want("boilerplate")) report("boilerplate",
-        time2(graft.pipeline.Dedup.boilerplateScrub(dU, 8, minDf = 5L)),
-        time2(graft.pipeline.Dedup.boilerplateScrub(dS, 8, minDf = 5L)))
+        graft.pipeline.Dedup.boilerplateScrub(dU, 8, minDf = 5L),
+        graft.pipeline.Dedup.boilerplateScrub(dS, 8, minDf = 5L))
       // novelty under shared boilerplate: the min-carrier agg sees ONE
       // hot gram key per template position — map-side partials absorb it
       if (want("novelty")) report("novelty",
-        time2(graft.pipeline.TextAnalysis.noveltyScores(dU, 4)),
-        time2(graft.pipeline.TextAnalysis.noveltyScores(dS, 4)))
+        graft.pipeline.TextAnalysis.noveltyScores(dU, 4),
+        graft.pipeline.TextAnalysis.noveltyScores(dS, 4))
       // importance under shared boilerplate: each template gram becomes
       // ONE hot r_df key — count partials absorb it; the broadcast t_df
       // side is untouched and the raw side never goes pairwise
@@ -792,17 +742,17 @@ object SkewScale {
           graft.pipeline.TextAnalysis.importanceScores(
             d.filter(col("doc_id") % 50 =!= 1),
             d.filter(col("doc_id") % 50 === 1), 2)
-        report("importance", time2(imp(dU)), time2(imp(dS)))
+        report("importance", imp(dU), imp(dS))
       }
       // winnow under shared boilerplate: every template doc carries the
       // same ~30 selected prints, so the uncapped pair join goes quadratic
       // in the template count — the df cap is the defense, priced next row
       if (want("winnow")) report("winnow",
-        time2(graft.pipeline.Dedup.winnowPairs(dU)),
-        time2(graft.pipeline.Dedup.winnowPairs(dS)))
+        graft.pipeline.Dedup.winnowPairs(dU),
+        graft.pipeline.Dedup.winnowPairs(dS))
       if (want("winnow_capped")) report("winnow_capped",
-        time2(graft.pipeline.Dedup.winnowPairs(dU, 3, 4, 4L, 256L)),
-        time2(graft.pipeline.Dedup.winnowPairs(dS, 3, 4, 4L, 256L)))
+        graft.pipeline.Dedup.winnowPairs(dU, 3, 4, 4L, 256L),
+        graft.pipeline.Dedup.winnowPairs(dS, 3, 4, 4L, 256L))
     }
     spark.stop()
   }

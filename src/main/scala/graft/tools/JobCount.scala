@@ -1,16 +1,18 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-
-/** Dev-only: count Spark jobs/stages/tasks per catalog query — the
-  * load-independent evidence for barrier-fusion claims (wall clock on a
-  * shared box is noise; the job count per fixpoint round is mechanical).
+/** Dev-only: the per-query job meters — the load-independent evidence for
+  * barrier-fusion claims (wall clock on a shared box is noise; the job
+  * count per fixpoint round is mechanical) — and the per-job timeline that
+  * splits a driver-loop query's wall into its jobs and, by subtraction, the
+  * driver-side gaps between them (Catalyst planning, loop logic).
   *
-  * Usage: runMain graft.tools.JobCount q1,q2,... — runs each query once
-  * against SPARK_GRAFT_SF_DIR with the noop sink (the Bench action) and
-  * prints one line per query: jobs, stages, tasks, and what the query left
-  * cached (RDDs, blocks, bytes).
+  * Usage: runMain graft.tools.JobCount q1,q2,... — after one warm-up query,
+  * runs each query once against SPARK_GRAFT_SF_DIR as one
+  * [[QueryMeter.run]] (the noop sink, the Bench action) and prints one line
+  * per job (start offset, duration, gap since the previous job's end, in
+  * ms), then one summary line: jobs, stages, tasks, wall, Σ job time, Σ gap
+  * and the tail after the last job (seconds), and what the query left
+  * cached (RDDs, blocks, bytes; read after a GC).
   */
 object JobCount {
   def main(args: Array[String]): Unit = {
@@ -23,40 +25,25 @@ object JobCount {
       sys.exit(2)
     }
     val spark = graft.core.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val jobs = new AtomicLong; val stages = new AtomicLong; val tasks = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
-    })
-    // warmup (JIT + codegen), not counted in the report
-    try SparkEntryWarm.warm(spark) catch { case _: Throwable => () }
+    val meter = QueryMeter(spark)
+    // warm-up (JIT + codegen), not reported
+    try meter.run()(graft.SparkEntry.entry(spark).count())
+    catch { case e: Exception => System.err.println(s"[jobcount] warm-up failed: $e") }
     names.foreach { n =>
-      // deliver every event of the warm-up or previous query before the
-      // reset, so late events are not counted against this query
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
-      jobs.set(0); stages.set(0); tasks.set(0)
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
-      // the leak meter, read before the sweep: cached blocks and their
-      // memory + disk bytes (perfbench's iterate.live_blocks / live_bytes)
-      val live = spark.sparkContext.getRDDStorageInfo.toSeq
-      val liveBlocks = live.map(_.numCachedPartitions.toLong).sum
-      val liveBytes = live.map(r => r.memSize + r.diskSize).sum
-      println(f"[jobcount] $n jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} wall=$dt%.2f" +
-        s" live_rdds=${live.count(_.numCachedPartitions > 0)} live_blocks=$liveBlocks live_bytes=$liveBytes")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      val r = meter.run()(graft.SparkEntry.queries(n)(spark, sfDir))
+      var prevEnd = r.startMs
+      var jobMs = 0L; var gapMs = 0L
+      r.spans.zipWithIndex.foreach { case ((s, e), i) =>
+        val gap = math.max(0L, s - prevEnd)
+        println(f"[jobcount] $n job#$i%-3d +${s - r.startMs}%6dms dur=${e - s}%6dms gap=$gap%6dms")
+        jobMs += e - s; gapMs += gap
+        prevEnd = math.max(prevEnd, e)
+      }
+      val tailMs = math.max(0L, r.startMs + (r.seconds * 1000).toLong - prevEnd)
+      println(f"[jobcount] $n jobs=${r.jobs} stages=${r.stages} tasks=${r.tasks} wall=${r.seconds}%.2f" +
+        f" sum_job=${jobMs / 1e3}%.2f sum_gap=${gapMs / 1e3}%.2f tail=${tailMs / 1e3}%.2f" +
+        s" live_rdds=${r.live.rdds} live_blocks=${r.live.blocks} live_bytes=${r.live.bytes}")
     }
     spark.stop()
-  }
-}
-
-private object SparkEntryWarm {
-  def warm(spark: org.apache.spark.sql.SparkSession): Unit = {
-    graft.SparkEntry.entry(spark).count(); ()
   }
 }

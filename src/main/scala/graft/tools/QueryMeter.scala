@@ -1,0 +1,114 @@
+package graft.tools
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicLong
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{Dataset, GraftBridge, SparkSession}
+import graft.iterate.Fixpoint
+
+/** The dev tools' one measurement listener: jobs, stages and tasks, each
+  * job's start/end span and the shuffle records written, counted on one
+  * SparkContext while the meter is attached.
+  *
+  * [[run]] is the tools' one measured run; every other read first delivers
+  * every event posted so far. */
+final class QueryMeter private (spark: SparkSession) extends SparkListener with AutoCloseable {
+  import QueryMeter._
+
+  private val sc = spark.sparkContext
+  private val jobCount, stageCount, taskCount, shuffleRecords = new AtomicLong
+  private val starts = TrieMap.empty[Int, Long]
+  private val spans = new ConcurrentLinkedQueue[(Long, Long)]
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = {
+    jobCount.incrementAndGet()
+    starts.put(j.jobId, j.time)
+    ()
+  }
+  override def onJobEnd(j: SparkListenerJobEnd): Unit =
+    starts.remove(j.jobId).foreach(s => spans.add((s, j.time)))
+  override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+    stageCount.incrementAndGet(); ()
+  }
+  override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+    taskCount.incrementAndGet()
+    if (t.taskMetrics != null)
+      shuffleRecords.addAndGet(t.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    ()
+  }
+
+  /** jobs started since the meter was attached or its last run began */
+  def jobs: Long = { GraftBridge.drainListenerBus(sc); jobCount.get }
+
+  /** The measured run: drains the bus and resets the counters, times `body`
+    * (a DataFrame result is written to the noop sink; any other result is
+    * the run's `value`), drains again and reads the leak meter, and then
+    * releases every materialization `body` took: the run is one
+    * [[Fixpoint.scope]], so relations pinned before it survive and a leaf
+    * first taken inside it does not. Of `samples` runs, the fastest. */
+  def run(samples: Int = 1)(body: => Any): Run =
+    (1 to samples).map(_ => Fixpoint.scope(once(body))).minBy(_.seconds)
+
+  private def once(body: => Any): Run = {
+    GraftBridge.drainListenerBus(sc)
+    Seq(jobCount, stageCount, taskCount, shuffleRecords).foreach(_.set(0))
+    starts.clear(); spans.clear()
+    val startMs = System.currentTimeMillis()
+    val t0 = System.nanoTime()
+    val result = body
+    val value = result match {
+      case ds: Dataset[_] => ds.write.format("noop").mode("overwrite").save(); ()
+      case v => v
+    }
+    val seconds = (System.nanoTime() - t0) / 1e9
+    GraftBridge.drainListenerBus(sc)
+    val live = leak()
+    // the result's own leaves count as left cached, whatever the JIT
+    // decides about the liveness of `result`
+    java.lang.ref.Reference.reachabilityFence(result)
+    Run(seconds, startMs, jobCount.get, stageCount.get, taskCount.get, shuffleRecords.get,
+      spans.asScala.toSeq.sortBy(_._1), live, value)
+  }
+
+  /** The cached RDDs still reachable from the driver, read before the run's
+    * scope releases what the body took (so: what the body would leave
+    * cached). The context's persistent-RDD map is weak-valued, so an RDD
+    * nothing references stays a key until a GC collects it; after the
+    * explicit GC the count no longer depends on when the last one ran. */
+  private def leak(): Live = {
+    System.gc()
+    GraftBridge.drainListenerBus(sc)
+    val reachable = sc.getPersistentRDDs.keySet
+    val cached = sc.getRDDStorageInfo.toSeq
+      .filter(r => reachable(r.id) && r.numCachedPartitions > 0)
+    Live(cached.size, cached.map(_.numCachedPartitions.toLong).sum,
+      cached.map(r => r.memSize + r.diskSize).sum)
+  }
+
+  /** detaches the listener */
+  def close(): Unit = sc.removeSparkListener(this)
+}
+
+object QueryMeter {
+
+  /** Attaches a meter to `spark`'s context, after every event posted so
+    * far has been delivered, so it counts only what runs from here on. */
+  def apply(spark: SparkSession): QueryMeter = {
+    GraftBridge.drainListenerBus(spark.sparkContext)
+    val meter = new QueryMeter(spark)
+    spark.sparkContext.addSparkListener(meter)
+    meter
+  }
+
+  /** One measured run: wall seconds from `startMs` (epoch ms, the clock of
+    * the job `spans`), the counters and the leak meter, and `value`, the
+    * body's result unless it was a DataFrame. */
+  final case class Run(seconds: Double, startMs: Long, jobs: Long, stages: Long, tasks: Long,
+      shuffled: Long, spans: Seq[(Long, Long)], live: Live, value: Any)
+
+  /** cached RDDs, their cached blocks and memory + disk bytes */
+  final case class Live(rdds: Int, blocks: Long, bytes: Long)
+}

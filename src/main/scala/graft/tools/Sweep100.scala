@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.iterate.Fixpoint
 
 /** Dev-only single-sample 100× sweep rows (r14 verdict item 6) for the
   * round-14/15 families whose min-of-2 SkewScale run exceeds a session
@@ -24,44 +25,27 @@ object Sweep100 {
     spark.sparkContext.setLogLevel("WARN")
     // shuffle-record meter (the IncAb convention): local wall is
     // job-latency-floor dominated; the 100 TB property is what MOVES
-    val shuffled = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) shuffled.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          ()
-        }
-      })
-    def t1(name: String)(f: => DataFrame): Unit = {
-      val keep = spark.sparkContext.getPersistentRDDs.keySet
-      GraftBridge.drainListenerBus(spark.sparkContext)
-      val s0 = shuffled.get()
-      val t0 = System.nanoTime()
-      f.write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
-        if (!keep.contains(id)) r.unpersist(blocking = false)
-      }
-      GraftBridge.drainListenerBus(spark.sparkContext)
-      println(f"[sweep100] $name%-22s ${k}x $dt%8.2f s  " +
-        f"shuffled=${shuffled.get() - s0} (single sample)")
+    val meter = QueryMeter(spark)
+    def row(name: String)(f: => DataFrame): Unit = {
+      val r = meter.run()(f)
+      println(f"[sweep100] $name%-22s ${k}x ${r.seconds}%8.2f s  " +
+        f"shuffled=${r.shuffled} (single sample)")
+    }
+    // k disjoint copies of the customer keys and of the event log
+    lazy val cust = spark.read.parquet(s"$sfDir/customer.parquet").select("c_custkey")
+    lazy val custBase = Inflate.base(cust, "c_custkey")
+    lazy val custRep = Inflate.replicate(cust, k, Map("c_custkey" -> custBase))
+    def eventRep(cols: String*): DataFrame = {
+      val ev = spark.read.parquet(s"$sfDir/events.parquet").select(cols.map(col): _*)
+      Inflate.replicate(ev, k, Map("event_id" -> Inflate.base(ev, "event_id")))
     }
     if (want("editjoin2")) {
       // the SkewScale sparse-serial recipe: replicated custkeys respaced
       // by x37 so near-miss density prices the blocking machinery
-      val cust = spark.read.parquet(s"$sfDir/customer.parquet")
-        .select("c_custkey")
-      val cbase = cust.agg(max(col("c_custkey"))).first().getLong(0) + 1L
-      val rep = (0 until k).map(i =>
-          cust.withColumn("c_custkey", col("c_custkey") + lit(i * cbase)))
-        .reduce(_ unionByName _)
-        .withColumn("c_name",
-          format_string("Customer#%09d", col("c_custkey") * 37))
-        .localCheckpoint(eager = true)
+      val rep = Fixpoint.materializedLeaf(custRep
+        .withColumn("c_name", format_string("Customer#%09d", col("c_custkey") * 37)))
       println(s"[sweep100] editjoin2 corpus: ${rep.count()} rows")
-      t1("editjoin2")(graft.ops.EditJoin.pairsWithin2(rep,
+      row("editjoin2")(graft.ops.EditJoin.pairsWithin2(rep,
         "c_custkey", "c_name", maxCandidates = Long.MaxValue))
     }
     if (want("editjoin2_grouped")) {
@@ -73,41 +57,28 @@ object Sweep100 {
       // n_pairs output encodes dup1·dup2 identity mass per name pair —
       // k² per cross pair and C(k,2) within a name — which the exploded
       // form would have to WRITE OUT as (k·distinct)² -scale rows.
-      val cust = spark.read.parquet(s"$sfDir/customer.parquet")
-        .select("c_custkey")
-      val cbase = cust.agg(max(col("c_custkey"))).first().getLong(0) + 1L
-      val rep = (0 until k).map(i =>
-          cust.withColumn("c_custkey", col("c_custkey") + lit(i * cbase)))
-        .reduce(_ unionByName _)
-        .withColumn("c_name",
-          format_string("Customer#%09d", (col("c_custkey") % cbase) * 37))
-        .localCheckpoint(eager = true)
+      val rep = Fixpoint.materializedLeaf(custRep.withColumn("c_name",
+        format_string("Customer#%09d", (col("c_custkey") % custBase) * 37)))
       println(s"[sweep100] editjoin2_grouped corpus: ${rep.count()} rows, " +
         s"distinct names: ${rep.select("c_name").distinct().count()}")
-      t1("editjoin2_grouped")(graft.ops.EditJoin.pairsWithin2Grouped(rep,
+      row("editjoin2_grouped")(graft.ops.EditJoin.pairsWithin2Grouped(rep,
         "c_custkey", "c_name", maxCandidates = Long.MaxValue))
     }
     if (want("mg") || want("mg_hot")) {
       // the SkewScale mg shape: replicated events, sqrt-ramp key; the hot
       // twin collapses 1-in-50 events onto ONE user (the bot shape)
-      val ev = spark.read.parquet(s"$sfDir/events.parquet")
-        .select("event_id", "user_id", "value")
-      val ebase = ev.agg(max(col("event_id"))).first().getLong(0) + 1L
+      val rep = eventRep("event_id", "user_id", "value")
       def erep(hot: Boolean): DataFrame = {
-        val rep = (0 until k).map(i =>
-            ev.withColumn("event_id", col("event_id") + lit(i * ebase)))
-          .reduce(_ unionByName _)
         val u = if (!hot) rep
           else rep.withColumn("user_id",
             when(col("event_id") % 50 === 0, lit(1L)).otherwise(col("user_id")))
-        u.select(col("user_id"),
+        Fixpoint.materializedLeaf(u.select(col("user_id"),
           expr("CAST(floor(sqrt(CAST(value AS DECIMAL(18,2)) * 100)) AS BIGINT)")
-            .as("k"))
-          .localCheckpoint(eager = true)
+            .as("k")))
       }
-      if (want("mg")) t1("mg_uniform")(
+      if (want("mg")) row("mg_uniform")(
         graft.ops.MisraGries.summary(erep(hot = false), Seq("user_id"), "k"))
-      if (want("mg_hot")) t1("mg_hot")(
+      if (want("mg_hot")) row("mg_hot")(
         graft.ops.MisraGries.summary(erep(hot = true), Seq("user_id"), "k"))
     }
     if (want("hh")) {
@@ -118,21 +89,16 @@ object Sweep100 {
       // key (≥ half the corpus — and eps·N ≈ T here, so CMS error drags
       // tail keys in too); the MG route shuffles ≤ partitions·(k+1)
       // counter rows for k = N/T + 1 ≈ 2001. Same exact output.
-      val ev = spark.read.parquet(s"$sfDir/events.parquet").select("event_id")
-      val ebase = ev.agg(max(col("event_id"))).first().getLong(0) + 1L
-      val keyed = (0 until k).map(i =>
-          ev.withColumn("event_id", col("event_id") + lit(i * ebase)))
-        .reduce(_ unionByName _)
+      val keyed = Fixpoint.materializedLeaf(eventRep("event_id")
         .select(when(col("event_id") % 2 === 0, col("event_id") % 1000)
-          .otherwise(lit(1000L) + col("event_id")).as("k"))
-        .localCheckpoint(eager = true)
+          .otherwise(lit(1000L) + col("event_id")).as("k")))
       val n = keyed.count()
       val thr = n / 2000L
       println(s"[sweep100] hh corpus: $n rows, threshold $thr, " +
         s"mg candidate budget ${n / thr + 1L}")
-      t1("hh_cms")(graft.ops.HeavyHitters.heavyHitters(keyed, "k", thr))
-      t1("hh_mg")(graft.ops.HeavyHitters.heavyHittersMg(keyed, "k", thr))
-      t1("hh_auto")(graft.ops.HeavyHitters.heavyHittersAuto(keyed, "k", thr))
+      row("hh_cms")(graft.ops.HeavyHitters.heavyHitters(keyed, "k", thr))
+      row("hh_mg")(graft.ops.HeavyHitters.heavyHittersMg(keyed, "k", thr))
+      row("hh_auto")(graft.ops.HeavyHitters.heavyHittersAuto(keyed, "k", thr))
     }
     if (want("hh_near")) {
       // the CMS-adversarial (still realistic: zipf mid-body) regime —
@@ -143,21 +109,15 @@ object Sweep100 {
       // estimate filter into the exact pass; the MG truncation keeps
       // ≤ k counters and its broadcast prune discards the near rows
       // before the exact aggregation.
-      val ev = spark.read.parquet(s"$sfDir/events.parquet").select("event_id")
-      val ebase = ev.agg(max(col("event_id"))).first().getLong(0) + 1L
-      val rep = (0 until k).map(i =>
-          ev.withColumn("event_id", col("event_id") + lit(i * ebase)))
-        .reduce(_ unionByName _)
-      val keyed = rep
+      val keyed = Fixpoint.materializedLeaf(eventRep("event_id")
         .select(when(col("event_id") % 5 < 2, col("event_id") % 400)
-          .otherwise(lit(400L) + (col("event_id") % 2400)).as("k"))
-        .localCheckpoint(eager = true)
+          .otherwise(lit(400L) + (col("event_id") % 2400)).as("k")))
       val n = keyed.count()
       val thr = n / 2000L // heavy ≈ 2T each, near ≈ T/2 each
       println(s"[sweep100] hh_near corpus: $n rows, threshold $thr, " +
         s"mg candidate budget ${n / thr + 1L}")
-      t1("hh_near_cms")(graft.ops.HeavyHitters.heavyHitters(keyed, "k", thr))
-      t1("hh_near_mg")(graft.ops.HeavyHitters.heavyHittersMg(keyed, "k", thr))
+      row("hh_near_cms")(graft.ops.HeavyHitters.heavyHitters(keyed, "k", thr))
+      row("hh_near_mg")(graft.ops.HeavyHitters.heavyHittersMg(keyed, "k", thr))
     }
     if (want("hh_tight")) {
       // the regime where the MG prune wins OUTRIGHT: tight threshold at
@@ -169,22 +129,17 @@ object Sweep100 {
       // is structural in k = N/T+1 = 20001, still broadcast-small).
       // The third seat re-sizes eps to the threshold (width ×20, a
       // 2.2 MB sketch/task) — what a CMS user must DO to recover.
-      val ev = spark.read.parquet(s"$sfDir/events.parquet").select("event_id")
-      val ebase = ev.agg(max(col("event_id"))).first().getLong(0) + 1L
-      val keyed = (0 until k).map(i =>
-          ev.withColumn("event_id", col("event_id") + lit(i * ebase)))
-        .reduce(_ unionByName _)
+      val keyed = Fixpoint.materializedLeaf(eventRep("event_id")
         .select(when(col("event_id") % 2 === 0, col("event_id") % 1000)
-          .otherwise(lit(1000L) + col("event_id")).as("k"))
-        .localCheckpoint(eager = true)
+          .otherwise(lit(1000L) + col("event_id")).as("k")))
       val n = keyed.count()
       val thr = math.max(1L, n / 20000L)
       println(s"[sweep100] hh_tight corpus: $n rows, threshold $thr, " +
         s"default-eps error ${(0.0005 * n).toLong}, " +
         s"mg candidate budget ${n / thr + 1L}")
-      t1("hh_tight_mg")(graft.ops.HeavyHitters.heavyHittersMg(keyed, "k", thr))
-      t1("hh_tight_cms")(graft.ops.HeavyHitters.heavyHitters(keyed, "k", thr))
-      t1("hh_tight_cms_sized")(graft.ops.HeavyHitters.heavyHitters(
+      row("hh_tight_mg")(graft.ops.HeavyHitters.heavyHittersMg(keyed, "k", thr))
+      row("hh_tight_cms")(graft.ops.HeavyHitters.heavyHitters(keyed, "k", thr))
+      row("hh_tight_cms_sized")(graft.ops.HeavyHitters.heavyHitters(
         keyed, "k", thr, eps = thr.toDouble / (2.0 * n)))
     }
     spark.stop()

@@ -235,7 +235,7 @@ class GraphSpec extends SparkSpec {
 
   test("fixpoint primitives: stats re-bind runs no job; edge leaf releases every block") {
     import graft.iterate.Fixpoint
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.tools.QueryMeter
     import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.execution.LogicalRDD
     val e = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 5L -> 6L)
@@ -250,21 +250,15 @@ class GraphSpec extends SparkSpec {
     def size(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.stats.sizeInBytes
     assert(size(joined) != default)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    GraftBridge.drainListenerBus(sc)
-    sc.addSparkListener(listener)
+    def jobsOf(body: => Any): Long =
+      scala.util.Using.resource(QueryMeter(spark)) { meter => body; meter.jobs }
     val loop = Fixpoint.loopSession(spark, 10L)
-    val (rebound, moved) = try {
-      val r = Fixpoint.rebindStats(joined)
-      val m = Fixpoint.rebindStats(joined, loop)
-      assert(size(r) == default && size(m) == default)
-      GraftBridge.drainListenerBus(sc)
-      (r, m)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get == 0)
+    var rebound, moved: org.apache.spark.sql.DataFrame = null
+    assert(jobsOf {
+      rebound = Fixpoint.rebindStats(joined)
+      moved = Fixpoint.rebindStats(joined, loop)
+      assert(size(rebound) == default && size(moved) == default)
+    } == 0)
     assert((rebound.sparkSession eq spark) && (moved.sparkSession eq loop))
     assert(moved.count() == joined.count())
     Fixpoint.unpersistMaterialized(joined)
@@ -330,13 +324,6 @@ class GraphSpec extends SparkSpec {
     Fixpoint.unpersistMaterialized(base)
     assert(sc.getPersistentRDDs.keySet.subsetOf(before))
 
-    def jobsOf(body: => Any): Int = {
-      GraftBridge.drainListenerBus(sc)
-      sc.addSparkListener(listener)
-      val start = jobs.get
-      try body finally { GraftBridge.drainListenerBus(sc); sc.removeSparkListener(listener) }
-      jobs.get - start
-    }
     // (e) the loop core: each round's read is the round's one job, and once
     // it has materialized a state, the generation that state superseded
     // holds no cached block; the last state, built but not read, keeps its
@@ -347,16 +334,14 @@ class GraphSpec extends SparkSpec {
       sc.getRDDStorageInfo.exists(_.id == id)
     }
     val gens = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    val perRead = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val perRead = scala.collection.mutable.ArrayBuffer.empty[Long]
     var last: org.apache.spark.sql.DataFrame = null
     val seed = Fixpoint.materializedLeaf(e)
     val loopJobs = jobsOf {
       last = Fixpoint.unfold(seed, 3) { (state, _) =>
         gens += state
-        val start = jobs.get
-        val n = state.rdd.count()
-        GraftBridge.drainListenerBus(sc)
-        perRead += jobs.get - start
+        var n = 0L
+        perRead += jobsOf { n = state.rdd.count() }
         n
       } { (state, n, i) =>
         assert(n == 4L)
@@ -364,7 +349,7 @@ class GraphSpec extends SparkSpec {
         Some(state.withColumn("src", col("src") + 1L))
       }
     }
-    assert(perRead == Seq(1, 1, 1) && loopJobs == 3)
+    assert(perRead == Seq(1L, 1L, 1L) && loopJobs == 3)
     assert(cached(gens(2)) && last.agg(min("src")).first().getLong(0) == 4L)
     Seq(last, gens(2)).foreach(Fixpoint.unpersistMaterialized)
     assert(sc.getPersistentRDDs.keySet.subsetOf(before))

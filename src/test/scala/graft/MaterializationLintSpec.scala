@@ -2,11 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every materialization in the engine's operator and query layers goes
-  * through `iterate.Fixpoint`, whose scopes and loop core own and release
-  * it: a direct checkpoint (eager or lazy), persist or unpersist there
-  * would escape them, and a hand release of a checkpoint belongs to the
-  * loop core alone. */
+/** Every materialization in the engine's operator and query layers and in
+  * the dev tools goes through `iterate.Fixpoint`, whose scopes and loop
+  * core own and release it: a direct checkpoint (eager or lazy), persist or
+  * unpersist there would escape them, and a hand release of a checkpoint
+  * belongs to the loop core alone. */
 class MaterializationLintSpec extends AnyFunSuite {
 
   private val raw = Seq(".localCheckpoint(", ".persist(", ".unpersist(", "unpersistMaterialized(")
@@ -32,6 +32,11 @@ class MaterializationLintSpec extends AnyFunSuite {
 
   test("queries materialize only through Fixpoint") {
     val found = directCalls("queries")
+    assert(found.isEmpty, found.mkString("direct materialization outside Fixpoint:\n", "\n", ""))
+  }
+
+  test("tools materialize only through Fixpoint") {
+    val found = directCalls("tools")
     assert(found.isEmpty, found.mkString("direct materialization outside Fixpoint:\n", "\n", ""))
   }
 }
