@@ -10,6 +10,15 @@ object Sessions {
   /** codegen LRU size (Spark's default 100) above one pass's classes: ~170 graph, ~340 corpus at sf0.01 */
   val CodegenCacheEntries = 1024
 
+  /** Jobs, stages and SQL executions the status store keeps (Spark's
+    * defaults: 1000 each, an execution with its plan string). The UI is
+    * off, and nothing in the engine reads that history; the cached-RDD
+    * storage info the leak meters read is kept whatever these say. */
+  val RetainedUiHistory = 50
+
+  /** finished tasks the status store keeps per stage (Spark's default: 100000) */
+  val RetainedTasks = 1000
+
   def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
     val s = SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
@@ -18,6 +27,10 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.ui.retainedJobs", RetainedUiHistory.toString)
+      .config("spark.ui.retainedStages", RetainedUiHistory.toString)
+      .config("spark.ui.retainedTasks", RetainedTasks.toString)
+      .config("spark.sql.ui.retainedExecutions", RetainedUiHistory.toString)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

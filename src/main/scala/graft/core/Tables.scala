@@ -2,7 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
-import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
+import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 
 /** Parquet table loading for the driver-generated TPC-H-ish testdata
   * (see /root/repo/TESTDATA.md). At cluster scale these reads are plain
@@ -14,8 +16,41 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** One table, read with the schema inferred at its first load. Spark's
+    * parquet schema inference runs a job even for one footer, so each path
+    * keeps its inferred schema next to the file listing (names, sizes,
+    * mtimes) and the parquet read settings it was inferred under; a load
+    * that sees the same listing and settings reads with that schema and
+    * runs no job, and any change re-infers. A missing table fails with
+    * Spark's own error. */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val fs = hp.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(hp)) spark.read.parquet(path)
+    else {
+      val files = mutable.ArrayBuffer.empty[(String, Long, Long)]
+      val it = fs.listFiles(hp, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      val stamp: Stamp = (files.sorted.toSeq, spark.conf.getAll.filter(_._1.contains("parquet")))
+      val schema = inferred.get(path).collect { case (`stamp`, s) => s }.getOrElse {
+        val s = spark.read.parquet(path).schema
+        inferred.put(path, (stamp, s))
+        s
+      }
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** a table's file listing (path, size, mtime) and the session's parquet
+    * settings */
+  private type Stamp = (Seq[(String, Long, Long)], Map[String, String])
+
+  /** per table path: the stamp a schema was inferred under, and the schema */
+  private val inferred = TrieMap.empty[String, (Stamp, StructType)]
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame =
     normalizeDate(load(spark, sfDir, "lineitem"), "l_shipdate")

@@ -59,24 +59,37 @@ object Graphs {
     * that have not converged */
   val DefaultCcRounds = 15
 
-  /** Undirected, deduped, cached edge set, repartitioned by src to the
-    * width the measured edge count warrants (SSSP's edge treatment —
-    * ShortestPath.run): every per-round scan then reads as many partitions
-    * as the data needs, not the derivation's shuffle width. */
-  private[graft] def undirectedSized(edges: DataFrame): DataFrame =
+  /** The undirected edge set of a driver loop and its row count: the
+    * [[symmetricClosure]] of the pinned input edges, as a columnar cache
+    * hash-partitioned by src, so every per-round scan reads as many
+    * partitions as the data needs. The row count (both directions: 2m)
+    * comes from the count that fills the cache; it bounds the vertex count,
+    * so loops over the closure are sized from it with no count of their
+    * own. */
+  private[graft] def undirectedSized(edges: DataFrame): (DataFrame, Long) =
     // COLUMNAR, deliberately NOT a LogicalRDD leaf (r17 A/B): the fixpoint
     // loops scan this relation EVERY round, and the in-memory columnar
     // cache's vectorized scan beats row-block iteration by ~180 ms/round on
     // the 160k-row coloring graph (coloring 9.9 s persist vs 14.1 s leaf,
     // coreness 5.4 vs 6.6). Init-only consumers (kTruss) take the leaf
     // instead — the opposite side of the same tradeoff.
-    Fixpoint.pinned(
-      edges.select(col("src"), col("dst"))
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct(),
-      Fixpoint.columnar) { (u, n) =>
-      u.repartition(Fixpoint.sizedPartitions(edges.sparkSession, n), col("src"))
-    }
+    Fixpoint.withPinned(edges.select(col("src"), col("dst")))((e, n) =>
+      Fixpoint.columnarRows(symmetricClosure(e, n)))
+
+  /** e ∪ reverse(e) over `n` pinned input edges, hash-partitioned by src at
+    * the width 2n rows warrant, then deduped. The distinct's clustering on
+    * (src, dst) is satisfied by HashPartitioning(src), so the closure costs
+    * one exchange. */
+  private def symmetricClosure(e: DataFrame, n: Long): DataFrame =
+    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .repartition(Fixpoint.sizedPartitions(e.sparkSession, 2 * n), col("src"))
+      .distinct()
+
+  /** The vertices of an [[undirectedSized]] closure: every vertex of a
+    * symmetric closure is a src, and the cache is hash-partitioned on src,
+    * so the distinct plans no exchange. */
+  private[graft] def closureVertices(und: DataFrame): DataFrame =
+    und.select(col("src").as("vertex")).distinct()
 
   /** Connected components by min-label propagation (HashMin): every vertex
     * converges to the smallest id in its component. Edges are treated as
@@ -86,9 +99,9 @@ object Graphs {
     * use pointer-doubling variants for giant-diameter graphs.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = DefaultCcRounds): DataFrame = Fixpoint.scope {
-    val undirected = undirectedSized(edges)
-    val init = vertices(undirected).withColumn("label", col("vertex"))
-    val result = Fixpoint.iterate(init, maxIter,
+    val (undirected, n) = undirectedSized(edges)
+    val init = closureVertices(undirected).withColumn("label", col("vertex"))
+    val result = Fixpoint.iterateSized(init, n, maxIter,
       converged = Fixpoint.monotoneSumUnchanged("label")) { (state, _) =>
       val nbr = state.join(undirected, state("vertex") === undirected("src"))
         .select(col("dst").as("vertex"), col("label"))
@@ -162,8 +175,8 @@ object Graphs {
     * is one degree aggregation + two semi-joins, all state-sized.
     * Returns (vertex, degree) of the surviving subgraph. */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = DefaultKCoreRounds): DataFrame = Fixpoint.scope {
-    val undirected = undirectedSized(edges)
-    val result = Fixpoint.iterate(undirected, maxIter,
+    val (undirected, n) = undirectedSized(edges)
+    val result = Fixpoint.iterateSized(undirected, n, maxIter,
       converged = Fixpoint.countUnchanged()) { (state, _) =>
       // undirected state holds both directions, so per-src row count IS
       // the undirected degree
@@ -223,10 +236,10 @@ object Graphs {
     * early. */
   def coreness(edges: DataFrame, rounds: Int = DefaultCorenessRounds): DataFrame = Fixpoint.scope {
     import org.apache.spark.sql.expressions.Window
-    val und = undirectedSized(edges)
+    val (und, n) = undirectedSized(edges)
     // symmetric closure => per-src row count IS the undirected degree
     val init = und.groupBy(col("src").as("vertex")).agg(count(lit(1)).as("val"))
-    val result = Fixpoint.iterate(init, rounds,
+    val result = Fixpoint.iterateSized(init, n, rounds,
         converged = Fixpoint.monotoneSumUnchanged("val")) { (state, _) =>
       val hist = state.join(und, state("vertex") === und("src"))
         .groupBy(col("dst").as("vertex"), col("val"))
@@ -250,9 +263,9 @@ object Graphs {
     * the chunked-sessionize proof shape). */
   def corenessWindow(edges: DataFrame, rounds: Int = DefaultCorenessRounds): DataFrame = Fixpoint.scope {
     import org.apache.spark.sql.expressions.Window
-    val und = undirectedSized(edges)
+    val (und, n) = undirectedSized(edges)
     val init = und.groupBy(col("src").as("vertex")).agg(count(lit(1)).as("val"))
-    val result = Fixpoint.iterate(init, rounds,
+    val result = Fixpoint.iterateSized(init, n, rounds,
         converged = Fixpoint.monotoneSumUnchanged("val")) { (state, _) =>
       val msgs = state.join(und, state("vertex") === und("src"))
         .select(col("dst").as("vertex"), col("val"))
@@ -301,12 +314,12 @@ object Graphs {
     * errors — a divergence, round-11 advice item). */
   def densestSubgraph(edges: DataFrame,
       rounds: Int = DefaultDensestRounds): DataFrame = Fixpoint.scope {
-    val first = undirectedSized(edges)
+    val (first, n) = undirectedSized(edges)
     // the peel re-plans deg/stats/semi-join relations every round, so it
     // runs under the shared loop session for the edge count's width: state-
     // sized shuffles, no AQE stage replanning. The one-time Row re-bind
     // streams from the edge cache.
-    val loop = Fixpoint.loopSession(edges.sparkSession, first.count())
+    val loop = Fixpoint.loopSession(edges.sparkSession, n)
     // the candidates (deg, 2m, n), one per round; taken by the read, so they
     // belong to this scope, which keeps the winner and releases the rest
     val peel = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, Long, Long)]
@@ -443,15 +456,12 @@ object Graphs {
       maxWedges: Long = DefaultKTrussWedgeBudget): DataFrame = Fixpoint.scope {
     require(k >= 3, "k-truss needs k >= 3")
     // INIT-ONLY consumer: the peel loop's per-round plans reference only
-    // the loop state, so the symmetric closure is materialized as a
-    // src-partitioned LogicalRDD leaf, not undirectedSized's columnar
-    // persist — the orientation/support/wedge-guard plans reference it 3x,
-    // and the leaf spares them the union+distinct subtree re-optimization
-    // (ktruss 10.6 -> 7.7 s A/B).
-    val undirected = Fixpoint.srcPartitionedLeaf(
-      edges.select(col("src"), col("dst"))
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
+    // the loop state, so the symmetric closure is built as in
+    // undirectedSized but kept as a src-partitioned LogicalRDD leaf, not a
+    // columnar cache — the orientation/support/wedge-guard plans reference
+    // it 3x, and the leaf spares them the union+distinct subtree
+    // re-optimization (ktruss 10.6 -> 7.7 s A/B).
+    val undirected = Fixpoint.pinned(edges.select(col("src"), col("dst")))(symmetricClosure)
     // degree-ordered orientation, computed once (checkpointed: the guard's
     // wedge count and the init support pass both read it)
     val g = Fixpoint.materializedLeaf(orientByDegree(undirected))
@@ -566,12 +576,12 @@ object Graphs {
     * Returns (vertex, round) for set members, round = the 1-based round
     * that admitted the vertex. */
   def maximalIndependentSet(edges: DataFrame, rounds: Int = DefaultMisRounds): DataFrame = Fixpoint.scope {
-    val undirected = undirectedSized(edges)
-    val init = vertices(undirected)
+    val (undirected, n) = undirectedSized(edges)
+    val init = closureVertices(undirected)
       .withColumn("pkey", priorityKey(col("vertex")))
       .withColumn("status", lit(0)) // 0 active, 1 in set, 2 dominated
       .withColumn("round", lit(-1L))
-    val result = Fixpoint.iterate(init, rounds,
+    val result = Fixpoint.iterateSized(init, n, rounds,
       converged = Fixpoint.monotoneSumUnchanged("status")) { (state, i) =>
       val active = state.filter(col("status") === 0).select("vertex", "pkey")
       val nbrMin = active.join(undirected, active("vertex") === undirected("src"))
@@ -624,11 +634,11 @@ object Graphs {
     * deterministic in both engines. Returns (vertex, color), color = -1
     * for vertices undecided within the round budget. */
   def greedyColoring(edges: DataFrame, rounds: Int = DefaultColoringRounds): DataFrame = Fixpoint.scope {
-    val undirected = undirectedSized(edges)
-    val init = vertices(undirected)
+    val (undirected, n) = undirectedSized(edges)
+    val init = closureVertices(undirected)
       .withColumn("pkey", priorityKey(col("vertex")))
       .withColumn("color", lit(-1L))
-    val result = Fixpoint.iterate(init, rounds,
+    val result = Fixpoint.iterateSized(init, n, rounds,
       converged = Fixpoint.monotoneSumUnchanged("color")) { (state0, _) =>
       // BARRIER-FUSED round (the maximalMatching treatment, round 11): the
       // winner test (min pkey over UNCOLORED neighbors) and the mex input
@@ -688,8 +698,8 @@ object Graphs {
     * Same state/round discipline as [[maximalIndependentSet]]. Returns
     * matched pairs (a, b, round) with a < b, round 1-based. */
   def maximalMatching(edges: DataFrame, rounds: Int = DefaultMatchingRounds): DataFrame = Fixpoint.scope {
-    val undirected = undirectedSized(edges)
-    val init = vertices(undirected)
+    val (undirected, n) = undirectedSized(edges)
+    val init = closureVertices(undirected)
       .withColumn("status", lit(0)) // 0 active, 1 matched, 2 unmatched
       .withColumn("mate", lit(-1L))
       .withColumn("round", lit(-1L))
@@ -698,7 +708,7 @@ object Graphs {
     // monotone-sum test would mistake that idle round for completion.
     // noneMatch (full scan) rather than limit(1): the full scan fuses
     // with the round's lazy-checkpoint materialization into one job
-    val result = Fixpoint.iterate(init, rounds,
+    val result = Fixpoint.iterateSized(init, n, rounds,
       converged = Fixpoint.noneMatch(col("status") === 0)) { (state, i) =>
       import org.apache.spark.sql.Column
       // round-salted hashes: same Mersenne-31 multiplicative mix as
@@ -951,9 +961,9 @@ object Graphs {
     * scan), so the cost is exactly `rounds` checkpoint jobs.
     */
   def labelPropagation(edges: DataFrame, rounds: Int = DefaultLpaRounds): DataFrame = Fixpoint.scope {
-    val undirected = undirectedSized(edges)
-    val init = vertices(undirected).withColumn("label", col("vertex"))
-    val result = Fixpoint.iterate(init, rounds) { (state, _) =>
+    val (undirected, n) = undirectedSized(edges)
+    val init = closureVertices(undirected).withColumn("label", col("vertex"))
+    val result = Fixpoint.iterateSized(init, n, rounds) { (state, _) =>
       val msgs = state.join(undirected, state("vertex") === undirected("src"))
         .select(col("dst").as("vertex"), col("label"))
         .unionByName(state.select("vertex", "label"))
@@ -1172,8 +1182,7 @@ object Graphs {
     * iteration; the natural "score this LPA/CC clustering" follow-up.
     */
   def modularityByCommunity(edges: DataFrame, labels: DataFrame): DataFrame = Fixpoint.scope {
-    val und = undirectedSized(edges)
-    val twoM = und.count() // und holds both directions: |und| = 2m
+    val (und, twoM) = undirectedSized(edges) // both directions: |und| = 2m
     val lab = labels.select(col("vertex"), col("label"))
     val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
     val degSum = deg.join(lab, deg("src") === lab("vertex"))
@@ -1209,9 +1218,9 @@ object Graphs {
     */
   def connectedComponentsDoubling(
       edges: DataFrame, maxIter: Int = DefaultDoublingRounds): DataFrame = Fixpoint.scope {
-    val undirected = undirectedSized(edges)
-    val init = vertices(undirected).withColumn("label", col("vertex"))
-    val result = Fixpoint.iterate(init, maxIter,
+    val (undirected, n) = undirectedSized(edges)
+    val init = closureVertices(undirected).withColumn("label", col("vertex"))
+    val result = Fixpoint.iterateSized(init, n, maxIter,
       converged = Fixpoint.monotoneSumUnchanged("label")) { (state, _) =>
       // HashMin step: min label over self + in-neighbors. A leaf
       // because the pointer jump consumes it on BOTH sides of a

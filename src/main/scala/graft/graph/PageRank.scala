@@ -180,10 +180,11 @@ object PageRank {
   }
 
   /** The edge cache every link-analysis loop here shares: the edge relation
-    * persisted BEFORE its sizing count (the undirectedSized rule, r17: the
-    * count's materialization then feeds the repartition from cache instead
-    * of re-running the derivation), and the edges hash-partitioned by src
-    * at the width the count warrants, with that width. The partitioned
+    * persisted BEFORE its sizing count (the rule [[Fixpoint.withPinned]]
+    * keeps for the other edge caches: the count's materialization then
+    * feeds the repartition from cache instead of re-running the
+    * derivation), and the edges hash-partitioned by src at the width the
+    * count warrants, with that width. The partitioned
     * edges are [[Fixpoint.persisted]] — lazy, their first consumer fills
     * them. */
   private[graph] def srcPartitioned(edges: DataFrame): (DataFrame, Int) = {

@@ -42,11 +42,13 @@ object ShortestPath {
     relaxFromSource(edges, source, col("w"), maxIter)
 
   /** run/runWeighted: the relax loop from `source` over the src-partitioned
-    * edge leaf, each edge costing `cost` (evaluated against the edge row). */
+    * edge leaf, each edge costing `cost` (evaluated against the edge row).
+    * The loop is sized from the leaf's count with no count of its own: n
+    * edges touch at most 2n vertices, plus the source. */
   private def relaxFromSource(edges: DataFrame, source: Long, cost: Column,
       maxIter: Int): DataFrame = Fixpoint.scope {
-    val e = Fixpoint.srcPartitionedLeaf(edges)
-    relaxLoop(sourceSeeded(e, source), e, cost, maxIter).select("vertex", "dist")
+    val (e, n) = Fixpoint.srcPartitionedLeaf(edges)
+    relaxLoop(sourceSeeded(e, source), e, cost, maxIter, 2 * n + 1).select("vertex", "dist")
   }
 
   /** The initial (vertex, dist, changed) state: every vertex of `e` plus
@@ -66,9 +68,11 @@ object ShortestPath {
   /** The frontier loop shared by run, runWeighted and incrementalWeighted:
     * relax out-edges of changed vertices at `cost` per edge, merge by
     * per-vertex min, converge when no distance improves. `e` must be
-    * src-partitioned and materialized by the caller. */
-  private def relaxLoop(init: DataFrame, e: DataFrame, cost: Column, maxIter: Int): DataFrame =
-    Fixpoint.iterate(init, maxIter,
+    * src-partitioned and materialized by the caller; `vertices` bounds the
+    * state's row count and sizes the loop, which runs no count of its own. */
+  private def relaxLoop(init: DataFrame, e: DataFrame, cost: Column, maxIter: Int,
+      vertices: Long): DataFrame =
+    Fixpoint.iterateSized(init, vertices, maxIter,
       converged = Fixpoint.noneMatch(col("changed"))) { (state, _) =>
       val frontier = state.filter(col("changed"))
       val candidates = frontier
@@ -109,7 +113,7 @@ object ShortestPath {
     * @return (vertex LONG, dist DOUBLE), Infinity for unreached */
   def incrementalWeighted(dists: DataFrame, newEdges: DataFrame,
       allEdges: DataFrame, maxIter: Int = 50): DataFrame = Fixpoint.scope {
-    val e = Fixpoint.srcPartitionedLeaf(allEdges)
+    val (e, n) = Fixpoint.srcPartitionedLeaf(allEdges)
     val inf = lit(Double.PositiveInfinity)
     val stored = dists.select(col("vertex"), col("dist"))
     // merged vertex set; vertices the batch introduces start unreached
@@ -126,7 +130,7 @@ object ShortestPath {
         col("vertex"),
         least(col("dist"), coalesce(col("cand"), inf)).as("dist"),
         (coalesce(col("cand"), inf) < col("dist")).as("changed"))
-    relaxLoop(init, e, col("w"), maxIter).select("vertex", "dist")
+    relaxLoop(init, e, col("w"), maxIter, 2 * n).select("vertex", "dist")
   }
 
   /** Multi-source BFS (landmark distances): unit-hop shortest distance
@@ -145,7 +149,7 @@ object ShortestPath {
   def multiSourceBfs(edges: DataFrame, seeds: Seq[Long], maxIter: Int = 50): DataFrame = Fixpoint.scope {
     val spark = edges.sparkSession
     import spark.implicits._
-    val e = Fixpoint.srcPartitionedLeaf(edges)
+    val (e, _) = Fixpoint.srcPartitionedLeaf(edges)
     val unreached = lit(Long.MaxValue)
     val init = seeds.toDF("seed").select(col("seed"), col("seed").as("vertex"),
       lit(0L).as("dist"), lit(true).as("changed"))
@@ -174,7 +178,7 @@ object ShortestPath {
     * partition-order-dependent; ours is stable).
     */
   def runWithPath(edges: DataFrame, source: Long, maxIter: Int = 50): DataFrame = Fixpoint.scope {
-    val e = Fixpoint.srcPartitionedLeaf(edges)
+    val (e, _) = Fixpoint.srcPartitionedLeaf(edges)
     val init = sourceSeeded(e, source).withColumn("path",
       when(col("vertex") === source, array(lit(source))).otherwise(lit(null).cast("array<bigint>")))
 

@@ -91,10 +91,12 @@ object Fixpoint {
   /** The eager columnar cache: [[persisted]] plus a count. Chosen over a
     * leaf for a relation a loop scans every round, where the in-memory
     * columnar cache's vectorized scan beats row-block iteration. */
-  def columnar(df: DataFrame): DataFrame = {
+  def columnar(df: DataFrame): DataFrame = columnarRows(df)._1
+
+  /** [[columnar]] and its row count, read off the count that fills it. */
+  def columnarRows(df: DataFrame): (DataFrame, Long) = {
     val c = persisted(df)
-    c.count()
-    c
+    (c, c.count())
   }
 
   /** A lazy MEMORY_AND_DISK persist: its first consumer fills it, so a
@@ -103,30 +105,32 @@ object Fixpoint {
   def persisted(df: DataFrame): DataFrame =
     own(df.persist(StorageLevel.MEMORY_AND_DISK), cache = true)
 
-  /** Build one eager result from a pinned cache of `input`: persists
-    * `input`, counts it (so the consumers read the cache instead of racing
-    * to compute it), returns `keep(f(cache, count))` and then releases the
-    * cache. `keep` must materialize — a leaf by default, [[columnar]] for a
-    * relation scanned every round — since the cache is gone once `pinned`
-    * returns. */
-  def pinned(input: DataFrame, keep: DataFrame => DataFrame = materializedLeaf)(
-      f: (DataFrame, Long) => DataFrame): DataFrame = {
+  /** Build one eager result from a pinned cache of `input`: the
+    * [[withPinned]] build, kept as a [[materializedLeaf]]. */
+  def pinned(input: DataFrame)(f: (DataFrame, Long) => DataFrame): DataFrame =
+    withPinned(input)((cache, n) => materializedLeaf(f(cache, n)))
+
+  /** Persists `input`, counts it (so the consumers read the cache instead
+    * of racing to compute it), returns `f(cache, count)` and then releases
+    * the cache: `f` must materialize what it returns, since the cache is
+    * gone once `withPinned` returns. */
+  def withPinned[T](input: DataFrame)(f: (DataFrame, Long) => T): T = {
     val cache = input.persist(StorageLevel.MEMORY_AND_DISK)
-    val out = keep(f(cache, cache.count()))
+    val out = f(cache, cache.count())
     cache.unpersist(blocking = false)
     out
   }
 
   /** The src-partitioned edge cache of a driver loop, as one
-    * [[materializedLeaf]]: the `edges` derivation is [[pinned]] for the
-    * sizing count (so the repartition reads the cache instead of re-running
-    * the derivation), hash-partitioned by `src` to the width the count
-    * warrants and materialized as a leaf. The loop re-scans the leaf every
-    * round, and each round's Catalyst walk sees one node instead of the
-    * derivation subtree. */
-  def srcPartitionedLeaf(edges: DataFrame): DataFrame =
-    pinned(edges) { (u, n) =>
-      u.repartition(sizedPartitions(edges.sparkSession, n), col("src"))
+    * [[materializedLeaf]], and its row count: the `edges` derivation is
+    * pinned for the sizing count (so the repartition reads the cache
+    * instead of re-running the derivation), hash-partitioned by `src` to
+    * the width the count warrants and materialized as a leaf. The loop
+    * re-scans the leaf every round, and each round's Catalyst walk sees one
+    * node instead of the derivation subtree. */
+  def srcPartitionedLeaf(edges: DataFrame): (DataFrame, Long) =
+    withPinned(edges) { (u, n) =>
+      (materializedLeaf(u.repartition(sizedPartitions(edges.sparkSession, n), col("src"))), n)
     }
 
   /** Runs `body` as an ownership scope (see the object doc): returns its
@@ -278,19 +282,22 @@ object Fixpoint {
     converge(seeded, seeded.count(), maxIter, converged, step, Some(seeded))
   }
 
-  /** [[iterate]] minus the entry sizing-count job, for callers that already
-    * know (an upper bound on) the state cardinality — e.g. SCC's phases and
-    * their inner fixpoints, whose states are subsets of a once-counted
-    * vertex relation. `knownRows` only sizes the loop's shuffle width
-    * (never correctness); an over-estimate costs width overshoot on a
-    * shrunken state, capped at the session's configured width.
+  /** [[iterate]] minus the seed's cache and sizing count, for callers that
+    * already know an upper bound on the state cardinality: an edge cache's
+    * row count bounds its vertices, and SCC's phases run over subsets of a
+    * once-counted vertex relation. `knownRows` only sizes the loop's
+    * shuffle width (never correctness); an over-estimate costs width
+    * overshoot, capped at the session's configured width.
     *
-    * CALLER CONTRACT: `init` must be a cheap NARROW derivation of
-    * already-materialized relations (cached/checkpointed). The seed is
-    * bound lazily with no backing cache of its own, so a step that
-    * references the state several times computes the seed derivation once
-    * per reference inside round 1's job — fine for a filter/withColumn
-    * over checkpoint blocks, wrong for anything with a shuffle or scan. */
+    * CALLER CONTRACT: `init` reads only materialized relations the caller
+    * holds until round 1's read, since the seed has no cache of its own.
+    * It may hold an exchange: the re-bind takes the seed's RDD once, so the
+    * exchange runs once however often round 1's step reads the state
+    * (traced q_graph_sssp, whose seed has one: the same shuffle records as
+    * when [[iterate]] cached and counted it, less the count's own). Under
+    * adaptive execution that exchange runs as a job of its own at the
+    * re-bind, so only a seed with no exchange (CC's over the src-partitioned
+    * edge cache) reaches round 1 with no job. */
   def iterateSized(
       init: DataFrame,
       knownRows: Long,

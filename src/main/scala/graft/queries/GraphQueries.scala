@@ -460,7 +460,7 @@ object GraphQueries {
     // labeling never reshuffles. Oracle replays both stages unrolled.
     "q_graph_cc_inc" -> ((s, d) => {
       // the distinct edge relation feeds BOTH cuts, and each cut has
-      // multiple consumers (undirectedSized's union legs, the quotient
+      // multiple consumers (each cut's pinned closure input, the quotient
       // joins) — materialized ONCE as a leaf (r17, guide §2.4): the old
       // plan re-ran the lineitem scan + distinct shuffle per consumer
       // (~6 corpus passes per query). Bounded at any scale: the relation

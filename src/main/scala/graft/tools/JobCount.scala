@@ -10,9 +10,10 @@ package graft.tools
   * runs each query once against SPARK_GRAFT_SF_DIR as one
   * [[QueryMeter.run]] (the noop sink, the Bench action) and prints one line
   * per job (start offset, duration, gap since the previous job's end, in
-  * ms), then one summary line: jobs, stages, tasks, wall, Σ job time, Σ gap
-  * and the tail after the last job (seconds), and what the query left
-  * cached (RDDs, blocks, bytes; read after a GC).
+  * ms, and its [[QueryMeter.callSite]]), then one summary line: jobs,
+  * stages, tasks, wall, Σ job time, Σ gap and the tail after the last job
+  * (seconds), and what the query left cached (RDDs, blocks, bytes; read
+  * after a GC).
   */
 object JobCount {
   def main(args: Array[String]): Unit = {
@@ -33,9 +34,9 @@ object JobCount {
       val r = meter.run()(graft.SparkEntry.queries(n)(spark, sfDir))
       var prevEnd = r.startMs
       var jobMs = 0L; var gapMs = 0L
-      r.spans.zipWithIndex.foreach { case ((s, e), i) =>
+      r.spans.zipWithIndex.foreach { case (QueryMeter.Job(s, e, site), i) =>
         val gap = math.max(0L, s - prevEnd)
-        println(f"[jobcount] $n job#$i%-3d +${s - r.startMs}%6dms dur=${e - s}%6dms gap=$gap%6dms")
+        println(f"[jobcount] $n job#$i%-3d +${s - r.startMs}%6dms dur=${e - s}%6dms gap=$gap%6dms $site")
         jobMs += e - s; gapMs += gap
         prevEnd = math.max(prevEnd, e)
       }

@@ -4,14 +4,15 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Dataset, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import graft.iterate.Fixpoint
 
 /** The dev tools' one measurement listener: jobs, stages and tasks, each
-  * job's start/end span and the shuffle records written, counted on one
-  * SparkContext while the meter is attached.
+  * job's start/end span and call site and the shuffle records written,
+  * counted on one SparkContext while the meter is attached.
   *
   * [[run]] is the tools' one measured run; every other read first delivers
   * every event posted so far. */
@@ -20,16 +21,28 @@ final class QueryMeter private (spark: SparkSession) extends SparkListener with 
 
   private val sc = spark.sparkContext
   private val jobCount, stageCount, taskCount, shuffleRecords = new AtomicLong
-  private val starts = TrieMap.empty[Int, Long]
-  private val spans = new ConcurrentLinkedQueue[(Long, Long)]
+  private val starts = TrieMap.empty[Int, (Long, String)]
+  private val spans = new ConcurrentLinkedQueue[Job]
+  /** the call site of each running SQL execution, by execution id */
+  private val execSites = TrieMap.empty[String, String]
 
   override def onJobStart(j: SparkListenerJobStart): Unit = {
     jobCount.incrementAndGet()
-    starts.put(j.jobId, j.time)
+    // a job a SQL execution started (also from an AQE or broadcast thread)
+    // belongs where that execution's action was called
+    val site = Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      .flatMap(execSites.get)
+      .getOrElse(j.stageInfos.maxByOption(_.stageId).map(s => callSite(s.details)).getOrElse("spark"))
+    starts.put(j.jobId, (j.time, site))
     ()
   }
   override def onJobEnd(j: SparkListenerJobEnd): Unit =
-    starts.remove(j.jobId).foreach(s => spans.add((s, j.time)))
+    starts.remove(j.jobId).foreach { case (s, site) => spans.add(Job(s, j.time, site)) }
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart => execSites.put(s.executionId.toString, callSite(s.details)); ()
+    case end: SparkListenerSQLExecutionEnd => execSites.remove(end.executionId.toString); ()
+    case _ =>
+  }
   override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
     stageCount.incrementAndGet(); ()
   }
@@ -70,7 +83,7 @@ final class QueryMeter private (spark: SparkSession) extends SparkListener with 
     // decides about the liveness of `result`
     java.lang.ref.Reference.reachabilityFence(result)
     Run(seconds, startMs, jobCount.get, stageCount.get, taskCount.get, shuffleRecords.get,
-      spans.asScala.toSeq.sortBy(_._1), live, value)
+      spans.asScala.toSeq.sortBy(_.start), live, value)
   }
 
   /** The cached RDDs still reachable from the driver, read before the run's
@@ -107,7 +120,16 @@ object QueryMeter {
     * the job `spans`), the counters and the leak meter, and `value`, the
     * body's result unless it was a DataFrame. */
   final case class Run(seconds: Double, startMs: Long, jobs: Long, stages: Long, tasks: Long,
-      shuffled: Long, spans: Seq[(Long, Long)], live: Live, value: Any)
+      shuffled: Long, spans: Seq[Job], live: Live, value: Any)
+
+  /** one job: its start and end (epoch ms) and [[callSite]] */
+  final case class Job(start: Long, end: Long, site: String)
+
+  /** The innermost engine frame of a long call site (`graft.graph.Graphs$
+    * .undirectedSized(Graphs.scala:79)`): the line that started the job; a
+    * stack that holds no engine frame is `spark`. */
+  def callSite(details: String): String =
+    details.linesIterator.map(_.trim).find(_.startsWith("graft.")).getOrElse("spark")
 
   /** cached RDDs, their cached blocks and memory + disk bytes */
   final case class Live(rdds: Int, blocks: Long, bytes: Long)

@@ -266,7 +266,8 @@ class GraphSpec extends SparkSpec {
     // (b) the edge leaf is one LogicalRDD at the sized width, and releasing
     // it leaves neither the derivation cache nor a checkpoint block behind
     val before = sc.getPersistentRDDs.keySet
-    val leaf = Fixpoint.srcPartitionedLeaf(e.filter(col("src") =!= col("dst")))
+    val (leaf, rows) = Fixpoint.srcPartitionedLeaf(e.filter(col("src") =!= col("dst")))
+    assert(rows == 4L)
     leaf.queryExecution.analyzed match {
       case lr: LogicalRDD =>
         assert(lr.rdd.getNumPartitions == Fixpoint.sizedPartitions(spark, 4L))
@@ -279,7 +280,7 @@ class GraphSpec extends SparkSpec {
     // (c) the same for a pinned build kept columnar: the pinned input is
     // gone on return, the kept relation sits in the cache manager until
     // released
-    val kept = Fixpoint.pinned(e, Fixpoint.columnar)((u, n) => u.filter(col("src") < n))
+    val kept = Fixpoint.withPinned(e)((u, n) => Fixpoint.columnar(u.filter(col("src") < n)))
     assert(kept.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
     assert((sc.getPersistentRDDs.keySet -- before).size == 1)
     assert(kept.count() == 3L)
@@ -354,13 +355,50 @@ class GraphSpec extends SparkSpec {
     Seq(last, gens(2)).foreach(Fixpoint.unpersistMaterialized)
     assert(sc.getPersistentRDDs.keySet.subsetOf(before))
 
-    // (f) job-count pins of two loops on the core, unchanged from their
-    // hand-rolled loops: densest's peel of a K6 on a path, and 3 BPE merges
+    // (f) job-count pins of loops on the core: densest's peel of a K6 on a
+    // path and CC over it, whose prologue is the symmetric edge cache with
+    // no count of the loop's own, and 3 BPE merges
     val k6 = for (a <- 1L to 6L; b <- 1L to 6L if a < b) yield a -> b
     val dense = edges((k6 ++ (10L until 20L).map(i => i -> (i + 1))): _*)
-    assert(jobsOf(Fixpoint.scope { Graphs.densestSubgraph(dense); () }) == 11)
+    assert(jobsOf(Fixpoint.scope { Graphs.densestSubgraph(dense); () }) == 9)
+    assert(jobsOf(Fixpoint.scope { Graphs.connectedComponents(dense); () }) == 17)
     val docs = Seq(1L -> "low low low lower lowest").toDF("doc_id", "text")
     assert(jobsOf(Fixpoint.scope { graft.pipeline.Bpe.train(docs, merges = 3); () }) == 15)
+  }
+
+  test("symmetric edge cache: the closure adds one exchange, on src; the loop seed over it none") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // the exchanges a plan runs, through the plans of the caches it reads
+    def exchanges(p: SparkPlan): Seq[ShuffleExchangeLike] = aqe.flatMap(p) {
+      case x: ShuffleExchangeLike => Seq(x)
+      case s: InMemoryTableScanExec => exchanges(s.relation.cacheBuilder.cachedPlan)
+      case _ => Nil
+    }
+    // an input with no exchange of its own, so every exchange is the closure's
+    val input = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 2L -> 1L, 5L -> 6L)
+    val (und, rows) = Graphs.undirectedSized(input)
+    try {
+      assert(rows == 8L)
+      val closure = exchanges(und.queryExecution.executedPlan)
+      assert(closure.size == 1, s"closure exchanges: ${closure.map(_.outputPartitioning)}")
+      // the repartition by src (a one-partition width plans it as SinglePartition)
+      assert(closure.head.shuffleOrigin == REPARTITION_BY_NUM)
+      closure.head.outputPartitioning match {
+        case HashPartitioning(Seq(a: Attribute), _) => assert(a.name == "src")
+        case SinglePartition =>
+        case other => fail(s"closure exchange is not on src: $other")
+      }
+      // the seed's own plan, not the cache's
+      val seed = Graphs.closureVertices(und)
+      assert(aqe.collect(seed.queryExecution.executedPlan) { case x: ShuffleExchangeLike => x }.isEmpty)
+      assert(seed.count() == 5L)
+    } finally graft.iterate.Fixpoint.unpersistMaterialized(und)
   }
 
   test("densest subgraph: an edgeless input yields no candidate rows") {

@@ -33,6 +33,26 @@ class QueriesSpec extends SparkSpec {
       s"events.ts not in nanos range: ${r.getLong(0)}..${r.getLong(1)}")
   }
 
+  test("tables: a reload of an unchanged table runs no job; a rewritten one re-infers") {
+    import graft.core.Tables
+    val dir = java.nio.file.Files.createTempDirectory("graft-tables").toString
+    val meter = graft.tools.QueryMeter(spark)
+    try {
+      spark.range(3).toDF("region_id").write.parquet(s"$dir/region.parquet")
+      Tables.load(spark, dir, "region")
+      val jobs = meter.jobs
+      assert(Tables.load(spark, dir, "region").schema.fieldNames.toSeq == Seq("region_id"))
+      assert(meter.jobs == jobs, "a reload of an unchanged table ran a job")
+      spark.range(2).selectExpr("id AS r_regionkey", "'x' AS r_name")
+        .write.mode("overwrite").parquet(s"$dir/region.parquet")
+      val reread = Tables.load(spark, dir, "region")
+      assert(reread.schema.fieldNames.toSeq == Seq("r_regionkey", "r_name"))
+      assert(reread.count() == 2L)
+      // a missing table still fails with Spark's own error
+      intercept[org.apache.spark.sql.AnalysisException](Tables.load(spark, dir, "nation"))
+    } finally meter.close()
+  }
+
   test("every oracle key has a query") {
     val dangling = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(dangling.isEmpty, s"oracles without queries: $dangling")
