@@ -25,8 +25,7 @@ object Bench {
     // projection included — unlike count(), which lets Catalyst prune both.
     def run(name: String): Boolean =
       try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
+        SparkEntry.run(name, spark, sfDir)(_.write.format("noop").mode("overwrite").save())
         true
       } catch {
         case t: Throwable =>
@@ -54,10 +53,6 @@ object Bench {
       val t0 = System.nanoTime()
       val ok = run(name)
       val dt = (System.nanoTime() - t0) / 1e9
-      // every cached or checkpointed RDD is garbage once the query has run;
-      // the sweep sits outside the timed section
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
       if (ok) dt else -1.0
     }
     val pass1 = selected.map(n => n -> timeOne(n)).toMap

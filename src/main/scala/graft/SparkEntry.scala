@@ -19,6 +19,13 @@ object SparkEntry {
       graft.queries.PipelineQueries.defs ++
       graft.queries.AnalyticsQueries.defs
 
+  /** Runs query `name` on `dir` and hands it to `sink`, as one
+    * [[graft.iterate.Fixpoint.scope]] from load to sink: the result is
+    * `Unit`, so every materialization the query took is released once
+    * `sink` has run, or on a throw. */
+  def run(name: String, spark: SparkSession, dir: String)(sink: DataFrame => Unit): Unit =
+    graft.iterate.Fixpoint.scope(sink(queries(name)(spark, dir)))
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check. */
   def oracleSql: Map[String, String] =

@@ -20,14 +20,14 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names.contains).toMap
-      case None        => SparkEntry.queries
+      case Some(names) => SparkEntry.queries.keys.filter(names.contains)
+      case None        => SparkEntry.queries.keys
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    selected.foreach { name =>
+      try SparkEntry.run(name, spark, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -35,10 +35,10 @@ object AnalyticsQueries {
   private val snIdxRoStores =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   /** Build the read-only store once per (process, sfDir); stored pairs
-    * land in parquet next to the state (a localCheckpoint here would be
-    * swept by Bench's between-query unpersist and die on the second
-    * sample) — each invocation then READS both, the steady-state cost
-    * this face exists to price. */
+    * land in parquet next to the state (a leaf taken in the first call is
+    * released by that call's scope, so a later call could not read it) —
+    * each invocation then READS both, the steady-state cost this face
+    * exists to price. */
   private def snIdxRoStore(s: SparkSession, d: String): (String, DataFrame) = {
     val dir = snIdxRoStores.computeIfAbsent(d, _ => {
       val existing = Tables.customer(s, d).filter(col("c_custkey") % 10 =!= 0)

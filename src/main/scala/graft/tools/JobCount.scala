@@ -10,10 +10,11 @@ package graft.tools
   * runs each query once against SPARK_GRAFT_SF_DIR as one
   * [[QueryMeter.run]] (the noop sink, the Bench action) and prints one line
   * per job (start offset, duration, gap since the previous job's end, in
-  * ms, and its [[QueryMeter.callSite]]), then one summary line: jobs,
-  * stages, tasks, wall, Σ job time, Σ gap and the tail after the last job
-  * (seconds), and what the query left cached (RDDs, blocks, bytes; read
-  * after a GC).
+  * ms, the stages that ran for it and that it skipped, and its
+  * [[QueryMeter.callSite]]), then one summary line: jobs, stages, tasks,
+  * wall, Σ job time, Σ gap and the tail after the last job (seconds), and
+  * what the query left cached once its run's scope released what it took
+  * (RDDs, blocks, bytes; read after a GC, so 0 when nothing escapes).
   */
 object JobCount {
   def main(args: Array[String]): Unit = {
@@ -34,9 +35,10 @@ object JobCount {
       val r = meter.run()(graft.SparkEntry.queries(n)(spark, sfDir))
       var prevEnd = r.startMs
       var jobMs = 0L; var gapMs = 0L
-      r.spans.zipWithIndex.foreach { case (QueryMeter.Job(s, e, site), i) =>
+      r.spans.zipWithIndex.foreach { case (QueryMeter.Job(s, e, site, stages, skipped), i) =>
         val gap = math.max(0L, s - prevEnd)
-        println(f"[jobcount] $n job#$i%-3d +${s - r.startMs}%6dms dur=${e - s}%6dms gap=$gap%6dms $site")
+        println(f"[jobcount] $n job#$i%-3d +${s - r.startMs}%6dms dur=${e - s}%6dms gap=$gap%6dms" +
+          f" stages=$stages%2d skipped=$skipped%2d $site")
         jobMs += e - s; gapMs += gap
         prevEnd = math.max(prevEnd, e)
       }

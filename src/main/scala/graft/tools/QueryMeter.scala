@@ -11,8 +11,8 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkLis
 import graft.iterate.Fixpoint
 
 /** The dev tools' one measurement listener: jobs, stages and tasks, each
-  * job's start/end span and call site and the shuffle records written,
-  * counted on one SparkContext while the meter is attached.
+  * job's start/end span, call site and stage counts and the shuffle records
+  * written, counted on one SparkContext while the meter is attached.
   *
   * [[run]] is the tools' one measured run; every other read first delivers
   * every event posted so far. */
@@ -21,7 +21,7 @@ final class QueryMeter private (spark: SparkSession) extends SparkListener with 
 
   private val sc = spark.sparkContext
   private val jobCount, stageCount, taskCount, shuffleRecords = new AtomicLong
-  private val starts = TrieMap.empty[Int, (Long, String)]
+  private val starts = TrieMap.empty[Int, Started]
   private val spans = new ConcurrentLinkedQueue[Job]
   /** the call site of each running SQL execution, by execution id */
   private val execSites = TrieMap.empty[String, String]
@@ -33,18 +33,22 @@ final class QueryMeter private (spark: SparkSession) extends SparkListener with 
     val site = Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
       .flatMap(execSites.get)
       .getOrElse(j.stageInfos.maxByOption(_.stageId).map(s => callSite(s.details)).getOrElse("spark"))
-    starts.put(j.jobId, (j.time, site))
+    starts.put(j.jobId, Started(j.time, site, j.stageInfos.map(_.stageId).toSet))
     ()
   }
   override def onJobEnd(j: SparkListenerJobEnd): Unit =
-    starts.remove(j.jobId).foreach { case (s, site) => spans.add(Job(s, j.time, site)) }
+    starts.remove(j.jobId).foreach { s =>
+      spans.add(Job(s.time, j.time, s.site, s.ran.size, s.stageIds.size - s.ran.size))
+    }
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
     case s: SparkListenerSQLExecutionStart => execSites.put(s.executionId.toString, callSite(s.details)); ()
     case end: SparkListenerSQLExecutionEnd => execSites.remove(end.executionId.toString); ()
     case _ =>
   }
   override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-    stageCount.incrementAndGet(); ()
+    stageCount.incrementAndGet()
+    val id = s.stageInfo.stageId
+    starts.values.foreach(j => if (j.stageIds(id)) j.ran += id)
   }
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
     taskCount.incrementAndGet()
@@ -56,14 +60,14 @@ final class QueryMeter private (spark: SparkSession) extends SparkListener with 
   /** jobs started since the meter was attached or its last run began */
   def jobs: Long = { GraftBridge.drainListenerBus(sc); jobCount.get }
 
-  /** The measured run: drains the bus and resets the counters, times `body`
-    * (a DataFrame result is written to the noop sink; any other result is
-    * the run's `value`), drains again and reads the leak meter, and then
-    * releases every materialization `body` took: the run is one
-    * [[Fixpoint.scope]], so relations pinned before it survive and a leaf
-    * first taken inside it does not. Of `samples` runs, the fastest. */
+  /** The measured run: drains the bus and resets the counters, then times
+    * `body` (a DataFrame result is written to the noop sink; any other
+    * result is the run's `value`) as one [[Fixpoint.scope]], so relations
+    * pinned before it survive and a leaf first taken inside it is released
+    * with it; drains again and reads the leak meter once the scope has
+    * settled. Of `samples` runs, the fastest. */
   def run(samples: Int = 1)(body: => Any): Run =
-    (1 to samples).map(_ => Fixpoint.scope(once(body))).minBy(_.seconds)
+    (1 to samples).map(_ => once(body)).minBy(_.seconds)
 
   private def once(body: => Any): Run = {
     GraftBridge.drainListenerBus(sc)
@@ -71,26 +75,21 @@ final class QueryMeter private (spark: SparkSession) extends SparkListener with 
     starts.clear(); spans.clear()
     val startMs = System.currentTimeMillis()
     val t0 = System.nanoTime()
-    val result = body
-    val value = result match {
+    val value = Fixpoint.scope(body match {
       case ds: Dataset[_] => ds.write.format("noop").mode("overwrite").save(); ()
       case v => v
-    }
+    })
     val seconds = (System.nanoTime() - t0) / 1e9
     GraftBridge.drainListenerBus(sc)
-    val live = leak()
-    // the result's own leaves count as left cached, whatever the JIT
-    // decides about the liveness of `result`
-    java.lang.ref.Reference.reachabilityFence(result)
     Run(seconds, startMs, jobCount.get, stageCount.get, taskCount.get, shuffleRecords.get,
-      spans.asScala.toSeq.sortBy(_.start), live, value)
+      spans.asScala.toSeq.sortBy(_.start), leak(), value)
   }
 
-  /** The cached RDDs still reachable from the driver, read before the run's
-    * scope releases what the body took (so: what the body would leave
-    * cached). The context's persistent-RDD map is weak-valued, so an RDD
-    * nothing references stays a key until a GC collects it; after the
-    * explicit GC the count no longer depends on when the last one ran. */
+  /** The cached RDDs still reachable from the driver once the run's scope
+    * has released what the body took (so: what the run left behind). The
+    * context's persistent-RDD map is weak-valued, so an RDD nothing
+    * references stays a key until a GC collects it; after the explicit GC
+    * the count no longer depends on when the last one ran. */
   private def leak(): Live = {
     System.gc()
     GraftBridge.drainListenerBus(sc)
@@ -122,8 +121,14 @@ object QueryMeter {
   final case class Run(seconds: Double, startMs: Long, jobs: Long, stages: Long, tasks: Long,
       shuffled: Long, spans: Seq[Job], live: Live, value: Any)
 
-  /** one job: its start and end (epoch ms) and [[callSite]] */
-  final case class Job(start: Long, end: Long, site: String)
+  /** one job: its start and end (epoch ms), [[callSite]], and of the stages
+    * it started with, how many completed for it and how many it skipped */
+  final case class Job(start: Long, end: Long, site: String, stages: Int, skipped: Int)
+
+  /** a running job: its start, call site, stages and the ones that ran */
+  private final case class Started(time: Long, site: String, stageIds: Set[Int]) {
+    val ran = scala.collection.mutable.Set.empty[Int]
+  }
 
   /** The innermost engine frame of a long call site (`graft.graph.Graphs$
     * .undirectedSized(Graphs.scala:79)`): the line that started the job; a

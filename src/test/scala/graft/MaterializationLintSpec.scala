@@ -2,17 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every materialization in the engine's operator and query layers and in
-  * the dev tools goes through `iterate.Fixpoint`, whose scopes and loop
-  * core own and release it: a direct checkpoint (eager or lazy), persist or
-  * unpersist there would escape them, and a hand release of a checkpoint
-  * belongs to the loop core alone. */
+/** Every materialization in src/main/scala/graft outside `iterate/` goes
+  * through `iterate.Fixpoint`, whose scopes and loop core own and release
+  * it: a direct checkpoint (eager or lazy, local or reliable), persist,
+  * cache or unpersist there would escape them, and a hand release of a
+  * checkpoint belongs to the loop core alone. */
 class MaterializationLintSpec extends AnyFunSuite {
 
-  private val raw = Seq(".localCheckpoint(", ".persist(", ".unpersist(", "unpersistMaterialized(")
+  private val raw = Seq(".localCheckpoint(", ".checkpoint(", ".persist(", ".cache()",
+    ".unpersist(", "unpersistMaterialized(")
 
-  /** Every line under the given layers of `src/main/scala/graft` that
-    * calls one of the `raw` materialization names. */
+  /** Every line under the given layers of `src/main/scala/graft` (`.` is
+    * its top-level files) that calls one of the `raw` materialization names. */
   private def directCalls(layers: String*): Seq[String] = {
     val root = new java.io.File("src/main/scala/graft")
     for {
@@ -37,6 +38,11 @@ class MaterializationLintSpec extends AnyFunSuite {
 
   test("tools materialize only through Fixpoint") {
     val found = directCalls("tools")
+    assert(found.isEmpty, found.mkString("direct materialization outside Fixpoint:\n", "\n", ""))
+  }
+
+  test("core, functions, plans, apps and the entry points materialize only through Fixpoint") {
+    val found = directCalls("core", "functions", "plans", "apps", ".")
     assert(found.isEmpty, found.mkString("direct materialization outside Fixpoint:\n", "\n", ""))
   }
 }

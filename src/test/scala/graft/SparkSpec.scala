@@ -23,6 +23,20 @@ trait SparkSpec extends AnyFunSuite {
 
   def sf(dir: String): String = s"/root/testdata/$dir"
 
+  /** Run `body` and require that it leaves no new persisted RDD and no new
+    * cache-manager entry. Asserted as "no new key": the context holds its
+    * persisted RDDs weakly, so an older entry may vanish meanwhile. */
+  def leavesNothing(name: String)(body: => Unit): Unit = {
+    import org.apache.spark.sql.GraftBridge.cachedEntries
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val entries = cachedEntries(spark)
+    body
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"$name left persisted RDDs $leaked")
+    val added = cachedEntries(spark) - entries
+    assert(added <= 0, s"$name left $added cache-manager entries")
+  }
+
   /** ids of the RDDs holding cached blocks, read once the listener bus has
     * delivered every block update (the storage info reads the status store
     * it feeds) */

@@ -906,17 +906,15 @@ class StreamingSpec extends SparkSpec {
   }
 
   /** Drives `trigger` over `batches` (ids 0, 1, 2: append, append,
-    * compact) and asserts each run leaves no new persisted RDD — the
-    * family kernel's own checkpoints included. Asserted as "no new key":
-    * the registry holds RDDs weakly, so an older entry may vanish meanwhile. */
+    * compact) and asserts each run [[leavesNothing]] — the family kernel's
+    * own checkpoints included. */
   private def assertTriggerReleases(name: String, batches: Seq[org.apache.spark.sql.DataFrame])(
       trigger: (org.apache.spark.sql.DataFrame, Long, String, String) => Unit): Unit = {
     val dir = Files.createTempDirectory(s"graft-$name-release")
     batches.zipWithIndex.foreach { case (b, i) =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      trigger(b, i.toLong, dir.resolve("a").toString, dir.resolve("b").toString)
-      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty, s"$name batch $i left persisted RDDs $leaked")
+      leavesNothing(s"$name batch $i") {
+        trigger(b, i.toLong, dir.resolve("a").toString, dir.resolve("b").toString)
+      }
     }
   }
 
