@@ -27,19 +27,12 @@ object SparkEntry {
     graft.iterate.Fixpoint.scope(sink(queries(name)(spark, dir)))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a weaker rows-only check. */
+    * the same parquet tables; every query has one (QueriesSpec). */
   def oracleSql: Map[String, String] =
     graft.queries.RelQueries.oracles ++
       graft.queries.GraphQueries.oracles ++
       graft.queries.PipelineQueries.oracles ++
       graft.queries.AnalyticsQueries.oracles
-
-  /** Queries deliberately without oracle SQL, with the reason documented
-    * at each definition. Empty since round 6 (sssp_path gained an
-    * unrolled per-vertex-min BFS oracle); the mechanism stays for future
-    * genuinely SQL-inexpressible queries. Everything else must carry an
-    * oracle (enforced by QueriesSpec). */
-  def rowsOnlyQueries: Set[String] = Set.empty
 
   /** Headline subset timed by Bench (kept fast enough to run per-round
     * at sf0.1 while still covering scan/agg/join/window/graph/pipeline). */

@@ -14,7 +14,8 @@ import graft.iterate.Fixpoint
   * job's start/end span, call site and stage counts and the shuffle records
   * written, counted on one SparkContext while the meter is attached.
   *
-  * [[run]] is the tools' one measured run; every other read first delivers
+  * [[run]] is the one measured run of the tools and of `graft.Bench`, so a
+  * number from either means the same; every other read first delivers
   * every event posted so far. */
 final class QueryMeter private (spark: SparkSession) extends SparkListener with AutoCloseable {
   import QueryMeter._

@@ -6,14 +6,9 @@ package graft
   */
 class QueriesSpec extends SparkSpec {
 
-  test("every query has either an oracle or is explicitly rows-only") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet --
-      SparkEntry.rowsOnlyQueries
+  test("every query has an oracle") {
+    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty, s"queries without oracle SQL: $missing")
-    val stale = SparkEntry.rowsOnlyQueries -- SparkEntry.queries.keySet
-    assert(stale.isEmpty, s"rows-only entries without a query: $stale")
-    val both = SparkEntry.rowsOnlyQueries.intersect(SparkEntry.oracleSql.keySet)
-    assert(both.isEmpty, s"rows-only entries that have an oracle: $both")
   }
 
   test("testdata schemas match the engine's table contract (drift canary)") {
