@@ -59,22 +59,26 @@ object Graphs {
     * that have not converged */
   val DefaultCcRounds = 15
 
-  /** The undirected edge set of a driver loop and its row count: the
-    * [[symmetricClosure]] of the pinned input edges, as a columnar cache
-    * hash-partitioned by src, so every per-round scan reads as many
-    * partitions as the data needs. The row count (both directions: 2m)
-    * comes from the count that fills the cache; it bounds the vertex count,
-    * so loops over the closure are sized from it with no count of their
-    * own. */
-  private[graft] def undirectedSized(edges: DataFrame): (DataFrame, Long) =
+  /** The undirected edge set of a driver loop, its row count and its vertex
+    * count: the [[symmetricClosure]] of the pinned input edges, as a
+    * columnar cache hash-partitioned by src, so every per-round scan reads
+    * as many partitions as the data needs. Both counts come from the one
+    * aggregate that fills the cache: the rows (both directions: 2m) and the
+    * distinct srcs, which are the closure's vertices and, the cache being
+    * partitioned on src, count with no exchange of their own. Loops over
+    * the closure are sized from one of them with no count of their own. */
+  private[graft] def undirectedSized(edges: DataFrame): (DataFrame, Long, Long) =
     // COLUMNAR, deliberately NOT a LogicalRDD leaf (r17 A/B): the fixpoint
     // loops scan this relation EVERY round, and the in-memory columnar
     // cache's vectorized scan beats row-block iteration by ~180 ms/round on
     // the 160k-row coloring graph (coloring 9.9 s persist vs 14.1 s leaf,
     // coreness 5.4 vs 6.6). Init-only consumers (kTruss) take the leaf
     // instead — the opposite side of the same tradeoff.
-    Fixpoint.withPinned(edges.select(col("src"), col("dst")))((e, n) =>
-      Fixpoint.columnarRows(symmetricClosure(e, n)))
+    Fixpoint.withPinned(edges.select(col("src"), col("dst"))) { (e, n) =>
+      val und = Fixpoint.persisted(symmetricClosure(e, n))
+      val sizes = und.agg(count(lit(1)), count_distinct(col("src"))).collect().head
+      (und, sizes.getLong(0), sizes.getLong(1))
+    }
 
   /** e ∪ reverse(e) over `n` pinned input edges, hash-partitioned by src at
     * the width 2n rows warrant, then deduped. The distinct's clustering on
@@ -99,9 +103,9 @@ object Graphs {
     * use pointer-doubling variants for giant-diameter graphs.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = DefaultCcRounds): DataFrame = Fixpoint.scope {
-    val (undirected, n) = undirectedSized(edges)
+    val (undirected, n, _) = undirectedSized(edges)
     val init = closureVertices(undirected).withColumn("label", col("vertex"))
-    val result = Fixpoint.iterateSized(init, n, maxIter,
+    val result = Fixpoint.iterate(init, n, maxIter,
       converged = Fixpoint.monotoneSumUnchanged("label")) { (state, _) =>
       val nbr = state.join(undirected, state("vertex") === undirected("src"))
         .select(col("dst").as("vertex"), col("label"))
@@ -175,8 +179,8 @@ object Graphs {
     * is one degree aggregation + two semi-joins, all state-sized.
     * Returns (vertex, degree) of the surviving subgraph. */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = DefaultKCoreRounds): DataFrame = Fixpoint.scope {
-    val (undirected, n) = undirectedSized(edges)
-    val result = Fixpoint.iterateSized(undirected, n, maxIter,
+    val (undirected, n, _) = undirectedSized(edges)
+    val result = Fixpoint.iterate(undirected, n, maxIter,
       converged = Fixpoint.countUnchanged()) { (state, _) =>
       // undirected state holds both directions, so per-src row count IS
       // the undirected degree
@@ -236,10 +240,13 @@ object Graphs {
     * early. */
   def coreness(edges: DataFrame, rounds: Int = DefaultCorenessRounds): DataFrame = Fixpoint.scope {
     import org.apache.spark.sql.expressions.Window
-    val (und, n) = undirectedSized(edges)
-    // symmetric closure => per-src row count IS the undirected degree
+    val (und, _, n) = undirectedSized(edges)
+    // symmetric closure => per-src row count IS the undirected degree. The
+    // loop is sized from the vertex count: the state holds one row per
+    // vertex, and map-side partial aggregation shrinks each round's 2m
+    // messages to histogram buckets before the shuffle
     val init = und.groupBy(col("src").as("vertex")).agg(count(lit(1)).as("val"))
-    val result = Fixpoint.iterateSized(init, n, rounds,
+    val result = Fixpoint.iterate(init, n, rounds,
         converged = Fixpoint.monotoneSumUnchanged("val")) { (state, _) =>
       val hist = state.join(und, state("vertex") === und("src"))
         .groupBy(col("dst").as("vertex"), col("val"))
@@ -263,9 +270,12 @@ object Graphs {
     * the chunked-sessionize proof shape). */
   def corenessWindow(edges: DataFrame, rounds: Int = DefaultCorenessRounds): DataFrame = Fixpoint.scope {
     import org.apache.spark.sql.expressions.Window
-    val (und, n) = undirectedSized(edges)
+    // sized from the 2m message rows each round sorts, not the vertex-sized
+    // state (q_graph_coreness_window, sf0.1, 4 cores: 4.1 s at width 2,
+    // 5.6 s at width 1)
+    val (und, n, _) = undirectedSized(edges)
     val init = und.groupBy(col("src").as("vertex")).agg(count(lit(1)).as("val"))
-    val result = Fixpoint.iterateSized(init, n, rounds,
+    val result = Fixpoint.iterate(init, n, rounds,
         converged = Fixpoint.monotoneSumUnchanged("val")) { (state, _) =>
       val msgs = state.join(und, state("vertex") === und("src"))
         .select(col("dst").as("vertex"), col("val"))
@@ -314,7 +324,7 @@ object Graphs {
     * errors — a divergence, round-11 advice item). */
   def densestSubgraph(edges: DataFrame,
       rounds: Int = DefaultDensestRounds): DataFrame = Fixpoint.scope {
-    val (first, n) = undirectedSized(edges)
+    val (first, n, _) = undirectedSized(edges)
     // the peel re-plans deg/stats/semi-join relations every round, so it
     // runs under the shared loop session for the edge count's width: state-
     // sized shuffles, no AQE stage replanning. The one-time Row re-bind
@@ -489,8 +499,10 @@ object Graphs {
     // sup >= k-2 filter implies, since k-2 >= 1), and the maintained sup
     // of the final state IS its triangle support, so the output needs no
     // final recompute either.
-    val init = orientedEdgeSupport(g)
-    val result = Fixpoint.iterate(init, maxIter,
+    // no bound on the support relation's size is at hand: the seed is
+    // cached, and the count that fills it sizes the loop
+    val (init, rows) = Fixpoint.columnarRows(orientedEdgeSupport(g))
+    val result = Fixpoint.iterate(init, rows, maxIter,
       converged = Fixpoint.countUnchanged()) { (state, _) =>
       val dead = state.filter(col("sup") < k - 2).select("src", "dst")
       val alive = state.filter(col("sup") >= k - 2)
@@ -576,12 +588,12 @@ object Graphs {
     * Returns (vertex, round) for set members, round = the 1-based round
     * that admitted the vertex. */
   def maximalIndependentSet(edges: DataFrame, rounds: Int = DefaultMisRounds): DataFrame = Fixpoint.scope {
-    val (undirected, n) = undirectedSized(edges)
+    val (undirected, n, _) = undirectedSized(edges)
     val init = closureVertices(undirected)
       .withColumn("pkey", priorityKey(col("vertex")))
       .withColumn("status", lit(0)) // 0 active, 1 in set, 2 dominated
       .withColumn("round", lit(-1L))
-    val result = Fixpoint.iterateSized(init, n, rounds,
+    val result = Fixpoint.iterate(init, n, rounds,
       converged = Fixpoint.monotoneSumUnchanged("status")) { (state, i) =>
       val active = state.filter(col("status") === 0).select("vertex", "pkey")
       val nbrMin = active.join(undirected, active("vertex") === undirected("src"))
@@ -634,11 +646,11 @@ object Graphs {
     * deterministic in both engines. Returns (vertex, color), color = -1
     * for vertices undecided within the round budget. */
   def greedyColoring(edges: DataFrame, rounds: Int = DefaultColoringRounds): DataFrame = Fixpoint.scope {
-    val (undirected, n) = undirectedSized(edges)
+    val (undirected, n, _) = undirectedSized(edges)
     val init = closureVertices(undirected)
       .withColumn("pkey", priorityKey(col("vertex")))
       .withColumn("color", lit(-1L))
-    val result = Fixpoint.iterateSized(init, n, rounds,
+    val result = Fixpoint.iterate(init, n, rounds,
       converged = Fixpoint.monotoneSumUnchanged("color")) { (state0, _) =>
       // BARRIER-FUSED round (the maximalMatching treatment, round 11): the
       // winner test (min pkey over UNCOLORED neighbors) and the mex input
@@ -698,7 +710,7 @@ object Graphs {
     * Same state/round discipline as [[maximalIndependentSet]]. Returns
     * matched pairs (a, b, round) with a < b, round 1-based. */
   def maximalMatching(edges: DataFrame, rounds: Int = DefaultMatchingRounds): DataFrame = Fixpoint.scope {
-    val (undirected, n) = undirectedSized(edges)
+    val (undirected, n, _) = undirectedSized(edges)
     val init = closureVertices(undirected)
       .withColumn("status", lit(0)) // 0 active, 1 matched, 2 unmatched
       .withColumn("mate", lit(-1L))
@@ -708,7 +720,7 @@ object Graphs {
     // monotone-sum test would mistake that idle round for completion.
     // noneMatch (full scan) rather than limit(1): the full scan fuses
     // with the round's lazy-checkpoint materialization into one job
-    val result = Fixpoint.iterateSized(init, n, rounds,
+    val result = Fixpoint.iterate(init, n, rounds,
       converged = Fixpoint.noneMatch(col("status") === 0)) { (state, i) =>
       import org.apache.spark.sql.Column
       // round-salted hashes: same Mersenne-31 multiplicative mix as
@@ -813,16 +825,15 @@ object Graphs {
     val e = Fixpoint.materializedLeaf(
       edges.select(col("src"), col("dst")).distinct())
     val seed = Fixpoint.materializedLeaf(vertices(e).withColumn("scc", lit(-1L)))
-    // one cached-scan count: upper-bounds every phase's active set, so the
-    // per-phase fixpoint-entry sizing jobs collapse to this one
-    // (iterateSized, r16 verdict item 7). Later phases' shrunken actives
-    // may overshoot the width — capped, and a phase that peels most of
-    // the graph leaves tiny rounds where width barely matters.
+    // one cached-scan count: it upper-bounds every phase's active set, so
+    // it sizes every loop below. Later phases' shrunken actives may
+    // overshoot the width — capped, and a phase that peels most of the
+    // graph leaves tiny rounds where width barely matters.
     val nV = seed.count()
     // one phase per round, under the shared loop session for nV, which the
     // inner fixpoints also resolve to; the phase's slice and both fixpoint
     // results go once the merged state has materialized
-    Fixpoint.rebindStats(Fixpoint.iterateSized(seed, nV, phases) { (st, _) =>
+    Fixpoint.rebindStats(Fixpoint.iterate(seed, nV, phases) { (st, _) =>
       val state = Fixpoint.rebindStats(st)
       val active = state.filter(col("scc") < 0).select("vertex")
       // the phase's active edge slice, materialized once: both fixpoints
@@ -833,9 +844,9 @@ object Graphs {
         .join(active.select(col("vertex").as("dst")), "dst")
         .select("src", "dst"))
       // forward color propagation: max undecided id reaching each vertex.
-      // iterateSized: the seeds are narrow maps over checkpointed state
-      // (the iterateSized caller contract), width from the entry count
-      val colors = Fixpoint.iterateSized(
+      // The seeds are narrow maps over checkpointed state (the iterate
+      // caller contract), width from the entry count
+      val colors = Fixpoint.iterate(
         active.withColumn("color", col("vertex")), nV, rounds,
         converged = Fixpoint.monotoneSumUnchanged("color")) { (st, _) =>
         val msgs = st.join(ae, st("vertex") === ae("src"))
@@ -844,7 +855,7 @@ object Graphs {
           .groupBy("vertex").agg(max("color").as("color"))
       }
       // backward root-reachability within the color class
-      val flags = Fixpoint.iterateSized(
+      val flags = Fixpoint.iterate(
         colors.withColumn("flag", (col("color") === col("vertex")).cast("int")),
         nV, rounds,
         converged = Fixpoint.monotoneSumUnchanged("flag")) { (st, _) =>
@@ -909,26 +920,30 @@ object Graphs {
       strict: Boolean = false): DataFrame = Fixpoint.scope {
     // strict: an undecided scc = -1 residue would lump every undecided
     // vertex into ONE pseudo-component and corrupt the layering — the
-    // guard costs one count over the checkpointed vertex relation
-    val scc = Fixpoint.materializedLeaf(
+    // guard costs one count over the checkpointed vertex relation. Either
+    // way `scc` is the SCC loop's final state, already materialized.
+    val scc =
       if (strict) stronglyConnectedComponentsStrict(edges, phases, rounds)
-      else stronglyConnectedComponents(edges, phases, rounds))
+      else stronglyConnectedComponents(edges, phases, rounds)
     val bySrc = scc.select(col("vertex").as("src"), col("scc").as("csrc"))
     val byDst = scc.select(col("vertex").as("dst"), col("scc").as("cdst"))
     val ce = Fixpoint.materializedLeaf(edges.select("src", "dst").distinct()
       .join(bySrc, "src").join(byDst, "dst")
       .select("csrc", "cdst").filter(col("csrc") =!= col("cdst")).distinct())
-    val init = scc.select(col("scc").as("comp")).distinct()
-      .withColumn("level", lit(0L))
-    val levels = Fixpoint.iterate(init, levelRounds,
+    // the component count is not known up front: the seed is cached, and
+    // the count that fills it sizes the loop
+    val (init, comps) = Fixpoint.columnarRows(scc.select(col("scc").as("comp")).distinct()
+      .withColumn("level", lit(0L)))
+    val levels = Fixpoint.iterate(init, comps, levelRounds,
       converged = Fixpoint.monotoneSumUnchanged("level")) { (st, _) =>
       val msgs = st.join(ce, st("comp") === ce("csrc"))
         .select(col("cdst").as("comp"), (col("level") + 1L).as("level"))
       st.select("comp", "level").unionByName(msgs)
         .groupBy("comp").agg(max("level").as("level"))
     }
-    scc.join(levels, scc("scc") === levels("comp"))
-      .select(col("vertex"), col("scc"), col("level"))
+    // one leaf, so the scope releases both loop results behind it
+    Fixpoint.materializedLeaf(scc.join(levels, scc("scc") === levels("comp"))
+      .select(col("vertex"), col("scc"), col("level")))
   }
 
   /** 2-approximate minimum vertex cover: the endpoints of a maximal
@@ -961,9 +976,9 @@ object Graphs {
     * scan), so the cost is exactly `rounds` checkpoint jobs.
     */
   def labelPropagation(edges: DataFrame, rounds: Int = DefaultLpaRounds): DataFrame = Fixpoint.scope {
-    val (undirected, n) = undirectedSized(edges)
+    val (undirected, n, _) = undirectedSized(edges)
     val init = closureVertices(undirected).withColumn("label", col("vertex"))
-    val result = Fixpoint.iterateSized(init, n, rounds) { (state, _) =>
+    val result = Fixpoint.iterate(init, n, rounds) { (state, _) =>
       val msgs = state.join(undirected, state("vertex") === undirected("src"))
         .select(col("dst").as("vertex"), col("label"))
         .unionByName(state.select("vertex", "label"))
@@ -1182,7 +1197,7 @@ object Graphs {
     * iteration; the natural "score this LPA/CC clustering" follow-up.
     */
   def modularityByCommunity(edges: DataFrame, labels: DataFrame): DataFrame = Fixpoint.scope {
-    val (und, twoM) = undirectedSized(edges) // both directions: |und| = 2m
+    val (und, twoM, _) = undirectedSized(edges) // both directions: |und| = 2m
     val lab = labels.select(col("vertex"), col("label"))
     val deg = und.groupBy("src").agg(count(lit(1)).as("deg"))
     val degSum = deg.join(lab, deg("src") === lab("vertex"))
@@ -1218,9 +1233,9 @@ object Graphs {
     */
   def connectedComponentsDoubling(
       edges: DataFrame, maxIter: Int = DefaultDoublingRounds): DataFrame = Fixpoint.scope {
-    val (undirected, n) = undirectedSized(edges)
+    val (undirected, n, _) = undirectedSized(edges)
     val init = closureVertices(undirected).withColumn("label", col("vertex"))
-    val result = Fixpoint.iterateSized(init, n, maxIter,
+    val result = Fixpoint.iterate(init, n, maxIter,
       converged = Fixpoint.monotoneSumUnchanged("label")) { (state, _) =>
       // HashMin step: min label over self + in-neighbors. A leaf
       // because the pointer jump consumes it on BOTH sides of a

@@ -28,11 +28,12 @@ object Hits {
   /** @param edges (src LONG, dst LONG)
     * @return (vertex LONG, hub DOUBLE, auth DOUBLE), L1-normalized */
   def run(edges: DataFrame, iterations: Int): DataFrame = Fixpoint.scope {
-    val (e, _) = PageRank.srcPartitioned(edges)
+    val (e, n) = PageRank.srcPartitioned(edges)
     val init = Graphs.vertices(e)
       .select(col("vertex"), lit(1.0).as("hub"), lit(1.0).as("auth"))
 
-    val result = Fixpoint.iterate(init, iterations) { (state, _) =>
+    // n edges touch at most 2n vertices
+    val result = Fixpoint.iterate(init, 2 * n, iterations) { (state, _) =>
       // every round's state holds every vertex: rooted at it, the round
       // plans and runs under the loop session (a Dataset executes under
       // its root's session), never the caller's

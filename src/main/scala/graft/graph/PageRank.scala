@@ -31,7 +31,7 @@ import graft.iterate.Fixpoint
   *  - Edge relation pre-partitioned by src with cardinality-sized width and
   *    cached once; every iteration's join reuses it.
   *  - Lineage cut per iteration via Fixpoint (localCheckpoint), which also
-  *    sizes the loop's shuffles to the vertex count.
+  *    sizes the loop's shuffles to the vertex count or a bound on it.
   */
 object PageRank {
 
@@ -42,8 +42,8 @@ object PageRank {
     */
   def run(edges: DataFrame, iterations: Int, dummy: Long,
       realVertexCount: Long): DataFrame = Fixpoint.scope {
-    val (e, width) = srcPartitioned(edges)
-    val eWithDeg = outDegreeEdges(e, width)
+    val (e, n) = srcPartitioned(edges)
+    val eWithDeg = outDegreeEdges(e, n)
 
     // base state: every real vertex 1/N, dummy 0 (PageRankRDD/...:49-51).
     // base(dummy) always equals the previous iteration's delta (0 initially).
@@ -64,7 +64,8 @@ object PageRank {
             .otherwise(col("rank") + col("d")).as("rank"))
     }
 
-    val result = Fixpoint.iterate(init, iterations) { (state, _) =>
+    // n edges touch at most 2n vertices
+    val result = Fixpoint.iterate(init, 2 * n, iterations) { (state, _) =>
       // effective ranks = base + deferred delta (dummy reads as 0)
       val eff = applyDelta(state)
       // push: each edge carries rank(src)/outdeg(src) to dst, summed per dst
@@ -136,8 +137,8 @@ object PageRank {
   private def dampedCore(edges: DataFrame, iterations: Int,
       terms: Long => (Column, Column) = n => (lit(DampTeleport) / n, col("dm") / n))(
       initOf: (DataFrame, Long) => DataFrame): DataFrame = Fixpoint.scope {
-    val (e, width) = srcPartitioned(edges)
-    val eWithDeg = outDegreeEdges(e, width)
+    val (e, m) = srcPartitioned(edges)
+    val eWithDeg = outDegreeEdges(e, m)
     val verts = Fixpoint.persisted(Graphs.vertices(e))
     val n = verts.count()
     // dangling set = vertices that never appear as src (loop-invariant)
@@ -147,8 +148,7 @@ object PageRank {
     // r' = teleport + α·(Σ in-contribs + dangling), each term per vertex
     val (teleport, dangling) = terms(n)
 
-    val init = initOf(verts, n)
-    Fixpoint.iterate(init, iterations) { (state, _) =>
+    Fixpoint.iterate(initOf(verts, n), n, iterations) { (state, _) =>
       val dm = state.join(dang, Seq("vertex"), "left_semi")
         .agg(coalesce(sum("rank"), lit(0.0)).as("dm"))
       val contrib = eWithDeg
@@ -184,22 +184,23 @@ object PageRank {
     * keeps for the other edge caches: the count's materialization then
     * feeds the repartition from cache instead of re-running the
     * derivation), and the edges hash-partitioned by src at the width the
-    * count warrants, with that width. The partitioned
+    * count warrants, with that count. The partitioned
     * edges are [[Fixpoint.persisted]] — lazy, their first consumer fills
     * them. */
-  private[graph] def srcPartitioned(edges: DataFrame): (DataFrame, Int) = {
+  private[graph] def srcPartitioned(edges: DataFrame): (DataFrame, Long) = {
     val u0 = Fixpoint.persisted(edges)
-    val width = Fixpoint.sizedPartitions(edges.sparkSession, u0.count())
-    (Fixpoint.persisted(u0.repartition(width, col("src"))), width)
+    val n = u0.count()
+    (Fixpoint.persisted(u0.repartition(Fixpoint.sizedPartitions(edges.sparkSession, n), col("src"))), n)
   }
 
   /** edges pre-joined with their out-degrees ONCE — the e ⋈ outDeg join is
     * loop-invariant, so hoisting it saves a join (and its broadcast/
-    * exchange jobs) from every iteration's plan */
-  private def outDegreeEdges(e: DataFrame, width: Int): DataFrame =
+    * exchange jobs) from every iteration's plan; partitioned like `e`, at
+    * the width its `n` rows warrant */
+  private def outDegreeEdges(e: DataFrame, n: Long): DataFrame =
     Fixpoint.persisted(e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
       .select(col("src"), col("dst"), col("outdeg"))
-      .repartition(width, col("src")))
+      .repartition(Fixpoint.sizedPartitions(e.sparkSession, n), col("src")))
 
   /** Top-k by rank, deterministic tie-break on vertex id
     * (PageRankDataSet/.../FollowerCount.scala:76). Catalyst plans this as

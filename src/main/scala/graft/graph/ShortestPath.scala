@@ -72,7 +72,7 @@ object ShortestPath {
     * state's row count and sizes the loop, which runs no count of its own. */
   private def relaxLoop(init: DataFrame, e: DataFrame, cost: Column, maxIter: Int,
       vertices: Long): DataFrame =
-    Fixpoint.iterateSized(init, vertices, maxIter,
+    Fixpoint.iterate(init, vertices, maxIter,
       converged = Fixpoint.noneMatch(col("changed"))) { (state, _) =>
       val frontier = state.filter(col("changed"))
       val candidates = frontier
@@ -153,7 +153,8 @@ object ShortestPath {
     val unreached = lit(Long.MaxValue)
     val init = seeds.toDF("seed").select(col("seed"), col("seed").as("vertex"),
       lit(0L).as("dist"), lit(true).as("changed"))
-    val result = Fixpoint.iterate(init, maxIter,
+    // sized from the seed rows: the state's round-1 size
+    val result = Fixpoint.iterate(init, seeds.size, maxIter,
       converged = Fixpoint.noneMatch(col("changed"))) { (state, _) =>
       val frontier = state.filter(col("changed"))
       val candidates = frontier.join(e, frontier("vertex") === e("src"))
@@ -178,11 +179,12 @@ object ShortestPath {
     * partition-order-dependent; ours is stable).
     */
   def runWithPath(edges: DataFrame, source: Long, maxIter: Int = 50): DataFrame = Fixpoint.scope {
-    val (e, _) = Fixpoint.srcPartitionedLeaf(edges)
+    val (e, n) = Fixpoint.srcPartitionedLeaf(edges)
     val init = sourceSeeded(e, source).withColumn("path",
       when(col("vertex") === source, array(lit(source))).otherwise(lit(null).cast("array<bigint>")))
 
-    val result = Fixpoint.iterate(init, maxIter,
+    // n edges touch at most 2n vertices, plus the source
+    val result = Fixpoint.iterate(init, 2 * n + 1, maxIter,
       converged = Fixpoint.noneMatch(col("changed"))) { (state, _) =>
       val frontier = state.filter(col("changed"))
       val candidates = frontier

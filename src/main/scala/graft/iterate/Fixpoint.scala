@@ -21,6 +21,11 @@ import scala.collection.mutable
   * of driver-loop algorithms at scale (plan analysis time and task
   * serialization grow superlinearly otherwise).
   *
+  * Every fixed-point loop enters through one call, [[iterate]], whose
+  * `rows` argument sizes the loop's shuffle width and nothing else; the
+  * loops with a read of their own (densest's peel, the BPE trainers) run
+  * on [[unfold]] directly.
+  *
   * The loop contract, kept by [[unfold]] for every driver loop: a round's
   * read is one barrier that scans every partition of the current state, and
   * so materializes the state's lazy checkpoint; the loop then releases what
@@ -269,56 +274,41 @@ object Fixpoint {
     state
   }
 
-  /** Iterate `step` from `init` until `maxIter` rounds or `converged(state)`.
-    * The seed is cached and counted (the count sizes the loop session, and
-    * the caller may release the seed's inputs once it returns); round 1's
-    * read copies it into the loop's first state, and the cache goes. */
-  def iterate(
-      init: DataFrame,
-      maxIter: Int,
-      converged: DataFrame => Boolean = _ => false)(
-      step: (DataFrame, Int) => DataFrame): DataFrame = {
-    val seeded = persisted(init)
-    converge(seeded, seeded.count(), maxIter, converged, step, Some(seeded))
-  }
-
-  /** [[iterate]] minus the seed's cache and sizing count, for callers that
-    * already know an upper bound on the state cardinality: an edge cache's
-    * row count bounds its vertices, and SCC's phases run over subsets of a
-    * once-counted vertex relation. `knownRows` only sizes the loop's
-    * shuffle width (never correctness); an over-estimate costs width
-    * overshoot, capped at the session's configured width.
+  /** The one entry point of a fixed-point driver loop: iterate `step` from
+    * `init` until `maxIter` rounds or `converged(state)`, on [[unfold]].
+    *
+    * `rows` is what the caller knows of the state's size: an exact count it
+    * already holds, or an upper bound (an edge cache's row count bounds its
+    * vertices). It sizes the loop session's shuffle width and nothing else,
+    * never correctness; an over-estimate costs width overshoot, capped at
+    * the session's configured width. The loop runs no count of its own.
     *
     * CALLER CONTRACT: `init` reads only materialized relations the caller
     * holds until round 1's read, since the seed has no cache of its own.
     * It may hold an exchange: the re-bind takes the seed's RDD once, so the
-    * exchange runs once however often round 1's step reads the state
-    * (traced q_graph_sssp, whose seed has one: the same shuffle records as
-    * when [[iterate]] cached and counted it, less the count's own). Under
+    * exchange runs once however often round 1's step reads the state. Under
     * adaptive execution that exchange runs as a job of its own at the
     * re-bind, so only a seed with no exchange (CC's over the src-partitioned
-    * edge cache) reaches round 1 with no job. */
-  def iterateSized(
+    * edge cache) reaches round 1 with no job. A seed that reads an
+    * unmaterialized derivation is materialized at the call site
+    * ([[columnarRows]] also yields its `rows`).
+    *
+    * The seed is re-bound to the loop session for `rows`: rows stream out of
+    * its materialized inputs, and the lazy checkpoint makes the switch a
+    * one-time state-sized copy that round 1's job computes. The read of
+    * every built state is `converged` plus a guard: the convergence
+    * aggregates (noneMatch, monotoneSumUnchanged, countUnchanged) scan every
+    * row, so their one job computes the round and marks its checkpoint, and
+    * the guard runs no job; a test that scans nothing (the fixed-round
+    * default) leaves the checkpoint unmarked, and the guard's count is the
+    * one job the round needs. */
+  def iterate(
       init: DataFrame,
-      knownRows: Long,
+      rows: Long,
       maxIter: Int,
       converged: DataFrame => Boolean = _ => false)(
-      step: (DataFrame, Int) => DataFrame): DataFrame =
-    converge(init, knownRows, maxIter, converged, step, None)
-
-  /** [[iterate]]'s loop on [[unfold]]. The seed is re-bound to the loop
-    * session for `rows`: rows stream out of its materialized inputs, and the
-    * lazy checkpoint makes the switch a one-time state-sized copy that round
-    * 1's job computes. The read of every built state is `converged` plus a
-    * guard: the convergence aggregates (noneMatch, monotoneSumUnchanged,
-    * countUnchanged) scan every row, so their one job computes the round
-    * and marks its checkpoint, and the guard runs no job; a test that scans
-    * nothing (the fixed-round default) leaves the checkpoint unmarked, and
-    * the guard's count is the one job the round needs. */
-  private def converge(seed: DataFrame, rows: Long, maxIter: Int,
-      converged: DataFrame => Boolean, step: (DataFrame, Int) => DataFrame,
-      seeded: Option[DataFrame]): DataFrame = {
-    val bound = lazyLeaf(rebindStats(seed, loopSession(seed.sparkSession, rows)))
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    val bound = lazyLeaf(rebindStats(init, loopSession(init.sparkSession, rows)))
     unfold(bound, maxIter + 1) { (state, i) =>
       i > 0 && {
         val done = converged(state)
@@ -326,7 +316,6 @@ object Fixpoint {
           case lr: LogicalRDD => if (!lr.rdd.isCheckpointed) lr.rdd.count()
           case _ => state.count()
         }
-        if (i == 1) seeded.foreach(_.unpersist(false))
         done
       }
     } { (state, done, i) => if (done || i == maxIter) None else Some(step(state, i)) }

@@ -196,14 +196,9 @@ object GraphQueries {
     // the shape production graphs actually have): k=3 keeps every edge in
     // at least one triangle. Runs under the default wedge budget and is
     // in the bench set so peel cost is tracked per round.
-    "q_graph_ktruss_sparse" -> ((s, d) => {
-      val e = Tables.lineitem(s, d).select(
-          (col("l_orderkey") % KTrussSparseMod).cast("long").as("src"),
-          (col("l_partkey") % KTrussSparseMod).cast("long").as("dst"))
-        .filter(col("src") =!= col("dst"))
-        .distinct()
-      Graphs.kTruss(e, KTrussSparseK, KTrussRounds).orderBy("src", "dst")
-    }),
+    "q_graph_ktruss_sparse" -> ((s, d) =>
+      Graphs.kTruss(Graphs.lineitemEdges(s, d, KTrussSparseMod), KTrussSparseK, KTrussRounds)
+        .orderBy("src", "dst")),
 
     // in-degree distribution: vertices per degree value — the first plot
     // made of any new graph (power-law check, hub detection); two tiny

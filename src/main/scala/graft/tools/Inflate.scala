@@ -177,10 +177,7 @@ object GraphScale {
     // sparse k-truss cut)
     val core = Fixpoint.materializedLeaf(Graphs.lineitemEdges(spark, sfDir, 300))
     val triCut = Fixpoint.materializedLeaf(core.filter(col("src") <= 200 && col("dst") <= 200))
-    val sparse = Fixpoint.materializedLeaf(graft.core.Tables.lineitem(spark, sfDir).select(
-        (col("l_orderkey") % 20000).cast("long").as("src"),
-        (col("l_partkey") % 20000).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct())
+    val sparse = Fixpoint.materializedLeaf(Graphs.lineitemEdges(spark, sfDir, 20000))
 
     // min of 2 measured runs each (repeat-min, same basis as Bench); each
     // run releases only what it took, so the shared edge relations pinned
@@ -419,10 +416,7 @@ object SkewScale {
         Triangles.countShuffle(triS, maxId = Long.MaxValue))
     }
     if (want("ktruss_sparse")) {
-      val sparse = Fixpoint.materializedLeaf(graft.core.Tables.lineitem(spark, sfDir).select(
-          (col("l_orderkey") % 20000).cast("long").as("src"),
-          (col("l_partkey") % 20000).cast("long").as("dst"))
-        .filter(col("src") =!= col("dst")).distinct())
+      val sparse = Fixpoint.materializedLeaf(Graphs.lineitemEdges(spark, sfDir, 20000))
       val ktU = Fixpoint.materializedLeaf(Inflate.replicateGraph(sparse, k)._1)
       val ktS = Fixpoint.materializedLeaf(Inflate.replicateGraphSkewed(sparse, k, hubEvery)._1)
       reportEdges("ktruss_sparse", ktU, ktS)

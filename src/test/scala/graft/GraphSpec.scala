@@ -9,6 +9,10 @@ class GraphSpec extends SparkSpec {
 
   private def edges(es: (Long, Long)*) = es.toDF("src", "dst")
 
+  /** the Spark jobs `body` runs */
+  private def jobsOf(body: => Any): Long =
+    scala.util.Using.resource(graft.tools.QueryMeter(spark)) { meter => body; meter.jobs }
+
   test("triangles: single directed 3-cycle counts once") {
     val e = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 1L -> 3L)
     val n = Triangles.countShuffle(e, maxId = 100).first().getDouble(0)
@@ -235,7 +239,6 @@ class GraphSpec extends SparkSpec {
 
   test("fixpoint primitives: stats re-bind runs no job; edge leaf releases every block") {
     import graft.iterate.Fixpoint
-    import graft.tools.QueryMeter
     import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.execution.LogicalRDD
     val e = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 5L -> 6L)
@@ -250,8 +253,6 @@ class GraphSpec extends SparkSpec {
     def size(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.stats.sizeInBytes
     assert(size(joined) != default)
-    def jobsOf(body: => Any): Long =
-      scala.util.Using.resource(QueryMeter(spark)) { meter => body; meter.jobs }
     val loop = Fixpoint.loopSession(spark, 10L)
     var rebound, moved: org.apache.spark.sql.DataFrame = null
     assert(jobsOf {
@@ -357,11 +358,14 @@ class GraphSpec extends SparkSpec {
 
     // (f) job-count pins of loops on the core: densest's peel of a K6 on a
     // path and CC over it, whose prologue is the symmetric edge cache with
-    // no count of the loop's own, and 3 BPE merges
+    // no count of the loop's own; HITS and damped PageRank over it, sized
+    // from their edge cache's count and their vertex count; and 3 BPE merges
     val k6 = for (a <- 1L to 6L; b <- 1L to 6L if a < b) yield a -> b
     val dense = edges((k6 ++ (10L until 20L).map(i => i -> (i + 1))): _*)
     assert(jobsOf(Fixpoint.scope { Graphs.densestSubgraph(dense); () }) == 9)
     assert(jobsOf(Fixpoint.scope { Graphs.connectedComponents(dense); () }) == 17)
+    assert(jobsOf(Fixpoint.scope { Hits.run(dense, 3); () }) == 19)
+    assert(jobsOf(Fixpoint.scope { PageRank.runDamped(dense, 3); () }) == 19)
     val docs = Seq(1L -> "low low low lower lowest").toDF("doc_id", "text")
     assert(jobsOf(Fixpoint.scope { graft.pipeline.Bpe.train(docs, merges = 3); () }) == 15)
   }
@@ -382,9 +386,13 @@ class GraphSpec extends SparkSpec {
     }
     // an input with no exchange of its own, so every exchange is the closure's
     val input = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 2L -> 1L, 5L -> 6L)
-    val (und, rows) = Graphs.undirectedSized(input)
+    var sized: (org.apache.spark.sql.DataFrame, Long, Long) = null
+    // the input pin's count, then the one aggregate that fills the closure
+    val fill = jobsOf { sized = Graphs.undirectedSized(input) }
+    val (und, rows, vertices) = sized
     try {
-      assert(rows == 8L)
+      assert(fill == 6L)
+      assert(rows == 8L && vertices == 5L)
       val closure = exchanges(und.queryExecution.executedPlan)
       assert(closure.size == 1, s"closure exchanges: ${closure.map(_.outputPartitioning)}")
       // the repartition by src (a one-partition width plans it as SinglePartition)
@@ -448,6 +456,14 @@ class GraphSpec extends SparkSpec {
     assert(mis.count() >= 1L && coloring.filter(col("color") < 0).count() == 0L)
     assert(lpa.count() == 7L && pr.count() == 10L && damped.count() == 7L)
     assert(hits.count() == 7L)
+    val bfs = leavesOnlyResult("landmarks")(ShortestPath.multiSourceBfs(chain, Seq(1L, 7L)))
+    val path = leavesOnlyResult("sssp path")(ShortestPath.runWithPath(chain, 1L))
+    val levels = leavesOnlyResult("scc levels")(Graphs.sccCondensationLevels(cyclic))
+    val warm = leavesOnlyResult("pagerank warm")(PageRank.runDampedFrom(damped, cyclic, 2))
+    val ppr = leavesOnlyResult("ppr")(PageRank.runPersonalized(cyclic, Seq(1L), 3))
+    assert(bfs.count() == 7L && path.filter(col("dist") === 4.0).count() == 1L)
+    assert(levels.select("level").distinct().count() == 3L)
+    assert(warm.count() == 7L && ppr.count() == 7L)
   }
 
   test("cc doubling: linear HashMin at the same round count splits the long chain") {
