@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,8 +32,6 @@ object IO {
     dir.toString
   }
 
-  final case class Edge(src: Long, dst: Long)
-
   val edgeSchema: StructType = StructType(Seq(
     StructField("src", LongType, nullable = false),
     StructField("dst", LongType, nullable = false)))
@@ -44,12 +42,6 @@ object IO {
       .option("mode", "DROPMALFORMED")
       .csv(path)
       .na.drop(Seq("src", "dst"))
-
-  /** typed view (SURVEY §1.4: Dataset[Edge] at API edges) */
-  def readEdges(spark: SparkSession, path: String): Dataset[Edge] = {
-    import spark.implicits._
-    readEdgesCsv(spark, path).as[Edge]
-  }
 
   /** S9-S11: CSV sink, comma-separated like the reference's
     * TextOutputFormat (ReduceSideJoin/...:173). The reference's RDD text

@@ -66,19 +66,18 @@ object Graphs {
     * aggregate that fills the cache: the rows (both directions: 2m) and the
     * distinct srcs, which are the closure's vertices and, the cache being
     * partitioned on src, count with no exchange of their own. Loops over
-    * the closure are sized from one of them with no count of their own. */
-  private[graft] def undirectedSized(edges: DataFrame): (DataFrame, Long, Long) =
-    // COLUMNAR, deliberately NOT a LogicalRDD leaf (r17 A/B): the fixpoint
-    // loops scan this relation EVERY round, and the in-memory columnar
-    // cache's vectorized scan beats row-block iteration by ~180 ms/round on
-    // the 160k-row coloring graph (coloring 9.9 s persist vs 14.1 s leaf,
-    // coreness 5.4 vs 6.6). Init-only consumers (kTruss) take the leaf
-    // instead — the opposite side of the same tradeoff.
-    Fixpoint.withPinned(edges.select(col("src"), col("dst"))) { (e, n) =>
-      val und = Fixpoint.persisted(symmetricClosure(e, n))
-      val sizes = und.agg(count(lit(1)), count_distinct(col("src"))).collect().head
-      (und, sizes.getLong(0), sizes.getLong(1))
-    }
+    * the closure are sized from one of them with no count of their own.
+    * The filled cache cuts lineage, so the build's scope releases the pin.
+    *
+    * Columnar, not a LogicalRDD leaf: the loops scan this relation every
+    * round, where the in-memory columnar cache's vectorized scan beats
+    * row-block iteration. Init-only consumers (kTruss) take the leaf. */
+  private[graft] def undirectedSized(edges: DataFrame): (DataFrame, Long, Long) = Fixpoint.scope {
+    val (e, n) = Fixpoint.columnarRows(edges.select(col("src"), col("dst")))
+    val und = Fixpoint.persisted(symmetricClosure(e, n))
+    val sizes = und.agg(count(lit(1)), count_distinct(col("src"))).collect().head
+    (und, sizes.getLong(0), sizes.getLong(1))
+  }
 
   /** e ∪ reverse(e) over `n` pinned input edges, hash-partitioned by src at
     * the width 2n rows warrant, then deduped. The distinct's clustering on
@@ -214,15 +213,14 @@ object Graphs {
     * maximal k in one pass over rounds — the whole onion, the standard
     * graph-curation density score.
     *
-    * This is the HUB-SAFE bucketed formulation (the engine's default
-    * since round 13 — it beat the rank-window form 2.0–2.7× at every
-    * measured (scale, skew) point and is exactly flat under a
-    * degree-12,000 hub). The h-index needs only "how many neighbors hold
-    * value ≥ h", never a global per-vertex sort: (1) histogram the
-    * messages per (vertex, value) — map-side partial aggregation absorbs
-    * a hub's raw degree before the shuffle, so the exchange carries value
-    * buckets, not neighbors; (2) a running sum over the histogram DESC by
-    * value gives cum(v) = #neighbors with value ≥ v, and h = max over
+    * This is the HUB-SAFE bucketed formulation, the engine's default: its
+    * per-round cost does not grow with a hub's degree. The h-index needs
+    * only "how many neighbors hold value ≥ h", never a global per-vertex
+    * sort: (1) histogram the messages per (vertex, value) — map-side
+    * partial aggregation absorbs a hub's raw degree before the shuffle, so
+    * the exchange carries value buckets, not neighbors; (2) a running
+    * sum over the histogram DESC by value gives
+    * cum(v) = #neighbors with value ≥ v, and h = max over
     * histogram levels of min(value, cum) — identical to max-over-ranks
     * min(x_r, r), which is maximized at the end of each equal-value run
     * where r = cum (tie-order-invariant, so the bucketing loses nothing;
@@ -312,16 +310,16 @@ object Graphs {
     *
     * Scale: each round is one vertex-sized degree aggregation + ONE
     * fused scalar job (sum(deg) = 2m and count(*) = n off the same
-    * checkpointed degree relation — round-11 fusion, halving the
-    * per-round barrier count the way the coloring fusion did); candidate
-    * vertex sets are the per-round degree relations (vertex-sized
-    * checkpoints, kept so the winner needs no second peel pass).
+    * checkpointed degree relation, one barrier where two scalar jobs
+    * would be two); candidate vertex sets are the per-round degree
+    * relations (vertex-sized checkpoints, kept so the winner needs no
+    * second peel pass).
     * Returns (vertex, deg) of the winning candidate, deg = degree
     * WITHIN it. The m·n < 2^62 id-space bound is ENFORCED, not assumed:
     * the driver argmax multiplies with Math.multiplyExact and the keep
     * filter's 2·n·deg / 3·2m headroom is require-checked each round
     * (raw Long products would wrap silently where the DuckDB oracle
-    * errors — a divergence, round-11 advice item). */
+    * errors). */
   def densestSubgraph(edges: DataFrame,
       rounds: Int = DefaultDensestRounds): DataFrame = Fixpoint.scope {
     val (first, n, _) = undirectedSized(edges)
@@ -470,7 +468,7 @@ object Graphs {
     // undirectedSized but kept as a src-partitioned LogicalRDD leaf, not a
     // columnar cache — the orientation/support/wedge-guard plans reference
     // it 3x, and the leaf spares them the union+distinct subtree
-    // re-optimization (ktruss 10.6 -> 7.7 s A/B).
+    // re-optimization.
     val undirected = Fixpoint.pinned(edges.select(col("src"), col("dst")))(symmetricClosure)
     // degree-ordered orientation, computed once (checkpointed: the guard's
     // wedge count and the init support pass both read it)
@@ -652,16 +650,15 @@ object Graphs {
       .withColumn("color", lit(-1L))
     val result = Fixpoint.iterate(init, n, rounds,
       converged = Fixpoint.monotoneSumUnchanged("color")) { (state0, _) =>
-      // BARRIER-FUSED round (the maximalMatching treatment, round 11): the
-      // winner test (min pkey over UNCOLORED neighbors) and the mex input
+      // BARRIER-FUSED round (as in maximalMatching): the winner test
+      // (min pkey over UNCOLORED neighbors) and the mex input
       // (distinct colors over COLORED neighbors) are both per-vertex
       // aggregates over the same edge relation, so ONE uncolored-source ⨝
       // edges ⨝ state pass computes both — the winners relation is then
       // consumed exactly once (the state merge) and needs no mid-round
       // checkpoint. 3 jobs/round → 2 (state checkpoint + convergence
       // aggregate); the zero-job stats re-bind of the already-checkpointed
-      // state below keeps the estimate reset. Isolated A/B and the
-      // unchanged oracle hash are recorded in BASELINE.md.
+      // state below keeps the estimate reset.
       val state = Fixpoint.rebindStats(state0)
       val nbrAttrs = state.select(col("vertex").as("nbr"),
         col("pkey").as("npkey"), col("color").as("ncolor"))
@@ -732,12 +729,10 @@ object Graphs {
       def pairKey(u: Column, v: Column): Column = hp(hp(u + salt) + v)
 
       val active = state.filter(col("status") === 0).select("vertex")
-      // rooted at the LOOP-bound active set, not the edge cache (r17): a
-      // Dataset executes under its ROOT's session, and this relation is
-      // eager-materialized every round by the `updates` checkpoint —
-      // rooted at `undirected` it ran on the CALLER's session (configured
-      // width, AQE stage-jobs: JobTrace showed ~8 jobs/round, 125 total),
-      // while the loop session runs it as one narrow-width job.
+      // the active-edge relation is rooted at the loop-bound active set,
+      // not the edge cache: a Dataset executes under its root's session,
+      // so it plans under the loop session (its width, its AQE setting)
+      // and not the caller's.
       val ae = active.select(col("vertex").as("src"))
         .join(undirected, "src")
         .join(active.select(col("vertex").as("dst")), "dst")
@@ -820,8 +815,8 @@ object Graphs {
     * insufficient phase/round budget. */
   def stronglyConnectedComponents(edges: DataFrame,
       phases: Int = DefaultSccPhases, rounds: Int = DefaultSccRounds): DataFrame = Fixpoint.scope {
-    // leaf (r17): both per-phase fixpoints re-scan e every round — the
-    // eager checkpoint doubles as the old count()'s materialization job
+    // leaf: both per-phase fixpoints re-scan e every round, and the eager
+    // checkpoint is its one materialization job
     val e = Fixpoint.materializedLeaf(
       edges.select(col("src"), col("dst")).distinct())
     val seed = Fixpoint.materializedLeaf(vertices(e).withColumn("scc", lit(-1L)))
@@ -1029,7 +1024,7 @@ object Graphs {
     * frontier is checkpointed per step because the union output and the
     * next join both consume it. */
   def deterministicWalks(edges: DataFrame, seeds: DataFrame, length: Int): DataFrame = Fixpoint.scope {
-    // leaf (r17): every step's frontier join (and biasedWalks' second
+    // leaf: every step's frontier join (and biasedWalks' second
     // (prev, dst) probe) re-scans e — one materialization job, flat plans
     val e = Fixpoint.materializedLeaf(
       edges.select(col("src"), col("dst")).distinct())
@@ -1133,7 +1128,7 @@ object Graphs {
   def walkCooccurrence(walks: DataFrame, window: Int): DataFrame = {
     // bind by NAME, not position — the contract is the (walk_id, step,
     // vertex) schema, and a caller's select/reorder must not silently
-    // swap step/vertex (round-11 advice item)
+    // swap step/vertex
     val a = walks.select(col("walk_id"), col("step").as("sa"),
       col("vertex").as("center"))
     val b = walks.select(col("walk_id"), col("step").as("sb"),

@@ -41,7 +41,7 @@ object KMeans {
     val x = points.select(col(valueCol).cast("double").as("x"))
     // the cache serves the loop only: the returned assignment re-derives x
     val (centroids, sse) = Fixpoint.scope {
-      val pts = Fixpoint.columnar(x)
+      val (pts, _) = Fixpoint.columnarRows(x)
       var centroids = init
       var sse = Vector.empty[Double]
       var iter = 0

@@ -180,16 +180,13 @@ object PageRank {
   }
 
   /** The edge cache every link-analysis loop here shares: the edge relation
-    * persisted BEFORE its sizing count (the rule [[Fixpoint.withPinned]]
-    * keeps for the other edge caches: the count's materialization then
+    * pinned by [[Fixpoint.columnarRows]] (the count's materialization then
     * feeds the repartition from cache instead of re-running the
     * derivation), and the edges hash-partitioned by src at the width the
-    * count warrants, with that count. The partitioned
-    * edges are [[Fixpoint.persisted]] — lazy, their first consumer fills
-    * them. */
+    * count warrants, with that count. The partitioned edges are
+    * [[Fixpoint.persisted]] — lazy, their first consumer fills them. */
   private[graph] def srcPartitioned(edges: DataFrame): (DataFrame, Long) = {
-    val u0 = Fixpoint.persisted(edges)
-    val n = u0.count()
+    val (u0, n) = Fixpoint.columnarRows(edges)
     (Fixpoint.persisted(u0.repartition(Fixpoint.sizedPartitions(edges.sparkSession, n), col("src"))), n)
   }
 

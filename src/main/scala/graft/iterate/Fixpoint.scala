@@ -32,13 +32,21 @@ import scala.collection.mutable
   * that read superseded (the previous state and the leaves the step that
   * built the current one took), and builds the next state lazily or stops.
   *
-  * Ownership: while a [[scope]] is open, every materialization Fixpoint
-  * hands out — [[materializedLeaf]], [[lazyLeaf]], [[columnar]],
-  * [[persisted]] and a loop's final state — belongs to the innermost scope.
-  * When the scope's body returns, what its result reads (plan, subqueries,
-  * RDD lineage) passes to the enclosing scope and everything else is
-  * released; a `Unit` body or a throw releases everything. Outside any
-  * scope a materialization is the caller's.
+  * Ownership: every cache and checkpoint Fixpoint takes has one owner.
+  * While a [[scope]] is open, every materialization Fixpoint hands out —
+  * [[materializedLeaf]], [[lazyLeaf]], [[columnarRows]], [[persisted]] and
+  * a loop's final state — belongs to the innermost scope; a build that
+  * pins its input ([[pinned]], [[srcPartitionedLeaf]]) is a scope of its
+  * own. When the scope's body returns, what its result reads (plan,
+  * subqueries, RDD lineage) passes to the enclosing scope and everything
+  * else is released; a `Unit` body or a throw releases everything. Outside
+  * any scope a materialization is the caller's.
+  *
+  * A cache whose buffers are fully loaded cuts lineage like a materialized
+  * checkpoint: a MEMORY_AND_DISK cache recomputes from its inputs only if
+  * a block is lost, the assumption every local checkpoint already makes.
+  * So a result that reads its inputs only through a filled cache keeps the
+  * cache, not the inputs.
   *
   * `Dataset.unpersist` only knows the cache manager: on a checkpoint it is
   * a no-op that leaves every block cached. Checkpoints go through
@@ -77,7 +85,7 @@ object Fixpoint {
     to.createDataFrame(df.rdd, df.schema)
 
   /** Materialize a loop-invariant relation ONCE and return it as a single
-    * LogicalRDD leaf (r17, guide §1.2 "shrink the step DAG"): a persisted
+    * LogicalRDD leaf, so a driver loop's step DAG stays small: a persisted
     * DataFrame keeps its full derivation subtree in every consuming plan —
     * re-analyzed, re-optimized and cache-canonicalized on every round of a
     * driver loop — while the eager localCheckpoint's return value IS a
@@ -93,12 +101,12 @@ object Fixpoint {
     * pays no job of its own. Released like a leaf; every loop state is one. */
   def lazyLeaf(df: DataFrame): DataFrame = own(df.localCheckpoint(eager = false), cache = false)
 
-  /** The eager columnar cache: [[persisted]] plus a count. Chosen over a
-    * leaf for a relation a loop scans every round, where the in-memory
-    * columnar cache's vectorized scan beats row-block iteration. */
-  def columnar(df: DataFrame): DataFrame = columnarRows(df)._1
-
-  /** [[columnar]] and its row count, read off the count that fills it. */
+  /** The eager columnar cache: [[persisted]] plus a count, and that row
+    * count. Chosen over a leaf for a relation a loop scans every round,
+    * where the in-memory columnar cache's vectorized scan beats row-block
+    * iteration; and the pin of a build that reads its input more than
+    * once, which the count fills so the consumers read the cache instead
+    * of racing to compute it. */
   def columnarRows(df: DataFrame): (DataFrame, Long) = {
     val c = persisted(df)
     (c, c.count())
@@ -110,33 +118,25 @@ object Fixpoint {
   def persisted(df: DataFrame): DataFrame =
     own(df.persist(StorageLevel.MEMORY_AND_DISK), cache = true)
 
-  /** Build one eager result from a pinned cache of `input`: the
-    * [[withPinned]] build, kept as a [[materializedLeaf]]. */
-  def pinned(input: DataFrame)(f: (DataFrame, Long) => DataFrame): DataFrame =
-    withPinned(input)((cache, n) => materializedLeaf(f(cache, n)))
-
-  /** Persists `input`, counts it (so the consumers read the cache instead
-    * of racing to compute it), returns `f(cache, count)` and then releases
-    * the cache: `f` must materialize what it returns, since the cache is
-    * gone once `withPinned` returns. */
-  def withPinned[T](input: DataFrame)(f: (DataFrame, Long) => T): T = {
-    val cache = input.persist(StorageLevel.MEMORY_AND_DISK)
-    val out = f(cache, cache.count())
-    cache.unpersist(blocking = false)
-    out
+  /** One eager result built from a pin of `input`: `f(pin, rows)`, kept as
+    * a [[materializedLeaf]]. The pin and whatever `f` takes belong to the
+    * build's own scope, which keeps only the leaf. */
+  def pinned(input: DataFrame)(f: (DataFrame, Long) => DataFrame): DataFrame = scope {
+    val (pin, n) = columnarRows(input)
+    materializedLeaf(f(pin, n))
   }
 
   /** The src-partitioned edge cache of a driver loop, as one
     * [[materializedLeaf]], and its row count: the `edges` derivation is
-    * pinned for the sizing count (so the repartition reads the cache
-    * instead of re-running the derivation), hash-partitioned by `src` to
-    * the width the count warrants and materialized as a leaf. The loop
-    * re-scans the leaf every round, and each round's Catalyst walk sees one
-    * node instead of the derivation subtree. */
-  def srcPartitionedLeaf(edges: DataFrame): (DataFrame, Long) =
-    withPinned(edges) { (u, n) =>
-      (materializedLeaf(u.repartition(sizedPartitions(edges.sparkSession, n), col("src"))), n)
-    }
+    * pinned for the sizing count (so the repartition reads the pin instead
+    * of re-running the derivation), hash-partitioned by `src` to the width
+    * the count warrants and materialized as a leaf. The loop re-scans the
+    * leaf every round, and each round's Catalyst walk sees one node
+    * instead of the derivation subtree. */
+  def srcPartitionedLeaf(edges: DataFrame): (DataFrame, Long) = scope {
+    val (pin, n) = columnarRows(edges)
+    (materializedLeaf(pin.repartition(sizedPartitions(edges.sparkSession, n), col("src"))), n)
+  }
 
   /** Runs `body` as an ownership scope (see the object doc): returns its
     * result, hands what the result reads to the enclosing scope and
@@ -200,13 +200,14 @@ object Fixpoint {
 
   /** every key `result` reads: the cache builders and RDD ids reached from
     * its DataFrames' plans and subqueries, through RDD lineage (a re-bind,
-    * a lazy checkpoint) and through the plans of caches not yet built */
+    * a lazy checkpoint) and through the plans of caches not yet filled; a
+    * filled cache is a lineage cut, read by its buffers' RDD id alone */
   private def reads(result: Any): Set[Any] = {
     val seen = mutable.Set.empty[Any]
     val rdds = mutable.Stack.empty[RDD[_]]
     def cached(m: InMemoryRelation): Unit = if (seen.add(m.cacheBuilder)) {
       val b = m.cacheBuilder
-      if (b.isCachedColumnBuffersLoaded) rdds.push(b.cachedColumnBuffers) else plan(b.logicalPlan)
+      if (b.isCachedColumnBuffersLoaded) seen += b.cachedColumnBuffers.id else plan(b.logicalPlan)
     }
     def plan(p: QueryPlan[_]): Unit = p.foreachWithSubqueries {
       case lr: LogicalRDD => rdds.push(lr.rdd)
@@ -233,8 +234,8 @@ object Fixpoint {
     * The LogicalRDD match is ROOT-ONLY deliberately: a persisted relation's
     * lineage may CONTAIN someone else's still-live checkpoint leaf (cc_inc's
     * `touched` feeds the quotient edges), and a tree-wide collectFirst would
-    * unpersist that input's blocks — caught by GraphSpec/QueriesSpec as
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in the r17 session. */
+    * unpersist that input's blocks (a later read then fails with
+    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). */
   def unpersistMaterialized(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: LogicalRDD => if (lr.rdd.getStorageLevel != StorageLevel.NONE) lr.rdd.unpersist(false)
@@ -360,11 +361,10 @@ object Fixpoint {
     // small and plans are stable; keep it for wide states (skew joins).
     if (width <= 4) {
       loop.conf.set("spark.sql.adaptive.enabled", "false")
-      // Tiny-state regime (r17, guide §1.2/§2.4): with the whole state in
-      // a handful of partitions, every automatic BroadcastHashJoin costs a
+      // Tiny-state regime: with the whole state in a handful of
+      // partitions, every automatic BroadcastHashJoin costs a
       // broadcast-exchange SUB-JOB (collect + build + torrent) per join per
-      // round — measured as 1-2 extra ~100ms jobs per round on the sf0.1
-      // graph fixpoints, pure scheduling latency. Forcing shuffle joins
+      // round, pure scheduling latency. Forcing shuffle joins
       // keeps each round ONE job of back-to-back tiny stages. Wide states
       // (real scale) keep the default so a genuinely small side (late
       // SSSP frontiers) still broadcasts instead of reshuffling the big
@@ -377,8 +377,7 @@ object Fixpoint {
     // steps (ktruss' 3x3-way join round). The loop's join keys are
     // engine-generated ids that are never null, so the inferred IsNotNull/
     // transitive predicates buy nothing at any scale, while the per-round
-    // driver latency they cost is scale-INDEPENDENT (r17 A/B,
-    // OPTIMIZATION_r17.md §1).
+    // driver latency they cost is scale-independent.
     loop.conf.set("spark.sql.constraintPropagation.enabled", "false")
     loop
   }

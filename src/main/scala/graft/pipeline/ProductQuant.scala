@@ -97,9 +97,25 @@ object ProductQuant {
     Codebooks(dsub, cents)
   }
 
+  /** the PQ codes of `v` and its code-implied norm: the sqrt of the summed
+    * squared norms of its code centroids, the ADC denominator */
+  private def pqCode(v: Array[Float], b: Codebooks): (Array[Int], Double) = {
+    val codes = new Array[Int](M)
+    var n2 = 0.0
+    var m = 0
+    while (m < M) {
+      val c = nearestSub(v, m * b.dsub, b.cents(m))
+      codes(m) = c
+      val cent = b.cents(m)(c)
+      var i = 0
+      while (i < b.dsub) { n2 += cent(i) * cent(i); i += 1 }
+      m += 1
+    }
+    (codes, math.sqrt(n2))
+  }
+
   /** (nid, codes ARRAY<INT>, napprox DOUBLE): one pass assigns every
-    * subspace code and the code-implied norm (sqrt of summed centroid
-    * squared norms — the ADC denominator). */
+    * subspace code and the code-implied norm. */
   def encode(emb: DataFrame, cb: Codebooks): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
@@ -107,159 +123,18 @@ object ProductQuant {
     emb.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
       .mapPartitions { it =>
         val b = bc.value
-        it.map { case (id, v) =>
-          val codes = new Array[Int](M)
-          var n2 = 0.0
-          var m = 0
-          while (m < M) {
-            val c = nearestSub(v, m * b.dsub, b.cents(m))
-            codes(m) = c
-            val cent = b.cents(m)(c)
-            var i = 0
-            while (i < b.dsub) { n2 += cent(i) * cent(i); i += 1 }
-            m += 1
-          }
-          (id, codes, math.sqrt(n2))
-        }
+        it.map { case (id, v) => val (codes, n) = pqCode(v, b); (id, codes, n) }
       }.toDF("nid", "codes", "napprox")
   }
 
-  /** ADC top-k with exact rerank. `refine` = candidates kept per query
-    * from the code scan before reranking (recall knob). Output
-    * (qid, rn, nid, score) — same contract as Similarity.bruteForceTopK. */
-  def adcTopK(corpus: DataFrame, queries: DataFrame, cb: Codebooks,
-      k: Int, refine: Int): DataFrame = {
-    val spark = corpus.sparkSession
+  /** per query (qid, vector): the ADC lookup table of exact
+    * query-to-centroid dot products per (subspace, code), collected to the
+    * driver (the query set is small by contract) */
+  private def adcTables(queries: DataFrame, cb: Codebooks): Array[(Long, Array[Float], Array[Array[Double]])] = {
+    val spark = queries.sparkSession
     import spark.implicits._
-    val codes = encode(corpus, cb)
-
-    // exact per-(query, subspace, code) dot products — the ADC tables,
-    // built driver-side from the collected (small-by-contract) query set
-    val qvecs = queries.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect()
-    val tables: Array[(Long, Array[Array[Double]])] = qvecs.map { case (qid, qv) =>
-      val lut = Array.tabulate(M, KSub) { (m, c) =>
-        val cent = cb.cents(m)(c)
-        var acc = 0.0
-        var i = 0
-        while (i < cb.dsub) { acc += qv(m * cb.dsub + i) * cent(i); i += 1 }
-        acc
-      }
-      (qid, lut)
-    }
-    val bcT = spark.sparkContext.broadcast(tables)
-
-    // per-partition bounded heaps cap the scan's output at |Q| x refine
-    // rows per partition (never |Q| x |corpus|); a global top-`refine` cut
-    // per query then makes the candidate SET the true ADC top-refine by
-    // (score DESC, nid) — independent of partition layout, which is what
-    // lets the DuckDB oracle reproduce it. Heap order ties on score break
-    // by nid (higher nid = worse) so the per-partition cut is consistent
-    // with the global one.
-    val cand = codes.as[(Long, Array[Int], Double)]
-      .mapPartitions { it =>
-        val worstFirst = new java.util.Comparator[(Double, Long)] {
-          override def compare(a: (Double, Long), b: (Double, Long)): Int = {
-            val c = java.lang.Double.compare(a._1, b._1)
-            if (c != 0) c else java.lang.Long.compare(b._2, a._2)
-          }
-        }
-        val ts = bcT.value
-        val heaps = ts.map(_ =>
-          new java.util.PriorityQueue[(Double, Long)](refine + 1, worstFirst))
-        it.foreach { case (nid, cs, napprox) =>
-          var q = 0
-          while (q < ts.length) {
-            val (tqid, lut) = ts(q)
-            if (tqid != nid) {
-              var dot = 0.0
-              var m = 0
-              while (m < M) { dot += lut(m)(cs(m)); m += 1 }
-              val score = if (napprox > 0) dot / napprox else 0.0
-              val h = heaps(q)
-              h.add((score, nid))
-              if (h.size > refine) h.poll()
-            }
-            q += 1
-          }
-        }
-        heaps.iterator.zipWithIndex.flatMap { case (h, q) =>
-          val qid = ts(q)._1
-          Iterator.continually(h.poll()).takeWhile(_ != null)
-            .map(p => (qid, p._2, p._1))
-        }
-      }.toDF("qid", "nid", "ascore")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("ascore").desc, col("nid").asc)
-    val refined = cand.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= refine).select("qid", "nid")
-
-    // exact rerank of the survivors against the true vectors
-    Similarity.rankTopK(
-      refined.join(Similarity.queriesWithNorm(queries), "qid")
-        .join(Similarity.corpusWithNorm(corpus), "nid"),
-      k)
-  }
-
-  /** IVF+PQ composite ANN — the FAISS-IVFPQ shape, minus residual
-    * encoding (codes quantize the raw vectors, so ONE codebook set serves
-    * every cell and the DuckDB oracle composes the IVF and PQ training
-    * replays unchanged): a k-means coarse quantizer restricts each
-    * query's ADC scan to its `nprobe` nearest cells, PQ codes bound the
-    * per-candidate cost to M table reads, and exact reranking of the
-    * top-`refine` survivors makes emitted scores true cosines.
-    *
-    * This is the billion-vector layout the two ingredients exist for:
-    * the inverted file prunes candidates BEFORE any scoring (and
-    * [[VecKMeans.writeClusterPartitioned]] turns that pruning into
-    * parquet directory pruning on disk), PQ compresses what remains 32x
-    * so a probed cell scans from memory bandwidth, and full-precision
-    * vectors are touched only for the `refine` survivors per query.
-    * Candidate determinism matches [[adcTopK]]: per-partition bounded
-    * heaps cap the scan's output, then a global top-`refine` window by
-    * (ADC score DESC, nid) fixes the candidate set independent of
-    * partition layout — with the one extra rule that a vector outside
-    * the query's probed cells is never scored at all.
-    * Output (qid, rn, nid, score) like Similarity.bruteForceTopK. */
-  def ivfpqTopK(corpus: DataFrame, queries: DataFrame,
-      cents: Array[Array[Double]], cb: Codebooks,
-      k: Int, nprobe: Int, refine: Int): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bcCells = spark.sparkContext.broadcast(cents)
-    val bcCb = spark.sparkContext.broadcast(cb)
-
-    // one corpus pass: IVF cell + PQ codes + code-implied norm (the ADC
-    // denominator) — no second scan re-attaches any of the three
-    val codes = corpus.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val cs = bcCells.value
-        val b = bcCb.value
-        it.map { case (id, v) =>
-          val cell = VecKMeans.nearest(v, cs)
-          val cds = new Array[Int](M)
-          var n2 = 0.0
-          var m = 0
-          while (m < M) {
-            val c = nearestSub(v, m * b.dsub, b.cents(m))
-            cds(m) = c
-            val cent = b.cents(m)(c)
-            var i = 0
-            while (i < b.dsub) { n2 += cent(i) * cent(i); i += 1 }
-            m += 1
-          }
-          (id, cell, cds, math.sqrt(n2))
-        }
-      }.toDF("nid", "cell", "codes", "napprox")
-
-    // per query: the ADC lookup table (exact query-to-centroid dots, same
-    // fold order as adcTopK) and the probed-cell mask (nprobe nearest
-    // cells; stable sort ties break toward the lower cell index, matching
-    // ivfTopK and the oracle's ORDER BY dist, cluster)
-    val qvecs = queries.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])].collect()
-    val tables: Array[(Long, Array[Array[Double]], Array[Boolean])] =
-      qvecs.map { case (qid, qv) =>
+    queries.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])].collect()
+      .map { case (qid, qv) =>
         val lut = Array.tabulate(M, KSub) { (m, c) =>
           val cent = cb.cents(m)(c)
           var acc = 0.0
@@ -267,16 +142,28 @@ object ProductQuant {
           while (i < cb.dsub) { acc += qv(m * cb.dsub + i) * cent(i); i += 1 }
           acc
         }
-        val probed = new Array[Boolean](cents.length)
-        cents.indices.sortBy(c => VecKMeans.sqDist(qv, cents(c)))
-          .take(nprobe).foreach(probed(_) = true)
-        (qid, lut, probed)
+        (qid, qv, lut)
       }
-    val bcT = spark.sparkContext.broadcast(tables)
+  }
 
-    // the adcTopK scan with the IVF skip: a row is scored for a query
-    // only when its cell is probed, so per-heap traffic is ~nprobe/k of
-    // the corpus slice — the candidate cut that makes the scan sublinear
+  /** The ADC scan with exact rerank. `codes` is (nid, cell, codes,
+    * napprox); each query (qid, lut, probed) scores a row only when the
+    * row's cell is probed, by M table reads over the code-implied norm.
+    *
+    * Per-partition bounded heaps cap the scan's output at |Q| x refine
+    * rows per partition (never |Q| x |corpus|); a global top-`refine` cut
+    * per query then makes the candidate SET the true ADC top-refine by
+    * (score DESC, nid) — independent of partition layout, which is what
+    * lets the DuckDB oracle reproduce it. Heap order ties on score break
+    * by nid (higher nid = worse) so the per-partition cut is consistent
+    * with the global one. The survivors are reranked exactly against the
+    * true vectors. Output (qid, rn, nid, score). */
+  private def adcRefine(corpus: DataFrame, queries: DataFrame, codes: DataFrame,
+      tables: Array[(Long, Array[Array[Double]], Array[Boolean])],
+      k: Int, refine: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val bcT = spark.sparkContext.broadcast(tables)
     val cand = codes.as[(Long, Int, Array[Int], Double)]
       .mapPartitions { it =>
         val worstFirst = new java.util.Comparator[(Double, Long)] {
@@ -319,5 +206,66 @@ object ProductQuant {
       refined.join(Similarity.queriesWithNorm(queries), "qid")
         .join(Similarity.corpusWithNorm(corpus), "nid"),
       k)
+  }
+
+  /** ADC top-k with exact rerank. `refine` = candidates kept per query
+    * from the code scan before reranking (recall knob). The ADC scan with
+    * every row in one cell, probed by every query. Output
+    * (qid, rn, nid, score) — same contract as Similarity.bruteForceTopK. */
+  def adcTopK(corpus: DataFrame, queries: DataFrame, cb: Codebooks,
+      k: Int, refine: Int): DataFrame = {
+    val codes = encode(corpus, cb)
+      .select(col("nid"), lit(0).as("cell"), col("codes"), col("napprox"))
+    val tables = adcTables(queries, cb).map { case (qid, _, lut) => (qid, lut, Array(true)) }
+    adcRefine(corpus, queries, codes, tables, k, refine)
+  }
+
+  /** IVF+PQ composite ANN — the FAISS-IVFPQ shape, minus residual
+    * encoding (codes quantize the raw vectors, so ONE codebook set serves
+    * every cell and the DuckDB oracle composes the IVF and PQ training
+    * replays unchanged): a k-means coarse quantizer restricts each
+    * query's ADC scan to its `nprobe` nearest cells, PQ codes bound the
+    * per-candidate cost to M table reads, and exact reranking of the
+    * top-`refine` survivors makes emitted scores true cosines.
+    *
+    * This is the billion-vector layout the two ingredients exist for:
+    * the inverted file prunes candidates BEFORE any scoring (and
+    * [[VecKMeans.writeClusterPartitioned]] turns that pruning into
+    * parquet directory pruning on disk), PQ compresses what remains 32x
+    * so a probed cell scans from memory bandwidth, and full-precision
+    * vectors are touched only for the `refine` survivors per query.
+    * Candidate determinism is [[adcTopK]]'s, with the one extra rule that
+    * a vector outside the query's probed cells is never scored at all.
+    * Output (qid, rn, nid, score) like Similarity.bruteForceTopK. */
+  def ivfpqTopK(corpus: DataFrame, queries: DataFrame,
+      cents: Array[Array[Double]], cb: Codebooks,
+      k: Int, nprobe: Int, refine: Int): DataFrame = {
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    val bcCells = spark.sparkContext.broadcast(cents)
+    val bcCb = spark.sparkContext.broadcast(cb)
+
+    // one corpus pass: IVF cell + PQ codes + code-implied norm (the ADC
+    // denominator) — no second scan re-attaches any of the three
+    val codes = corpus.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .mapPartitions { it =>
+        val cs = bcCells.value
+        val b = bcCb.value
+        it.map { case (id, v) =>
+          val (cds, n) = pqCode(v, b)
+          (id, VecKMeans.nearest(v, cs), cds, n)
+        }
+      }.toDF("nid", "cell", "codes", "napprox")
+
+    // per query, the probed-cell mask: the nprobe nearest cells (stable
+    // sort ties break toward the lower cell index, matching ivfTopK and
+    // the oracle's ORDER BY dist, cluster)
+    val tables = adcTables(queries, cb).map { case (qid, qv, lut) =>
+      val probed = new Array[Boolean](cents.length)
+      cents.indices.sortBy(c => VecKMeans.sqDist(qv, cents(c)))
+        .take(nprobe).foreach(probed(_) = true)
+      (qid, lut, probed)
+    }
+    adcRefine(corpus, queries, codes, tables, k, refine)
   }
 }

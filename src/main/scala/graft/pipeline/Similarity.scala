@@ -65,8 +65,6 @@ object Similarity {
   def dotSpark(a: String, b: String): String =
     s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 
-  def normSpark(a: String): String = s"sqrt(${dotSpark(a, a)})"
-
   /** signed projection onto hyperplane t (dims indexed 1..dim) */
   def hyperplaneDotSpark(v: String, t: Int, dim: Int): String =
     s"aggregate(transform(sequence(1, $dim), i -> CAST(element_at($v, i) AS DOUBLE) * ((($t * 131 + (i - 1) * 137) % 29) - 14)), CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"

@@ -278,10 +278,13 @@ class GraphSpec extends SparkSpec {
     Fixpoint.unpersistMaterialized(leaf)
     assert(sc.getPersistentRDDs.keySet.subsetOf(before))
 
-    // (c) the same for a pinned build kept columnar: the pinned input is
-    // gone on return, the kept relation sits in the cache manager until
-    // released
-    val kept = Fixpoint.withPinned(e)((u, n) => Fixpoint.columnar(u.filter(col("src") < n)))
+    // (c) the same for a pinned build kept columnar: the pin is gone once
+    // the build's scope returns, the kept relation sits in the cache
+    // manager until released
+    val kept = Fixpoint.scope {
+      val (u, n) = Fixpoint.columnarRows(e)
+      Fixpoint.columnarRows(u.filter(col("src") < n))._1
+    }
     assert(kept.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
     assert((sc.getPersistentRDDs.keySet -- before).size == 1)
     assert(kept.count() == 3L)
@@ -290,8 +293,9 @@ class GraphSpec extends SparkSpec {
 
     // (d) a scope keeps what its result reads — directly, through a stats
     // re-bind, or only through a lazy checkpoint that has not materialized
-    // — and releases every other leaf and cache it took; a Unit scope, a
-    // throw and an enclosing Unit scope release everything
+    // — and releases every other leaf and cache it took, the inputs of a
+    // filled cache too; a Unit scope, a throw and an enclosing Unit scope
+    // release everything
     import org.apache.spark.storage.StorageLevel.NONE
     def held(df: org.apache.spark.sql.DataFrame): Boolean = df.queryExecution.analyzed match {
       case lr: LogicalRDD => lr.rdd.getStorageLevel != NONE
@@ -301,7 +305,7 @@ class GraphSpec extends SparkSpec {
     val (direct, viaRebind, viaLazy) = Fixpoint.scope {
       taken = Seq(e, e.filter(col("src") < 3L), e.filter(col("src") > 1L),
         e.filter(col("src") === 5L)).map(Fixpoint.materializedLeaf) :+
-        Fixpoint.columnar(e.select("dst"))
+        Fixpoint.columnarRows(e.select("dst"))._1
       val Seq(a, b, c, _, _) = taken
       (a.filter(col("src") > 0L), Fixpoint.rebindStats(b),
         c.select("src").localCheckpoint(eager = false))
@@ -309,7 +313,16 @@ class GraphSpec extends SparkSpec {
     assert(taken.map(held) == Seq(true, true, true, false, false))
     assert(direct.count() == 4L && viaRebind.count() == 2L && viaLazy.count() == 3L)
     (viaLazy +: taken).foreach(Fixpoint.unpersistMaterialized)
-    Fixpoint.scope { taken = Seq(Fixpoint.materializedLeaf(e), Fixpoint.columnar(e)); () }
+    // a filled cache is a lineage cut: its scope keeps the cache and
+    // releases the leaf it was built from
+    val filled = Fixpoint.scope {
+      taken = Seq(Fixpoint.materializedLeaf(e))
+      Fixpoint.columnarRows(taken.head.filter(col("src") < 5L))._1
+    }
+    assert(held(filled) && !held(taken.head))
+    assert(filled.count() == 3L)
+    Fixpoint.unpersistMaterialized(filled)
+    Fixpoint.scope { taken = Seq(Fixpoint.materializedLeaf(e), Fixpoint.columnarRows(e)._1); () }
     assert(!taken.exists(held))
     intercept[IllegalStateException](Fixpoint.scope {
       taken = Seq(Fixpoint.materializedLeaf(e), Fixpoint.persisted(e))
@@ -368,6 +381,16 @@ class GraphSpec extends SparkSpec {
     assert(jobsOf(Fixpoint.scope { PageRank.runDamped(dense, 3); () }) == 19)
     val docs = Seq(1L -> "low low low lower lowest").toDF("doc_id", "text")
     assert(jobsOf(Fixpoint.scope { graft.pipeline.Bpe.train(docs, merges = 3); () }) == 15)
+  }
+
+  test("fixpoint primitives: a pinned build whose body throws leaves nothing behind") {
+    import graft.iterate.Fixpoint
+    val e = edges(1L -> 2L, 2L -> 3L)
+    leavesNothing("a throwing pinned build") {
+      intercept[IllegalStateException](Fixpoint.scope {
+        Fixpoint.pinned(e) { (_, n) => throw new IllegalStateException(s"build over $n rows failed") }
+      })
+    }
   }
 
   test("symmetric edge cache: the closure adds one exchange, on src; the loop seed over it none") {
